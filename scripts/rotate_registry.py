@@ -12,14 +12,23 @@ stalest-first:
 
 It rewrites the ``QUERIES = {...}`` block of ``plans/queries.py`` in place,
 preserving each entry's trailing comment, and prints the resulting window.
-``tests/test_registry_rotation.py`` asserts the invariant this maintains:
-every registry query is covered by the union of the previous round's
-CORRECTNESS keys and the current first-50 window, minus an explicit
-allowlist of multi-round-green leftovers.
+
+``--check`` verifies, without rewriting, the two invariants this maintains
+against the ``CORRECTNESS_r*.json`` round artifacts:
+
+- the registry is in stalest-first order;
+- every registry query is covered by the union of the previous round's
+  CORRECTNESS keys and the current first-50 window, unless it has at least
+  two historical hash-green rounds (the multi-round-green tail), and that
+  tail stays small.
+
+These compare the committed registry against artifacts written after the
+last commit, so they run here, before a bench or driver round, rather than
+in pytest; ``tests/test_registry_rotation.py`` keeps the structural checks
+and tests the check functions on synthetic histories.
 
 Usage: python scripts/rotate_registry.py [--check]
-  --check  exit 1 if the current order differs from the computed one
-           (used by tests; does not rewrite).
+  --check  exit 1 if either invariant fails (does not rewrite).
 """
 
 from __future__ import annotations
@@ -77,26 +86,71 @@ def staleness_order(
     return sorted(names, key=key)
 
 
+def order_problems(names: list[str], history: list[dict[str, bool]]) -> list[str]:
+    """Entries out of stalest-first place (empty when the order is right)."""
+    order = staleness_order(names, history)
+    return [
+        f"position {i} has {names[i]}, wants {order[i]}"
+        for i in range(len(names))
+        if names[i] != order[i]
+    ]
+
+
+def coverage_problems(names: list[str], history: list[dict[str, bool]]) -> list[str]:
+    """Queries neither in the last round's sample nor in the driver window
+    without the multi-round-green history that lets them wait at the tail,
+    plus a tail that grew too long (empty when coverage holds)."""
+    if not history:
+        return ["no CORRECTNESS_r*.json files found"]
+    last_round_keys = set(history[-1])
+    window = set(names[:WINDOW])
+    uncovered = [n for n in names if n not in last_round_keys and n not in window]
+    problems = []
+    # A query may sit outside both only with >= 2 historical hash-green
+    # driver rounds behind it (the multi-round-green tail).
+    for name in uncovered:
+        greens = sum(1 for r in history if r.get(name))
+        if greens < 2:
+            problems.append(
+                f"{name} is outside the driver window AND last round's sample "
+                f"with only {greens} historical green rounds — rotate it in"
+            )
+    # The tail should stay small: the window plus one round must cover
+    # nearly everything.
+    limit = max(0, len(names) - len(last_round_keys) - WINDOW) + 1
+    if len(uncovered) > limit:
+        problems.append(f"{len(uncovered)} queries uncovered, limit {limit}")
+    return problems
+
+
+def check(names: list[str], history: list[dict[str, bool]]) -> int:
+    failed = 0
+    for label, problems in (
+        ("registry order is stale", order_problems(names, history)),
+        ("registry coverage gap", coverage_problems(names, history)),
+    ):
+        if problems:
+            failed = 1
+            print(f"{label}: {len(problems)} problem(s)")
+            for line in problems[:10]:
+                print(f"  {line}")
+    if not failed:
+        print("registry is stalest-first and covered")
+    return failed
+
+
 def main() -> int:
-    check = "--check" in sys.argv
     src = QUERIES_PY.read_text()
     full_block, entries = registry_entries(src)
     names = [n for n, _ in entries]
+    if "--check" in sys.argv:
+        return check(names, correctness_history())
     lines = dict(entries)
     order = staleness_order(names, correctness_history())
 
     if order == names:
         print("registry already in stalest-first order")
         return 0
-    if check:
-        moved = [
-            (names[i], order[i]) for i in range(len(names))
-            if names[i] != order[i]
-        ]
-        print(f"registry order is stale: {len(moved)} entries out of place")
-        for cur, want in moved[:10]:
-            print(f"  position has {cur}, wants {want}")
-        return 1
 
     header = (
         "    # --- Stalest-first driver-window ordering (maintained by\n"

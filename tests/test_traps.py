@@ -1,5 +1,8 @@
 """Crawler-trap detection: pattern masking + the two-sided flag."""
 
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from wpextract_spark.operators.traps import url_pattern, url_trap_signals
@@ -91,3 +94,14 @@ def test_pathological_path_min_repeats(spark):
     )
     assert df.select(pathological_path("url", min_repeats=2)).collect()[0][0]
     assert not df.select(pathological_path("url", min_repeats=3)).collect()[0][0]
+
+
+@settings(max_examples=25, deadline=None)
+@given(min_repeats=st.integers(max_value=1))
+def test_pathological_path_rejects_min_repeats_below_two(min_repeats):
+    """One occurrence is not a repeat: the degenerate window fails loudly
+    when the column is built instead of matching every path."""
+    from wpextract_spark.operators.traps import pathological_path
+
+    with pytest.raises(ValueError, match="min_repeats"):
+        pathological_path("url", min_repeats=min_repeats)

@@ -96,8 +96,11 @@ def pathological_path(url: Column | str, min_repeats: int = 3) -> Column:
     split the path into segments and test every window of ``min_repeats``
     for equality — which both Spark (``exists`` over a ``sequence``) and
     the DuckDB oracle (``list_contains`` over ``generate_series``) run
-    natively. Map-only, empty/short paths are False.
+    natively. Map-only, empty/short paths are False. ``min_repeats`` below
+    2 raises ``ValueError``: one occurrence is not a repeat.
     """
+    if min_repeats < 2:
+        raise ValueError(f"min_repeats must be >= 2, got {min_repeats}")
     u = F.col(url) if isinstance(url, str) else url
     path = F.lower(F.regexp_extract(u, PATH_RE, 1))
     segs = F.filter(F.split(path, "/"), lambda s: s != "")

@@ -11,15 +11,23 @@ Spark scale that becomes a chunked job over the pages table:
   the parse stage uses, so chunk membership is stable across runs, executor
   counts, and input orderings.
 - Each chunk is extracted and written to ``out/chunk=<i>/`` (dynamic partition
-  overwrite — a re-run of a half-written chunk replaces it cleanly), then a
-  lineage row per *Spark partition* of the chunk is appended to the metrics
-  table: ``(chunk, partition_id, n_docs, n_bytes_in, n_bytes_out, wall_s,
-  run_id)``. The metrics append is the commit point: a chunk is complete iff
-  it has metrics rows, so a crash between data write and metrics append is
+  overwrite — a re-run of a half-written chunk replaces it cleanly). One
+  aggregation over the written chunk then yields a lineage row per *Spark
+  partition*: ``(chunk, partition_id, n_docs, n_errors, n_bytes_in,
+  n_bytes_out, wall_s, run_id)``. The driver writes those rows, at most
+  ``partitions_per_chunk`` of them, as one parquet file into the append-only
+  metrics table. That file is the commit point: a chunk is complete iff it
+  has metrics rows, so a crash between data write and metrics append is
   repaired by re-running the chunk (idempotent overwrite).
+- ``run()`` keeps two chunks in flight, so one chunk's straggler tasks and
+  commit overlap the next chunk's extraction; results still come back in
+  chunk order.
 - ``run(resume=True)`` reads the metrics table and skips completed chunks —
   exact checkpoint resume at chunk granularity with no url ever extracted
   into the output twice.
+- Every chunk re-scans the full input: parquet cannot prune the
+  ``pmod(xxhash64(url), n_chunks)`` filter. ``n_chunks`` therefore trades
+  resume granularity against input scans.
 
 On a real deployment both tables would be Iceberg (atomic append = the commit
 point); the sandbox uses parquet directories with the same layout and an
@@ -28,12 +36,17 @@ append-only metrics dir, which preserves the protocol.
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +56,15 @@ METRICS_SCHEMA = (
     "chunk INT, partition_id INT, n_docs BIGINT, n_errors BIGINT, "
     "n_bytes_in BIGINT, n_bytes_out BIGINT, wall_s DOUBLE, run_id STRING"
 )
+# METRICS_SCHEMA as pyarrow types, for the driver-side commit write.
+_ARROW_TYPES = {"INT": pa.int32(), "BIGINT": pa.int64(), "DOUBLE": pa.float64(),
+                "STRING": pa.string()}
+_METRICS_ARROW = pa.schema(
+    [(name, _ARROW_TYPES[t]) for name, t in map(str.split, METRICS_SCHEMA.split(", "))]
+)
+# Chunks extracted at once: one chunk's straggler tasks and commit overlap
+# the next chunk's extraction instead of leaving cores idle.
+_IN_FLIGHT = 2
 
 
 @dataclass
@@ -124,66 +146,81 @@ class ResumableExtractJob:
 
         # Exact per-partition doc/byte lineage from the written data itself
         # (counters derived from the committed output, not from accumulators,
-        # so retried/speculative tasks can never double-count).
+        # so retried/speculative tasks can never double-count). One
+        # aggregation, at most ``partitions_per_chunk`` rows to the driver.
         wall_s = time.perf_counter() - t0
-        written = self.spark.read.parquet(str(chunk_dir))
-        lineage = written.groupBy("partition_id").agg(
-            F.count("*").alias("n_docs"),
-            F.count("content.error").alias("n_errors"),
-            F.sum("_bytes_in").alias("n_bytes_in"),
-            F.sum(F.octet_length("content.text")).alias("n_bytes_out"),
-        )
-        lineage = lineage.select(
-            F.lit(chunk).cast("int").alias("chunk"),
-            F.col("partition_id").cast("int"),
-            "n_docs",
-            "n_errors",
-            "n_bytes_in",
-            "n_bytes_out",
-            F.lit(wall_s).alias("wall_s"),
-            F.lit(self.run_id).alias("run_id"),
-        )
-        if lineage.isEmpty():
-            # A chunk that selected zero pages still needs a commit row —
-            # "complete iff it has metrics rows" would otherwise re-run the
-            # empty chunk on every resume, forever.
-            lineage = self.spark.createDataFrame(
-                [(chunk, -1, 0, 0, 0, 0, wall_s, self.run_id)], METRICS_SCHEMA
+        rows = [
+            tuple(r)
+            for r in self.spark.read.parquet(str(chunk_dir))
+            .groupBy("partition_id")
+            .agg(
+                F.count("*"),
+                F.count("content.error"),
+                F.sum("_bytes_in"),
+                F.sum(F.octet_length("content.text")),
             )
-        # Append-only commit marker: one sub-directory per (run, chunk) so
-        # concurrent metric writes never clobber each other.
-        lineage.coalesce(1).write.mode("overwrite").parquet(
-            str(self.metrics_dir / f"{self.run_id}-{chunk:06d}")
+            .collect()
+        ]
+        # A chunk that selected zero pages still needs a commit row —
+        # "complete iff it has metrics rows" would otherwise re-run the
+        # empty chunk on every resume, forever.
+        cols = [list(c) for c in zip(*(rows or [(-1, 0, 0, 0, 0)]))]
+        self._commit(chunk, cols, wall_s)
+        # A partition whose docs all quarantined sums no text: its
+        # n_bytes_out stays null in the lineage row and counts as 0 here.
+        n_docs, _, n_bytes_in, n_bytes_out = (sum(v or 0 for v in c) for c in cols[1:])
+        return ChunkResult(chunk, n_docs, n_bytes_in, n_bytes_out, round(wall_s, 3))
+
+    def _commit(self, chunk: int, cols: list[list], wall_s: float) -> None:
+        """Append the lineage columns ``(partition_id, n_docs, n_errors,
+        n_bytes_in, n_bytes_out)`` as one parquet file in the chunk's own
+        ``(run, chunk)`` sub-directory, so concurrent commits never clobber
+        each other. Written from the driver with pyarrow and renamed into
+        place, so a chunk's metrics appear whole or not at all."""
+        n = len(cols[0])
+        table = pa.Table.from_arrays(
+            [[chunk] * n, *cols, [wall_s] * n, [self.run_id] * n],
+            schema=_METRICS_ARROW,
         )
-        totals = lineage.agg(
-            F.sum("n_docs"), F.sum("n_bytes_in"), F.sum("n_bytes_out")
-        ).first()
-        return ChunkResult(
-            chunk,
-            totals[0] or 0,
-            totals[1] or 0,
-            totals[2] or 0,
-            round(wall_s, 3),
-        )
+        commit_dir = self.metrics_dir / f"{self.run_id}-{chunk:06d}"
+        commit_dir.mkdir(parents=True, exist_ok=True)
+        tmp = commit_dir / ".part-0.parquet.tmp"  # dot-files are invisible to Spark
+        pq.write_table(table, tmp)
+        os.replace(tmp, commit_dir / "part-0.parquet")
 
     # -- driver -------------------------------------------------------------
 
     def run(
         self, resume: bool = True, max_chunks: Optional[int] = None
     ) -> list[ChunkResult]:
-        """Execute all (remaining) chunks; ``max_chunks`` bounds this call so
-        tests can simulate a mid-job crash."""
+        """Execute all (remaining) chunks, two at a time, and return one
+        result per chunk in chunk order (completed chunks as ``skipped``);
+        ``max_chunks`` bounds this call so tests can simulate a mid-job
+        crash. If a chunk fails, chunks not yet started are cancelled, the
+        one still in flight finishes and commits, and the error is raised.
+        """
         done = self.completed_chunks() if resume else set()
+        todo = [c for c in range(self.n_chunks) if c not in done][:max_chunks]
+        with ThreadPoolExecutor(max_workers=_IN_FLIGHT) as pool:
+            # Wrap per chunk: each wrap clones the caller's local properties,
+            # so concurrent chunks never share one mutable properties object.
+            futures = {
+                c: pool.submit(inheritable_thread_target(self.spark)(self._run_chunk), c)
+                for c in todo
+            }
+            try:
+                ran = {c: f.result() for c, f in futures.items()}
+            except BaseException:
+                pool.shutdown(cancel_futures=True)
+                raise
         results: list[ChunkResult] = []
-        executed = 0
         for chunk in range(self.n_chunks):
             if chunk in done:
                 results.append(ChunkResult(chunk, 0, 0, 0, 0.0, skipped=True))
-                continue
-            if max_chunks is not None and executed >= max_chunks:
-                break
-            results.append(self._run_chunk(chunk))
-            executed += 1
+            elif chunk in ran:
+                results.append(ran[chunk])
+            else:
+                break  # past the max_chunks bound
         return results
 
     def output(self) -> DataFrame:
