@@ -1,5 +1,6 @@
 """Incremental recrawl: equivalence with full re-extraction, kernel savings."""
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -37,19 +38,38 @@ def test_incremental_equals_full_rebuild(spark):
     assert incr == full
 
 
-def test_kernel_runs_only_on_stale_pages(spark):
+def _count_kernel_rows(spark, monkeypatch):
+    """Swap the content kernel for a wrapper that adds each Arrow batch's
+    row count to an accumulator: the rows the kernel really parses in the
+    executed plan, not the rows handed to the ``extract`` stage."""
+    from wpextract_spark.operators import extract as ext
+
+    real = ext.content_extract_udf
+    rows = spark.sparkContext.accumulator(0)
+
+    def counting_factory():
+        kernel = real().func
+
+        @F.pandas_udf(ext.CONTENT_RESULT_TYPE)
+        def _counted(html: pd.Series, url: pd.Series) -> pd.DataFrame:
+            rows.add(len(html))
+            return kernel(html, url)
+
+        return _counted
+
+    monkeypatch.setattr(ext, "content_extract_udf", counting_factory)
+    return rows
+
+
+def test_kernel_runs_only_on_stale_pages(spark, monkeypatch):
     run1, run2 = _crawls(spark)
-    seen: list[str] = []
-
-    def counting_extract(pages):
-        seen.extend(r.url for r in pages.select("url").collect())
-        return extract_pages(pages)
-
-    corpus, diff = incremental_update(
-        extract_pages(run1), run2, extract=counting_extract
-    )
-    corpus.count()  # materialize
-    assert sorted(seen) == ["u2", "u7"]  # changed + added ONLY
+    prev = extract_pages(run1).localCheckpoint()  # previous run, on disk
+    kernel_rows = _count_kernel_rows(spark, monkeypatch)
+    corpus, _ = incremental_update(prev, run2)
+    assert sorted(r.url for r in corpus.collect()) == [
+        "u2", "u3", "u4", "u5", "u6", "u7",
+    ]
+    assert kernel_rows.value == 2  # changed + added ONLY, each parsed once
 
 
 def test_diff_statuses_and_metrics(spark):
@@ -80,18 +100,14 @@ def test_carried_text_is_previous_runs_output(spark):
     assert got["u2"] == "body 2 EDITED"  # freshly extracted
 
 
-def test_second_refresh_with_same_crawl_is_a_noop(spark):
+def test_second_refresh_with_same_crawl_is_a_noop(spark, monkeypatch):
     run1, run2 = _crawls(spark)
     corpus1, _ = incremental_update(extract_pages(run1), run2)
-    seen: list[str] = []
-
-    def counting_extract(pages):
-        seen.extend(r.url for r in pages.select("url").collect())
-        return extract_pages(pages)
-
-    corpus2, diff = incremental_update(corpus1, run2, extract=counting_extract)
+    corpus1 = corpus1.localCheckpoint()  # the first refresh's output
+    kernel_rows = _count_kernel_rows(spark, monkeypatch)
+    corpus2, diff = incremental_update(corpus1, run2)
     assert {r.status for r in diff.collect()} == {"unchanged"}
-    assert seen == []  # the kernel never ran
     assert {(r.url, r.text) for r in corpus2.collect()} == {
         (r.url, r.text) for r in corpus1.collect()
     }
+    assert kernel_rows.value == 0  # the kernel never ran

@@ -239,3 +239,76 @@ def test_incremental_extract_diff_computed_once(spark):
     assert plan.count("BroadcastHashJoin") == 2, plan
     # diff enters as a scanned checkpoint, not re-derived joins
     assert "ExistingRDD" in plan, plan
+
+
+def _plan_tree(plan: str) -> list[tuple[str, int | None]]:
+    """(operator line, parent index) per node of a physical-plan string,
+    from the tree-drawing indentation of ``treeString``."""
+    nodes: list[tuple[str, int | None]] = []
+    stack: list[tuple[int, int]] = []  # (indent, node index)
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        if not body or body.startswith("AdaptiveSparkPlan"):
+            continue
+        indent = len(line) - len(body)
+        while stack and stack[-1][0] >= indent:
+            stack.pop()
+        nodes.append((body, stack[-1][1] if stack else None))
+        stack.append((indent, len(nodes) - 1))
+    return nodes
+
+
+def _lineage(nodes, i: int) -> list[int]:
+    """Node ``i`` and its ancestors, bottom-up."""
+    out = [i]
+    while (i := nodes[i][1]) is not None:
+        out.append(i)
+    return out
+
+
+def _subtree(nodes, root: int) -> list[int]:
+    return [i for i in range(len(nodes)) if root in _lineage(nodes, i)]
+
+
+def test_incremental_kernel_runs_once_above_stale_join(spark):
+    """The kernel's quarantine filter must not drag a copy of the UDF
+    under the stale-subset join onto the raw new-crawl scan: the fresh
+    branch evaluates the kernel exactly once, above the join, so only the
+    stale pages are parsed."""
+    from wpextract_spark.plans.incremental import extract_pages, incremental_update
+
+    run1 = spark.createDataFrame(
+        [(f"u{i}", f"<p>body {i}</p>") for i in range(1, 7)], "url string, html string"
+    )
+    run2 = spark.createDataFrame(
+        [("u2", "<p>body 2 EDITED</p>"), ("u3", "<p>body 3</p>"), ("u7", "<p>7</p>")],
+        "url string, html string",
+    )
+    corpus, _ = incremental_update(extract_pages(run1), run2)
+    nodes = _plan_tree(_plan(corpus))
+    union = next(i for i, (op, _) in enumerate(nodes) if op.startswith("Union"))
+    fresh_root = next(i for i, (_, parent) in enumerate(nodes) if parent == union)
+    fresh = _subtree(nodes, fresh_root)
+
+    evals = [i for i in fresh if nodes[i][0].startswith("ArrowEvalPython")]
+    assert len(evals) == 1, nodes
+    below = [nodes[i][0] for i in _subtree(nodes, evals[0])]
+    assert any("Join" in op for op in below), nodes
+    # no filter on kernel output sits below the join (on the raw scan)
+    for i in fresh:
+        if nodes[i][0].startswith("Filter") and "pythonUDF" in nodes[i][0]:
+            above = _lineage(nodes, i)[1:]
+            assert not any("Join" in nodes[a][0] for a in above), nodes
+    # previous corpus (carried branch) parses run 1 once too
+    assert sum(op.startswith("ArrowEvalPython") for op, _ in nodes) == 2, nodes
+
+
+def test_corpus_build_docs_parse_each_page_once(spark):
+    from wpextract_spark.plans.corpus_build import extract_docs
+
+    pages = spark.createDataFrame(
+        [("https://a/1", 1, "en", "<p>one</p>"), ("https://a/2", 2, "de", "<p>zwei</p>")],
+        "url string, warc_ts long, lang string, html string",
+    )
+    plan = _plan(extract_docs(pages))
+    assert plan.count("ArrowEvalPython") == 1, plan

@@ -1,5 +1,7 @@
 """Sentence segmentation: abbreviation protection, terminator runs, tails."""
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from wpextract_spark.operators.sentences import sentence_stats, split_sentences
@@ -104,3 +106,28 @@ def test_sentence_chunks_never_split_a_long_sentence(spark):
     # at offset 155 -> chunk 3 (ids are offset-derived, not dense)
     assert rows[0] == (0, long_sent)
     assert rows[1] == (3, "Short after.")
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    texts=st.lists(
+        st.text(alphabet="ab .!?\x01eigMrNo", max_size=30),
+        min_size=1,
+        max_size=20,
+    )
+)
+def test_raw_sentinel_char_never_becomes_a_dot(spark, texts):
+    """Raw U+0001 in library input is dropped, never restored as '.':
+    the split equals the split of the text without it, no sentence keeps
+    the control char, and the output has no more dots than the input."""
+    df = spark.createDataFrame(
+        [(t, t.replace("\x01", "")) for t in texts], "raw string, clean string"
+    )
+    rows = df.select(
+        split_sentences("raw").alias("raw"),
+        split_sentences("clean").alias("clean"),
+    ).collect()
+    for text, r in zip(texts, rows):
+        assert r["raw"] == r["clean"], text
+        assert not any("\x01" in s for s in r["raw"]), text
+        assert "".join(r["raw"]).count(".") <= text.count("."), text

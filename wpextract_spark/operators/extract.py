@@ -10,6 +10,16 @@ and scales by partition parallelism.
 All stages are ``F.pandas_udf`` scalar UDFs rather than ``mapInPandas`` so they
 compose with arbitrary surrounding columns without re-stating the input schema
 (Catalyst keeps column pruning / filter pushdown around them).
+
+One pushdown works against them: a filter on a UDF's *own output* (the
+quarantine ``text IS NOT NULL``) is deterministic, so Catalyst substitutes
+the UDF into it and pushes it below the projection (and below any join
+under that), which evaluates the kernel twice — once under the filter, once
+for the projection. The factories stay deterministic so that unrelated
+filters (``url = ...``) keep landing below the kernel; the two call sites
+that filter on the kernel's output mark it ``.asNondeterministic()``
+instead: ``plans.incremental.extract_pages`` and
+``plans.corpus_build.extract_docs``.
 """
 
 from __future__ import annotations

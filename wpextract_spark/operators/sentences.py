@@ -9,13 +9,16 @@ maximal ``[.!?]+`` run as a terminator.
 
 The implementation is deliberately regex-minimal so it runs identically in
 two engines: no lookbehind/lookahead (RE2 has none — the DuckDB oracle
-restates the same three steps), one capture in the replacement. Everything
+restates the same steps), one capture in the replacement. Everything
 is built-in JVM expressions over arrays — whole-stage codegen, no UDF, no
 shuffle; at 10^12 documents this is a map-only pass.
 
 Steps:
-1. rewrite ``<abbrev>.`` to ``<abbrev>\\x01`` (sentinel; U+0001 cannot
-   appear in corpus text — the pages pipeline strips control chars);
+0. delete every U+0001 from the input, so the sentinel of step 1 is the
+   only one in the text (the pages pipeline strips control chars already,
+   but ``split_sentences`` is a library function and raw text may carry
+   them — without this a stray U+0001 would come back as a dot);
+1. rewrite ``<abbrev>.`` to ``<abbrev>\\x01`` (sentinel);
 2. extract maximal ``[^.!?]+[.!?]+`` runs plus the unterminated tail;
 3. restore sentinels to dots, trim, drop empties.
 """
@@ -44,6 +47,7 @@ _SENTINEL = "\x01"
 def split_sentences(text: Column | str) -> Column:
     """Array of trimmed sentences (terminators kept, abbreviations safe)."""
     t = F.col(text) if isinstance(text, str) else text
+    t = F.translate(t, _SENTINEL, "")
     protected = F.regexp_replace(
         t, _LATIN_RE, "$1" + _SENTINEL + "$2" + _SENTINEL
     )

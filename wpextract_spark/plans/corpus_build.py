@@ -36,6 +36,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def extract_docs(pages: DataFrame) -> DataFrame:
+    """(url, warc_ts, lang, text) via the content kernel; pages whose
+    extraction fails are dropped (quarantine). The kernel is marked
+    nondeterministic so the quarantine filter cannot push a second copy of
+    it below the projection (see ``operators.extract``): one parse per
+    page."""
+    from wpextract_spark.operators.extract import content_extract_udf
+
+    res = content_extract_udf().asNondeterministic()(F.col("html"), F.col("url"))
+    return pages.select(
+        "url",
+        "warc_ts",
+        "lang",
+        res["text"].alias("text"),
+    ).where(F.col("text").isNotNull())
+
+
 def build_training_corpus(
     spark: SparkSession,
     pages: DataFrame,
@@ -51,7 +68,6 @@ def build_training_corpus(
     """Run the full build; returns (and writes) the metrics ledger."""
     from wpextract_spark.operators.curation import curation_pipeline
     from wpextract_spark.operators.decontam import ngram_decontaminate
-    from wpextract_spark.operators.extract import content_extract_udf
     from wpextract_spark.operators.packing import pack_sequences
     from wpextract_spark.operators.sampling import hash_split
     from wpextract_spark.operators.textstats import corpus_profile
@@ -60,13 +76,7 @@ def build_training_corpus(
     metrics: dict[str, Any] = {"stages": {}}
 
     # 1. extract — one parse per document, keyed by url.
-    res = content_extract_udf()(F.col("html"), F.col("url"))
-    docs = pages.select(
-        "url",
-        "warc_ts",
-        "lang",
-        res["text"].alias("text"),
-    ).where(F.col("text").isNotNull())
+    docs = extract_docs(pages)
     # doc_id must be identical on every lineage that re-evaluates it —
     # curation and decontamination each recompute the docs projection and
     # join back on it, and monotonically_increasing_id() is

@@ -11,7 +11,10 @@ touches ONLY added and changed pages:
 2. :func:`wpextract_spark.operators.snapshot.snapshot_diff` against the
    fingerprints stored with the previous run's extraction output — one
    full-outer join moving (url, fp) pairs only, never text or html;
-3. the extraction kernel runs over the ``added``/``changed`` subset;
+3. the extraction kernel runs over the ``added``/``changed`` subset —
+   once per stale page, above the stale-subset join, because
+   :func:`extract_pages` keeps its quarantine filter from dragging a copy
+   of the kernel down onto the raw crawl scan (see its docstring);
 4. ``unchanged`` rows carry the PREVIOUS run's extracted text forward
    verbatim; ``removed`` urls drop out.
 
@@ -37,10 +40,17 @@ from pyspark.sql import functions as F
 
 def extract_pages(pages: DataFrame) -> DataFrame:
     """Default extraction stage: (url, page_fp, text) via the real content
-    kernel; rows whose page fails to parse are dropped (quarantine)."""
+    kernel; rows whose page fails to parse are dropped (quarantine).
+
+    The kernel is marked nondeterministic so the quarantine filter on its
+    own output stays above the one projection that evaluates it. A
+    deterministic UDF is substituted into the filter and pushed through the
+    stale-subset join onto the raw crawl scan, which runs the kernel on
+    every new page and then again on the stale ones (plan shape pinned by
+    ``tests/test_plans.py``)."""
     from wpextract_spark.operators.extract import content_extract_udf
 
-    res = content_extract_udf()(F.col("html"), F.col("url"))
+    res = content_extract_udf().asNondeterministic()(F.col("html"), F.col("url"))
     return pages.select(
         "url",
         F.md5(F.col("html")).alias("page_fp"),
@@ -57,8 +67,9 @@ def incremental_update(
 
     ``prev`` is the previous run's ``(url, page_fp, text)``; ``new_pages``
     the raw new crawl ``(url, html, ...)``.  ``extract`` defaults to
-    :func:`extract_pages` (injectable so tests can count kernel
-    invocations and callers can swap richer extraction stages).
+    :func:`extract_pages` (injectable so callers can swap richer
+    extraction stages; one that filters on the kernel's output must mark
+    the kernel nondeterministic the way :func:`extract_pages` does).
 
     ``updated_corpus`` has the ``prev`` schema and equals
     ``extract(new_pages)`` row-for-row; ``diff`` is the snapshot_diff

@@ -4864,7 +4864,7 @@ WITH made AS (
 prot AS (
   SELECT doc_id,
          regexp_replace(
-           regexp_replace(text, '\b([ei])\.([ge])\.',
+           regexp_replace(replace(text, chr(1), ''), '\b([ei])\.([ge])\.',
                           '\1' || chr(1) || '\2' || chr(1), 'g'),
            '\b(Mr|Mrs|Ms|Dr|Prof|St|vs|etc|No|Fig|Jr|Sr|Inc|Ltd|cf|al)\.',
            '\1' || chr(1), 'g') AS p
@@ -5032,7 +5032,7 @@ WITH made AS (
 prot AS (
   SELECT doc_id,
          regexp_replace(
-           regexp_replace(text, '\b([ei])\.([ge])\.',
+           regexp_replace(replace(text, chr(1), ''), '\b([ei])\.([ge])\.',
                           '\1' || chr(1) || '\2' || chr(1), 'g'),
            '\b(Mr|Mrs|Ms|Dr|Prof|St|vs|etc|No|Fig|Jr|Sr|Inc|Ltd|cf|al)\.',
            '\1' || chr(1), 'g') AS p
