@@ -93,17 +93,6 @@ def test_near_dup_caps_applied_before_self_join(spark):
     assert join_pos >= 0 and win_pos >= 0 and win_pos > join_pos
 
 
-def test_image_meta_scan_prunes_to_doc_id(spark):
-    """q_image_meta synthesizes payloads from doc_id alone: the documents
-    scan must not read text/html columns."""
-    from wpextract_spark.plans.queries import q_image_meta
-
-    plan = _plan(q_image_meta(spark, "/root/testdata/sf0.001"))
-    read = [l for l in plan.splitlines() if "ReadSchema" in l]
-    assert read, plan
-    assert "doc_id" in read[0] and "text" not in read[0]
-
-
 def test_registry_outputs_driver_hashable_types(spark):
     """The driver's correctness canonicalizer pandas-sorts result columns and
     hashes values: array/struct/map columns crash it (round-2

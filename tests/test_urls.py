@@ -1,8 +1,10 @@
 """URL canonicalization edge cases + canonical-URL dedup."""
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from wpextract_spark.functions.urls import canonicalize_url
+from wpextract_spark.functions.urls import canonicalize_url, url_host
 from wpextract_spark.operators.corpusfilters import url_dedup
 
 
@@ -88,3 +90,64 @@ def test_surt_gives_per_site_sort_locality(spark):
     example = [k for k in keys if k.startswith("org,example")]
     i = keys.index(example[0])
     assert keys[i : i + len(example)] == example
+
+
+def _hosts(spark, urls):
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    return [r[0] for r in df.select(url_host("url")).collect()]
+
+
+def test_url_host_userinfo_and_ipv6(spark):
+    cases = {
+        "https://u:p@Example.com/x": "example.com",
+        "http://[2001:db8::1]:8080/": "[2001:db8::1]",
+        "https://Example.com:8443/a?next=me@evil.org": "example.com",
+        "https://a@b@Example.com/": "example.com",
+        "http://[::1]/": "[::1]",
+        "mailto:me@example.com": "",
+        "/relative/path": "",
+    }
+    assert _hosts(spark, list(cases)) == list(cases.values())
+
+
+_LABEL = st.text(alphabet="abcXYZ019-", min_size=1, max_size=8)
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    parts=st.lists(
+        st.tuples(
+            st.sampled_from(["http", "https", "HTTPS", "ftp"]),
+            st.sampled_from(["", "u@", "u:p@", "a@b@", "us%40er:p:w@"]),
+            st.one_of(
+                st.lists(_LABEL, min_size=1, max_size=3).map(".".join),
+                st.sampled_from(["[2001:db8::1]", "[::1]", "[FE80::1%25eth0]"]),
+            ),
+            st.sampled_from(["", ":8080", ":443"]),
+            st.sampled_from(["", "/", "/x/y?q=a@b", "?u=me@x.org#f@g", "#a@b"]),
+        ),
+        min_size=1,
+        max_size=20,
+    )
+)
+def test_url_host_is_the_authority_host(spark, parts):
+    """Whatever userinfo, port, path, query or fragment surrounds it, the
+    host comes back lowercased and whole (IPv6 brackets included)."""
+    urls = [f"{sch}://{ui}{host}{port}{rest}" for sch, ui, host, port, rest in parts]
+    assert _hosts(spark, urls) == [host.lower() for _, _, host, _, _ in parts]
+
+
+def test_host_keyed_operators_skip_userinfo(spark):
+    from wpextract_spark.operators.anchors import domain_link_graph
+    from wpextract_spark.operators.traps import url_trap_signals
+
+    edges = spark.createDataFrame(
+        [("https://u:p@Blog.Example.com/a", "http://[2001:db8::1]:8080/")],
+        "src_url string, dst_url string",
+    )
+    row = domain_link_graph(edges).first()
+    assert row["src_domain"] == "example.com"
+    assert row["dst_domain"] == "[2001:db8::1]"
+
+    urls = spark.createDataFrame([("https://u:p@Example.com/a",)], "url string")
+    assert url_trap_signals(urls).first()["host"] == "example.com"

@@ -28,6 +28,19 @@ from pyspark.sql import functions as F
 #: "name=value" (or bare "name") token.
 TRACKING_PARAM_RE = r"^(utm_[^=]*|fbclid|gclid|ref)(=.*)?$"
 
+#: Host of an absolute URL: an optional ``userinfo@`` (up to the last ``@``
+#: of the authority) is skipped, a bracketed IPv6 literal is kept whole,
+#: and the port is dropped.
+URL_HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#]*@)?(\[[^\]/?#]*\]|[^/:?#]*)"
+
+
+def url_host(url: Column | str) -> Column:
+    """Lowercased host of an absolute URL, ``""`` when there is none:
+    ``https://u:p@Example.com:8080/x`` -> ``example.com``,
+    ``http://[2001:db8::1]:8080/`` -> ``[2001:db8::1]``."""
+    u = F.col(url) if isinstance(url, str) else url
+    return F.lower(F.regexp_extract(u, URL_HOST_RE, 1))
+
 
 def canonicalize_url(url: Column | str) -> Column:
     u = F.col(url) if isinstance(url, str) else url

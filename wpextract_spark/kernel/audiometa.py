@@ -2,8 +2,7 @@
 
 Same no-codec pattern as ``kernel/imagemeta.py``: PCM WAV files carry sample
 rate / channel / sample-count information in fixed RIFF chunk headers, so
-audio *metadata* decode needs no librosa — only sample decode does (stubbed
-and pluggable in the multimodal operators).
+audio *metadata* decode needs no librosa — only sample decode does.
 """
 
 from __future__ import annotations

@@ -3,8 +3,7 @@
 Reads width/height/mime for PNG, GIF, and JPEG payloads without any codec
 library — the container-of-bits formats put dimensions in fixed header
 positions (PNG IHDR, GIF logical screen descriptor) or in a marker segment
-(JPEG SOFn). This makes ``extract_media_features`` real for images: metadata
-decode needs no PIL, only pixel decode does (still stubbed/pluggable).
+(JPEG SOFn). Metadata decode needs no PIL, only pixel decode does.
 
 Scale note: the sniffer touches only the first few hundred bytes of a
 payload; at crawl scale, pair it with a projection that reads a payload

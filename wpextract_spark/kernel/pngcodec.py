@@ -1,8 +1,7 @@
 """Pure-stdlib PNG pixel codec: zlib IDAT inflate + per-row unfiltering.
 
-Completes the multimodal story begun by ``kernel/imagemeta.py`` (header
-sniffing): for PNG payloads, *pixel* decode is now real, not a stub — no
-codec library needed because PNG's pixel path is just DEFLATE (stdlib
+Goes one step past ``kernel/imagemeta.py`` (header sniffing): for PNG
+payloads, *pixel* decode is real — no codec library needed because PNG's pixel path is just DEFLATE (stdlib
 ``zlib``) plus the five per-row predictive filters (None/Sub/Up/Average/
 Paeth, RFC 2083 §6). Supported: bit depth 8, color types 0 (gray),
 2 (RGB), 3 (palette), 4 (gray+alpha), 6 (RGBA), non-interlaced — the
@@ -15,8 +14,7 @@ operators wrap this in Arrow-batched ``mapInPandas`` stages, so executors
 decode their own partitions and nothing funnels through the driver. The
 unfilter hot paths (None/Up/Sub) are vectorized numpy; Average/Paeth carry a
 true per-pixel recurrence and fall back to a per-byte loop (rare in
-generated corpora; a production deployment plugs a C codec through the same
-``decoder=`` seam).
+generated corpora).
 """
 
 from __future__ import annotations

@@ -11,13 +11,11 @@ container has no ``warcio``), following the public spec:
   two-CRLF trailer;
 * Common Crawl's ``.warc.gz`` framing is one gzip *member per record*
   concatenated — members are split with ``zlib.decompressobj(wbits=31)``
-  and its ``unused_data`` tail, the same trick as the PNG/GIF codecs'
-  stream walks;
+  and its ``unused_data`` tail;
 * ``response`` records carry an ``application/http`` block: status line +
   HTTP headers, then the payload after the first blank line.
 
-Malformed input follows the repo-wide quarantine contract (see
-``operators/multimodal.py``): undecodable records are skipped, never
+Malformed input is quarantined: undecodable records are skipped, never
 raised, so one corrupt capture cannot fail a 100-TB scan task.
 
 The distributed read path lives in ``sources/warc.py``; the deterministic

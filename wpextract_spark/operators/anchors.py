@@ -82,14 +82,10 @@ def domain_link_graph(
     ``n_links``).
     """
     from wpextract_spark.functions.domains import registered_domain
+    from wpextract_spark.functions.urls import url_host
 
-    host_re = r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*)"
-    src_dom = registered_domain(
-        F.regexp_extract(F.col(src_col), host_re, 1)
-    ).alias("src_domain")
-    dst_dom = registered_domain(
-        F.regexp_extract(F.col(dst_col), host_re, 1)
-    ).alias("dst_domain")
+    src_dom = registered_domain(url_host(src_col)).alias("src_domain")
+    dst_dom = registered_domain(url_host(dst_col)).alias("dst_domain")
     return (
         edges.select(src_dom, dst_dom)
         .groupBy("src_domain", "dst_domain")

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wpextract_spark.functions.urls import url_host
 from wpextract_spark.operators.dedup import WS
 
 #: Tracking query parameters dropped by URL canonicalization-style filters
@@ -442,7 +443,7 @@ def url_filter(
     """
     url = F.col(url_col)
     lurl = F.lower(url)
-    domain = F.regexp_extract(lurl, r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1)
+    domain = url_host(url)
     score = None
     for word, weight in banned_words:
         term = F.when(lurl.contains(word), F.lit(weight)).otherwise(F.lit(0.0))

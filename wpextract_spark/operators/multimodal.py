@@ -1,111 +1,19 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Image columns: opaque binary payloads + typed per-image metadata.
 
-Images/audio/video are carried as ``binary`` columns with a metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched stages
-over ``mapInPandas``. Decode depth by modality: PNG, GIF, and baseline JPEG
-pixel decode are REAL (kernel/pngcodec.py zlib inflate + unfilter,
-kernel/gifcodec.py variable-width LZW, kernel/jpegcodec.py Huffman + IDCT —
-no codec library), as are PNG resize, image/audio header metadata
-(kernel/imagemeta.py, kernel/audiometa.py), and MJPEG-AVI video — container
-parse, frame sampling, per-frame pixel decode (kernel/avicodec.py).
-Inter-frame video codecs (H.264 ...) need ffmpeg, which is not in this
-environment — those stay behind ``NotImplementedError`` plus a
-deterministic fake so the Spark-side plumbing (schema, batch shape,
-partitioning) is real and tested either way.
+Images are carried as ``binary`` columns; header sniffing, pixel statistics
+and resize run as Arrow-batched stages over ``mapInPandas``. Image header
+metadata (kernel/imagemeta.py) and PNG pixel decode and resize
+(kernel/pngcodec.py zlib inflate + unfilter) are real — no codec library.
+Corrupt or foreign payloads yield nulls instead of killing the task.
 """
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, "
-    "meta struct<mime:string, width:int, height:int, duration_s:double>"
-)
-
-FEATURE_DIM = 8
-
-FEATURES_SCHEMA = (
-    "media_id long, kind string, n_bytes long, checksum string, "
-    f"features array<float>"
-)
-
-
-def _fake_decode(payload: bytes) -> list[float]:
-    """Deterministic stand-in for a real decoder: md5-derived feature vector.
-
-    Replace with a real codec by passing ``decoder=`` to
-    :func:`extract_media_features`.
-    """
-    digest = hashlib.md5(payload).digest()
-    return [b / 255.0 for b in digest[:FEATURE_DIM]]
-
-
-def _real_decode(payload: bytes) -> list[float]:  # pragma: no cover - stub
-    raise NotImplementedError(
-        "generic media decoding (video/exotic formats) requires ffmpeg, not "
-        "present in this environment; plug a decoder via "
-        "extract_media_features(decoder=...). PNG/GIF/baseline-JPEG pixel "
-        "decode IS real — use image_pixel_stats (kernel/pngcodec.py, "
-        "kernel/gifcodec.py, kernel/jpegcodec.py)."
-    )
-
-
-def png_decoder(payload: bytes) -> list[float]:
-    """Real feature decoder for PNG payloads: mean sample value per channel
-    (zero-padded to FEATURE_DIM), from actually-decoded pixels. Non-PNG
-    payloads fall back to the deterministic fake so mixed-modality batches
-    keep working."""
-    import numpy as np
-
-    from wpextract_spark.kernel.pngcodec import decode_png
-
-    decoded = decode_png(payload)
-    if decoded is None:
-        return _fake_decode(payload)
-    width, height, channels, pixels = decoded
-    means = (
-        np.frombuffer(pixels, dtype=np.uint8)
-        .reshape(width * height, channels)
-        .mean(axis=0)
-        / 255.0
-    )
-    return list(means) + [0.0] * (FEATURE_DIM - channels)
-
-
-def extract_media_features(
-    media: DataFrame,
-    payload_col: str = "payload",
-    decoder=None,
-) -> DataFrame:
-    """Decode + feature-extract every media row, Arrow batch at a time.
-
-    Output schema: (media_id, kind, n_bytes, checksum, features). The batch
-    loop is the template for real decoders: payloads stay ``bytes`` within the
-    batch; nothing is collected to the driver.
-    """
-    decode = decoder or _fake_decode
-    pass_cols = ["media_id", "kind"]
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {c: batch[c] for c in pass_cols}
-            payloads = batch[payload_col]
-            out["n_bytes"] = payloads.map(lambda b: len(b) if b is not None else 0)
-            out["checksum"] = payloads.map(
-                lambda b: hashlib.md5(b).hexdigest() if b is not None else None
-            )
-            out["features"] = payloads.map(
-                lambda b: decode(bytes(b)) if b is not None else None
-            )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_extract, FEATURES_SCHEMA)
 
 
 def _sniff_metadata(
@@ -152,101 +60,12 @@ def image_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
 
-def frame_sample_stub(
-    media: DataFrame, every_s: float = 1.0, payload_col: str = "payload"
-) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per sampled frame.
-
-    The "frames" are deterministic byte slices (real ffmpeg absent); the
-    row-explosion shape — the part that matters for partition sizing — is
-    real. Expansion is vectorized pandas (repeat + cumcount), no per-row
-    iteration over the batch.
-    """
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = batch[payload_col]
-            duration = pd.to_numeric(
-                batch["meta"].map(lambda m: (m["duration_s"] if m else 0.0) or 0.0),
-                errors="coerce",
-            )
-            # NaN/inf durations (unknown length from a real probe) quarantine
-            # to 1 frame, never a task-killing astype(int) on non-finite.
-            import numpy as np
-
-            duration = duration.replace([np.inf, -np.inf], np.nan).fillna(0.0)
-            n_frames = (duration / every_s).astype(int).clip(lower=1)
-            n_frames = n_frames.where(payloads.notna(), 0)
-
-            idx = batch.index.repeat(n_frames)
-            grp = pd.Series(idx)
-            frame_idx = grp.groupby(grp, sort=False).cumcount().to_numpy()
-            payload_rep = payloads.loc[idx].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "media_id": batch.loc[idx, "media_id"].to_numpy(),
-                    "frame_idx": frame_idx.astype("int32"),
-                    "frame_bytes": [
-                        bytes(p[(i * 16) % max(len(p), 1) : (i * 16) % max(len(p), 1) + 16])
-                        for p, i in zip(payload_rep, frame_idx)
-                    ],
-                }
-            )
-
-    return media.mapInPandas(_sample, "media_id long, frame_idx int, frame_bytes binary")
-
-
-def audio_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Real (no-codec) audio metadata: sample rate / channels / sample count
-    / duration sniffed from PCM WAV RIFF headers (kernel/audiometa.py)."""
-    from wpextract_spark.kernel.audiometa import sniff_wav
-
-    return _sniff_metadata(
-        media,
-        sniff_wav,
-        [
-            ("mime", None),
-            ("sample_rate", "Int32"),
-            ("n_channels", "Int32"),
-            ("n_samples", "Int64"),
-            ("duration_s", "Float64"),
-        ],
-        "media_id long, kind string, mime string, sample_rate int, "
-        "n_channels int, n_samples long, duration_s double",
-        payload_col,
-    )
-
-
-def audio_pcm_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """REAL PCM sample decode for WAV payloads (kernel/audiocodec.py): RIFF
-    chunk walk + frombuffer over the ``data`` chunk, no codec library. Emits
-    exact-integer per-clip sample statistics (sum, energy, peak) so results
-    cross engines with no float ambiguity — the audio analogue of
-    :func:`png_pixel_stats`. Undecodable / compressed / foreign payloads
-    yield nulls (quarantine contract)."""
-    from wpextract_spark.kernel.audiocodec import pcm_stats
-
-    return _sniff_metadata(
-        media,
-        pcm_stats,
-        [
-            ("n_samples", "Int64"),
-            ("sum_samples", "Int64"),
-            ("sum_squares", "Int64"),
-            ("peak_abs", "Int32"),
-        ],
-        "media_id long, kind string, n_samples long, sum_samples long, "
-        "sum_squares long, peak_abs int",
-        payload_col,
-    )
-
-
 def png_pixel_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """REAL pixel decode for PNG payloads (kernel/pngcodec.py): zlib IDAT
     inflate + per-row unfilter, no codec library. Emits per-image pixel
     statistics; the sum is an exact integer so it crosses engines without
     representational ambiguity. Non-PNG / corrupt payloads yield nulls
-    (quarantine contract). Replaces the round-1/2 md5 fake for PNGs."""
+    (quarantine contract)."""
     from wpextract_spark.kernel.pngcodec import pixel_stats
 
     return _sniff_metadata(
@@ -265,100 +84,12 @@ def png_pixel_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame
     )
 
 
-def image_pixel_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """REAL pixel decode for PNG, GIF, *and* baseline JPEG payloads
-    (magic-dispatched to kernel/pngcodec.py, kernel/gifcodec.py, or
-    kernel/jpegcodec.py — zlib inflate + unfilter / LZW decode / Huffman +
-    IDCT, no codec library). Same schema and quarantine contract as
-    :func:`png_pixel_stats`: undecodable payloads (progressive JPEG,
-    truncated streams, foreign formats) yield nulls."""
-    import numpy as np
-
-    from wpextract_spark.kernel.gifcodec import decode_gif
-    from wpextract_spark.kernel.jpegcodec import decode_jpeg
-    from wpextract_spark.kernel.pngcodec import decode_png
-
-    def _stats(payload: bytes):
-        if payload[:2] == b"\xff\xd8":
-            decoded = decode_jpeg(payload)
-        else:
-            decoded = decode_png(payload)
-            if decoded is None:
-                decoded = decode_gif(payload)
-        if decoded is None:
-            return None
-        width, height, channels, pixels = decoded
-        total = int(np.frombuffer(pixels, dtype=np.uint8).sum(dtype=np.int64))
-        return (width, height, channels, width * height, total)
-
-    return _sniff_metadata(
-        media,
-        _stats,
-        [
-            ("width", "Int32"),
-            ("height", "Int32"),
-            ("channels", "Int32"),
-            ("n_pixels", "Int64"),
-            ("pixel_sum", "Int64"),
-        ],
-        "media_id long, kind string, width int, height int, channels int, "
-        "n_pixels long, pixel_sum long",
-        payload_col,
-    )
-
-
-def image_ahash_groups(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Perceptual image near-dup grouping: REAL decode (magic-dispatched
-    PNG/GIF/JPEG) -> 8x8 average-hash (kernel/imagehash.py) -> exact-hash
-    group sizes. Output: (media_id, kind, ahash, n_same).
-
-    Scale shape: the hash is computed row-locally inside one Arrow batch
-    stage; the only shuffle is the hash-keyed window (64-bit-entropy key,
-    uniformly distributed — no skew salt needed). Hamming-near pairs can be
-    layered on with the SimHash banding in operators/dedup.py; exact-hash
-    grouping is the common CDN-variant case. Undecodable payloads hash to
-    null and form no group (n_same counts only decodable twins)."""
-    from wpextract_spark.kernel.gifcodec import decode_gif
-    from wpextract_spark.kernel.imagehash import average_hash
-    from wpextract_spark.kernel.jpegcodec import decode_jpeg
-    from wpextract_spark.kernel.pngcodec import decode_png
-
-    def _hash(payload: bytes):
-        if payload[:2] == b"\xff\xd8":
-            decoded = decode_jpeg(payload)
-        else:
-            decoded = decode_png(payload)
-            if decoded is None:
-                decoded = decode_gif(payload)
-        if decoded is None:
-            return None
-        return (average_hash(*decoded),)
-
-    hashed = _sniff_metadata(
-        media,
-        _hash,
-        [("ahash", None)],
-        "media_id long, kind string, ahash string",
-        payload_col,
-    )
-    from pyspark.sql import Window
-
-    n_same = F.count("*").over(Window.partitionBy("ahash"))
-    return hashed.select(
-        "media_id",
-        "kind",
-        "ahash",
-        F.when(F.col("ahash").isNotNull(), n_same).cast("long").alias("n_same"),
-    )
-
-
 def png_resize(
     media: DataFrame, width: int, height: int, payload_col: str = "payload"
 ) -> DataFrame:
     """REAL image resize for PNG payloads: decode -> nearest-neighbor index
-    map -> re-encode (kernel/pngcodec.py). Same schema contract as
-    :func:`resize_stub`; undecodable payloads pass through as null payload
-    rather than killing the task."""
+    map -> re-encode (kernel/pngcodec.py). Undecodable payloads pass through
+    as null payload rather than killing the task."""
     from wpextract_spark.kernel.pngcodec import resize_nearest
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -397,156 +128,6 @@ def gradient_image_build_udf():
     return _build
 
 
-def video_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """REAL video-container metadata: dimensions / frame count / fps /
-    duration from the RIFF chunk tree of an MJPEG AVI
-    (kernel/avicodec.py — O(header + chunk walk), frame bytes untouched).
-    Foreign/corrupt payloads yield nulls."""
-    from wpextract_spark.kernel.avicodec import parse_avi
-
-    def _sniff(payload: bytes):
-        meta = parse_avi(payload)
-        if meta is None:
-            return None
-        return (
-            "video/x-msvideo",
-            meta["width"],
-            meta["height"],
-            meta["n_frames"],
-            meta["fps"],
-            meta["duration_s"],
-        )
-
-    return _sniff_metadata(
-        media,
-        _sniff,
-        [
-            ("mime", None),
-            ("width", "Int32"),
-            ("height", "Int32"),
-            ("n_frames", "Int32"),
-            ("fps", "Float64"),
-            ("duration_s", "Float64"),
-        ],
-        "media_id long, kind string, mime string, width int, height int, "
-        "n_frames int, fps double, duration_s double",
-        payload_col,
-    )
-
-
-def video_frame_stats(
-    media: DataFrame,
-    every_n: int = 1,
-    payload_col: str = "payload",
-    container: str = "avi",
-) -> DataFrame:
-    """REAL video frame sampling + decode: every ``every_n``-th frame is
-    extracted from the wrapper — ``container="avi"`` walks a RIFF/MJPEG-AVI
-    chunk tree (kernel/avicodec.py), ``container="mjpeg"`` splits a raw
-    concatenated-JPEG stream by marker walk (kernel/mjpegcodec.py) — and
-    its JPEG pixels decoded (kernel/jpegcodec.py); one output row per
-    sampled frame with exact integer pixel sums. This is the real path the
-    ``frame_sample_stub`` plumbing models; inter-frame codecs (H.264 ...)
-    still need ffmpeg and stay behind the ``decoder=`` seam. Undecodable
-    payloads produce no rows (quarantine)."""
-    import numpy as np
-
-    from wpextract_spark.kernel.avicodec import avi_frames
-    from wpextract_spark.kernel.jpegcodec import decode_jpeg
-    from wpextract_spark.kernel.mjpegcodec import mjpeg_frames
-
-    if container not in ("avi", "mjpeg"):
-        raise ValueError(f"unknown container: {container!r}")
-    extract = avi_frames if container == "avi" else mjpeg_frames
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {
-                "media_id": [], "frame_idx": [], "width": [],
-                "height": [], "pixel_sum": [],
-            }
-            for media_id, payload in zip(batch["media_id"], batch[payload_col]):
-                frames = extract(bytes(payload), every_n) if payload is not None else None
-                if not frames:
-                    continue
-                for i, fb in enumerate(frames):
-                    decoded = decode_jpeg(fb)
-                    if decoded is None:
-                        continue
-                    w, h, _c, data = decoded
-                    out["media_id"].append(media_id)
-                    out["frame_idx"].append(i * every_n)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["pixel_sum"].append(
-                        int(np.frombuffer(data, np.uint8).sum(dtype=np.int64))
-                    )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        _stats,
-        "media_id long, frame_idx int, width int, height int, pixel_sum long",
-    )
-
-
-def gradient_video_build_udf():
-    """doc_id -> deterministic MJPEG-AVI payload (sources/videogen.py) whose
-    sampled-frame pixel sums are SQL-restatable — the test/bench inverse of
-    :func:`video_frame_stats`."""
-    from wpextract_spark.sources.videogen import build_gradient_video
-
-    @F.pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        return pd.Series(
-            [build_gradient_video(int(i))[3] for i in ids], dtype="object"
-        )
-
-    return _build
-
-
-def gradient_mjpeg_stream_build_udf():
-    """doc_id -> deterministic RAW MJPEG STREAM payload
-    (sources/videogen.build_gradient_mjpeg_stream) — same frame arithmetic
-    as the AVI generator, so the same SQL oracle covers both wrappers."""
-    from wpextract_spark.sources.videogen import build_gradient_mjpeg_stream
-
-    @F.pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        return pd.Series(
-            [build_gradient_mjpeg_stream(int(i))[3] for i in ids],
-            dtype="object",
-        )
-
-    return _build
-
-
-def gradient_jpeg_build_udf():
-    """doc_id -> deterministic block-gradient baseline JPEG
-    (sources/imagegen.py) whose decoded pixel sum is SQL-restatable (pixels
-    constant per 8x8 block => DC-only spectrum => bit-exact round-trip) —
-    the test/bench inverse of :func:`image_pixel_stats` for JPEG."""
-    from wpextract_spark.sources.imagegen import build_gradient_jpeg
-
-    @F.pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        return pd.Series(
-            [build_gradient_jpeg(int(i))[3] for i in ids], dtype="object"
-        )
-
-    return _build
-
-
-def audio_build_udf():
-    """doc_id -> deterministic PCM WAV payload (sources/audiogen.py)."""
-    from wpextract_spark.sources.audiogen import build_audio
-
-    @F.pandas_udf("binary")
-    def _build(ids: pd.Series) -> pd.Series:
-        return pd.Series([build_audio(int(i))[2] for i in ids], dtype="object")
-
-    return _build
-
-
 def image_build_udf():
     """doc_id -> deterministic PNG/GIF/JPEG payload (sources/imagegen.py).
 
@@ -559,66 +140,3 @@ def image_build_udf():
         return pd.Series([build_image(int(i))[3] for i in ids], dtype="object")
 
     return _build
-
-
-def documents_as_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Adapter: treat document text bytes as opaque media payloads (the
-    testdata has no true binary modality; the plumbing is modality-agnostic)."""
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        F.lit("text").alias("kind"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
-        F.struct(
-            F.lit("text/plain").alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            (F.length(text_col) / 100.0).alias("duration_s"),
-        ).alias("meta"),
-    )
-
-
-def resize_stub(
-    media: DataFrame,
-    width: int,
-    height: int,
-    payload_col: str = "payload",
-    resizer=None,
-) -> DataFrame:
-    """Image-resize plumbing: payload -> payload', meta rewritten to the new
-    dimensions.
-
-    The default "resizer" deterministically downsamples the byte stream to
-    ``width*height`` bytes (real PIL absent); pass ``resizer=`` a callable
-    ``(bytes, w, h) -> bytes`` to plug a real codec. Schema and batch shape —
-    what a real deployment must get right — are identical either way.
-    """
-
-    def _fake_resize(payload: bytes, w: int, h: int) -> bytes:
-        target = max(w * h, 1)
-        if len(payload) <= target:
-            return payload
-        step = len(payload) / target
-        return bytes(payload[int(i * step)] for i in range(target))
-
-    resize = resizer or _fake_resize
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {
-                "media_id": batch["media_id"],
-                "kind": batch["kind"],
-                "payload": batch[payload_col].map(
-                    lambda b: resize(bytes(b), width, height) if b is not None else None
-                ),
-                "meta": batch["meta"].map(
-                    lambda m: {
-                        "mime": m["mime"] if m else None,
-                        "width": width,
-                        "height": height,
-                        "duration_s": m["duration_s"] if m else None,
-                    }
-                ),
-            }
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_run, MEDIA_SCHEMA)

@@ -30,12 +30,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from wpextract_spark.functions.urls import url_host
+
 #: Path masking, applied in order: long hex runs (session ids, content
 #: hashes) first so they don't decay into digit-runs, then digit runs.
 HEX_RUN_RE = r"[0-9a-f]{8,}"
 DIGIT_RUN_RE = r"[0-9]+"
 
-HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*)"
 PATH_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)"
 
 
@@ -63,7 +64,7 @@ def url_trap_signals(
     """
     u = F.col(url_col)
     shaped = df.select(
-        F.lower(F.regexp_extract(u, HOST_RE, 1)).alias("host"),
+        url_host(u).alias("host"),
         url_pattern(u).alias("pattern"),
         u.alias("_url"),
     )

@@ -32,7 +32,7 @@ fingerprint of the raw page the text was extracted from (exactly what
 
 from __future__ import annotations
 
-from typing import Any, Callable, Optional
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,25 +59,19 @@ def extract_pages(pages: DataFrame) -> DataFrame:
 
 
 def incremental_update(
-    prev: DataFrame,
-    new_pages: DataFrame,
-    extract: Optional[Callable[[DataFrame], DataFrame]] = None,
+    prev: DataFrame, new_pages: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """(updated_corpus, diff) for the new crawl.
 
     ``prev`` is the previous run's ``(url, page_fp, text)``; ``new_pages``
-    the raw new crawl ``(url, html, ...)``.  ``extract`` defaults to
-    :func:`extract_pages` (injectable so callers can swap richer
-    extraction stages; one that filters on the kernel's output must mark
-    the kernel nondeterministic the way :func:`extract_pages` does).
+    the raw new crawl ``(url, html, ...)``.
 
     ``updated_corpus`` has the ``prev`` schema and equals
-    ``extract(new_pages)`` row-for-row; ``diff`` is the snapshot_diff
+    ``extract_pages(new_pages)`` row-for-row; ``diff`` is the snapshot_diff
     status table (url, old_fp, new_fp, status) for metrics/scheduling.
     """
     from wpextract_spark.operators.snapshot import snapshot_diff
 
-    extract = extract or extract_pages
     new_fp = new_pages.select("url", F.md5(F.col("html")).alias("fp"))
     diff = snapshot_diff(
         prev.select("url", F.col("page_fp").alias("fp")),
@@ -95,7 +89,7 @@ def incremental_update(
     # the corpus. Plan shape pinned by tests/test_plans.py.
     diff = diff.localCheckpoint(eager=False)
     stale = diff.where(F.col("status").isin("added", "changed")).select("url")
-    fresh = extract(new_pages.join(stale, "url"))
+    fresh = extract_pages(new_pages.join(stale, "url"))
     carried = prev.join(
         diff.where(F.col("status") == "unchanged").select("url"), "url"
     ).select("url", "page_fp", "text")

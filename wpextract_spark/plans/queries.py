@@ -14,7 +14,6 @@ semantics); the driver records a weaker rows-only check for them.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as PyWindow
 from pyspark.sql import functions as F
 
 from wpextract_spark.operators.dedup import (
@@ -26,11 +25,6 @@ from wpextract_spark.operators.dedup import (
     simhash,
 )
 from wpextract_spark.operators.extract import content_extract_udf, locale_udf
-from wpextract_spark.operators.multimodal import (
-    documents_as_media,
-    extract_media_features,
-    frame_sample_stub,
-)
 from wpextract_spark.operators.skew import salted_agg, salted_join
 from wpextract_spark.operators.similarity import (
     cosine_topk,
@@ -1523,69 +1517,6 @@ GROUP BY p_brand
 """
 
 
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style agg: map-side partial aggregation, no join."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    return (
-        lineitem.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-ORACLE_PRICING = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(avg(l_discount), 6) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join + filter + agg: orders x customer segment counts by priority."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    return (
-        orders.join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
-        .where(F.col("c_mktsegment") == "BUILDING")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_orders"), F.round(F.avg("o_totalprice"), 2).alias("avg_price"))
-    )
-
-
-ORACLE_ORDER_PRIORITY = """
-SELECT o_orderpriority, count(*) AS n_orders, round(avg(o_totalprice), 2) AS avg_price
-FROM orders JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY o_orderpriority
-"""
-
-
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time windowed aggregation (batch form of the streaming op)."""
-    events = _t(spark, sf_dir, "events")
-    return events.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("event_type")
-    ).agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-
-
-ORACLE_EVENTS_HOURLY = """
-SELECT date_trunc('hour', ts) AS hour, event_type,
-       count(*) AS n_events, round(sum(value), 2) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join: each event picks up the latest order the same
     user had placed at event time (union-of-streams + running window — one
@@ -1756,88 +1687,6 @@ GROUP BY 1
 """
 
 
-def q_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-dimension THETA join: classify events into value bands by
-    range membership against a literal 4-row tier table. The right physical
-    shape is an explicit broadcast of the dim + nested-loop join (each
-    event scans 4 rows JVM-side) — never a shuffle; the classic alternative
-    spelling is a CASE expression, but the dim-join form is what survives
-    when the bands table is data, not code."""
-    events = _t(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
-        [("free", 0.0, 5.0), ("basic", 5.0, 20.0),
-         ("plus", 20.0, 50.0), ("premium", 50.0, 1e18)],
-        "band string, lo double, hi double",
-    )
-    return (
-        events.join(
-            F.broadcast(bands),
-            (F.col("value") >= F.col("lo")) & (F.col("value") < F.col("hi")),
-            "inner",
-        )
-        .groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).cast("double").alias("sum_value"),
-        )
-    )
-
-
-ORACLE_VALUE_BANDS = """
-WITH bands(band, lo, hi) AS (
-  VALUES ('free', 0.0, 5.0), ('basic', 5.0, 20.0),
-         ('plus', 20.0, 50.0), ('premium', 50.0, 1e18))
-SELECT band, count(*) AS n_events,
-       CAST(round(sum(value), 2) AS DOUBLE) AS sum_value
-FROM events JOIN bands ON value >= lo AND value < hi
-GROUP BY band
-"""
-
-
-def q_user_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user spend rollup ranked into deciles (NTILE) with cumulative
-    share — the classic heavy-user analytics cut. The global window runs
-    over the per-user AGGREGATE (one row per user — tiny next to the event
-    stream at any scale), with a fully deterministic order (rounded sum
-    desc, user_id) so both engines tile identically."""
-    events = _t(spark, sf_dir, "events")
-    per_user = events.groupBy("user_id").agg(
-        F.round(F.sum("value"), 6).cast("double").alias("total_value"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    w = PyWindow.orderBy(F.desc("total_value"), F.asc("user_id"))
-    return per_user.select(
-        "user_id",
-        "total_value",
-        "n_events",
-        F.ntile(10).over(w).alias("decile"),
-        F.round(
-            F.sum("total_value").over(
-                w.rowsBetween(PyWindow.unboundedPreceding, PyWindow.currentRow)
-            )
-            / F.sum("total_value").over(
-                PyWindow.partitionBy()
-            ),
-            6,
-        ).alias("cum_share"),
-    )
-
-
-ORACLE_USER_DECILES = """
-WITH per_user AS (
-  SELECT user_id,
-         CAST(round(sum(value), 6) AS DOUBLE) AS total_value,
-         count(*) AS n_events
-  FROM events GROUP BY 1)
-SELECT user_id, total_value, n_events,
-       ntile(10) OVER w AS decile,
-       round(sum(total_value) OVER (ORDER BY total_value DESC, user_id
-                                    ROWS UNBOUNDED PRECEDING)
-             / sum(total_value) OVER (), 6) AS cum_share
-FROM per_user WINDOW w AS (ORDER BY total_value DESC, user_id)
-"""
-
-
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted index with tf-ranked, k-bounded posting lists
     (operators/textstats.py:inverted_index).
@@ -1953,27 +1802,6 @@ FROM pcnt p
 JOIN ucnt c1 ON c1.w = p.w1
 JOIN ucnt c2 ON c2.w = p.w2
 CROSS JOIN tot t
-"""
-
-
-def q_events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OLAP CUBE over (event_type, hour): all four grouping sets in one
-    pass (Spark plans a single Expand + hash aggregate — one shuffle for
-    every subtotal level, not one scan per level)."""
-    events = _t(spark, sf_dir, "events")
-    return events.cube(
-        F.col("event_type"), F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).cast("double").alias("sum_value"),
-    )
-
-
-ORACLE_EVENTS_CUBE = """
-SELECT event_type, date_trunc('hour', ts) AS hour,
-       count(*) AS n_events,
-       CAST(round(sum(value), 2) AS DOUBLE) AS sum_value
-FROM events GROUP BY CUBE (event_type, date_trunc('hour', ts))
 """
 
 
@@ -2859,41 +2687,6 @@ GROUP BY o_orderpriority
 """
 
 
-def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-schema join: fact lineitem against orders/customer with the tiny
-    nation dim explicitly broadcast — revenue rollup per nation."""
-    lineitem = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    # Exact decimal arithmetic for the sum (order-independent), but the final
-    # value is cast to double on BOTH sides so no engine-specific numeric type
-    # (Decimal vs hugeint rendering) reaches the driver's value hasher.
-    revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    return (
-        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(revenue), 2).cast("double").alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-ORACLE_REVENUE_BY_NATION = """
-SELECT n_name,
-       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-"""
-
-
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_stats(_t(spark, sf_dir, "documents"))
 
@@ -3137,32 +2930,6 @@ GROUP BY dw.doc_id
 """
 
 
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = documents_as_media(_t(spark, sf_dir, "documents"))
-    feats = extract_media_features(media)
-    return feats.select("media_id", "kind", "n_bytes", "checksum")
-
-
-ORACLE_MULTIMODAL = """
-SELECT doc_id AS media_id, 'text' AS kind,
-       octet_length(CAST(text AS BLOB)) AS n_bytes, md5(text) AS checksum
-FROM documents
-"""
-
-
-def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = documents_as_media(_t(spark, sf_dir, "documents"))
-    frames = frame_sample_stub(media, every_s=1.0)
-    return frames.groupBy("media_id").agg(F.count("*").alias("n_frames"))
-
-
-ORACLE_FRAME_SAMPLE = """
-SELECT doc_id AS media_id,
-       greatest(CAST(floor(length(text) / 100.0) AS BIGINT), 1) AS n_frames
-FROM documents
-"""
-
-
 def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOM-heuristics leg: locate the article body on a generic (non-WP)
     page drowned in boilerplate — nav menu, link-farm sidebar with its own
@@ -3252,306 +3019,6 @@ SELECT doc_id,
        CAST(2 AS BIGINT) AS n_pages,
        false AS quarantined
 FROM documents
-"""
-
-
-def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real image-metadata decode: synthesize a deterministic PNG/GIF/JPEG
-    payload per document, then sniff mime/width/height from header bytes
-    (kernel/imagemeta.py — no codec library). The oracle restates the
-    generator's dimension arithmetic; the Spark path actually builds the
-    bytes and parses them back."""
-    from wpextract_spark.operators.multimodal import image_build_udf, image_metadata
-
-    kinds = F.array(F.lit("png"), F.lit("gif"), F.lit("jpeg"))
-    media = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(kinds, (F.col("doc_id") % 3 + 1).cast("int")).alias("kind"),
-        image_build_udf()(F.col("doc_id")).alias("payload"),
-    )
-    return image_metadata(media)
-
-
-ORACLE_IMAGE_META = """
-SELECT doc_id AS media_id,
-       ['png','gif','jpeg'][(doc_id % 3) + 1] AS kind,
-       'image/' || ['png','gif','jpeg'][(doc_id % 3) + 1] AS mime,
-       CAST(16 + doc_id % 100 AS INTEGER) AS width,
-       CAST(16 + (doc_id * 7) % 100 AS INTEGER) AS height
-FROM documents
-"""
-
-
-def q_png_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL pixel decode, oracle-checked: synthesize a deterministic
-    gradient PNG per document (sources/imagegen.py — Sub-filtered row 0,
-    Up-filtered rest), then zlib-inflate + unfilter the pixels back out
-    (kernel/pngcodec.py) and emit exact integer pixel sums. The oracle
-    restates the generator's pixel arithmetic ((base + r + c) % 256) with a
-    double-lateral range, so a decoder bug anywhere in the filter chain
-    breaks the hash."""
-    from wpextract_spark.operators.multimodal import (
-        gradient_image_build_udf,
-        png_pixel_stats,
-    )
-
-    media = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("png").alias("kind"),
-        gradient_image_build_udf()(F.col("doc_id")).alias("payload"),
-    )
-    return png_pixel_stats(media)
-
-
-ORACLE_PNG_PIXELS = """
-WITH d AS (
-  SELECT doc_id,
-         16 + doc_id % 100 AS w,
-         16 + (doc_id * 7) % 100 AS h,
-         (doc_id * 37) % 256 AS base
-  FROM documents),
-px AS (
-  -- sum over the w x h grid of (base + r + c) % 256, grouped by the
-  -- diagonal s = r + c: each diagonal holds
-  -- least(h-1, s) - greatest(0, s - w + 1) + 1 pixels of equal value.
-  -- (range() here takes a constant — this DuckDB build rejects
-  -- lateral-correlated table-function parameters.)
-  SELECT d.doc_id, d.w, d.h,
-         CAST(sum(
-           (least(d.h - 1, s.v) - greatest(0, s.v - d.w + 1) + 1)
-           * ((d.base + s.v) % 256)
-         ) AS BIGINT) AS pixel_sum
-  FROM d JOIN range(512) s(v) ON s.v <= d.h + d.w - 2
-  GROUP BY d.doc_id, d.w, d.h)
-SELECT doc_id AS media_id, 'png' AS kind,
-       CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-       CAST(1 AS INTEGER) AS channels,
-       CAST(w * h AS BIGINT) AS n_pixels, pixel_sum
-FROM px
-"""
-
-
-def q_jpeg_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG pixel decode, oracle-checked: synthesize a
-    deterministic block-gradient JPEG per document (sources/imagegen.py —
-    actual DCT + Annex-K Huffman entropy coding), then Huffman-decode +
-    IDCT the pixels back out (kernel/jpegcodec.py) and emit exact integer
-    pixel sums. Pixels are constant per 8x8 block, so the spectrum is
-    DC-only and the round-trip is bit-exact — the oracle restates the
-    generator's block arithmetic ((base + r//8 + c//8) % 256) without
-    modeling DCT rounding. Goes through the magic-dispatched
-    image_pixel_stats so the PNG/GIF/JPEG dispatch path is the thing
-    driver-checked."""
-    from wpextract_spark.operators.multimodal import (
-        gradient_jpeg_build_udf,
-        image_pixel_stats,
-    )
-
-    media = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("jpeg").alias("kind"),
-        gradient_jpeg_build_udf()(F.col("doc_id")).alias("payload"),
-    )
-    return image_pixel_stats(media)
-
-
-ORACLE_JPEG_PIXELS = """
-WITH d AS (
-  SELECT doc_id,
-         16 + doc_id % 100 AS w,
-         16 + (doc_id * 7) % 100 AS h,
-         (doc_id * 37) % 256 AS base
-  FROM documents),
-px AS (
-  -- sum over the block grid: block (br, bc) holds
-  -- least(8, h - 8*br) x least(8, w - 8*bc) pixels of constant value
-  -- (base + br + bc) % 256. (range() takes a constant — this DuckDB build
-  -- rejects lateral-correlated table-function parameters.)
-  SELECT d.doc_id, d.w, d.h,
-         CAST(sum(
-           ((d.base + br.v + bc.v) % 256)
-           * least(8, d.h - br.v * 8) * least(8, d.w - bc.v * 8)
-         ) AS BIGINT) AS pixel_sum
-  FROM d
-  JOIN range(16) br(v) ON br.v * 8 < d.h
-  JOIN range(16) bc(v) ON bc.v * 8 < d.w
-  GROUP BY d.doc_id, d.w, d.h)
-SELECT doc_id AS media_id, 'jpeg' AS kind,
-       CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-       CAST(1 AS INTEGER) AS channels,
-       CAST(w * h AS BIGINT) AS n_pixels, pixel_sum
-FROM px
-"""
-
-
-def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame sampling + decode, oracle-checked: synthesize a
-    deterministic MJPEG AVI per document (sources/videogen.py — a complete
-    RIFF container of block-gradient baseline JPEGs), walk the container's
-    movi chunks (kernel/avicodec.py), sample every 2nd frame, and decode
-    each frame's pixels (kernel/jpegcodec.py). The oracle restates the
-    per-frame block arithmetic ((base + 11*f + r//8 + c//8) % 256) over the
-    sampled frame indices."""
-    from wpextract_spark.operators.multimodal import (
-        gradient_video_build_udf,
-        video_frame_stats,
-    )
-
-    media = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        gradient_video_build_udf()(F.col("doc_id")).alias("payload"),
-    )
-    return video_frame_stats(media, every_n=2)
-
-
-def q_mjpeg_stream_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL frame sampling + decode from the SECOND video wrapper: a raw
-    MJPEG stream (concatenated JPEGs, IP-camera shape — no container at
-    all; kernel/mjpegcodec.py splits by JPEG marker walk). Same
-    deterministic frame arithmetic as q_video_frames' AVI generator
-    (sources/videogen.py), so ORACLE_VIDEO_FRAMES restates both wrappers —
-    proving the decode seam generalizes beyond one container format."""
-    from wpextract_spark.operators.multimodal import (
-        gradient_mjpeg_stream_build_udf,
-        video_frame_stats,
-    )
-
-    media = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        gradient_mjpeg_stream_build_udf()(F.col("doc_id")).alias("payload"),
-    )
-    return video_frame_stats(media, every_n=2, container="mjpeg")
-
-
-ORACLE_VIDEO_FRAMES = """
-WITH d AS (
-  SELECT doc_id,
-         16 + doc_id % 48 AS w,
-         16 + (doc_id * 7) % 48 AS h,
-         2 + doc_id % 6 AS n_frames,
-         (doc_id * 37) % 256 AS base
-  FROM documents),
-f AS (  -- every 2nd frame: indices 0, 2, 4 ... < n_frames
-  SELECT d.*, fr.v AS frame_idx
-  FROM d JOIN range(8) fr(v) ON fr.v % 2 = 0 AND fr.v < d.n_frames),
-px AS (
-  SELECT f.doc_id, f.frame_idx, f.w, f.h,
-         CAST(sum(
-           ((f.base + f.frame_idx * 11 + br.v + bc.v) % 256)
-           * least(8, f.h - br.v * 8) * least(8, f.w - bc.v * 8)
-         ) AS BIGINT) AS pixel_sum
-  FROM f
-  JOIN range(8) br(v) ON br.v * 8 < f.h
-  JOIN range(8) bc(v) ON bc.v * 8 < f.w
-  GROUP BY 1, 2, 3, 4)
-SELECT doc_id AS media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-       CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height, pixel_sum
-FROM px
-"""
-
-
-def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real audio-metadata decode: synthesize a deterministic PCM WAV per
-    document, sniff sample rate / channels / samples / duration from the
-    RIFF headers (kernel/audiometa.py — no codec library). The oracle
-    restates the generator's arithmetic."""
-    from wpextract_spark.operators.multimodal import audio_build_udf, audio_metadata
-
-    media = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        audio_build_udf()(F.col("doc_id")).alias("payload"),
-    )
-    return audio_metadata(media)
-
-
-ORACLE_AUDIO_META = """
-SELECT doc_id AS media_id, 'audio' AS kind, 'audio/wav' AS mime,
-       CAST(8000 + (doc_id % 5) * 2000 AS INTEGER) AS sample_rate,
-       CAST(1 AS INTEGER) AS n_channels,
-       CAST(1000 + (doc_id * 37) % 4000 AS BIGINT) AS n_samples,
-       CAST(1000 + (doc_id * 37) % 4000 AS DOUBLE)
-           / (8000 + (doc_id % 5) * 2000) AS duration_s
-FROM documents
-"""
-
-
-def q_image_ahash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image dedup, oracle-checked end-to-end through the REAL
-    PNG decode: gradient PNG per document -> zlib inflate + unfilter ->
-    8x8 nearest-neighbor average-hash -> exact-hash group sizes
-    (operators/multimodal.py:image_ahash_groups). The oracle restates the
-    generator's pixel arithmetic, the nearest-neighbor sample grid, and the
-    integer mean-threshold bit rule."""
-    from wpextract_spark.operators.multimodal import (
-        gradient_image_build_udf,
-        image_ahash_groups,
-    )
-
-    media = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("png").alias("kind"),
-        gradient_image_build_udf()(F.col("doc_id")).alias("payload"),
-    )
-    return image_ahash_groups(media)
-
-
-ORACLE_IMAGE_AHASH = """
-WITH d AS (
-  SELECT doc_id,
-         16 + doc_id % 100 AS w,
-         16 + (doc_id * 7) % 100 AS h,
-         (doc_id * 37) % 256 AS base
-  FROM documents),
-cells AS (
-  SELECT d.doc_id, r.v AS r, c.v AS c,
-         (d.base + (r.v * d.h) // 8 + (c.v * d.w) // 8) % 256 AS val
-  FROM d, range(8) r(v), range(8) c(v)),
-tot AS (SELECT doc_id, sum(val) AS total FROM cells GROUP BY doc_id),
-bits AS (
-  SELECT c.doc_id,
-         string_agg(CASE WHEN 64 * c.val > t.total THEN '1' ELSE '0' END,
-                    '' ORDER BY c.r * 8 + c.c) AS ahash
-  FROM cells c JOIN tot t USING (doc_id) GROUP BY c.doc_id)
-SELECT doc_id AS media_id, 'png' AS kind, ahash,
-       CAST(count(*) OVER (PARTITION BY ahash) AS BIGINT) AS n_same
-FROM bits
-"""
-
-
-def q_audio_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PCM sample decode, oracle-checked: synthesize a deterministic
-    16-bit mono PCM WAV per document (sources/audiogen.py — sample i is
-    ``((i*257) % 16384) - 8192``), decode the data chunk's frames back out
-    (kernel/audiocodec.py) and emit exact integer sample statistics (sum,
-    energy, peak). The oracle restates the generator arithmetic over a
-    range() join, so a decoder bug anywhere in the RIFF walk or the frame
-    slicing breaks the hash — completes the audio half of the multimodal
-    family (images went real in rounds 3-4)."""
-    from wpextract_spark.operators.multimodal import audio_build_udf, audio_pcm_stats
-
-    media = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        audio_build_udf()(F.col("doc_id")).alias("payload"),
-    )
-    return audio_pcm_stats(media)
-
-
-ORACLE_AUDIO_PCM = """
-WITH d AS (
-  SELECT doc_id, 1000 + (doc_id * 37) % 4000 AS n FROM documents),
-s AS (
-  SELECT d.doc_id, d.n,
-         CAST(sum((i.v * 257) % 16384 - 8192) AS BIGINT) AS sum_samples,
-         CAST(sum(((i.v * 257) % 16384 - 8192)
-                  * ((i.v * 257) % 16384 - 8192)) AS BIGINT) AS sum_squares,
-         CAST(max(abs((i.v * 257) % 16384 - 8192)) AS INTEGER) AS peak_abs
-  FROM d JOIN range(4999) i(v) ON i.v < d.n
-  GROUP BY d.doc_id, d.n)
-SELECT doc_id AS media_id, 'audio' AS kind, CAST(n AS BIGINT) AS n_samples,
-       sum_samples, sum_squares, peak_abs
-FROM s
 """
 
 
@@ -4056,7 +3523,8 @@ WITH u AS (
   FROM documents),
 d AS (
   SELECT doc_id, url,
-         regexp_extract(lower(url), '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1)
+         lower(regexp_extract(url,
+           '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#]*@)?(\\[[^\\]/?#]*\\]|[^/:?#]*)', 1))
            AS domain
   FROM u),
 s AS (
@@ -4645,7 +4113,8 @@ WITH urls AS (
   FROM documents),
 shaped AS (
   SELECT DISTINCT
-    lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*)', 1))
+    lower(regexp_extract(url,
+      '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#]*@)?(\[[^\]/?#]*\]|[^/:?#]*)', 1))
       AS host,
     regexp_replace(regexp_replace(
       CASE WHEN regexp_extract(url,
@@ -4801,8 +4270,8 @@ def _sql_registered_domain(host_expr: str) -> str:
 def _oracle_domain_link_graph() -> str:
     def host(col: str) -> str:
         return (
-            f"regexp_extract({col}, "
-            "'^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*)', 1)"
+            f"lower(regexp_extract({col}, "
+            r"'^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#]*@)?(\[[^\]/?#]*\]|[^/:?#]*)', 1))"
         )
 
     src_rule = _sql_registered_domain(host("src_url"))
@@ -5073,68 +4542,14 @@ QUERIES = {
     # driver-green history lead and multi-round-green entries sit
     # at the tail (those are additionally pinned by the pytest
     # gate and byte-parity e2e).
-    "q_mjpeg_stream_frames": q_mjpeg_stream_frames,
-    "q_containment_dups": q_containment_dups,
-    "q_feed_parse": q_feed_parse,
-    "q_surt_keys": q_surt_keys,
-    "q_url_traps": q_url_traps,
-    "q_sentence_stats": q_sentence_stats,
-    "q_domain_priors": q_domain_priors,
-    "q_domain_link_graph": q_domain_link_graph,
-    "q_fetch_schedule": q_fetch_schedule,
-    "q_sentence_chunks": q_sentence_chunks,
-    "q_pathological_paths": q_pathological_paths,
-    "q_compression_signal": q_compression_signal,
-    "q_repetition_stats": q_repetition_stats,
-    "q_gopher_quality": q_gopher_quality,
-    "q_bm25": q_bm25,
-    "q_png_pixels": q_png_pixels,
-    "q_asof_join": q_asof_join,
-    "q_asof_forward": q_asof_forward,
-    "q_sessionize": q_sessionize,
-    "q_range_join": q_range_join,
-    "q_inverted_index": q_inverted_index,
-    "q_user_deciles": q_user_deciles,
-    "q_value_bands": q_value_bands,
-    "q_collocations": q_collocations,
-    "q_events_cube": q_events_cube,
-    "q_dedup_clusters": q_dedup_clusters,
-    "q_similarity_ivf_kmeans": q_similarity_ivf_kmeans,
-    "q_lang_id_ngram": q_lang_id_ngram,
-    "q_bpe_tokens": q_bpe_tokens,
-    "q_image_meta": q_image_meta,
-    "q_audio_meta": q_audio_meta,
-    "q_extract_text_kernel": q_extract_text_kernel,
-    "q_extract_link_spans": q_extract_link_spans,
-    "q_extract_locale": q_extract_locale,
-    "q_registry_last_wins": q_registry_last_wins,
-    "q_crawl_first_wins": q_crawl_first_wins,
-    "q_symmetrize_edges": q_symmetrize_edges,
-    "q_resolution_broadcast": q_resolution_broadcast,
-    "q_pricing_summary": q_pricing_summary,
-    "q_order_priority": q_order_priority,
-    "q_events_hourly": q_events_hourly,
-    "q_dedup_exact": q_dedup_exact,
-    "q_minhash_signatures": q_minhash_signatures,
-    "q_lsh_candidate_pairs": q_lsh_candidate_pairs,
-    "q_dedup_pipeline": q_dedup_pipeline,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_simhash": q_simhash,
-    "q_similarity_topk": q_similarity_topk,
-    "q_similarity_lsh": q_similarity_lsh,
-    "q_similarity_ivf": q_similarity_ivf,
     "q_embedding_near_dups": q_embedding_near_dups,
     "q_simhash_near_dups": q_simhash_near_dups,
     "q_salted_agg": q_salted_agg,
     "q_salted_join": q_salted_join,
-    "q_revenue_by_nation": q_revenue_by_nation,
     "q_token_stats": q_token_stats,
     "q_quality_scores": q_quality_scores,
     "q_fingerprints": q_fingerprints,
     "q_lang_id": q_lang_id,
-    # ---- below the 50-entry driver window ----
-    "q_multimodal_features": q_multimodal_features,
-    "q_frame_sample": q_frame_sample,
     "q_pages_extract": q_pages_extract,
     "q_pdf_roundtrip": q_pdf_roundtrip,
     "q_main_content": q_main_content,
@@ -5154,13 +4569,9 @@ QUERIES = {
     "q_frontier_priority": q_frontier_priority,
     "q_publish_dates": q_publish_dates,
     "q_warc_extract": q_warc_extract,
-    "q_jpeg_pixels": q_jpeg_pixels,
     "q_bpe_encode": q_bpe_encode,
-    "q_video_frames": q_video_frames,
-    "q_audio_pcm": q_audio_pcm,
     "q_lm_perplexity": q_lm_perplexity,
     "q_semantic_dedup": q_semantic_dedup,
-    "q_image_ahash_dups": q_image_ahash_dups,
     "q_similarity_pq": q_similarity_pq,
     "q_similarity_ivfpq": q_similarity_ivfpq,
     "q_url_filter": q_url_filter,
@@ -5181,12 +4592,53 @@ QUERIES = {
     "q_hash_split": q_hash_split,
     "q_incremental_dedup": q_incremental_dedup,
     "q_pagerank": q_pagerank,
+    # ---- below the 50-entry driver window ----
     "q_span_dups": q_span_dups,
     "q_pack_sequences": q_pack_sequences,
     "q_corpus_profile": q_corpus_profile,
     "q_vocab_build": q_vocab_build,
     "q_tfidf_vectors": q_tfidf_vectors,
     "q_classify_changes": q_classify_changes,
+    "q_containment_dups": q_containment_dups,
+    "q_feed_parse": q_feed_parse,
+    "q_surt_keys": q_surt_keys,
+    "q_url_traps": q_url_traps,
+    "q_sentence_stats": q_sentence_stats,
+    "q_domain_priors": q_domain_priors,
+    "q_domain_link_graph": q_domain_link_graph,
+    "q_fetch_schedule": q_fetch_schedule,
+    "q_sentence_chunks": q_sentence_chunks,
+    "q_pathological_paths": q_pathological_paths,
+    "q_compression_signal": q_compression_signal,
+    "q_repetition_stats": q_repetition_stats,
+    "q_gopher_quality": q_gopher_quality,
+    "q_bm25": q_bm25,
+    "q_asof_join": q_asof_join,
+    "q_asof_forward": q_asof_forward,
+    "q_sessionize": q_sessionize,
+    "q_range_join": q_range_join,
+    "q_inverted_index": q_inverted_index,
+    "q_collocations": q_collocations,
+    "q_dedup_clusters": q_dedup_clusters,
+    "q_similarity_ivf_kmeans": q_similarity_ivf_kmeans,
+    "q_lang_id_ngram": q_lang_id_ngram,
+    "q_bpe_tokens": q_bpe_tokens,
+    "q_extract_text_kernel": q_extract_text_kernel,
+    "q_extract_link_spans": q_extract_link_spans,
+    "q_extract_locale": q_extract_locale,
+    "q_registry_last_wins": q_registry_last_wins,
+    "q_crawl_first_wins": q_crawl_first_wins,
+    "q_symmetrize_edges": q_symmetrize_edges,
+    "q_resolution_broadcast": q_resolution_broadcast,
+    "q_dedup_exact": q_dedup_exact,
+    "q_minhash_signatures": q_minhash_signatures,
+    "q_lsh_candidate_pairs": q_lsh_candidate_pairs,
+    "q_dedup_pipeline": q_dedup_pipeline,
+    "q_ngram_jaccard": q_ngram_jaccard,
+    "q_simhash": q_simhash,
+    "q_similarity_topk": q_similarity_topk,
+    "q_similarity_lsh": q_similarity_lsh,
+    "q_similarity_ivf": q_similarity_ivf,
 }
 
 ORACLES = {
@@ -5205,19 +4657,13 @@ ORACLES = {
     "q_crawl_first_wins": ORACLE_FIRST_WINS,
     "q_symmetrize_edges": ORACLE_SYMMETRIZE,
     "q_resolution_broadcast": ORACLE_RESOLUTION,
-    "q_pricing_summary": ORACLE_PRICING,
-    "q_order_priority": ORACLE_ORDER_PRIORITY,
-    "q_events_hourly": ORACLE_EVENTS_HOURLY,
     "q_asof_join": ORACLE_ASOF_JOIN,
     "q_asof_forward": ORACLE_ASOF_FORWARD,
     "q_sessionize": ORACLE_SESSIONIZE,
     "q_range_join": ORACLE_RANGE_JOIN,
     "q_inverted_index": ORACLE_INVERTED_INDEX,
-    "q_user_deciles": ORACLE_USER_DECILES,
-    "q_value_bands": ORACLE_VALUE_BANDS,
     "q_bm25": ORACLE_BM25,
     "q_collocations": ORACLE_COLLOCATIONS,
-    "q_events_cube": ORACLE_EVENTS_CUBE,
     "q_dedup_exact": ORACLE_DEDUP_EXACT,
     "q_minhash_signatures": ORACLE_MINHASH,
     "q_lsh_candidate_pairs": ORACLE_LSH_PAIRS,
@@ -5233,25 +4679,16 @@ ORACLES = {
     "q_simhash_near_dups": _oracle_simhash_near_dups(),
     "q_salted_agg": ORACLE_SALTED_AGG,
     "q_salted_join": ORACLE_SALTED_JOIN,
-    "q_revenue_by_nation": ORACLE_REVENUE_BY_NATION,
     "q_token_stats": ORACLE_TOKEN_STATS,
     "q_quality_scores": _oracle_quality(),
     "q_fingerprints": ORACLE_FINGERPRINTS,
     "q_lang_id": _oracle_lang_id(),
     "q_lang_id_ngram": _oracle_lang_id_ngram(),
     "q_bpe_tokens": _oracle_bpe_tokens(),
-    "q_multimodal_features": ORACLE_MULTIMODAL,
-    "q_image_meta": ORACLE_IMAGE_META,
-    "q_png_pixels": ORACLE_PNG_PIXELS,
     "q_warc_extract": ORACLE_WARC_EXTRACT,
-    "q_jpeg_pixels": ORACLE_JPEG_PIXELS,
     "q_bpe_encode": _oracle_bpe_encode(),
-    "q_video_frames": ORACLE_VIDEO_FRAMES,
-    "q_mjpeg_stream_frames": ORACLE_VIDEO_FRAMES,
-    "q_audio_pcm": ORACLE_AUDIO_PCM,
     "q_lm_perplexity": ORACLE_LM_PERPLEXITY,
     "q_semantic_dedup": _oracle_semantic_dedup(),
-    "q_image_ahash_dups": ORACLE_IMAGE_AHASH,
     "q_similarity_pq": _oracle_similarity_pq(),
     "q_similarity_ivfpq": _oracle_similarity_ivfpq(),
     "q_url_filter": ORACLE_URL_FILTER,
@@ -5278,8 +4715,6 @@ ORACLES = {
     "q_classify_changes": ORACLE_CLASSIFY_CHANGES,
     "q_containment_dups": ORACLE_CONTAINMENT_DUPS,
     "q_feed_parse": ORACLE_FEED_PARSE,
-    "q_audio_meta": ORACLE_AUDIO_META,
-    "q_frame_sample": ORACLE_FRAME_SAMPLE,
     "q_pdf_roundtrip": ORACLE_PDF_ROUNDTRIP,
     "q_main_content": ORACLE_MAIN_CONTENT,
     "q_pages_extract": _oracle_pages_extract(),

@@ -1,12 +1,12 @@
 """Deterministic generators of minimal image payloads.
 
 Synthesizes crawl-style binary image columns for tests/benchmarks (sandbox
-rule: no external data). PNG, GIF, and gradient-JPEG outputs are complete,
-spec-valid files (real decoders would open them; the in-repo codecs under
-``kernel/`` do). :func:`build_jpeg` alone stays marker-valid-only (SOF0 +
-EOI with a stub entropy stream) because the metadata tests build 65535x65535
-headers whose real streams would be gigabytes. The inverse of
-``kernel/imagemeta.py`` / ``kernel/*codec.py``.
+rule: no external data). PNG and GIF outputs are complete, spec-valid
+files (real decoders would open them; ``kernel/pngcodec.py`` does).
+:func:`build_jpeg` stays marker-valid-only (SOF0 + EOI with a stub entropy
+stream) because the metadata tests build 65535x65535 headers whose real
+streams would be gigabytes. The inverse of ``kernel/imagemeta.py`` /
+``kernel/pngcodec.py``.
 """
 
 from __future__ import annotations
@@ -133,36 +133,6 @@ def build_gif(width: int, height: int) -> bytes:
     # Minimal LZW stream: code size 2, one clear code + EOI code.
     image_data = b"\x02\x02\x44\x01\x00"
     return header + palette + descriptor + image_data + b"\x3b"
-
-
-def build_jpeg_gradient(width: int, height: int, base: int) -> bytes:
-    """Valid baseline JPEG whose pixel at (row r, col c) is gray
-    ``(base + r//8 + c//8) % 256`` — a real DCT/Huffman-coded image
-    (kernel/jpegcodec.py decodes it). Pixels are constant within each 8x8
-    block, so the spectrum is DC-only and the round-trip is bit-exact (see
-    the codec docstring) — which keeps the decoded pixel sum restatable in
-    SQL without modeling DCT rounding."""
-    import numpy as np
-
-    from wpextract_spark.kernel.jpegcodec import encode_jpeg_gray
-
-    pixels = np.fromfunction(
-        lambda r, c: (base + r // 8 + c // 8) % 256, (height, width)
-    ).astype(np.uint8)
-    return encode_jpeg_gray(pixels)
-
-
-def build_gradient_jpeg(doc_id: int) -> tuple[int, int, int, bytes]:
-    """Deterministic (width, height, base, payload) block-gradient JPEG for a
-    doc id — same dimension arithmetic as :func:`build_gradient_image` so a
-    SQL oracle restates the decoded pixel sum:
-    width = 16 + id % 100, height = 16 + (id * 7) % 100,
-    base = (id * 37) % 256, pixel(r, c) = (base + r//8 + c//8) % 256.
-    """
-    width = 16 + doc_id % 100
-    height = 16 + (doc_id * 7) % 100
-    base = (doc_id * 37) % 256
-    return width, height, base, build_jpeg_gradient(width, height, base)
 
 
 def build_jpeg(width: int, height: int) -> bytes:

@@ -97,8 +97,7 @@ def wet_to_docs(records: DataFrame) -> DataFrame:
 
 def warc_build_udf():
     """(doc_id, source, text) -> deterministic single-doc .warc.gz payload
-    (sources/warcgen.py) — the query-side builder, same pattern as
-    ``operators/multimodal.audio_build_udf``."""
+    (sources/warcgen.py) — the query-side builder."""
     from wpextract_spark.sources.warcgen import build_doc_warc
 
     @F.pandas_udf("binary")

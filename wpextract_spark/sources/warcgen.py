@@ -2,9 +2,8 @@
 
 Inverse of ``kernel/warc.py``: synthesizes spec-shaped WARC captures and WET
 conversion files from rows of the synthetic corpus, so the parse path can be
-oracle-checked (construction-derived, like ``sources/audiogen.py`` /
-``imagegen.py``) and the distributed file reader round-trip-tested against
-``sources/synth.generate_pages``.
+oracle-checked (construction-derived) and the distributed file reader
+round-trip-tested against ``sources/synth.generate_pages``.
 
 Every field is a pure function of the input row: record ids are md5-derived
 urn:uuid strings, dates derive from ``doc_id``, and gzip members are written
@@ -145,8 +144,7 @@ def doc_url(doc_id: int, source: str) -> str:
 def build_doc_warc(doc_id: int, source: str, text: str) -> bytes:
     """Single-document mini-WARC (warcinfo + response whose payload is the
     document text served as text/html), gzip-member framed — the inline
-    per-row payload for ``q_warc_extract``, same pattern as
-    ``audiogen.build_audio``."""
+    per-row payload for ``q_warc_extract``."""
     date = warc_date_for(doc_id)
     records = [
         warcinfo_record(f"doc-{doc_id}.warc.gz", date),
