@@ -3,11 +3,13 @@
 Golden values from the reference's tests/parse/test_content.py, run against
 the same fixture bytes (tests/data/parse/*.html)."""
 
+import gc
 from pathlib import Path
 
+import pandas as pd
 import pytest
 
-from wpextract_spark.htmlkit import parse_html
+from wpextract_spark.htmlkit import Document, Node, parse_html
 from wpextract_spark.kernel.content import (
     extract_content,
     extract_embeds,
@@ -170,3 +172,33 @@ def test_absolutize_fast_path_matches_urllib():
                 taken += 1
             assert _absolutize(base, h) == _absolutize_slow(base, h), (base, h)
     assert taken > 1000  # the fast path actually engages
+
+
+def test_content_udf_frees_trees_without_cyclic_gc(monkeypatch):
+    """The content UDF releases each tree, so with the cyclic collector off
+    a later collection finds no DOM garbage — and releasing changes no row."""
+    from wpextract_spark.operators.extract import content_extract_udf
+    from wpextract_spark.sources.synth import synth_page
+
+    pages = [synth_page(i) for i in range(50)]
+    html = pd.Series([p["html"] for p in pages])
+    url = pd.Series([p["url"] for p in pages])
+    extract = content_extract_udf().func
+
+    gc.collect()
+    gc.disable()
+    gc.set_debug(gc.DEBUG_SAVEALL)  # keep what a collection frees, to look at it
+    try:
+        rows = extract(html, url)
+        gc.collect()
+        dom_garbage = sum(isinstance(o, Node) for o in gc.garbage)
+    finally:
+        gc.set_debug(0)
+        gc.garbage.clear()
+        gc.enable()
+    assert dom_garbage == 0
+    assert rows["error"].isna().all()
+
+    monkeypatch.setattr(Document, "release", lambda self: None)
+    unreleased = extract(html, url)
+    assert rows.to_dict("records") == unreleased.to_dict("records")

@@ -87,3 +87,26 @@ def test_fetch_schedule_without_delay_column(spark):
         for r in fetch_schedule(df, default_delay=3.0).collect()
     }
     assert got == {"u1": 0.0, "u2": 3.0}
+
+
+def test_fetch_schedule_one_delay_per_host(spark):
+    # One host's rows disagree on crawl_delay (and some carry none): the
+    # host gets its largest declared delay, so offsets are the rank times
+    # one delay — strictly increasing with rank, never colliding.
+    from wpextract_spark.operators.frontier import fetch_schedule
+
+    delays = [0.5, None, 3.0, None, 0.25, 1.0]
+    rows = [(f"https://m.example/{i}", "m.example", float(10 - i), d) for i, d in enumerate(delays)]
+    rows += [("https://n.example/1", "n.example", 2.0, None), ("https://n.example/2", "n.example", 1.0, None)]
+    df = spark.createDataFrame(
+        rows, "url string, host string, priority double, crawl_delay double"
+    )
+    got = sorted(
+        (r["host"], r["fetch_rank"], r["fetch_offset_s"])
+        for r in fetch_schedule(df, default_delay=1.0).collect()
+    )
+    m = [off for host, _, off in got if host == "m.example"]
+    assert m == [3.0 * k for k in range(6)]
+    assert all(a < b for a, b in zip(m, m[1:]))
+    # A host with no declared delay at all keeps the default.
+    assert [off for host, _, off in got if host == "n.example"] == [0.0, 1.0]

@@ -1,7 +1,8 @@
-"""Differential tests: fast tokenizer vs the stdlib-HTMLParser builder.
+"""Differential tests: fast tokenizer vs the stdlib-HTMLParser oracle.
 
 ``htmlkit.tokenize.fast_feed`` must produce the identical node tree to the
-stdlib-driven ``parse_html_stdlib`` on every input the engine is specified
+stdlib-driven ``parse_html_stdlib`` (``tests/htmlkit_oracle.py``, same
+tree-building rules) on every input the engine is specified
 over: the reference's golden fixture documents, the deterministic synthetic
 corpus, and generated well-formed-ish soup. (Documented divergences exist
 only for pathological constructs — unbalanced quotes inside tags,
@@ -13,12 +14,8 @@ from pathlib import Path
 
 from hypothesis import given, settings, strategies as st
 
-from wpextract_spark.htmlkit.dom import (
-    CommentNode,
-    TextNode,
-    parse_html,
-    parse_html_stdlib,
-)
+from tests.htmlkit_oracle import parse_html_stdlib
+from wpextract_spark.htmlkit.dom import CommentNode, TextNode, parse_html
 from wpextract_spark.sources.synth import synth_page
 
 DATA = Path(__file__).parent / "data"
@@ -98,6 +95,10 @@ def test_tricky_constructs_identical():
         '<a href="1">x<a href="2">y</a>',
         # empty end tag (silently dropped by the stdlib)
         'a</>b',
+        # attribute lists at the edge of the plain-list fast path
+        '<a href=v/>x</a>', '<input disabled/>x', '<img src="a" />', '<a href=x=y>z</a>',
+        '<a href="1"alt="2">z</a>', '<div id=a class="b c"\x0bdata-x=\'d\'>z</div>',
+        '<script src="/s.js" async>var a = "<p>";</script>t', '<script src="/s.js"/>t',
         # unclosed quote: both builders recover without crashing
         # (documented divergence class — only totality is asserted)
     ]
@@ -127,4 +128,34 @@ soup = st.lists(_soup_bits, max_size=40).map("".join)
 @settings(max_examples=300, deadline=None)
 @given(soup)
 def test_soup_identical(html):
+    _assert_same(html)
+
+
+# Start tags whose attribute text mixes plain attribute lists (which the
+# tokenizer reads with one fullmatch) with the near misses that must fall
+# back to the stdlib's per-attribute grammar. Quotes stay balanced and only
+# open a value: unbalanced quotes are a documented divergence.
+_attr = st.builds(
+    lambda name, eq, value: name + (eq + value if eq else ""),
+    st.sampled_from(["href", "HREF", "data-x", "_:y", "x.y", "alt", "a?"]),
+    st.sampled_from(["", "=", " = ", "==", "=\n"]),
+    st.sampled_from(['"a b"', "'c'", '"&amp;&#1;"', "'x>y'", '""', "v ", "v/ ", "a&lt;b ", "` "]),
+)
+_attr_tag = st.builds(
+    lambda name, attrs, end, text: f"<{name} {''.join(attrs)}{end}{text}",
+    st.sampled_from(["a", "img", "div", "script", "P"]),
+    st.lists(
+        st.tuples(st.sampled_from([" ", "\t", "\n", "\x0b", "\xa0", "/", "", " / "]), _attr).map(
+            "".join
+        ),
+        max_size=5,
+    ),
+    st.sampled_from([">", "/>", " />", " "]),
+    st.sampled_from(["", "t</script>u", "x</a>"]),
+)
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(_attr_tag, min_size=1, max_size=4).map("".join))
+def test_attribute_lists_identical(html):
     _assert_same(html)

@@ -72,9 +72,35 @@ def test_surt_key_rules(spark):
         "https://example.org:8080/a": "org,example:8080)/a",
         # www2 mirrors collapse too; root path normalizes to ')/'
         "https://www2.example.org": "org,example)/",
+        # ... but never down to a bare public suffix
+        "https://www.org/a": "org,www)/a",
+        "https://www2.com/": "com,www2)/",
         "https://example.org/": "org,example)/",
     }
     assert _surt(spark, list(cases)) == list(cases.values())
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    hosts=st.lists(
+        st.tuples(
+            st.sampled_from(["www", "WWW", "www2", "www10"]),
+            st.lists(st.text(alphabet="abcw2", min_size=1, max_size=4), min_size=1, max_size=3),
+        ),
+        min_size=1,
+        max_size=12,
+    )
+)
+def test_surt_www_strip_keeps_two_labels(spark, hosts):
+    # A leading www<digits>. label goes only when two labels remain:
+    # www.org and www2.com keep their own keys instead of collapsing onto
+    # the public suffix every other such host collapses onto.
+    urls, want = [], []
+    for www, labels in hosts:
+        kept = labels if len(labels) >= 2 else [www.lower()] + labels
+        urls.append(f"https://{www}.{'.'.join(labels)}/p")
+        want.append(",".join(reversed(kept)) + ")/p")
+    assert _surt(spark, urls) == want
 
 
 def test_surt_gives_per_site_sort_locality(spark):

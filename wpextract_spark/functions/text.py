@@ -6,6 +6,10 @@ Arrow-batched UDFs keeps byte parity with the reference fixtures. Java
 ``regexp_replace`` is deliberately NOT used here — Java and Python regex
 semantics differ at corners (``\\s`` coverage, multiline anchoring), which is
 a parity risk flagged in SURVEY.md §2.2 P10.
+
+``squash_whitespace`` runs on every page text and every link text, so it is
+one anchored-on-newline regex pass plus ``strip()``; ``extract_html_text``
+releases its parsed tree (``Document.release``) so it is freed by refcount.
 """
 
 from __future__ import annotations
@@ -14,8 +18,8 @@ import re
 
 from wpextract_spark.htmlkit.dom import parse_html
 
-_ADJACENT_NEWLINES = re.compile("\n{2,}")
-_LINE_LEADING_WS = re.compile(r"^\s+", re.MULTILINE)
+#: A newline and the whitespace after it (newlines included).
+_NEWLINE_WS = re.compile(r"\n\s+")
 
 #: Fast-path probe: a string without '<' or an entity-like sequence is not
 #: HTML and is returned verbatim (unsquashed!) — reference ``parse/html.py:7,34-35``.
@@ -25,11 +29,15 @@ PROBABLY_HTML = re.compile(r"<|&\S+;")
 def squash_whitespace(string: str) -> str:
     """Collapse runs of newlines, strip line-leading whitespace, trim ends.
 
-    Because ``\\s`` matches newlines, the multiline leading-whitespace pass
-    also swallows whitespace-only lines entirely (pinned by the reference's
-    own tests: ``tests/util/test_str.py`` squash cases).
+    The reference's two passes — ``\\n{2,}`` -> ``\\n``, then a MULTILINE
+    ``^\\s+`` -> ``""`` — in one: a MULTILINE ``^`` matches only at 0 or
+    right after ``\\n``, and ``\\s`` includes ``\\n``, so a whitespace run
+    after a newline swallows any newline runs in it (whitespace-only lines
+    vanish, pinned by the reference's ``tests/util/test_str.py`` squash
+    cases). A run at position 0 goes with the final ``strip()``, which
+    strips the same Unicode whitespace set ``\\s`` matches.
     """
-    return _LINE_LEADING_WS.sub("", _ADJACENT_NEWLINES.sub("\n", string)).strip()
+    return _NEWLINE_WS.sub("\n", string).strip()
 
 
 def extract_html_text(html: str) -> str:
@@ -40,7 +48,10 @@ def extract_html_text(html: str) -> str:
     """
     if PROBABLY_HTML.search(html) is None:
         return html
-    return squash_whitespace(parse_html(html).get_text())
+    doc = parse_html(html)
+    text = doc.get_text()
+    doc.release()
+    return squash_whitespace(text)
 
 
 def remove_prefix(text: str, prefix: str) -> str:

@@ -90,7 +90,9 @@ def surt_key(url: Column | str) -> Column:
     dropped, tracking params removed, query sorted), then:
 
     * scheme dropped — http/https duplicates collapse;
-    * a single leading ``www<digits>.`` label dropped;
+    * a single leading ``www<digits>.`` label dropped when at least two
+      labels remain, so ``www.org`` and ``www2.com`` keep their own keys
+      instead of colliding with the bare public suffix;
     * host labels reversed and comma-joined, so all URLs of a registered
       domain sort adjacently — range-partitioning a 10^12-row crawl index
       on this key gives per-site locality for free (host-level scans stay
@@ -108,7 +110,8 @@ def surt_key(url: Column | str) -> Column:
     hostport = F.regexp_extract(prefix, r"^[a-z][a-z0-9+.-]*://([^/?#]*)", 1)
     port = F.regexp_extract(hostport, r":([0-9]+)$", 1)
     host = F.regexp_replace(hostport, r":[0-9]+$", "")
-    host = F.regexp_replace(host, r"^www[0-9]*\.", "")
+    bare = F.regexp_replace(host, r"^www[0-9]*\.", "")
+    host = F.when(F.size(F.split(bare, r"\.")) >= 2, bare).otherwise(host)
     rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
     portpart = F.when(port != "", F.concat(F.lit(":"), port)).otherwise(
         F.lit("")

@@ -1,13 +1,9 @@
 """A minimal, dependency-free HTML DOM for the extraction kernel.
 
-The reference engine (wpextract, see ``/root/reference/src/wpextract/parse/html.py:10-19``)
-parses HTML with BeautifulSoup+lxml. Neither library is available in this
-environment, and the goal is a from-scratch engine anyway, so this module
-implements the small slice of DOM behaviour the extraction kernel actually
-depends on. Tokenization is the single-pass regex tokenizer in
-``htmlkit.tokenize`` (~2x the stdlib ``html.parser`` throughput; the stdlib
-path is kept as ``parse_html_stdlib`` and pinned equivalent by
-``tests/test_htmlkit_diff.py``). The tree provides:
+The reference engine (wpextract, ``parse/html.py:10-19``) parses HTML with
+BeautifulSoup+lxml. Neither library is available in this environment, and
+the goal is a from-scratch engine anyway, so this module implements the
+small slice of DOM behaviour the extraction kernel actually depends on:
 
 * a node tree with tags / text / comments and parent pointers,
 * document-order descendant traversal (pre-order, tags before their children),
@@ -16,18 +12,22 @@ path is kept as ``parse_html_stdlib`` and pinned equivalent by
 * HTML5-style error recovery for the common WordPress malformations
   (unclosed ``<p>``/``<li>``, void elements, stray end tags).
 
-The tree is built once per document inside an Arrow-batched pandas UDF; no DOM
-object ever crosses a Spark stage boundary.
+``htmlkit.tokenize.fast_feed`` scans the source once and creates the nodes
+itself; element tokens go through the tree-building rules here
+(``open_tag``/``close_tag``). No ``html.parser`` is involved: the stdlib
+tokenizer drives the same rules only in the test oracle
+(``tests/htmlkit_oracle.py``). A parsed tree is one reference cycle
+(parent <-> children), so callers that parse page after page call
+``Document.release()`` once done, and the tree is freed by refcount instead
+of by the cyclic garbage collector. No DOM object ever crosses a Spark
+stage boundary.
 """
 
 from __future__ import annotations
 
 import re
 from collections.abc import Iterator
-from html.parser import HTMLParser
 from typing import Optional, Union
-
-from wpextract_spark.htmlkit.tokenize import fast_feed
 
 #: Elements that never have children (HTML5 void elements).
 VOID_ELEMENTS = frozenset(
@@ -111,8 +111,8 @@ _SIBLING_CLOSERS = {
 #: Scope boundaries: an implicit <p> close never crosses one of these.
 _P_SCOPE_BOUNDARY = frozenset({"[document]", "html", "body", "table", "td", "th", "caption"})
 
-#: Tags that can trigger any implicit close at all — the _implicit_close
-#: early-exit gate (most tags trigger none).
+#: Tags that can trigger any implicit close at all — the early-exit gate of
+#: open_tag's implicit closes.
 _ANY_CLOSER = frozenset(_SIBLING_CLOSERS) | _P_CLOSERS
 
 #: Maximum open-element depth. Real pages nest a few dozen levels; browsers
@@ -290,16 +290,39 @@ class Document(Tag):
     it is constructed (document order), so the span extractors read a ready
     list instead of re-walking the whole tree once per tag kind — the walks
     were ~25% of kernel time on real pages. The lists are exactly what
-    ``find_all`` on the root would return.
+    ``find_all`` on the root would return. ``tags`` holds every element the
+    builder pushed onto the open-element stack: the only ones that can have
+    children, and so the only ones :meth:`release` has to empty.
     """
 
-    __slots__ = ("anchors", "images", "iframes")
+    __slots__ = ("anchors", "images", "iframes", "tags")
 
     def __init__(self) -> None:
         super().__init__("[document]")
         self.anchors: list[Tag] = []
         self.images: list[Tag] = []
         self.iframes: list[Tag] = []
+        self.tags: list[Tag] = []
+
+    def release(self) -> None:
+        """Break the tree's reference cycles so it is freed by refcount.
+
+        Every node points at its parent and every parent lists its
+        children, so a parsed page is one big cycle that only the cyclic
+        garbage collector can free — collecting it cost as much per page as
+        stripping its boilerplate. Emptying each child list (and the span
+        and element registers) leaves only child-to-parent references, so
+        the whole tree goes the moment the caller drops it. The document is
+        empty afterwards: call this once the caller holds nothing but plain
+        values taken from the tree.
+        """
+        for tag in self.tags:
+            tag.children.clear()
+        self.children.clear()
+        self.anchors.clear()
+        self.images.clear()
+        self.iframes.clear()
+        self.tags.clear()
 
     @property
     def head(self) -> Optional[Tag]:
@@ -310,132 +333,62 @@ class Document(Tag):
         return self.find("body")
 
 
-class _TreeBuilder(HTMLParser):
-    """Builds the node tree with light HTML5-style recovery."""
+# -- tree-building rules ---------------------------------------------------
+# ``stack`` is the open-element stack; ``stack[0]`` is the Document and is
+# never popped.
 
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.root = Document()
-        self._stack: list[Tag] = [self.root]
+_SPAN_TAGS = frozenset({"a", "img", "iframe"})
 
-    # -- helpers ---------------------------------------------------------
 
-    def _top(self) -> Tag:
-        return self._stack[-1]
-
-    def _implicit_close(self, name: str) -> None:
-        if name not in _ANY_CLOSER:
-            return
+def open_tag(stack: list[Tag], name: str, attrs: dict[str, str], self_closing: bool = False) -> None:
+    """Start tag ``name``: apply implicit closes, attach the new element to
+    the current open element, and push it unless it is void or written
+    self-closing (``<x/>``)."""
+    if name in _ANY_CLOSER:
         # Sibling-style auto close: <li> closes an open <li>, etc.
         closers = _SIBLING_CLOSERS.get(name)
         if closers:
-            while len(self._stack) > 1 and self._top().name in closers:
-                self._stack.pop()
+            while len(stack) > 1 and stack[-1].name in closers:
+                stack.pop()
         # Block elements close an open <p> within scope.
         if name in _P_CLOSERS:
-            for i in range(len(self._stack) - 1, 0, -1):
-                node_name = self._stack[i].name
+            for i in range(len(stack) - 1, 0, -1):
+                node_name = stack[i].name
                 if node_name in _P_SCOPE_BOUNDARY:
                     break
                 if node_name == "p":
-                    del self._stack[i:]
+                    del stack[i:]
                     break
-
-    def _append_leaf(self, node: Node) -> None:
-        self._top().append(node)
-
-    _SPAN_TAGS = frozenset({"a", "img", "iframe"})
-
-    def _record_span_tag(self, node: Tag) -> None:
-        if node.name == "img":
-            self.root.images.append(node)
-        elif node.name == "a":
-            self.root.anchors.append(node)
+    node = Tag(name, attrs)
+    top = stack[-1]
+    node.parent = top
+    top.children.append(node)
+    root = stack[0]
+    if not self_closing and name not in VOID_ELEMENTS:
+        if len(stack) >= MAX_TREE_DEPTH:
+            raise ParseDepthError(f"element depth exceeds {MAX_TREE_DEPTH} at <{name}>")
+        stack.append(node)
+        root.tags.append(node)
+    if name in _SPAN_TAGS:
+        if name == "img":
+            root.images.append(node)
+        elif name == "a":
+            root.anchors.append(node)
         else:
-            self.root.iframes.append(node)
+            root.iframes.append(node)
 
-    @staticmethod
-    def _build_attrs(attrs) -> dict[str, str]:
-        if type(attrs) is dict:  # fast tokenizer already built the dict
-            return attrs
-        out: dict[str, str] = {}
-        for key, value in attrs:
-            if key not in out:  # first occurrence wins, like libxml2
-                out[key] = value if value is not None else ""
-        return out
 
-    # -- HTMLParser callbacks ---------------------------------------------
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        self._implicit_close(tag)
-        node = Tag(tag, attrs if type(attrs) is dict else self._build_attrs(attrs))
-        top = self._stack[-1]
-        node.parent = top
-        top.children.append(node)
-        if tag not in VOID_ELEMENTS:
-            if len(self._stack) >= MAX_TREE_DEPTH:
-                raise ParseDepthError(
-                    f"element depth exceeds {MAX_TREE_DEPTH} at <{tag}>"
-                )
-            self._stack.append(node)
-        if tag in self._SPAN_TAGS:
-            self._record_span_tag(node)
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        # Self-closing syntax: always an empty element.
-        self._implicit_close(tag)
-        node = Tag(tag, attrs if type(attrs) is dict else self._build_attrs(attrs))
-        self._append_leaf(node)
-        if tag in self._SPAN_TAGS:
-            self._record_span_tag(node)
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in VOID_ELEMENTS:
+def close_tag(stack: list[Tag], name: str) -> None:
+    """End tag ``name``: pop to the nearest matching open element; end tags
+    of void elements and stray end tags are ignored."""
+    if name in VOID_ELEMENTS:
+        return
+    i = len(stack) - 1
+    while i > 0:
+        if stack[i].name == name:
+            del stack[i:]
             return
-        # Pop to the nearest matching open tag; ignore stray end tags.
-        for i in range(len(self._stack) - 1, 0, -1):
-            if self._stack[i].name == tag:
-                del self._stack[i:]
-                return
-
-    def handle_data(self, data: str) -> None:
-        if data:
-            node = TextNode(data)
-            top = self._stack[-1]
-            node.parent = top
-            top.children.append(node)
-
-    def handle_comment(self, data: str) -> None:
-        self._append_leaf(CommentNode(data))
-
-    def updatepos(self, i: int, j: int) -> int:
-        # HTMLParser tracks line/offset solely for error reporting; the
-        # kernel never reads positions, and the scan is ~5% of parse time.
-        return j
-
-    # DOCTYPE, processing instructions and unknown declarations carry no
-    # extractable content.
-    def handle_decl(self, decl: str) -> None:  # pragma: no cover - trivial
-        pass
-
-    def handle_pi(self, data: str) -> None:  # pragma: no cover - trivial
-        pass
-
-    def unknown_decl(self, data: str) -> None:  # pragma: no cover - trivial
-        pass
-
-
-def parse_html_stdlib(html: Union[str, bytes], head_only: bool = False) -> Document:
-    """Reference tokenizer path (stdlib HTMLParser). Kept as the differential
-    oracle for the fast tokenizer (tests/test_htmlkit_diff.py)."""
-    if isinstance(html, (bytes, bytearray)):
-        html = bytes(html).decode("utf-8", errors="replace")
-    if head_only:
-        html = _truncate_to_head(html)
-    builder = _TreeBuilder()
-    builder.feed(html)
-    builder.close()
-    return builder.root
+        i -= 1
 
 
 _HEAD_CLOSE_RE = re.compile(r"</head\s*>", re.IGNORECASE)
@@ -470,10 +423,11 @@ def parse_html(html: Union[str, bytes], head_only: bool = False) -> Document:
     """
     if isinstance(html, (bytes, bytearray)):
         html = bytes(html).decode("utf-8", errors="replace")
-
     if head_only:
         html = _truncate_to_head(html)
+    return _tokenize.fast_feed(html)
 
-    builder = _TreeBuilder()
-    fast_feed(builder, html)
-    return builder.root
+
+# The tokenizer builds this module's nodes, so it is imported last: either
+# module can then be imported first.
+from wpextract_spark.htmlkit import tokenize as _tokenize  # noqa: E402

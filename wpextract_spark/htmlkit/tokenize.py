@@ -1,16 +1,18 @@
-"""Single-pass regex tokenizer driving the DOM builder.
+"""Single-pass regex tokenizer that builds the DOM as it scans.
 
-Emits the same token stream as the stdlib
-``html.parser.HTMLParser(convert_charrefs=True)`` for well-formed and
-commonly-malformed HTML, but recognizes each complete tag with ONE compiled
-regex match instead of the stdlib's multi-pass scan (prefilter + whole-tag
-locator + name + attrs), which makes parsing the dominant cost of the
-extraction kernel ~2x cheaper. The token-level grammar (tag name / attribute
-/ end-tag / comment / declaration recovery rules) deliberately matches the
-stdlib tokenizer, whose patterns implement the WHATWG HTML5 tokenization
-rules; equivalence is pinned by a differential test against the stdlib
-builder over the golden fixtures, the synthetic corpus, and generated soup
-(``tests/test_htmlkit_diff.py``).
+``fast_feed`` recognizes each complete tag with ONE compiled regex match and
+creates the nodes itself, with no callback interface in between. Element
+tokens go through the tree-building rules in ``htmlkit.dom`` (``open_tag``/
+``close_tag``: implicit closes, void elements, ``MAX_TREE_DEPTH``); text
+without ``&`` skips charref decoding.
+
+The token-level grammar (tag name / attribute / end-tag / comment /
+declaration recovery rules) deliberately matches the stdlib
+``html.parser.HTMLParser(convert_charrefs=True)`` tokenizer, whose patterns
+implement the WHATWG HTML5 tokenization rules. Equivalence is pinned by a
+differential test against a stdlib-``HTMLParser`` adapter driving the same
+tree-building rules (``tests/htmlkit_oracle.py``) over the golden fixtures,
+the synthetic corpus, and generated soup (``tests/test_htmlkit_diff.py``).
 
 Known intentional divergences, all on pathological input only:
 
@@ -22,16 +24,22 @@ Known intentional divergences, all on pathological input only:
 * ``<![foo]>`` (unknown marked-section keyword) is consumed as a bogus
   comment, where the stdlib raises ``NotImplementedError`` — totality over
   arbitrary crawl bytes matters more than emulating a crash.
-
-The ``sink`` is any object with the builder callback surface
-(``handle_starttag/handle_startendtag/handle_endtag/handle_data/
-handle_comment``); see ``htmlkit.dom._TreeBuilder``.
 """
 
 from __future__ import annotations
 
 import re
 from html import unescape
+from typing import Optional
+
+from wpextract_spark.htmlkit.dom import (
+    CommentNode,
+    Document,
+    Tag,
+    TextNode,
+    close_tag,
+    open_tag,
+)
 
 # One match per complete tag. The attrs body admits any run of non-quote,
 # non-'>' characters or balanced quoted spans (quoted attribute values may
@@ -87,10 +95,46 @@ _CDATA_CLOSE = {
     "script": re.compile(r"</\s*script\s*>", re.IGNORECASE),
     "style": re.compile(r"</\s*style\s*>", re.IGNORECASE),
 }
+# Plain attribute lists — whitespace-separated ``name``, ``name="v"``,
+# ``name='v'`` or ``name=v`` — tokenize exactly as the stdlib's _ATTRFIND
+# loop does, so one fullmatch plus one findall stands in for a regex match
+# per attribute. Anything else (spaces around '=', attributes glued
+# together, odd characters) fails the fullmatch and takes _emit_starttag.
+_PLAIN_ATTRS = re.compile(
+    r"""(?:\s+[a-zA-Z_:][-a-zA-Z0-9_:.]*(?:=(?:"[^"]*"|'[^']*'|[^\s"'=<>`]+))?)*\s*"""
+)
+_PLAIN_ATTR = re.compile(
+    r"""\s+([a-zA-Z_:][-a-zA-Z0-9_:.]*)(?:=(?:"([^"]*)"|'([^']*)'|([^\s"'=<>`]+)))?"""
+)
 _ASCII_LETTERS = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
 
 
-def _recover(sink, rawdata: str, i: int) -> int:
+def _plain_attrs(attrstr: str) -> Optional[tuple[dict[str, str], bool]]:
+    """``(attrs, self_closing)`` of a plain attribute list, else None."""
+    self_closing = attrstr[-1] == "/"
+    if self_closing:
+        # '/>' after a quote or a space; after a bare value the slash
+        # belongs to the value ('href=x/>').
+        if attrstr[-2:-1] not in "\"' \t\n\r\f":
+            return None
+        attrstr = attrstr[:-1]
+    if _PLAIN_ATTRS.fullmatch(attrstr) is None:
+        return None
+    attrs: dict[str, str] = {}
+    for name, dquoted, squoted, bare in _PLAIN_ATTR.findall(attrstr):
+        name = name.lower()
+        if name not in attrs:  # first occurrence wins
+            value = dquoted or squoted or bare
+            attrs[name] = unescape(value) if "&" in value else value
+    return attrs, self_closing
+
+
+def _data(stack: list[Tag], data: str) -> None:
+    if data:
+        stack[-1].append(TextNode(data))
+
+
+def _recover(stack: list[Tag], rawdata: str, i: int) -> int:
     """Unterminated construct: consume to the next '>' (or '<', or one char)
     and emit the span as unescaped data — the stdlib's end-of-input recovery."""
     k = rawdata.find(">", i + 1)
@@ -100,21 +144,19 @@ def _recover(sink, rawdata: str, i: int) -> int:
             k = i + 1
     else:
         k += 1
-    sink.handle_data(unescape(rawdata[i:k]))
+    _data(stack, unescape(rawdata[i:k]))
     return k
 
 
-def _emit_starttag(sink, rawdata: str, i: int, endpos: int):
+def _emit_starttag(stack: list[Tag], rawdata: str, i: int, endpos: int) -> Optional[str]:
     """The stdlib ``parse_starttag`` body for the tag span [i, endpos).
-
-    Returns ``(new_pos, cdata_elem)``; ``cdata_elem`` is 'script'/'style'
-    when raw-text content mode must follow.
-    """
+    Returns the tag name when it opened an element, which puts 'script'
+    and 'style' into raw-text content mode."""
     match = _TAGFIND.match(rawdata, i + 1)
     k = match.end()
     tag = match.group(1).lower()
-    # First occurrence wins on duplicate attribute names (libxml2 behavior,
-    # see dom._TreeBuilder._build_attrs); valueless attrs map to "".
+    # First occurrence wins on duplicate attribute names (libxml2
+    # behavior); valueless attrs map to "".
     attrs: dict = {}
     while k < endpos:
         am = _ATTRFIND.match(rawdata, k)
@@ -135,18 +177,13 @@ def _emit_starttag(sink, rawdata: str, i: int, endpos: int):
     if end not in (">", "/>"):
         # Bogus content inside the tag: the whole span is character data
         # (raw — the stdlib does not unescape on this path).
-        sink.handle_data(rawdata[i:endpos])
-        return endpos, None
-    if end == "/>":
-        sink.handle_startendtag(tag, attrs)
-        return endpos, None
-    sink.handle_starttag(tag, attrs)
-    if tag in _CDATA_CLOSE:
-        return endpos, tag
-    return endpos, None
+        _data(stack, rawdata[i:endpos])
+        return None
+    open_tag(stack, tag, attrs, end == "/>")
+    return None if end == "/>" else tag
 
 
-def _slow_starttag(sink, rawdata: str, i: int) -> int:
+def _slow_starttag(stack: list[Tag], rawdata: str, i: int) -> int:
     """'<'+letter positions the fast pattern rejects (unbalanced quotes,
     truncated tags): the stdlib ``check_for_whole_start_tag`` decision."""
     j = _LOCATE_STARTTAG_END.match(rawdata, i).end()
@@ -157,16 +194,16 @@ def _slow_starttag(sink, rawdata: str, i: int) -> int:
         endpos = j + 2
     elif nxt == "" or nxt == "/" or nxt == "=" or nxt in _ASCII_LETTERS:
         # End of input in or before an attribute value.
-        return _recover(sink, rawdata, i)
+        return _recover(stack, rawdata, i)
     else:
         endpos = j if j > i else i + 1
-    pos, cdata_elem = _emit_starttag(sink, rawdata, i, endpos)
-    if cdata_elem is not None:
-        return _cdata(sink, rawdata, pos, cdata_elem)
-    return pos
+    cdata_elem = _emit_starttag(stack, rawdata, i, endpos)
+    if cdata_elem in _CDATA_CLOSE:
+        return _cdata(stack, rawdata, endpos, cdata_elem)
+    return endpos
 
 
-def _cdata(sink, rawdata: str, i: int, elem: str) -> int:
+def _cdata(stack: list[Tag], rawdata: str, i: int, elem: str) -> int:
     """script/style raw-text content mode. Text is emitted verbatim (no
     charref conversion) until a PROPER matching end tag (``</elem\\s*>``);
     a junk close like ``</style x=y>`` does not end raw-text mode, and
@@ -176,32 +213,32 @@ def _cdata(sink, rawdata: str, i: int, elem: str) -> int:
     if m is None:
         return len(rawdata)  # unterminated: remaining data is dropped
     if i < m.start():
-        sink.handle_data(rawdata[i : m.start()])
-    sink.handle_endtag(elem)
+        _data(stack, rawdata[i : m.start()])
+    close_tag(stack, elem)
     return m.end()
 
 
-def _parse_endtag(sink, rawdata: str, i: int) -> int:
+def _parse_endtag(stack: list[Tag], rawdata: str, i: int) -> int:
     gt = rawdata.find(">", i + 1)
     if gt < 0:
-        return _recover(sink, rawdata, i)
+        return _recover(stack, rawdata, i)
     m = _ENDTAGFIND.match(rawdata, i)
     if m is not None:
-        sink.handle_endtag(m.group(1).lower())
+        close_tag(stack, m.group(1).lower())
         return gt + 1
     nm = _TAGFIND.match(rawdata, i + 2)
     if nm is None:
         if rawdata[i : i + 3] == "</>":
             return i + 3
-        sink.handle_comment(rawdata[i + 2 : gt])  # bogus comment
+        stack[-1].append(CommentNode(rawdata[i + 2 : gt]))  # bogus comment
         return gt + 1
     # Junk between the name and '>' is consumed and ignored.
-    sink.handle_endtag(nm.group(1).lower())
+    close_tag(stack, nm.group(1).lower())
     gt2 = rawdata.find(">", nm.end())
     return gt2 + 1
 
 
-def _parse_decl(sink, rawdata: str, i: int) -> int:
+def _parse_decl(stack: list[Tag], rawdata: str, i: int) -> int:
     """'<!' constructs other than comments: doctype, marked sections, bogus
     comments. None contribute extractable content; boundaries must match."""
     if rawdata[i : i + 3] == "<![":
@@ -215,85 +252,89 @@ def _parse_decl(sink, rawdata: str, i: int) -> int:
             cm = None
             gt = rawdata.find(">", i + 2)
             if gt >= 0:
-                sink.handle_comment(rawdata[i + 2 : gt])
+                stack[-1].append(CommentNode(rawdata[i + 2 : gt]))
                 return gt + 1
         if cm is None:
-            return _recover(sink, rawdata, i)
+            return _recover(stack, rawdata, i)
         return cm.end()
     if rawdata[i : i + 9].lower() == "<!doctype":
         gt = rawdata.find(">", i + 9)
         if gt < 0:
-            return _recover(sink, rawdata, i)
+            return _recover(stack, rawdata, i)
         return gt + 1
     gt = rawdata.find(">", i + 2)
     if gt < 0:
-        return _recover(sink, rawdata, i)
-    sink.handle_comment(rawdata[i + 2 : gt])  # bogus comment
+        return _recover(stack, rawdata, i)
+    stack[-1].append(CommentNode(rawdata[i + 2 : gt]))  # bogus comment
     return gt + 1
 
 
-def fast_feed(sink, rawdata: str) -> None:
-    """Tokenize ``rawdata`` in one pass, driving ``sink``'s callbacks."""
+def fast_feed(rawdata: str) -> Document:
+    """Tokenize ``rawdata`` in one pass and return the built document."""
+    root = Document()
+    stack: list[Tag] = [root]
     n = len(rawdata)
     i = 0
     find = rawdata.find
-    handle_data = sink.handle_data
+    match = _TAG.match
     while i < n:
         j = find("<", i)
         if j < 0:
-            handle_data(unescape(rawdata[i:]))
-            return
+            j = n
         if i < j:
-            handle_data(unescape(rawdata[i:j]))
+            data = rawdata[i:j]
+            if "&" in data:
+                data = unescape(data)
+            if data:
+                node = TextNode(data)
+                top = stack[-1]
+                node.parent = top
+                top.children.append(node)
+            if j == n:
+                break
         i = j
-        m = _TAG.match(rawdata, i)
+        m = match(rawdata, i)
         if m is not None:
-            g = m.group
-            if g("start") is not None:
-                attrstr = g("attrs")
-                if not attrstr or (stripped := attrstr.strip()) == "":
-                    # No attributes (the most common tags: <p>, <div>, …).
-                    tag = g("start").lower()
-                    sink.handle_starttag(tag, {})
-                    i = m.end()
-                    if tag in _CDATA_CLOSE:
-                        i = _cdata(sink, rawdata, i, tag)
-                elif stripped == "/" and attrstr.endswith("/"):
-                    # Self-closing ONLY when the slash is contiguous with '>'
-                    # (stdlib: end == '/>'); '<div / >' is a plain start tag.
-                    sink.handle_startendtag(g("start").lower(), {})
-                    i = m.end()
+            kind = m.lastgroup
+            if kind == "attrs":
+                name, attrstr = m.group(1, 2)
+                if not attrstr:  # the most common tags: <p>, <div>, …
+                    cdata_elem = name.lower()
+                    open_tag(stack, cdata_elem, {})
+                elif (plain := _plain_attrs(attrstr)) is not None:
+                    tag = name.lower()
+                    open_tag(stack, tag, plain[0], plain[1])
+                    cdata_elem = None if plain[1] else tag
                 else:
-                    i, cdata_elem = _emit_starttag(sink, rawdata, i, m.end())
-                    if cdata_elem is not None:
-                        i = _cdata(sink, rawdata, i, cdata_elem)
-            elif g("endname") is not None:
-                sink.handle_endtag(g("endname").lower())
+                    cdata_elem = _emit_starttag(stack, rawdata, i, m.end())
                 i = m.end()
-            elif g("end") is not None:
-                i = _parse_endtag(sink, rawdata, i)
-            elif g("comment") is not None:
+                if cdata_elem in _CDATA_CLOSE:
+                    i = _cdata(stack, rawdata, i, cdata_elem)
+            elif kind == "endname":
+                close_tag(stack, m.group(3).lower())
+                i = m.end()
+            elif kind == "end":
+                i = _parse_endtag(stack, rawdata, i)
+            elif kind == "comment":
                 cm = _COMMENTCLOSE.search(rawdata, i + 4)
                 if cm is None:
-                    i = _recover(sink, rawdata, i)
+                    i = _recover(stack, rawdata, i)
                 else:
-                    sink.handle_comment(rawdata[i + 4 : cm.start()])
+                    stack[-1].append(CommentNode(rawdata[i + 4 : cm.start()]))
                     i = cm.end()
-            elif g("pi") is not None:
+            elif kind == "pi":
                 gt = find(">", i + 2)
                 if gt < 0:
-                    i = _recover(sink, rawdata, i)
+                    i = _recover(stack, rawdata, i)
                 else:
                     i = gt + 1  # processing instructions carry no content
             else:  # decl
-                i = _parse_decl(sink, rawdata, i)
+                i = _parse_decl(stack, rawdata, i)
             continue
         c = rawdata[i + 1 : i + 2]
         if c in _ASCII_LETTERS:
-            i = _slow_starttag(sink, rawdata, i)
-        elif i + 1 < n:
-            handle_data("<")
-            i += 1
+            i = _slow_starttag(stack, rawdata, i)
         else:
-            handle_data("<")
-            return
+            _data(stack, "<")
+            i += 1
+    return root

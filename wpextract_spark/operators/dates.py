@@ -48,7 +48,9 @@ def publish_signals_udf():
                 rows.append(dict.fromkeys(_COLS))
                 continue
             try:
-                rows.append(extract_publish_signals(parse_html(doc_html)))
+                doc = parse_html(doc_html)
+                rows.append(extract_publish_signals(doc))
+                doc.release()
             except Exception:
                 rows.append(dict.fromkeys(_COLS))
         return pd.DataFrame(rows, columns=_COLS)

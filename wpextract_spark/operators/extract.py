@@ -147,6 +147,7 @@ def content_extract_udf():
             try:
                 doc = parse_html(doc_html)
                 row = extract_content(doc, self_link or "")
+                doc.release()
                 row["error"] = None
             except Exception as exc:  # quarantine, never fail the task
                 row = dict(_null_row)
@@ -176,9 +177,9 @@ def main_content_udf():
                 rows.append({"text": None, "error": None})
                 continue
             try:
-                rows.append(
-                    {"text": extract_main_content(parse_html(doc_html)), "error": None}
-                )
+                doc = parse_html(doc_html)
+                rows.append({"text": extract_main_content(doc), "error": None})
+                doc.release()
             except Exception as exc:  # quarantine, never fail the task
                 rows.append(
                     {"text": None, "error": f"{type(exc).__name__}: {exc}"[:500]}
@@ -260,6 +261,8 @@ def translations_udf(pickers: Optional[list[type[LangPicker]]] = None):
             try:
                 doc = parse_html(page_html) if page_html is not None else None
                 language, translations = extract_translations(doc, page_link or "", pickers)
+                if doc is not None:
+                    doc.release()
             except Exception:  # quarantine (e.g. ParseDepthError): no-doc path
                 language, translations = None, []
             rows.append({"language": language, "translations": translations})
@@ -280,7 +283,9 @@ def self_url_udf():
                 out.append(None)
                 continue
             try:
-                out.append(extract_self_url(parse_html(page_html, head_only=True)))
+                doc = parse_html(page_html, head_only=True)
+                out.append(extract_self_url(doc))
+                doc.release()
             except Exception:  # quarantine (e.g. ParseDepthError)
                 out.append(None)
         return pd.Series(out, dtype="object")
@@ -375,7 +380,9 @@ def page_meta_udf():
                 rows.append(_null_row)
                 continue
             try:
-                row = extract_page_meta(parse_html(doc_html))
+                doc = parse_html(doc_html)
+                row = extract_page_meta(doc)
+                doc.release()
                 row["error"] = None
             except Exception as exc:  # quarantine, never fail the task
                 row = dict(_null_row)
@@ -404,7 +411,10 @@ def markdown_udf():
             if doc_html is None:
                 return None
             try:
-                return render_markdown(parse_html(doc_html))
+                doc = parse_html(doc_html)
+                markdown = render_markdown(doc)
+                doc.release()
+                return markdown
             except Exception:
                 return None
 
@@ -445,7 +455,9 @@ def jsonld_udf():
                 rows.append(_null)
                 continue
             try:
-                objects = extract_jsonld(parse_html(doc_html))
+                doc = parse_html(doc_html)
+                objects = extract_jsonld(doc)
+                doc.release()
                 summary = jsonld_summary(objects)
                 rows.append(
                     (
@@ -491,7 +503,10 @@ def alternates_udf():
             if doc_html is None:
                 return []
             try:
-                return extract_alternates(parse_html(doc_html))
+                doc = parse_html(doc_html)
+                alternates = extract_alternates(doc)
+                doc.release()
+                return alternates
             except Exception:
                 return []
 

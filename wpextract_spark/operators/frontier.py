@@ -86,7 +86,9 @@ def fetch_schedule(
     lexicographically smallest url, deterministic across engines) and the
     k-th fetch is offset ``(k-1) * crawl_delay`` seconds from the host's
     first — the schedule a per-host token-bucket fetcher realizes.
-    Hosts without a declared delay use ``default_delay``.
+    A host's delay is the largest ``crawl_delay`` on any of its rows (the
+    most polite reading when rows disagree); hosts without a declared
+    delay use ``default_delay``.
 
     Input: (url, host, priority) + optional crawl_delay column (from
     robots directives via :func:`frontier_priority`'s politeness input).
@@ -103,8 +105,13 @@ def fetch_schedule(
     from pyspark.sql import Window
 
     cols = set(prioritized.columns)
+    # One delay per host: rows of a host may disagree (or some carry null),
+    # and per-row delays would make its offsets collide or run backwards.
     delay = (
-        F.coalesce(F.col("crawl_delay"), F.lit(float(default_delay)))
+        F.coalesce(
+            F.max("crawl_delay").over(Window.partitionBy("host")),
+            F.lit(float(default_delay)),
+        )
         if "crawl_delay" in cols
         else F.lit(float(default_delay))
     )

@@ -147,11 +147,14 @@ class ResumableExtractJob:
         # Exact per-partition doc/byte lineage from the written data itself
         # (counters derived from the committed output, not from accumulators,
         # so retried/speculative tasks can never double-count). One
-        # aggregation, at most ``partitions_per_chunk`` rows to the driver.
+        # aggregation, at most ``partitions_per_chunk`` rows to the driver;
+        # the schema is the one just written, so reading back runs no
+        # schema-inference job.
         wall_s = time.perf_counter() - t0
         rows = [
             tuple(r)
-            for r in self.spark.read.parquet(str(chunk_dir))
+            for r in self.spark.read.schema(extracted.schema)
+            .parquet(str(chunk_dir))
             .groupBy("partition_id")
             .agg(
                 F.count("*"),

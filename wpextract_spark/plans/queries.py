@@ -3933,7 +3933,8 @@ def q_surt_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     default ports / trailing slash / reordered params), and the SURT key
     collapses the query-carrying variants while keeping the query-less
     one distinct. The oracle restates canonicalization AND the SURT
-    transform (host reversal, www strip, rest-of-URL casefold) in SQL."""
+    transform (host reversal, www strip when two labels remain,
+    rest-of-URL casefold) in SQL."""
     from wpextract_spark.functions.urls import surt_key
 
     docs = _t(spark, sf_dir, "documents")
@@ -4039,14 +4040,22 @@ t2 AS (
 t3 AS (
   SELECT doc_id, url, rest,
          regexp_extract(hostport, ':([0-9]+)$', 1) AS port,
-         regexp_replace(regexp_replace(hostport, ':[0-9]+$', ''),
-                        '^www[0-9]*\.', '') AS host
-  FROM t2)
+         regexp_replace(hostport, ':[0-9]+$', '') AS host
+  FROM t2),
+t4 AS (
+  SELECT doc_id, url, rest, port, host,
+         regexp_replace(host, '^www[0-9]*\.', '') AS bare
+  FROM t3),
+t5 AS (
+  SELECT doc_id, url, rest, port,
+         CASE WHEN len(string_split(bare, '.')) >= 2 THEN bare
+              ELSE host END AS host
+  FROM t4)
 SELECT doc_id, url,
        array_to_string(list_reverse(string_split(host, '.')), ',') ||
        CASE WHEN port <> '' THEN ':' || port ELSE '' END || ')' || rest
          AS surt
-FROM t3
+FROM t5
 """
 
 
@@ -4420,10 +4429,11 @@ def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Politeness-respecting fetch plan (operators/frontier.py::
     fetch_schedule): the scheduler leg after frontier_priority — per-host
     priority ranking with deterministic url tie-break, k-th fetch offset
-    (k-1)*crawl_delay seconds. Hosts exercise a declared slow delay, a
-    null delay (falls back to the default), and the fast path. The
-    oracle restates the window rank and the offset arithmetic (all
-    delays binary-exact, so round(6) is hash-stable)."""
+    (k-1)*crawl_delay seconds, one delay per host (its rows' max). Hosts
+    exercise a declared slow delay, a null delay (falls back to the
+    default), and the fast path. The oracle restates the window rank, the
+    per-host delay and the offset arithmetic (all delays binary-exact, so
+    round(6) is hash-stable)."""
     from wpextract_spark.operators.frontier import fetch_schedule
 
     docs = _t(spark, sf_dir, "documents")
@@ -4459,7 +4469,8 @@ ranked AS (
          row_number() OVER (PARTITION BY host
                             ORDER BY priority DESC, url ASC)::BIGINT
            AS fetch_rank,
-         coalesce(crawl_delay, 1.0::DOUBLE) AS delay
+         coalesce(max(crawl_delay) OVER (PARTITION BY host), 1.0::DOUBLE)
+           AS delay
   FROM frontier)
 SELECT url, host, fetch_rank,
        round((fetch_rank - 1) * delay, 6)::DOUBLE AS fetch_offset_s
