@@ -102,8 +102,8 @@ def main() -> int:
         # render differently than this mirror: no Decimal/hugeint/int128 may
         # reach the comparison from either engine — cast to double/bigint in
         # the query AND the oracle instead. cursor.description only reports
-        # 'NUMBER' for hugeint (it hid ORACLE_SESSIONIZE's window-sum int128
-        # in round 2), so resolve real logical types via the relation API.
+        # 'NUMBER' for hugeint (it hid a DuckDB window sum's int128 in
+        # round 2), so resolve real logical types via the relation API.
         import decimal as _dec
 
         ambiguous_types = {"DECIMAL", "HUGEINT", "INT128", "UHUGEINT"}

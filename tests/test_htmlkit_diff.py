@@ -5,7 +5,7 @@ stdlib-driven ``parse_html_stdlib`` (``tests/htmlkit_oracle.py``, same
 tree-building rules) on every input the engine is specified
 over: the reference's golden fixture documents, the deterministic synthetic
 corpus, and generated well-formed-ish soup. (Documented divergences exist
-only for pathological constructs — unbalanced quotes inside tags,
+only for pathological constructs — malformed start tags emitted as text,
 unterminated declarations — where the stdlib itself behaves erratically;
 see the tokenize module docstring.)
 """
@@ -99,6 +99,8 @@ def test_tricky_constructs_identical():
         '<a href=v/>x</a>', '<input disabled/>x', '<img src="a" />', '<a href=x=y>z</a>',
         '<a href="1"alt="2">z</a>', '<div id=a class="b c"\x0bdata-x=\'d\'>z</div>',
         '<script src="/s.js" async>var a = "<p>";</script>t', '<script src="/s.js"/>t',
+        # a quote where no value can start ends the tag at the first '>'
+        "<a 'x>y'>", "<a href= href='x>y'>", "<a href=v/href='x>y'>",
         # unclosed quote: both builders recover without crashing
         # (documented divergence class — only totality is asserted)
     ]
@@ -133,21 +135,25 @@ def test_soup_identical(html):
 
 # Start tags whose attribute text mixes plain attribute lists (which the
 # tokenizer reads with one fullmatch) with the near misses that must fall
-# back to the stdlib's per-attribute grammar. Quotes stay balanced and only
-# open a value: unbalanced quotes are a documented divergence.
+# back to the stdlib's per-attribute grammar. Quotes, '=', '/' and '>' also
+# appear where no value can start (in a name, glued after a bare value,
+# between attributes), where the stdlib ends the tag at the first '>'.
 _attr = st.builds(
     lambda name, eq, value: name + (eq + value if eq else ""),
-    st.sampled_from(["href", "HREF", "data-x", "_:y", "x.y", "alt", "a?"]),
-    st.sampled_from(["", "=", " = ", "==", "=\n"]),
-    st.sampled_from(['"a b"', "'c'", '"&amp;&#1;"', "'x>y'", '""', "v ", "v/ ", "a&lt;b ", "` "]),
+    st.sampled_from(["href", "HREF", "data-x", "_:y", "x.y", "alt", "a?", "'x", 'q"', "a'b"]),
+    st.sampled_from(["", "=", " = ", "==", "=\n", "= href="]),
+    st.sampled_from(
+        ['"a b"', "'c'", '"&amp;&#1;"', "'x>y'", '""', "v ", "v/ ", "a&lt;b ", "` ", "v/", "v'"]
+    ),
 )
 _attr_tag = st.builds(
     lambda name, attrs, end, text: f"<{name} {''.join(attrs)}{end}{text}",
     st.sampled_from(["a", "img", "div", "script", "P"]),
     st.lists(
-        st.tuples(st.sampled_from([" ", "\t", "\n", "\x0b", "\xa0", "/", "", " / "]), _attr).map(
-            "".join
-        ),
+        st.tuples(
+            st.sampled_from([" ", "\t", "\n", "\x0b", "\xa0", "/", "", " / ", "'", '"', "=", ">"]),
+            _attr,
+        ).map("".join),
         max_size=5,
     ),
     st.sampled_from([">", "/>", " />", " "]),

@@ -39,7 +39,7 @@ def test_registry_matches_runtime_dict():
 
 
 def test_every_query_has_oracle():
-    """96/96: no rows-only entries remain (VERDICT r4 item 1b)."""
+    """Every query has an oracle: no rows-only entries remain (VERDICT r4 item 1b)."""
     from wpextract_spark.plans.queries import ORACLES, QUERIES
 
     missing = [k for k in QUERIES if k not in ORACLES or not ORACLES[k]]

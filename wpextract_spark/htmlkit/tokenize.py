@@ -43,9 +43,11 @@ from wpextract_spark.htmlkit.dom import (
 
 # One match per complete tag. The attrs body admits any run of non-quote,
 # non-'>' characters or balanced quoted spans (quoted attribute values may
-# contain '>'), so the terminating '>' found here is the same one the
-# stdlib's whole-tag locator finds for every input with balanced quotes;
-# unbalanced-quote tags fail this pattern and take _slow_starttag.
+# contain '>'). That '>' is the one the stdlib's whole-tag locator finds
+# only when the attribute text is empty or a plain list (_plain_attrs): a
+# quote in attribute-name position ('<a 'x>y'>') opens no value for the
+# stdlib, so its tag ends at the first '>'. Every other start tag, balanced
+# or not, is located again by _slow_starttag.
 _TAG = re.compile(
     r"<(?:"
     r"(?P<start>[a-zA-Z][^\t\n\r\f />\x00]*)"
@@ -184,8 +186,9 @@ def _emit_starttag(stack: list[Tag], rawdata: str, i: int, endpos: int) -> Optio
 
 
 def _slow_starttag(stack: list[Tag], rawdata: str, i: int) -> int:
-    """'<'+letter positions the fast pattern rejects (unbalanced quotes,
-    truncated tags): the stdlib ``check_for_whole_start_tag`` decision."""
+    """Start tags the fast path cannot take (attribute text that is not a
+    plain list, unbalanced quotes, truncated tags): the stdlib
+    ``check_for_whole_start_tag`` decision."""
     j = _LOCATE_STARTTAG_END.match(rawdata, i).end()
     nxt = rawdata[j : j + 1]
     if nxt == ">":
@@ -306,7 +309,8 @@ def fast_feed(rawdata: str) -> Document:
                     open_tag(stack, tag, plain[0], plain[1])
                     cdata_elem = None if plain[1] else tag
                 else:
-                    cdata_elem = _emit_starttag(stack, rawdata, i, m.end())
+                    i = _slow_starttag(stack, rawdata, i)
+                    continue
                 i = m.end()
                 if cdata_elem in _CDATA_CLOSE:
                     i = _cdata(stack, rawdata, i, cdata_elem)

@@ -358,8 +358,9 @@ class SparkSiteExtractor:
         """Write reference-format JSON per entity; returns row counts.
 
         This is the byte-parity sink (driver-side serializer replicating the
-        reference's key order/escaping — correctness gate only). For bulk
-        output use :meth:`export_tables`.
+        reference's key order/escaping), the CLI's default JSON output;
+        :meth:`export_distributed` renders the same bytes on the executors.
+        For bulk output use :meth:`export_tables`.
         """
         out_dir = Path(out_dir)
         out_dir.mkdir(parents=True, exist_ok=True)

@@ -6,8 +6,8 @@ re-nested into dicts, timestamps ISO-8601, external links WITHOUT a
 ``destination`` key (absent, not null — dataclass asdict semantics).
 
 This sink exists for the pytest parity gate and small exports; the scale path
-writes the same struct schema straight to parquet/Iceberg
-(``DataFrame.write``) and is exercised by bench.py.
+writes the same struct schema straight to parquet
+(``SparkSiteExtractor.export_tables``, ``wpextract-spark extract --tables``).
 """
 
 from __future__ import annotations
