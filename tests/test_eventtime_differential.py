@@ -1,21 +1,18 @@
-"""Randomized differential tests for the event-time operators: one seeded
-random corpus, Spark result vs a brute-force Python evaluation of the rule.
+"""Randomized differential test for the band range join: one seeded random
+corpus, Spark result vs a brute-force Python evaluation of the band rule.
 
 Deliberately NOT hypothesis-per-example (a Spark round-trip per example is
-minutes of overhead): a single 400-row corpus with dense timestamp
-collisions (small key/time domains) exercises every boundary the operators
-define — equal timestamps, seq ties, keys missing from one side — in one
-job per operator.
+minutes of overhead): small key/time domains give dense timestamp
+collisions, so one job exercises equal timestamps, both inclusive band
+bounds and keys missing from one side.
 """
 
 import random
 from datetime import datetime, timedelta
 
-from wpextract_spark.operators.asof import asof_join
-from wpextract_spark.operators.sessionize import sessionize
+from wpextract_spark.operators.rangejoin import range_join
 
 T0 = datetime(2024, 1, 1)
-GAP = 100  # seconds
 
 
 def _rand_rows(seed, n, keys=6, tmax=50):
@@ -27,74 +24,7 @@ def _rand_rows(seed, n, keys=6, tmax=50):
     ]
 
 
-def test_asof_matches_bruteforce_both_directions(spark):
-    left_rows = _rand_rows(seed=1, n=200)
-    right_rows = [(i + 1000, k, t, float(i)) for i, (j, k, t) in
-                  enumerate(_rand_rows(seed=2, n=200))]
-    left = spark.createDataFrame(left_rows, "event_id long, k long, ts timestamp")
-    right = spark.createDataFrame(
-        right_rows, "rid long, rk long, rts timestamp, val double"
-    )
-
-    def brute(direction):
-        out = {}
-        for eid, k, t in left_rows:
-            if direction == "backward":
-                cands = [r for r in right_rows if r[1] == k and r[2] <= t]
-                # latest time, then greatest seq
-                best = max(cands, key=lambda r: (r[2], r[0]), default=None)
-            else:
-                cands = [r for r in right_rows if r[1] == k and r[2] >= t]
-                # earliest time, then smallest seq -> min on (time, seq)
-                best = min(cands, key=lambda r: (r[2], r[0]), default=None)
-            out[eid] = (best[0], best[3]) if best else (None, None)
-        return out
-
-    for direction in ("backward", "forward"):
-        got = {
-            r["event_id"]: (r["asof_rid"], r["asof_val"])
-            for r in asof_join(
-                left, right, "k", "rk", "ts", "rts", ["rid", "val"], "rid",
-                direction=direction,
-            ).collect()
-        }
-        assert got == brute(direction), f"direction={direction}"
-
-
-def test_sessionize_matches_bruteforce(spark):
-    rows = [(i, k, t, 1.0) for i, (_, k, t) in enumerate(_rand_rows(seed=3, n=400))]
-    df = spark.createDataFrame(rows, "event_id long, k long, ts timestamp, v double")
-
-    # brute force: per key, sort by time; new session when gap > GAP
-    per_key = {}
-    for _, k, t, _v in rows:
-        per_key.setdefault(k, []).append(t)
-    expected = {}
-    for k, ts in per_key.items():
-        ts.sort()
-        seq, start, prev, count = 1, ts[0], ts[0], 0
-        for t in ts:
-            if (t - prev).total_seconds() > GAP:
-                expected[(k, seq)] = (start, prev, count)
-                seq, start, count = seq + 1, t, 0
-            count += 1
-            prev = t
-        expected[(k, seq)] = (start, prev, count)
-
-    got = {
-        (r["k"], r["session_seq"]): (
-            r["session_start"],
-            r["session_end"],
-            r["n_events"],
-        )
-        for r in sessionize(df, "k", "ts", GAP, value="v").collect()
-    }
-    assert got == expected
-
-
 def test_range_join_matches_bruteforce(spark):
-    from wpextract_spark.operators.rangejoin import range_join
-
     W = 30  # seconds — narrow band over a dense time domain: many pairs
     left_rows = _rand_rows(seed=4, n=150, keys=4, tmax=120)
     right_rows = [(i + 500, k, t) for i, (_, k, t) in

@@ -1,11 +1,11 @@
-"""Sessionization and band range join: semantics, boundaries, plan shape."""
+"""Bucketed band range join (`operators/rangejoin.py`): band bounds and
+no duplicate pairs across the replicated buckets."""
 
 from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
 from wpextract_spark.operators.rangejoin import range_join
-from wpextract_spark.operators.sessionize import assign_sessions, sessionize
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
 
@@ -15,48 +15,6 @@ def _events(spark, rows):
         [(i, u, T0 + timedelta(seconds=s), v) for i, (u, s, v) in enumerate(rows)],
         "event_id long, user_id long, ts timestamp, value double",
     )
-
-
-def test_session_assignment_boundaries(spark):
-    ev = _events(
-        spark,
-        [
-            (1, 0, 1.0),  # session 1
-            (1, 600, 1.0),  # +600s  -> same session
-            (1, 600 + 1800, 1.0),  # gap exactly 1800 -> still same (<=)
-            (1, 600 + 1800 + 1801, 1.0),  # gap 1801 -> NEW session
-            (2, 50, 1.0),  # other key: own numbering
-        ],
-    )
-    got = {
-        r["event_id"]: r["session_seq"]
-        for r in assign_sessions(ev, "user_id", "ts", 1800).collect()
-    }
-    assert got == {0: 1, 1: 1, 2: 1, 3: 2, 4: 1}
-
-
-def test_session_rollups(spark):
-    ev = _events(spark, [(1, 0, 2.0), (1, 100, 3.0), (1, 10_000, 5.0)])
-    rows = {
-        (r["user_id"], r["session_seq"]): r
-    for r in sessionize(ev, "user_id", "ts", 1800, value="value").collect()
-    }
-    s1, s2 = rows[(1, 1)], rows[(1, 2)]
-    assert s1["n_events"] == 2 and s1["sum_value"] == 5.0
-    assert s1["duration_us"] == 100_000_000
-    assert s2["n_events"] == 1 and s2["duration_us"] == 0
-
-
-def test_sessionize_single_shuffle(spark):
-    ev = _events(spark, [(1, 0, 1.0), (1, 5, 1.0)])
-    plan = (
-        sessionize(ev, "user_id", "ts", 1800, value="value")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the (key, session_seq) groupBy must reuse the window's exchange
-    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_range_join_band_semantics(spark):

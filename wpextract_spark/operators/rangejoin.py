@@ -17,8 +17,9 @@ skew-split, and whole-stage-compile — then the exact band predicate prunes
 the (at most 2x-replicated) candidates. Cost: 2x left replication instead
 of per-key O(n*m) pairs; output size is the true match count.
 
-No reference counterpart (wpextract has no temporal joins); included as a
-core analytics primitive per the build brief.
+No reference counterpart (wpextract has no temporal joins), and no
+registry query uses it: it is kept as a library operator, the one
+event-time primitive left after as-of join and sessionization were removed.
 """
 
 from __future__ import annotations
@@ -44,13 +45,12 @@ def range_join(
     query's true output size, not a plan artifact).
     """
     w_us = int(window_seconds) * 1_000_000
-    # NTZ-safe microsecond reading; see operators/sessionize.py:_us — band
-    # membership and bucket co-location only use differences, so the
-    # session-offset shift the cast introduces cancels.
-    from wpextract_spark.operators.sessionize import _us
-
-    lt = _us(F.col(left_time))
-    rt = _us(F.col(right_time))
+    # Microseconds since epoch. The NTZ->TIMESTAMP cast reads an NTZ value
+    # as session-local; band membership and bucket co-location only use
+    # differences of two such readings, so the constant session-offset
+    # shift cancels and TIMESTAMP and TIMESTAMP_NTZ inputs join alike.
+    lt = F.unix_micros(F.col(left_time).cast("timestamp"))
+    rt = F.unix_micros(F.col(right_time).cast("timestamp"))
     l = left.withColumn(
         "_bkt", F.explode(F.array(F.floor(lt / w_us), F.floor(lt / w_us) + 1))
     ).withColumn("_lt", lt)
