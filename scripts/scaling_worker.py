@@ -14,9 +14,9 @@ task waves per slot), so the work per partition is uniform and every level
 runs many fine task waves — exactly how a many-file production table behaves
 on a cluster of any size.
 (Measured here, an explicit repartition before the parse stage costs as much
-JVM CPU as extraction itself; the pipeline reserves url-hash repartition for
-the chunked resume protocol where chunk membership must be input-stable, see
-wpextract_spark/plans/job.py.)
+JVM CPU as extraction itself; the chunked resume protocol in
+wpextract_spark/plans/job.py avoids one too: chunk membership comes from a
+url-hash filter, and each chunk only coalesces its scan partitions.)
 """
 
 from __future__ import annotations

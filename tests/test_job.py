@@ -259,3 +259,137 @@ def test_max_chunks_bound_and_chunk_order(spark, tmp_path):
         (0, True), (1, True), (2, True), (3, False)
     ]
     assert rest.output().count() == 40
+
+
+def _lineage_pages(spark, html_type):
+    """Pages over three chunks: chunk 0 mixes multi-byte UTF-8 pages with a
+    null html and a depth bomb, chunk 1 holds only bombs (every partition
+    all quarantined), chunk 2 only null html."""
+    urls = [f"https://lineage.example.org/{i}/" for i in range(60)]
+    chunk_of = dict(
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .select("url", _chunk_of("url", 3))
+        .collect()
+    )
+    by_chunk = [[u for u in urls if chunk_of[u] == c] for c in range(3)]
+    rows = [
+        (u, f"<html><body><article><h1>Grüße {i}</h1>"
+            f"<p>naïve café — 日本語 ✓ 🎉 {i}</p></article></body></html>")
+        for i, u in enumerate(by_chunk[0][:12])
+    ]
+    rows += [(by_chunk[0][12], None), (by_chunk[0][13], BOMB)]
+    rows += [(u, BOMB) for u in by_chunk[1][:3]]
+    rows += [(u, None) for u in by_chunk[2][:3]]
+    if html_type == "binary":
+        rows = [(u, h if h is None else h.encode()) for u, h in rows]
+    return spark.createDataFrame(rows, f"url string, html {html_type}")
+
+
+def _readback_lineage(spark, chunk_dir):
+    """Per-partition lineage aggregated from a committed chunk's rows."""
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(str(chunk_dir))
+        .groupBy("partition_id")
+        .agg(
+            F.count("*"),
+            F.count("content.error"),
+            F.sum("_bytes_in"),
+            F.sum(F.octet_length("content.text")),
+        )
+        .collect()
+    )
+
+
+@pytest.mark.parametrize("html_type", ["binary", "string"])
+def test_lineage_equals_readback_of_committed_chunk(spark, tmp_path, html_type):
+    """The accumulator lineage of each chunk equals, row for row, the
+    aggregation of that chunk's committed output by partition_id."""
+    pages = _lineage_pages(spark, html_type)
+    job = ResumableExtractJob(spark, pages, tmp_path / "o", n_chunks=3,
+                              partitions_per_chunk=2)
+    job.run()
+    cols = ["partition_id", "n_docs", "n_errors", "n_bytes_in", "n_bytes_out"]
+    lineage = {
+        c: sorted(tuple(r) for r in job.metrics().where(f"chunk = {c}").select(*cols).collect())
+        for c in range(3)
+    }
+    for c in range(3):
+        assert lineage[c] == _readback_lineage(spark, job.data_dir / f"chunk={c}")
+
+    # The inputs reach every null and multi-byte case the oracle pins.
+    assert sum(r[1] for r in lineage[0]) == 14 and sum(r[2] for r in lineage[0]) == 1
+    n_chars = sum(
+        len(r["text"]) for r in job.output().select("content.text").collect() if r["text"]
+    )
+    assert sum(r[4] or 0 for r in lineage[0]) > n_chars  # octets, not characters
+    assert all(n_err == n_docs and out is None for _, n_docs, n_err, _, out in lineage[1])
+    assert all(b_in is None and out is None for *_, b_in, out in lineage[2])
+
+
+def test_chunk_write_plan_has_one_kernel_and_no_exchange(spark, tmp_path, monkeypatch):
+    """The kernel runs once, in the write's result stage: the condition
+    under which the accumulator lineage counts each partition once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    pages = generate_pages(spark, n_pages=20, seed=5, partitions=4)
+    ResumableExtractJob(spark, pages, tmp_path / "o", n_chunks=1,
+                        partitions_per_chunk=2).run()
+    (df,) = written
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "Exchange" not in plan, plan
+
+
+class _LabelJob(ResumableExtractJob):
+    """Records the job description each chunk ran under."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.labels: list[str] = []
+
+    def _run_chunk(self, chunk):
+        result = super()._run_chunk(chunk)
+        self.labels.append(self.spark.sparkContext.getLocalProperty("spark.job.description"))
+        return result
+
+
+def test_one_spark_job_per_chunk(spark, tmp_path):
+    """Each chunk is one single-stage Spark job, labelled with its chunk and
+    counted under the caller's job group."""
+    sc = spark.sparkContext
+    pages = generate_pages(spark, n_pages=20, seed=5, partitions=4)
+    job = _LabelJob(spark, pages, tmp_path / "o", n_chunks=2, partitions_per_chunk=2)
+    group = f"job-count-{tmp_path.name}"
+    sc.setJobGroup(group, "ResumableExtractJob job count")
+    try:
+        job.run(resume=False)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    tracker = sc.statusTracker()
+    ids = tracker.getJobIdsForGroup(group)
+    assert len(ids) == 2
+    assert [len(tracker.getJobInfo(i).stageIds) for i in ids] == [1, 1]
+    assert sorted(job.labels) == ["extract chunk 0/2", "extract chunk 1/2"]
+
+
+def test_rejects_fewer_than_one_chunk(spark, tmp_path):
+    pages = generate_pages(spark, n_pages=1, seed=9, partitions=1)
+    with pytest.raises(ValueError, match="n_chunks must be >= 1, got 0"):
+        ResumableExtractJob(spark, pages, tmp_path / "o", n_chunks=0)
+
+
+def test_rejects_fewer_than_one_partition_per_chunk(spark, tmp_path):
+    pages = generate_pages(spark, n_pages=1, seed=9, partitions=1)
+    with pytest.raises(ValueError, match="partitions_per_chunk must be >= 1, got 0"):
+        ResumableExtractJob(spark, pages, tmp_path / "o", partitions_per_chunk=0)

@@ -7,18 +7,33 @@ a versioned ``url_cache.json`` that lets a rerun skip completed work); at
 Spark scale that becomes a chunked job over the pages table:
 
 - The input is split into ``n_chunks`` deterministic chunks by
-  ``pmod(xxhash64(url), n_chunks)`` — the same explicit url-hash partitioning
-  the parse stage uses, so chunk membership is stable across runs, executor
-  counts, and input orderings.
-- Each chunk is extracted and written to ``out/chunk=<i>/`` (dynamic partition
-  overwrite — a re-run of a half-written chunk replaces it cleanly). One
-  aggregation over the written chunk then yields a lineage row per *Spark
+  ``pmod(xxhash64(url), n_chunks)``, so chunk membership is stable across
+  runs, executor counts, and input orderings.
+- Each chunk is ONE Spark job with one stage: scan → chunk filter →
+  ``coalesce(partitions_per_chunk)`` → kernel → write to ``out/chunk=<i>/``
+  (overwrite — a re-run of a half-written chunk replaces it cleanly). No
+  html is shuffled; the kernel runs in the scan's own tasks.
+  ``partitions_per_chunk`` caps the tasks (and output files) per chunk: an
+  input with fewer partitions than that runs fewer tasks.
+- The kernel is wrapped in a chunk-local pandas UDF that adds each batch's
+  ``[n_docs, n_errors, n_bytes_in, n_bytes_out]`` under its task's
+  partition id to a driver accumulator, giving one lineage row per *Spark
   partition*: ``(chunk, partition_id, n_docs, n_errors, n_bytes_in,
-  n_bytes_out, wall_s, run_id)``. The driver writes those rows, at most
-  ``partitions_per_chunk`` of them, as one parquet file into the append-only
-  metrics table. That file is the commit point: a chunk is complete iff it
-  has metrics rows, so a crash between data write and metrics append is
-  repaired by re-running the chunk (idempotent overwrite).
+  n_bytes_out, wall_s, run_id)``. This is exact, not best-effort: the UDF
+  runs in the write's *result* stage (no Exchange above it), Spark applies
+  a result task's accumulator update only for the first successful attempt
+  of each partition (``DAGScheduler.handleTaskCompletion``: "Only update
+  the accumulator once for each result task"), and drops failed attempts'
+  updates (user accumulators have ``countFailedValues = false``). Retries
+  and speculative copies therefore never double-count, and the counted
+  attempts are exactly the ones whose files the write commits. Counters
+  keep SQL ``SUM`` semantics: ``n_bytes_in``/``n_bytes_out`` are UTF-8
+  octets and stay null for a partition with no non-null html/text.
+- The driver writes those rows, at most ``partitions_per_chunk`` of them,
+  as one parquet file into the append-only metrics table. That file is the
+  commit point: a chunk is complete iff it has metrics rows, so a crash
+  between data write and metrics append is repaired by re-running the
+  chunk (idempotent overwrite).
 - ``run()`` keeps two chunks in flight, so one chunk's straggler tasks and
   commit overlap the next chunk's extraction; results still come back in
   chunk order.
@@ -44,13 +59,14 @@ from dataclasses import dataclass
 from pathlib import Path
 from typing import Optional
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark import inheritable_thread_target
+from pyspark import AccumulatorParam, TaskContext, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wpextract_spark.operators.extract import content_extract_udf
+from wpextract_spark.operators.extract import CONTENT_RESULT_TYPE, content_extract_udf
 
 METRICS_SCHEMA = (
     "chunk INT, partition_id INT, n_docs BIGINT, n_errors BIGINT, "
@@ -65,6 +81,32 @@ _METRICS_ARROW = pa.schema(
 # Chunks extracted at once: one chunk's straggler tasks and commit overlap
 # the next chunk's extraction instead of leaving cores idle.
 _IN_FLIGHT = 2
+
+
+class _LineageParam(AccumulatorParam):
+    """Merges ``{partition_id: [n_docs, n_errors, n_bytes_in, n_bytes_out]}``
+    dicts counter by counter with SQL ``SUM`` null semantics: a counter
+    stays None until some batch adds a non-null value."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, term):
+        for pid, counts in term.items():
+            old = acc.get(pid)
+            acc[pid] = list(counts) if old is None else [
+                b if a is None else a if b is None else a + b
+                for a, b in zip(old, counts)
+            ]
+        return acc
+
+
+def _octets(values: pd.Series) -> Optional[int]:
+    """``SUM(octet_length(values))``: UTF-8 bytes of the non-null str/bytes
+    values, None if every value is null."""
+    sizes = [len(v.encode()) if isinstance(v, str) else len(v)
+             for v in values if v is not None]
+    return sum(sizes) if sizes else None
 
 
 @dataclass
@@ -86,6 +128,10 @@ class ResumableExtractJob:
     out_dir : output root; results land in ``out_dir/data/chunk=<i>/``.
     n_chunks : resume granularity. At 10^12 rows this would be 10k-100k so a
         lost cluster forfeits at most minutes of work; tests use small values.
+    partitions_per_chunk : cap on the tasks (and output files) of one chunk;
+        ``None`` means ``defaultParallelism``. The chunk coalesces its input
+        partitions down to this, so an input with fewer partitions runs
+        fewer tasks.
     """
 
     def __init__(
@@ -96,6 +142,12 @@ class ResumableExtractJob:
         n_chunks: int = 8,
         partitions_per_chunk: Optional[int] = None,
     ) -> None:
+        if n_chunks < 1:
+            raise ValueError(f"n_chunks must be >= 1, got {n_chunks}")
+        if partitions_per_chunk is not None and partitions_per_chunk < 1:
+            raise ValueError(
+                f"partitions_per_chunk must be >= 1, got {partitions_per_chunk}"
+            )
         self.spark = spark
         self.pages = pages
         self.out_dir = Path(out_dir)
@@ -131,39 +183,34 @@ class ResumableExtractJob:
 
     def _run_chunk(self, chunk: int) -> ChunkResult:
         t0 = time.perf_counter()
-        df = self._chunk_df(chunk).repartition(
-            self.partitions_per_chunk, F.xxhash64("url")
-        )
-        res = content_extract_udf()(F.col("html"), F.col("url"))
-        extracted = df.select(
+        sc = self.spark.sparkContext
+        # A description, not a job group: the caller's group (inherited by
+        # run()'s threads) must still cover this chunk's job.
+        sc.setJobDescription(f"extract chunk {chunk}/{self.n_chunks}")
+        lineage = sc.accumulator({}, _LineageParam())
+        kernel = content_extract_udf().func
+
+        @F.pandas_udf(CONTENT_RESULT_TYPE)
+        def extract(html: pd.Series, url: pd.Series) -> pd.DataFrame:
+            out = kernel(html, url)
+            lineage.add({TaskContext.get().partitionId(): [
+                len(out), int(out["error"].notna().sum()),
+                _octets(html), _octets(out["text"]),
+            ]})
+            return out
+
+        # One job, one stage: coalesce merges scan partitions without a
+        # shuffle, so the UDF runs in the write's result tasks — the
+        # condition under which the accumulator counts each partition once.
+        extracted = self._chunk_df(chunk).coalesce(self.partitions_per_chunk).select(
             "url",
             F.octet_length("html").alias("_bytes_in"),
-            res.alias("content"),
+            extract("html", "url").alias("content"),
             F.spark_partition_id().alias("partition_id"),
         )
-        chunk_dir = self.data_dir / f"chunk={chunk}"
-        extracted.write.mode("overwrite").parquet(str(chunk_dir))
-
-        # Exact per-partition doc/byte lineage from the written data itself
-        # (counters derived from the committed output, not from accumulators,
-        # so retried/speculative tasks can never double-count). One
-        # aggregation, at most ``partitions_per_chunk`` rows to the driver;
-        # the schema is the one just written, so reading back runs no
-        # schema-inference job.
+        extracted.write.mode("overwrite").parquet(str(self.data_dir / f"chunk={chunk}"))
         wall_s = time.perf_counter() - t0
-        rows = [
-            tuple(r)
-            for r in self.spark.read.schema(extracted.schema)
-            .parquet(str(chunk_dir))
-            .groupBy("partition_id")
-            .agg(
-                F.count("*"),
-                F.count("content.error"),
-                F.sum("_bytes_in"),
-                F.sum(F.octet_length("content.text")),
-            )
-            .collect()
-        ]
+        rows = [(pid, *counts) for pid, counts in sorted(lineage.value.items())]
         # A chunk that selected zero pages still needs a commit row —
         # "complete iff it has metrics rows" would otherwise re-run the
         # empty chunk on every resume, forever.
