@@ -58,7 +58,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     Each callable first releases the PREVIOUS query's operator-internal
     persisted blocks (operators/cache.py): the driver runs dozens of
     queries in one long-lived session, and without the release the
-    pagerank/collocations/PQ count tables would accumulate until LRU
+    pagerank/collocations/LM count tables would accumulate until LRU
     pressure. Safe by the cache registry's contract — a released frame
     consumed lazily afterwards simply recomputes.
     """

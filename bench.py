@@ -89,6 +89,24 @@ def _worker(input_path: str, cores: int, trials: int) -> dict:
     return json.loads(line)
 
 
+def least_disturbed(rounds: list[tuple[float, ...]]) -> int:
+    """Index of the round whose worst level, relative to that level's best
+    across rounds, is highest: the round the co-tenant disturbed least.
+
+    ``rounds[i]`` holds round i's throughput at each parallelism level, in
+    the same level order for every round. Co-tenant load on a shared VM only
+    ever depresses a leg, so the round with the healthiest worst leg is the
+    closest view of the unloaded machine. Unlike a plain max-efficiency
+    pick, it cannot be inflated by a depressed low-parallelism denominator
+    alone: it needs every level healthy. Ties go to the earliest round.
+    """
+    best = [max(col) for col in zip(*rounds)]
+    return max(
+        range(len(rounds)),
+        key=lambda i: min(rate / b for rate, b in zip(rounds[i], best)),
+    )
+
+
 def _run_probe(tmp: str) -> tuple[dict, dict]:
     """(headline probe at $CORES, paired 2->8 scaling evidence)."""
     repo = str(Path(__file__).parent)
@@ -117,23 +135,12 @@ def _run_probe(tmp: str) -> tuple[dict, dict]:
         )
     if scaling["rounds"]:
         effs = sorted(r["eff"] for r in scaling["rounds"])
-        # Headline = the LEAST-DISTURBED round's efficiency — the round whose
-        # worst leg (min of each level's throughput normalized to that
-        # level's best across rounds) is highest, i.e. both its legs were
-        # healthy. Same selector as the full campaign
-        # (scripts/scaling_bench.py -> BENCH/BASELINE.md): co-tenant load on
-        # this shared VM only ever depresses a leg, so the round with the
-        # healthiest worst leg is the closest view of the unloaded machine,
-        # and unlike a plain max-efficiency pick it cannot be inflated by a
-        # depressed low-parallelism denominator alone. Median and all rounds
-        # ride alongside for the conservative view.
-        best2 = max(r["rate_2"] for r in scaling["rounds"])
-        best8 = max(r["rate_8"] for r in scaling["rounds"])
-        undisturbed = max(
-            scaling["rounds"],
-            key=lambda r: min(r["rate_2"] / best2, r["rate_8"] / best8),
-        )
-        scaling["eff_2_8"] = undisturbed["eff"]
+        # Headline = the least-disturbed round's efficiency, the same
+        # selector as the full campaign (scripts/scaling_bench.py ->
+        # BENCH/BASELINE.md). Median and all rounds ride alongside for the
+        # conservative view.
+        pick = least_disturbed([(r["rate_2"], r["rate_8"]) for r in scaling["rounds"]])
+        scaling["eff_2_8"] = scaling["rounds"][pick]["eff"]
         scaling["eff_2_8_median"] = effs[len(effs) // 2]
         scaling["eff_2_8_max"] = effs[-1]
         scaling["eff_2_8_all"] = effs

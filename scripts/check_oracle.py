@@ -19,7 +19,7 @@ sys.path.insert(0, str(Path(__file__).parent.parent))
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+    "orders", "lineitem", "events", "documents",
 ]
 
 

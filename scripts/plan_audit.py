@@ -1,7 +1,7 @@
 """Physical-plan audit over every registered driver-contract query.
 
 Builds (does not execute, except where an operator's construction itself
-runs driver-side steps — IVF centroids, bloom build, CC convergence) the
+runs driver-side steps — bloom build, CC convergence) the
 executed plan of each query at sf0.01 and tallies the markers that decide
 100 TB behavior:
 
@@ -116,8 +116,8 @@ def main() -> None:
         "",
         f"Generated by `python scripts/plan_audit.py {sf_dir}`. Columns: see",
         "the script docstring. `build_s` includes any driver-side steps the",
-        "operator runs at construction (IVF centroid collect, bloom build,",
-        "connected-components convergence) — not query execution.",
+        "operator runs at construction (bloom build, connected-components",
+        "convergence) — not query execution.",
         "",
         "| query | shuffles | broadcast joins | sort-merge joins | python evals | pushed filters | build_s |",
         "|---|---|---|---|---|---|---|",

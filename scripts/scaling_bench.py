@@ -26,6 +26,8 @@ from pathlib import Path
 REPO = Path(__file__).parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import least_disturbed  # noqa: E402
+
 LEVELS = [2, 8, 32]
 
 
@@ -124,24 +126,15 @@ def main() -> None:
     hw_effs_2_8 = paired_effs(2, 8, hw_rounds)
     hw_effs_8_32 = paired_effs(8, 32, hw_rounds)
 
-    def least_disturbed(lo: int, hi: int, rounds: list[dict]) -> int:
-        """Index of the round whose WORST level (relative to that level's
-        best across rounds) is highest — the round the co-tenant disturbed
-        least. A plain max-efficiency pick can be inflated above the true
-        ratio when load depresses the DENOMINATOR level of a round; this
-        selector is immune to that (it requires both levels healthy)."""
-        best = {c: max(rate(r[c]) for r in rounds) for c in (lo, hi)}
-        return max(
-            range(len(rounds)),
-            key=lambda i: min(rate(rounds[i][c]) / best[c] for c in (lo, hi)),
-        )
+    def pick(lo: int, hi: int, rounds: list[dict]) -> int:
+        return least_disturbed([(rate(r[lo]), rate(r[hi])) for r in rounds])
 
-    pick_2_8 = least_disturbed(2, 8, spark_rounds)
-    pick_8_32 = least_disturbed(8, 32, spark_rounds)
+    pick_2_8 = pick(2, 8, spark_rounds)
+    pick_8_32 = pick(8, 32, spark_rounds)
     eff_2_8, eff_8_32 = effs_2_8[pick_2_8], effs_8_32[pick_8_32]
     med_2_8 = sorted(effs_2_8)[len(effs_2_8) // 2]
-    hw_2_8 = hw_effs_2_8[least_disturbed(2, 8, hw_rounds)]
-    hw_8_32 = hw_effs_8_32[least_disturbed(8, 32, hw_rounds)]
+    hw_2_8 = hw_effs_2_8[pick(2, 8, hw_rounds)]
+    hw_8_32 = hw_effs_8_32[pick(8, 32, hw_rounds)]
     verdict = "PASS" if eff_2_8 >= 0.8 else "FAIL"
 
     # Per-level best across rounds (headline throughput under the best

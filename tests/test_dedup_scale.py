@@ -1,6 +1,6 @@
 """Scale-hardening semantics of the near-dup operators: 64-bit SimHash
-signatures, multi-probe embedding LSH, and the mega-bucket guards that keep
-one degenerate bucket from turning the candidate self-join quadratic."""
+signatures and the mega-bucket guards that keep one degenerate bucket from
+turning the candidate self-join quadratic."""
 
 import pytest
 
@@ -49,58 +49,6 @@ def test_simhash_mega_bucket_cap(spark):
     assert uncapped == n * (n - 1) // 2
     capped = simhash_near_dup_pairs(df, max_bucket=5).count()
     assert capped == 0  # every chunk bucket holds all 12 docs -> dropped
-
-
-def test_embedding_near_dups_multiset_and_cap(spark):
-    from wpextract_spark.operators.similarity import embedding_near_dup_pairs
-
-    dim = 16
-    base = [1.0 if i % 3 == 0 else -0.5 for i in range(dim)]
-    other = [(-1.0) ** i * (i + 1) / dim for i in range(dim)]
-    rows = [(1, base), (2, list(base)), (3, other)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    pairs = embedding_near_dup_pairs(df, threshold=0.99).collect()
-    assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
-    assert pairs[0]["cos_sim"] == pytest.approx(1.0)
-
-    # A mass of identical vectors collapses into one bucket per plane set:
-    # the cap drops those buckets entirely instead of emitting O(N^2) pairs.
-    clones = spark.createDataFrame(
-        [(i, base) for i in range(10)], "vec_id long, embedding array<float>"
-    )
-    assert embedding_near_dup_pairs(clones, threshold=0.99, max_bucket=4).count() == 0
-    assert embedding_near_dup_pairs(clones, threshold=0.99, max_bucket=None).count() == 45
-
-
-def test_kmeans_centroids_converge_and_stay_deterministic(spark):
-    from wpextract_spark.operators.similarity import ivf_topk, kmeans_centroids
-
-    # Two well-separated clusters around orthogonal axes + the first two
-    # vectors as seeds: one iteration must pull each centroid to its
-    # cluster's mean direction.
-    dim = 8
-    rows = []
-    for i in range(20):
-        axis = i % 2
-        vec = [0.0] * dim
-        vec[axis] = 1.0
-        vec[(axis + 2) % dim] = 0.05 * (i % 5)  # slight spread
-        rows.append((i, vec))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    cents = kmeans_centroids(df, n_lists=2, n_iter=2)
-    assert [cid for cid, _ in cents] == [0, 1]
-    c0, c1 = (dict(cents)[0], dict(cents)[1])
-    assert c0[0] > 0.9 and c1[1] > 0.9  # each centroid on its axis
-    # Deterministic across repeated runs (rounded means, fixed seeds).
-    assert kmeans_centroids(df, n_lists=2, n_iter=2) == cents
-
-    # Search through the trained quantizer returns the axis-0 cluster for an
-    # axis-0 query.
-    query = [1.0] + [0.0] * (dim - 1)
-    got = ivf_topk(df, query, k=5, n_probe=1, centroids=cents).collect()
-    assert all(r["vec_id"] % 2 == 0 for r in got)
 
 
 def test_lang_id_ngram_and_bpe_edges(spark):
@@ -168,15 +116,6 @@ def test_short_docs_dont_kill_ngram_jaccard(spark):
     )
     rows = ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()
     assert [(r["id_a"], r["id_b"]) for r in rows] == [(3, 4)]
-
-
-def test_embedding_near_dups_empty_input(spark):
-    from wpextract_spark.operators.similarity import embedding_near_dup_pairs
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    out = embedding_near_dup_pairs(empty, threshold=0.5)
-    assert out.count() == 0
-    assert out.columns == ["id_a", "id_b", "cos_sim"]
 
 
 def test_salted_join_rejects_right_preserving_joins(spark):

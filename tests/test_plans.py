@@ -74,10 +74,9 @@ def test_salted_join_no_cartesian(spark):
 
 
 def test_near_dup_caps_applied_before_self_join(spark):
-    """The mega-bucket window filter must sit BELOW the self-join in both
-    near-dup operators — capping after the join would defeat the guard."""
+    """The mega-bucket window filter must sit BELOW the self-join in the
+    SimHash near-dup operator — capping after the join would defeat the guard."""
     from wpextract_spark.operators.dedup import simhash_near_dup_pairs
-    from wpextract_spark.operators.similarity import embedding_near_dup_pairs
 
     docs = spark.createDataFrame([(1, "a b c"), (2, "a b d")], "doc_id long, text string")
     plan = _plan(simhash_near_dup_pairs(docs))
@@ -85,12 +84,6 @@ def test_near_dup_caps_applied_before_self_join(spark):
     win_pos = plan.find("Window")
     assert join_pos >= 0 and win_pos >= 0
     assert win_pos > join_pos, "window (cap) should be under the join in the plan tree"
-
-    emb = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.9, 0.1])], "vec_id long, embedding array<float>")
-    plan = _plan(embedding_near_dup_pairs(emb, threshold=0.5))
-    join_pos = plan.find("Join")
-    win_pos = plan.find("Window")
-    assert join_pos >= 0 and win_pos >= 0 and win_pos > join_pos
 
 
 def test_registry_outputs_driver_hashable_types(spark):

@@ -1,11 +1,9 @@
-"""Hashed TF-IDF vectors: weight math, hashing-trick collisions, and the
-composition with the ANN operators."""
+"""Hashed TF-IDF vectors: weight math, min-df pruning and hashing-trick
+collisions."""
 
 import math
 
-from pyspark.sql import functions as F
-
-from wpextract_spark.operators.vectorize import tfidf_vectors, to_dense_embeddings
+from wpextract_spark.operators.vectorize import tfidf_vectors
 
 
 def _df(spark, rows):
@@ -44,25 +42,3 @@ def test_collisions_sum_weights(spark):
     assert len(rows) == 1 and rows[0]["bucket"] == 0
     assert abs(rows[0]["weight"] - 3 * (math.log(2 / 2) + 1)) < 1e-6
 
-
-def test_dense_embeddings_feed_ann(spark):
-    # near-identical docs must be each other's top cosine neighbor
-    docs = _df(
-        spark,
-        [
-            (0, "spark shuffles data across the cluster during wide operations"),
-            (1, "spark shuffles data across the cluster during wide operation"),
-            (2, "completely unrelated gardening advice for tomato seedlings"),
-        ],
-    )
-    dense = to_dense_embeddings(tfidf_vectors(docs, dim=128, min_df=1), dim=128)
-    assert dense.count() == 3
-    row = dense.where("doc_id = 0").first()
-    assert len(row["embedding"]) == 128
-
-    from wpextract_spark.operators.similarity import cosine_topk
-
-    query = list(row["embedding"])
-    top = cosine_topk(dense, query, k=2, id_col="doc_id").collect()
-    ids = [r["doc_id"] for r in top if r["doc_id"] != 0]
-    assert ids == [1]

@@ -12,8 +12,7 @@ then packs genuine BPE tokens).
   explode + groupBy with map-side combine. Only the resulting
   VOCABULARY-sized ``(word, freq)`` table crosses to the driver, optionally
   capped at the ``max_words`` most frequent words (``takeOrdered``-style
-  partial top-k), so driver traffic is ∝ vocabulary, never corpus — the
-  same design point as the IVF centroid collects.
+  partial top-k), so driver traffic is ∝ vocabulary, never corpus.
 * The merge loop itself is inherently sequential (merge *k+1*'s pair
   counts depend on merge *k*'s rewrite) and operates on that vocabulary-
   sized table — there is no corpus-sized work to distribute, so it runs

@@ -1,12 +1,8 @@
 """Hashed TF-IDF document vectors: text -> sparse vector, engine-portably.
 
-Closes the loop between the text operators and the similarity/ANN family:
-``tfidf_vectors`` produces the sparse document representation
-(the hashing-trick form — no vocabulary dictionary to build, ship, or keep
-consistent across runs), which ``to_dense_embeddings`` turns into the
-``array<float>`` column the ANN operators (`operators/similarity.py`)
-consume. Together: corpus in, cosine-searchable vectors out, with no
-Python in any hot path.
+``tfidf_vectors`` produces the sparse document representation in the
+hashing-trick form: no vocabulary dictionary to build, ship, or keep
+consistent across runs, and no Python in any hot path.
 
 Design notes for scale:
 * token -> dimension uses the first 8 hex chars of ``md5(token)`` mod
@@ -19,7 +15,7 @@ Design notes for scale:
 * IDF uses the smoothed form ``ln((N+1)/(df+1)) + 1`` (sklearn's), so no
   division by zero and unseen-token weight stays finite;
 * output is the long (sparse) form ``(id, bucket, weight)`` — the compact
-  thing to shuffle; densify only at the ANN boundary.
+  thing to shuffle.
 """
 
 from __future__ import annotations
@@ -73,20 +69,3 @@ def tfidf_vectors(
         .agg(F.round(F.sum("_w"), 6).alias("weight"))
     )
 
-
-def to_dense_embeddings(
-    sparse: DataFrame, dim: int = 1024, id_col: str = "doc_id"
-) -> DataFrame:
-    """Densify to ``(id, embedding array<float>)`` — the column shape the
-    ANN operators consume. One groupBy(id) (uniform key); the per-row
-    densification is a map build + ``dim`` O(1)-ish lookups, all JVM."""
-    m = F.map_from_entries(F.collect_list(F.struct("bucket", "weight")))
-    return sparse.groupBy(id_col).agg(m.alias("_m")).select(
-        F.col(id_col),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda i: F.coalesce(
-                F.element_at(F.col("_m"), i.cast("long")), F.lit(0.0)
-            ).cast("float"),
-        ).alias("embedding"),
-    )

@@ -128,10 +128,13 @@ class SparkSiteExtractor:
 
     # -- sources -----------------------------------------------------------
 
+    def _json_name(self, file_name: str) -> str:
+        """``<json_prefix>-<file_name>`` when a prefix is set: the one naming
+        rule for both the input dumps and the exported JSON."""
+        return f"{self.json_prefix}-{file_name}" if self.json_prefix else file_name
+
     def _path(self, file_name: str) -> Path:
-        if self.json_prefix:
-            file_name = f"{self.json_prefix}-{file_name}"
-        return self.json_root / file_name
+        return self.json_root / self._json_name(file_name)
 
     def _scrape_url_map(self) -> Optional[DataFrame]:
         if self.scrape_pages is not None:
@@ -362,15 +365,7 @@ class SparkSiteExtractor:
         :meth:`export_distributed` renders the same bytes on the executors.
         For bulk output use :meth:`export_tables`.
         """
-        out_dir = Path(out_dir)
-        out_dir.mkdir(parents=True, exist_ok=True)
-        counts = {}
-        for name, ef in self.entities.items():
-            file_name = f"{self.json_prefix}-{name}.json" if self.json_prefix else f"{name}.json"
-            counts[name] = export_entity_json(
-                ef.df, ef.export_columns, ef.rename, out_dir / file_name
-            )
-        return counts
+        return self._export_json(out_dir, export_entity_json)
 
     def export_distributed(self, out_dir: Path) -> dict[str, int]:
         """Reference-format JSON per entity, rendered on the executors
@@ -379,15 +374,19 @@ class SparkSiteExtractor:
         for JSON output. See ``sinks/parity.py:export_entity_json_distributed``."""
         from wpextract_spark.sinks.parity import export_entity_json_distributed
 
+        return self._export_json(out_dir, export_entity_json_distributed)
+
+    def _export_json(self, out_dir: Path, sink) -> dict[str, int]:
+        """Write each entity through ``sink`` (one of the two parity JSON
+        writers) under its export file name; returns row counts."""
         out_dir = Path(out_dir)
         out_dir.mkdir(parents=True, exist_ok=True)
-        counts = {}
-        for name, ef in self.entities.items():
-            file_name = f"{self.json_prefix}-{name}.json" if self.json_prefix else f"{name}.json"
-            counts[name] = export_entity_json_distributed(
-                ef.df, ef.export_columns, ef.rename, out_dir / file_name
+        return {
+            name: sink(
+                ef.df, ef.export_columns, ef.rename, out_dir / self._json_name(f"{name}.json")
             )
-        return counts
+            for name, ef in self.entities.items()
+        }
 
     def export_tables(self, out_dir: Path) -> dict[str, int]:
         """Scale sink: one parquet table per entity, nested span structs

@@ -26,13 +26,6 @@ from wpextract_spark.operators.dedup import (
 )
 from wpextract_spark.operators.extract import content_extract_udf, locale_udf
 from wpextract_spark.operators.skew import salted_agg, salted_join
-from wpextract_spark.operators.similarity import (
-    cosine_topk,
-    hyperplane,
-    embedding_near_dup_pairs,
-    ivf_topk,
-    lsh_topk,
-)
 from wpextract_spark.operators.textstats import (
     fingerprints,
     lang_id,
@@ -55,7 +48,7 @@ _PY_WS_CLS = (
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name in ("documents", "embeddings"):
+    if name == "documents":
         # The sandbox testdata is one row group per table, so the scan is a
         # single task; the corpus tables feed CPU-heavy per-row expressions
         # (gram builds, hashing, kernels), which would otherwise run
@@ -1966,462 +1959,6 @@ WITH w AS (
   FROM documents),
 v AS (SELECT doc_id, {votes} FROM w GROUP BY doc_id)
 SELECT doc_id, {concat} AS simhash FROM v
-"""
-
-
-_SIM_QUERY = [1.0] + [0.0] * 63
-
-
-def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return cosine_topk(emb, _SIM_QUERY, k=20)
-
-
-ORACLE_SIM_TOPK = """
-SELECT vec_id,
-       round(CAST(embedding[1] AS DOUBLE)
-             / sqrt(list_sum([CAST(x AS DOUBLE) * x for x in embedding])), 6) AS cos_sim
-FROM embeddings
-ORDER BY cos_sim DESC, vec_id ASC LIMIT 20
-"""
-
-
-def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return lsh_topk(emb, _SIM_QUERY, k=10, n_planes=4)
-
-
-def _oracle_sim_lsh() -> str:
-    dim = 64
-    planes = [hyperplane(p, dim) for p in range(4)]
-    query_bucket = "".join("1" if p[0] > 0 else "0" for p in planes)
-    plane_sql = []
-    for plane in planes:
-        lit = "[" + ", ".join(f"{v!r}" for v in plane) + "]"
-        plane_sql.append(
-            f"(CASE WHEN list_sum([CAST(embedding[i+1] AS DOUBLE) * ({lit})[i+1] "
-            f"for i in range({dim})]) > 0 THEN '1' ELSE '0' END)"
-        )
-    bucket = " || ".join(plane_sql)
-    return f"""
-WITH b AS (
-  SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings)
-SELECT vec_id,
-       round(CAST(embedding[1] AS DOUBLE)
-             / sqrt(list_sum([CAST(x AS DOUBLE) * x for x in embedding])), 6) AS cos_sim
-FROM b WHERE bucket = '{query_bucket}'
-ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
-"""
-
-
-def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: deterministic coarse quantizer (vec_id < n_lists as
-    centroids), probe the 3 best lists, exact re-rank inside them."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, _SIM_QUERY, k=10, n_lists=8, n_probe=3)
-
-
-def _oracle_sim_ivf(dim: int = 64, n_lists: int = 8, n_probe: int = 3, k: int = 10) -> str:
-    # query = [1, 0, 0, ...]: q . v == v[1] and |q| == 1.
-    dot = (
-        f"list_sum([CAST(e.embedding[i+1] AS DOUBLE) * CAST(c.cv[i+1] AS DOUBLE) "
-        f"for i in range({dim})])"
-    )
-    norm_e = "sqrt(list_sum([CAST(x AS DOUBLE) * x for x in e.embedding]))"
-    norm_c = "sqrt(list_sum([CAST(x AS DOUBLE) * x for x in c.cv]))"
-    return f"""
-WITH c AS (
-  SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < {n_lists}),
-score AS (
-  SELECT e.vec_id, c.cid, {dot} / ({norm_e} * {norm_c}) AS s
-  FROM embeddings e CROSS JOIN c),
-assigned AS (
-  SELECT vec_id, cid AS list_id FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid ASC) rn
-    FROM score) WHERE rn = 1),
-probe AS (
-  SELECT cid FROM (
-    SELECT cid, row_number() OVER (
-      ORDER BY CAST(cv[1] AS DOUBLE) / sqrt(list_sum([CAST(x AS DOUBLE) * x for x in cv])) DESC,
-               cid ASC) rn
-    FROM c) WHERE rn <= {n_probe})
-SELECT e.vec_id, a.list_id,
-       round(CAST(e.embedding[1] AS DOUBLE) / sqrt(list_sum([CAST(x AS DOUBLE) * x for x in e.embedding])), 6) AS cos_sim
-FROM embeddings e
-JOIN assigned a ON a.vec_id = e.vec_id
-WHERE a.list_id IN (SELECT cid FROM probe)
-ORDER BY cos_sim DESC, e.vec_id ASC LIMIT {k}
-"""
-
-
-def q_similarity_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with a TRAINED coarse quantizer: 2 iterations of
-    deterministic distributed Lloyd's k-means (assign by cosine, mean by
-    posexplode + partial-agg, centroids rounded to 6dp so the SQL oracle
-    lands on identical literals), then the same probe + exact re-rank."""
-    from wpextract_spark.operators.similarity import kmeans_centroids
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = kmeans_centroids(emb, n_lists=8, n_iter=2)
-    return ivf_topk(emb, _SIM_QUERY, k=10, n_probe=3, centroids=cents)
-
-
-def _kmeans_cte(
-    dim: int,
-    n_lists: int,
-    n_iter: int,
-    prefix: str = "",
-    slice_off: int | None = None,
-    lead_with: bool = True,
-) -> tuple[list[str], str, dict]:
-    """Shared unrolled-CTE restatement of operators/similarity.py's
-    deterministic Lloyd's k-means: returns (CTE parts, final-centroid CTE
-    name, the cosine sub-expressions) for oracles that train the same
-    quantizer (q_similarity_ivf_kmeans, q_semantic_dedup, q_similarity_pq).
-
-    ``prefix`` namespaces every CTE so several quantizers compose in one
-    statement (PQ trains one per subspace); ``slice_off`` trains on the
-    1-based ``[off+1 : off+dim]`` subvector instead of the full embedding;
-    ``lead_with=False`` drops the ``WITH`` for non-first builders."""
-    en = f"{prefix}e"
-    dot = f"list_sum([e.v[i+1] * c.cv[i+1] for i in range({dim})])"
-    norm_e = "sqrt(list_sum([x * x for x in e.v]))"
-    norm_c = "sqrt(list_sum([x * x for x in c.cv]))"
-    vexpr = "[CAST(x AS DOUBLE) for x in embedding]"
-    if slice_off is not None:
-        vexpr = f"({vexpr})[{slice_off + 1}:{slice_off + dim}]"
-    head = "WITH " if lead_with else ""
-    parts = [
-        f"""{head}{en} AS (
-  SELECT vec_id, {vexpr} AS v FROM embeddings),
-{prefix}c0 AS (SELECT vec_id AS cid, v AS cv FROM {en} e WHERE vec_id < {n_lists})"""
-    ]
-    for it in range(n_iter):
-        prev, nxt = f"{prefix}c{it}", f"{prefix}c{it + 1}"
-        parts.append(
-            f"""{prefix}a{it} AS (
-  SELECT vec_id, cid FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {dot} / ({norm_e} * {norm_c}) DESC, c.cid ASC) rn
-    FROM {en} e CROSS JOIN {prev} c) WHERE rn = 1),
-{prefix}m{it} AS (
-  SELECT a.cid, t.i AS pos, round(avg(e.v[t.i + 1]), 6) AS m
-  FROM {prefix}a{it} a JOIN {en} e ON a.vec_id = e.vec_id CROSS JOIN range({dim}) t(i)
-  GROUP BY a.cid, t.i),
-{nxt} AS (
-  SELECT p.cid,
-         CASE WHEN count(m.m) = 0 THEN any_value(p.cv)
-              ELSE list(m.m ORDER BY m.pos) END AS cv
-  FROM {prev} p LEFT JOIN {prefix}m{it} m ON m.cid = p.cid
-  GROUP BY p.cid)"""
-        )
-    final = f"{prefix}c{n_iter}"
-    return parts, final, {"dot": dot, "norm_e": norm_e, "norm_c": norm_c, "e": en}
-
-
-def _oracle_sim_ivf_kmeans(
-    dim: int = 64, n_lists: int = 8, n_iter: int = 2, n_probe: int = 3, k: int = 10
-) -> str:
-    # query = [1, 0, 0, ...]: q . v == v[1] and |q| == 1 (same as _SIM_QUERY).
-    parts, final, x = _kmeans_cte(dim, n_lists, n_iter)
-    dot, norm_e, norm_c = x["dot"], x["norm_e"], x["norm_c"]
-    parts = parts + [
-        f"""assigned AS (
-  SELECT vec_id, cid AS list_id FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {dot} / ({norm_e} * {norm_c}) DESC, c.cid ASC) rn
-    FROM e CROSS JOIN {final} c) WHERE rn = 1),
-probe AS (
-  SELECT cid FROM (
-    SELECT cid, row_number() OVER (
-      ORDER BY cv[1] / sqrt(list_sum([x * x for x in cv])) DESC, cid ASC) rn
-    FROM {final}) WHERE rn <= {n_probe})"""
-    ]
-    body = ",\n".join(parts)
-    return f"""{body}
-SELECT e.vec_id, a.list_id,
-       round(e.v[1] / sqrt(list_sum([x * x for x in e.v])), 6) AS cos_sim
-FROM e JOIN assigned a ON a.vec_id = e.vec_id
-WHERE a.list_id IN (SELECT cid FROM probe)
-ORDER BY cos_sim DESC, e.vec_id ASC LIMIT {k}
-"""
-
-
-def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN with exact re-rank
-    (operators/similarity.py:pq_topk): 8 subspace codebooks from the shared
-    deterministic Lloyd's, ADC scoring against plan-literal lookup tables,
-    TakeOrdered refine + re-rank. The query vector is hyperplane(99, 64) —
-    nonzero in every component so all 8 subspaces contribute to the score."""
-    from wpextract_spark.operators.similarity import hyperplane, pq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return pq_topk(emb, hyperplane(99, 64), k=10, m=8, ks=16, n_iter=2, refine_k=50)
-
-
-def _oracle_similarity_pq(
-    dim: int = 64,
-    m: int = 8,
-    ks: int = 16,
-    n_iter: int = 2,
-    refine_k: int = 50,
-    k: int = 10,
-) -> str:
-    import math as _math
-
-    from wpextract_spark.operators.similarity import hyperplane
-
-    query = hyperplane(99, dim)
-    dsub = dim // m
-    qnorm = _math.sqrt(sum(x * x for x in query))
-    parts: list[str] = []
-    picks: list[str] = []
-    for s in range(m):
-        p, final, x = _kmeans_cte(
-            dsub, ks, n_iter, prefix=f"s{s}", slice_off=s * dsub, lead_with=(s == 0)
-        )
-        parts += p
-        qs = query[s * dsub : (s + 1) * dsub]
-        qs_lit = "[" + ", ".join(repr(v) for v in qs) + "]"
-        l2 = (
-            f"list_sum([(e.v[i+1] - c.cv[i+1]) * (e.v[i+1] - c.cv[i+1]) "
-            f"for i in range({dsub})])"
-        )
-        parts.append(
-            f"""s{s}pick AS (
-  SELECT vec_id, w FROM (
-    SELECT e.vec_id,
-           list_sum([({qs_lit})[i+1] * c.cv[i+1] for i in range({dsub})]) AS w,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {l2} ASC, c.cid ASC) rn
-    FROM {x["e"]} e CROSS JOIN {final} c) WHERE rn = 1)"""
-        )
-        picks.append(f"s{s}pick")
-    q_lit = "[" + ", ".join(repr(v) for v in query) + "]"
-    wsum = " + ".join(f"{p}.w" for p in picks)
-    joins = "\n  ".join(f"JOIN {p} ON {p}.vec_id = f.vec_id" for p in picks)
-    parts.append(
-        f"""pqfull AS (
-  SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v FROM embeddings),
-pqapprox AS (
-  SELECT f.vec_id, f.v,
-         round(({wsum}) / ({qnorm!r} * sqrt(list_sum([x * x for x in f.v]))), 6)
-           AS approx_cos
-  FROM pqfull f
-  {joins}),
-pqcand AS (
-  SELECT * FROM pqapprox ORDER BY approx_cos DESC, vec_id ASC LIMIT {refine_k})"""
-    )
-    body = ",\n".join(parts)
-    return f"""{body}
-SELECT vec_id, approx_cos,
-       round(list_sum([v[i+1] * ({q_lit})[i+1] for i in range({dim})])
-             / ({qnorm!r} * sqrt(list_sum([x * x for x in v]))), 6) AS cos_sim
-FROM pqcand ORDER BY cos_sim DESC, vec_id ASC LIMIT {k}
-"""
-
-
-def q_similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ composite ANN (operators/similarity.py:ivfpq_topk): coarse
-    k-means routing (n_probe of n_lists inverted lists) prunes the corpus
-    BEFORE the PQ ADC scan runs on it, exact re-rank of the refine set —
-    FAISS's IndexIVFPQ shape, the standard billion-scale configuration.
-    Both quantizers are the shared deterministic Lloyd's, so the oracle
-    composes the same two CTE builders the IVF and PQ oracles use."""
-    from wpextract_spark.operators.similarity import hyperplane, ivfpq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return ivfpq_topk(
-        emb, hyperplane(99, 64), k=10, n_lists=8, n_probe=3, m=8, ks=16,
-        n_iter=2, refine_k=50,
-    )
-
-
-def _oracle_similarity_ivfpq(
-    dim: int = 64,
-    n_lists: int = 8,
-    n_probe: int = 3,
-    m: int = 8,
-    ks: int = 16,
-    n_iter: int = 2,
-    refine_k: int = 50,
-    k: int = 10,
-) -> str:
-    import math as _math
-
-    from wpextract_spark.operators.similarity import hyperplane
-
-    query = hyperplane(99, dim)
-    dsub = dim // m
-    qnorm = _math.sqrt(sum(x * x for x in query))
-    q_lit = "[" + ", ".join(repr(v) for v in query) + "]"
-
-    # Coarse quantizer: full-dim k-means (prefix g), probe + assignment.
-    parts, gfinal, gx = _kmeans_cte(dim, n_lists, n_iter, prefix="g")
-    dot, norm_e, norm_c = gx["dot"], gx["norm_e"], gx["norm_c"]
-    qdot_c = f"list_sum([({q_lit})[i+1] * cv[i+1] for i in range({dim})])"
-    parts.append(
-        f"""gassigned AS (
-  SELECT vec_id, cid AS list_id FROM (
-    SELECT e.vec_id, c.cid,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {dot} / ({norm_e} * {norm_c}) DESC, c.cid ASC) rn
-    FROM {gx["e"]} e CROSS JOIN {gfinal} c) WHERE rn = 1),
-gprobe AS (
-  SELECT cid FROM (
-    SELECT cid, row_number() OVER (
-      ORDER BY {qdot_c} / sqrt(list_sum([x * x for x in cv])) DESC, cid ASC) rn
-    FROM {gfinal}) WHERE rn <= {n_probe})"""
-    )
-
-    # Fine quantizer: per-subspace codebooks + ADC picks (PQ oracle shape).
-    picks: list[str] = []
-    for s in range(m):
-        p, final, x = _kmeans_cte(
-            dsub, ks, n_iter, prefix=f"s{s}", slice_off=s * dsub, lead_with=False
-        )
-        parts += p
-        qs = query[s * dsub : (s + 1) * dsub]
-        qs_lit = "[" + ", ".join(repr(v) for v in qs) + "]"
-        l2 = (
-            f"list_sum([(e.v[i+1] - c.cv[i+1]) * (e.v[i+1] - c.cv[i+1]) "
-            f"for i in range({dsub})])"
-        )
-        parts.append(
-            f"""s{s}pick AS (
-  SELECT vec_id, w FROM (
-    SELECT e.vec_id,
-           list_sum([({qs_lit})[i+1] * c.cv[i+1] for i in range({dsub})]) AS w,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {l2} ASC, c.cid ASC) rn
-    FROM {x["e"]} e CROSS JOIN {final} c) WHERE rn = 1)"""
-        )
-        picks.append(f"s{s}pick")
-
-    wsum = " + ".join(f"{p}.w" for p in picks)
-    joins = "\n  ".join(f"JOIN {p} ON {p}.vec_id = f.vec_id" for p in picks)
-    parts.append(
-        f"""ipqfull AS (
-  SELECT e.vec_id, e.v, a.list_id
-  FROM {gx["e"]} e JOIN gassigned a ON a.vec_id = e.vec_id
-  WHERE a.list_id IN (SELECT cid FROM gprobe)),
-ipqapprox AS (
-  SELECT f.vec_id, f.v, f.list_id,
-         round(({wsum}) / ({qnorm!r} * sqrt(list_sum([x * x for x in f.v]))), 6)
-           AS approx_cos
-  FROM ipqfull f
-  {joins}),
-ipqcand AS (
-  SELECT * FROM ipqapprox ORDER BY approx_cos DESC, vec_id ASC LIMIT {refine_k})"""
-    )
-    body = ",\n".join(parts)
-    return f"""{body}
-SELECT vec_id, CAST(list_id AS INTEGER) AS list_id, approx_cos,
-       round(list_sum([v[i+1] * ({q_lit})[i+1] for i in range({dim})])
-             / ({qnorm!r} * sqrt(list_sum([x * x for x in v]))), 6) AS cos_sim
-FROM ipqcand ORDER BY cos_sim DESC, vec_id ASC LIMIT {k}
-"""
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over the embeddings table: k-means the embedding space
-    (same deterministic Lloyd's as q_similarity_ivf_kmeans), then inside
-    each cluster drop members whose cosine to a closer-to-centroid member
-    exceeds the threshold (operators/similarity.py:semantic_dedup). The
-    threshold suits the random synthetic vectors, as in
-    q_embedding_near_dups."""
-    from wpextract_spark.operators.similarity import semantic_dedup
-
-    return semantic_dedup(
-        _t(spark, sf_dir, "embeddings"),
-        n_lists=8,
-        n_iter=2,
-        threshold=0.3,
-        max_cluster=500,
-    )
-
-
-def _oracle_semantic_dedup(
-    dim: int = 64,
-    n_lists: int = 8,
-    n_iter: int = 2,
-    threshold: float = 0.3,
-    max_cluster: int = 500,
-) -> str:
-    parts, final, x = _kmeans_cte(dim, n_lists, n_iter)
-    dot, norm_e, norm_c = x["dot"], x["norm_e"], x["norm_c"]
-    pair_dot = f"list_sum([a.v[i+1] * b.v[i+1] for i in range({dim})])"
-    norm_a = "sqrt(list_sum([x * x for x in a.v]))"
-    norm_b = "sqrt(list_sum([x * x for x in b.v]))"
-    parts = parts + [
-        f"""assigned AS (
-  SELECT vec_id, v, cid, round(cos_raw, 6) AS cos_c FROM (
-    SELECT e.vec_id, e.v, c.cid, {dot} / ({norm_e} * {norm_c}) AS cos_raw,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {dot} / ({norm_e} * {norm_c}) DESC, c.cid ASC) rn
-    FROM e CROSS JOIN {final} c) WHERE rn = 1),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY cid ORDER BY cos_c DESC, vec_id ASC) rk
-  FROM assigned),
-verified AS (SELECT * FROM ranked WHERE rk <= {max_cluster}),
-dups AS (
-  SELECT DISTINCT b.vec_id
-  FROM verified a JOIN verified b ON a.cid = b.cid AND a.rk < b.rk
-  WHERE {pair_dot} / ({norm_a} * {norm_b}) >= {threshold})"""
-    ]
-    body = ",\n".join(parts)
-    return f"""{body}
-SELECT r.vec_id, CAST(r.cid AS INTEGER) AS cluster_id, r.cos_c,
-       d.vec_id IS NULL AS is_kept
-FROM ranked r LEFT JOIN dups d ON r.vec_id = d.vec_id
-"""
-
-
-def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs: multi-probe sign-LSH (4 independent
-    8-plane sets unioned) + exact cosine verify + mega-bucket cap (threshold
-    suits the random synthetic vectors)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_near_dup_pairs(
-        emb, threshold=0.3, n_planes=8, n_sets=4, max_bucket=200
-    )
-
-
-def _oracle_emb_near_dups(
-    dim: int = 64,
-    n_planes: int = 8,
-    n_sets: int = 4,
-    max_bucket: int = 200,
-    threshold: float = 0.3,
-) -> str:
-    set_sql = []
-    for s in range(n_sets):
-        plane_sql = []
-        for plane in [hyperplane(s * n_planes + p, dim) for p in range(n_planes)]:
-            lit = "[" + ", ".join(f"{v!r}" for v in plane) + "]"
-            plane_sql.append(
-                f"(CASE WHEN list_sum([CAST(embedding[i+1] AS DOUBLE) * ({lit})[i+1] "
-                f"for i in range({dim})]) > 0 THEN '1' ELSE '0' END)"
-            )
-        set_sql.append(f"'{s}|' || " + " || ".join(plane_sql))
-    buckets = ", ".join(set_sql)
-    dot = (
-        f"list_sum([CAST(l.embedding[i+1] AS DOUBLE) * CAST(r.embedding[i+1] AS DOUBLE) "
-        f"for i in range({dim})])"
-    )
-    norm = "sqrt(list_sum([CAST(x AS DOUBLE) * x for x in {s}.embedding]))"
-    cos = f"round({dot} / ({norm.format(s='l')} * {norm.format(s='r')}), 6)"
-    return f"""
-WITH b AS (
-  SELECT vec_id, embedding, unnest([{buckets}]) AS bucket FROM embeddings),
-capped AS (
-  SELECT * FROM b QUALIFY count(*) OVER (PARTITION BY bucket) <= {max_bucket})
-SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b, {cos} AS cos_sim
-FROM capped l JOIN capped r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
-WHERE {cos} >= {threshold}
 """
 
 
@@ -4383,7 +3920,6 @@ QUERIES = {
     # driver-green history lead and multi-round-green entries sit
     # at the tail (those are additionally pinned by the pytest
     # gate and byte-parity e2e).
-    "q_embedding_near_dups": q_embedding_near_dups,
     "q_simhash_near_dups": q_simhash_near_dups,
     "q_salted_agg": q_salted_agg,
     "q_salted_join": q_salted_join,
@@ -4412,9 +3948,6 @@ QUERIES = {
     "q_warc_extract": q_warc_extract,
     "q_bpe_encode": q_bpe_encode,
     "q_lm_perplexity": q_lm_perplexity,
-    "q_semantic_dedup": q_semantic_dedup,
-    "q_similarity_pq": q_similarity_pq,
-    "q_similarity_ivfpq": q_similarity_ivfpq,
     "q_url_filter": q_url_filter,
     "q_chunk_documents": q_chunk_documents,
     "q_source_mix": q_source_mix,
@@ -4457,7 +3990,6 @@ QUERIES = {
     "q_inverted_index": q_inverted_index,
     "q_collocations": q_collocations,
     "q_dedup_clusters": q_dedup_clusters,
-    "q_similarity_ivf_kmeans": q_similarity_ivf_kmeans,
     "q_lang_id_ngram": q_lang_id_ngram,
     "q_bpe_tokens": q_bpe_tokens,
     "q_extract_text_kernel": q_extract_text_kernel,
@@ -4473,9 +4005,6 @@ QUERIES = {
     "q_dedup_pipeline": q_dedup_pipeline,
     "q_ngram_jaccard": q_ngram_jaccard,
     "q_simhash": q_simhash,
-    "q_similarity_topk": q_similarity_topk,
-    "q_similarity_lsh": q_similarity_lsh,
-    "q_similarity_ivf": q_similarity_ivf,
 }
 
 ORACLES = {
@@ -4504,11 +4033,6 @@ ORACLES = {
     "q_dedup_clusters": ORACLE_DEDUP_CLUSTERS,
     "q_ngram_jaccard": ORACLE_NGRAM_JACCARD,
     "q_simhash": _oracle_simhash(8),
-    "q_similarity_topk": ORACLE_SIM_TOPK,
-    "q_similarity_lsh": _oracle_sim_lsh(),
-    "q_similarity_ivf": _oracle_sim_ivf(),
-    "q_similarity_ivf_kmeans": _oracle_sim_ivf_kmeans(),
-    "q_embedding_near_dups": _oracle_emb_near_dups(),
     "q_simhash_near_dups": _oracle_simhash_near_dups(),
     "q_salted_agg": ORACLE_SALTED_AGG,
     "q_salted_join": ORACLE_SALTED_JOIN,
@@ -4521,9 +4045,6 @@ ORACLES = {
     "q_warc_extract": ORACLE_WARC_EXTRACT,
     "q_bpe_encode": _oracle_bpe_encode(),
     "q_lm_perplexity": ORACLE_LM_PERPLEXITY,
-    "q_semantic_dedup": _oracle_semantic_dedup(),
-    "q_similarity_pq": _oracle_similarity_pq(),
-    "q_similarity_ivfpq": _oracle_similarity_ivfpq(),
     "q_url_filter": ORACLE_URL_FILTER,
     "q_chunk_documents": ORACLE_CHUNK_DOCUMENTS,
     "q_source_mix": ORACLE_SOURCE_MIX,
