@@ -149,19 +149,19 @@ def _run_probe(tmp: str) -> tuple[dict, dict]:
 
 def _hw_control(seconds: float = 3.0) -> float:
     """No-Spark single-core kernel rate (docs/sec): the co-tenant-load
-    control. Recorded in every BENCH JSON so round-over-round wall-time
-    swings can be attributed to the shared VM vs the code."""
-    from wpextract_spark.htmlkit.dom import parse_html
-    from wpextract_spark.kernel.content import extract_content
+    control, in every BENCH JSON so wall-time swings can be attributed to
+    the shared VM vs the code. Times ``content_extract_udf().func``, the
+    exact function Spark runs, on one pandas batch of 200 synthetic pages."""
+    import pandas as pd
+    from wpextract_spark.operators.extract import content_extract_udf
     from wpextract_spark.sources.synth import synth_page
 
     pages = [synth_page(i, 42) for i in range(200)]
-    t0 = time.perf_counter()
-    count = 0
+    html, url = (pd.Series([p[k] for p in pages]) for k in ("html", "url"))
+    udf, t0, count = content_extract_udf().func, time.perf_counter(), 0
     while time.perf_counter() - t0 < seconds:
-        for p in pages:
-            extract_content(parse_html(p["html"]), p["url"])
-            count += 1
+        udf(html, url)
+        count += len(pages)
     return round(count / (time.perf_counter() - t0), 1)
 
 

@@ -49,3 +49,56 @@ def test_pyfiles_zip_reproducible_and_source_only(tmp_path):
     assert outs[0] == outs[1]
     names = zipfile.ZipFile(tmp_path / "a.zip").namelist()
     assert all(n.startswith("wpextract_spark/") and n.endswith(".py") for n in names)
+
+
+ENTRY_POINTS = (
+    "cli",
+    "plans.job",
+    "plans.pipeline",
+    "plans.incremental",
+    "plans.corpus_build",
+    "plans.queries",
+)
+
+
+def _imported_names(path: Path) -> set[str]:
+    """Every dotted name an import in ``path`` could refer to, function-local
+    imports included. The package uses absolute imports only; a relative one
+    would go unfollowed and fail the reachability test below."""
+    import ast
+
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+    return names
+
+
+def test_every_package_module_is_reachable_from_an_entry_point():
+    """Walk the static imports from the CLI, the plan modules and the query
+    registry. The only module left over is the worker daemon, which
+    ``session.py`` hands to Spark by name; anything else unreached is
+    library-only code that no entry point runs."""
+    pkg = REPO / "wpextract_spark"
+    modules = {}
+    for path in pkg.rglob("*.py"):
+        parts = path.relative_to(REPO).with_suffix("").parts
+        modules[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = path
+
+    seen: set[str] = set()
+    todo = [f"wpextract_spark.{m}" for m in ENTRY_POINTS]
+    while todo:
+        name = todo.pop()
+        # importing a.b.c also imports the packages a.b and a
+        while name and name not in seen:
+            if name in modules:
+                seen.add(name)
+                todo.extend(_imported_names(modules[name]))
+            name = name.rpartition(".")[0]
+
+    assert sorted(set(modules) - seen) == ["wpextract_spark.pywarm_daemon"]
+    session = (pkg / "session.py").read_text()
+    assert '"spark.python.daemon.module", "wpextract_spark.pywarm_daemon"' in session

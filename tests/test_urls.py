@@ -165,7 +165,6 @@ def test_url_host_is_the_authority_host(spark, parts):
 
 def test_host_keyed_operators_skip_userinfo(spark):
     from wpextract_spark.operators.anchors import domain_link_graph
-    from wpextract_spark.operators.traps import url_trap_signals
 
     edges = spark.createDataFrame(
         [("https://u:p@Blog.Example.com/a", "http://[2001:db8::1]:8080/")],
@@ -174,6 +173,3 @@ def test_host_keyed_operators_skip_userinfo(spark):
     row = domain_link_graph(edges).first()
     assert row["src_domain"] == "example.com"
     assert row["dst_domain"] == "[2001:db8::1]"
-
-    urls = spark.createDataFrame([("https://u:p@Example.com/a",)], "url string")
-    assert url_trap_signals(urls).first()["host"] == "example.com"

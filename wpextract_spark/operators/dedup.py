@@ -269,9 +269,32 @@ def simhash(
     wider than 32 bits draw nibbles 32.. from a second independent hash,
     ``md5('#' || w)`` (same construction in the oracles). Output:
     (id, simhash string).
+
+    The signature is a per-row column expression: no aggregation, no
+    shuffle. Hash the distinct-word array once, then bit ``b``'s vote is
+    ``2 * |words with nibble b set| - |words|`` (identical to the classic
+    per-word +1/-1 sum) via one ``filter``/``size`` scan per bit — cheaper
+    than folding per-word vote arrays, which allocates a bits-length array
+    per word.
     """
+    if bits > 64:
+        raise ValueError("bits > 64 not supported (two md5s give 64 nibbles)")
+    words = F.array_distinct(_words(text_col))
+
+    def _h(w):
+        return F.concat(F.md5(w), F.md5(F.concat(F.lit("#"), w))) if bits > 32 else F.md5(w)
+
+    hashes = F.transform(words, _h)
+    n = F.size(hashes)
+
+    def _bit(b: int):
+        set_count = F.size(
+            F.filter(hashes, lambda h: h.substr(b + 1, 1).isin(*"89abcdef"))
+        )
+        return F.when(set_count * 2 - n > 0, F.lit("1")).otherwise(F.lit("0"))
+
     return docs.select(
-        F.col(id_col), simhash_expr(text_col, bits).alias("simhash")
+        F.col(id_col), F.concat(*[_bit(b) for b in range(bits)]).alias("simhash")
     )
 
 
@@ -536,36 +559,3 @@ def span_dup_pairs(
         )
         .agg(F.count("*").alias("n_shared_spans"))
     )
-
-
-def simhash_expr(text_col: str = "text", bits: int = 64):
-    """Per-row SimHash as a pure column expression — NO aggregation, NO
-    shuffle: the signature never leaves the row. Used by the batch operator
-    (:func:`simhash` is exactly this plus an id projection) and by the
-    streaming pipeline, where a groupBy-based signature would be a second
-    stateful operator in front of the dedup state store, which Structured
-    Streaming disallows.
-
-    Formulation: hash the distinct-word array once, then bit ``b``'s vote is
-    ``2 * |words with nibble b set| - |words|`` (identical to the classic
-    per-word +1/-1 sum) via one ``filter``/``size`` scan per bit — cheaper
-    than folding per-word vote arrays, which allocates a bits-length array
-    per word.
-    """
-    if bits > 64:
-        raise ValueError("bits > 64 not supported (two md5s give 64 nibbles)")
-    words = F.array_distinct(_words(text_col))
-
-    def _h(w):
-        return F.concat(F.md5(w), F.md5(F.concat(F.lit("#"), w))) if bits > 32 else F.md5(w)
-
-    hashes = F.transform(words, _h)
-    n = F.size(hashes)
-
-    def _bit(b: int):
-        set_count = F.size(
-            F.filter(hashes, lambda h: h.substr(b + 1, 1).isin(*"89abcdef"))
-        )
-        return F.when(set_count * 2 - n > 0, F.lit("1")).otherwise(F.lit("0"))
-
-    return F.concat(*[_bit(b) for b in range(bits)])

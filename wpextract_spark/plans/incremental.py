@@ -21,9 +21,7 @@ touches ONLY added and changed pages:
 The invariant that makes this safe — incremental output ≡ extracting the
 new crawl from scratch — holds because extraction is a pure per-row
 function of (html, url), and is pinned by an equivalence test
-(``tests/test_incremental.py``).  The change-rate statistics the diff
-produces feed :func:`wpextract_spark.operators.recrawl.change_rates` for
-scheduling the next crawl.
+(``tests/test_incremental.py``).
 
 Previous-run contract: ``(url, page_fp, text)`` where ``page_fp`` is the
 fingerprint of the raw page the text was extracted from (exactly what

@@ -652,74 +652,6 @@ FROM pages p LEFT JOIN agg a USING (doc_id)
 """
 
 
-def q_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recrawl scheduling: change-rate estimation over a 6-run crawl
-    history with four archetypes — static page, every-run churner, one
-    mid-history change, and a single-observation newcomer — bucketed into
-    schedule tiers. Oracle recomputes the lag-based change flags
-    independently."""
-    from wpextract_spark.operators.recrawl import change_rates
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    runs = F.when(did % 4 == 3, F.sequence(F.lit(0), F.lit(0))).otherwise(
-        F.sequence(F.lit(0), F.lit(5))
-    )
-    hist = docs.select(
-        F.concat(F.lit("u"), did.cast("string")).alias("url"),
-        did.alias("did"),
-        F.explode(runs).alias("run_id"),
-    ).select(
-        "url",
-        "run_id",
-        F.when(F.col("did") % 4 == 0, F.lit("A"))
-        .when(
-            F.col("did") % 4 == 1,
-            F.concat(F.lit("r"), F.col("run_id").cast("string")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("b"), F.floor(F.col("run_id") / 3).cast("string")
-            )
-        )
-        .alias("fp"),
-    )
-    return change_rates(hist)
-
-
-ORACLE_RECRAWL_PRIORITY = """
-WITH hist AS (
-  SELECT 'u' || doc_id AS url, g.run AS run_id,
-         CASE doc_id % 4
-           WHEN 0 THEN 'A'
-           WHEN 1 THEN 'r' || g.run
-           ELSE 'b' || (g.run // 3) END AS fp
-  FROM documents,
-       LATERAL unnest(generate_series(0,
-         CASE WHEN doc_id % 4 = 3 THEN 0 ELSE 5 END)) AS g(run)),
-obs AS (
-  SELECT url, run_id,
-         CASE WHEN lag(fp) OVER w IS NULL THEN NULL
-              WHEN fp <> lag(fp) OVER w THEN 1 ELSE 0 END AS changed
-  FROM hist WINDOW w AS (PARTITION BY url ORDER BY run_id)),
-agg AS (
-  SELECT url, count(*) AS n_runs,
-         CAST(coalesce(sum(changed), 0) AS BIGINT) AS n_changes,
-         arg_max(changed, run_id) = 1 AS lc
-  FROM obs GROUP BY url)
-SELECT url, n_runs, n_changes,
-       CASE WHEN n_runs > 1
-            THEN round(n_changes * 1.0 / (n_runs - 1), 6) END AS change_rate,
-       CASE WHEN n_runs > 1 THEN lc END AS last_changed,
-       CASE WHEN n_runs <= 1 THEN 'new'
-            WHEN n_changes * 1.0 / (n_runs - 1) >= 0.5 THEN 'hot'
-            WHEN n_changes * 1.0 / (n_runs - 1) >= 0.1 THEN 'warm'
-            WHEN n_changes > 0 THEN 'cool'
-            ELSE 'static' END AS tier
-FROM agg
-"""
-
-
 def q_incremental_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental recrawl update end-to-end: previous corpus extracted
     from run 1 (real kernel), run 2 removes every 10th page, changes every
@@ -1033,127 +965,6 @@ FROM documents WHERE doc_id % 3 = 1
 """
 
 
-def q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap-protocol parsing: a urlset with full and minimal entries
-    (unparseable priority -> null, loc-less entry dropped), a sitemapindex
-    child, and a non-sitemap payload contributing nothing."""
-    from wpextract_spark.operators.sitemap import sitemap_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    ds = did.cast("string")
-    xml = (
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit(
-                    "<urlset><url><loc>https://e/p-"
-                ),
-                ds,
-                F.lit(
-                    "?a=1&amp;b=2</loc><lastmod>2024-03-01</lastmod>"
-                    "<changefreq>daily</changefreq><priority>0.8</priority>"
-                    "</url><url><loc>https://e/q-"
-                ),
-                ds,
-                F.lit(
-                    "</loc><priority>oops</priority></url>"
-                    "<url><lastmod>2024-01-01</lastmod></url></urlset>"
-                ),
-            ),
-        )
-        .when(
-            did % 3 == 1,
-            F.concat(
-                F.lit("<sitemapindex><sitemap><loc>https://e/s-"),
-                ds,
-                F.lit(
-                    ".xml</loc><lastmod>2024-02-02</lastmod></sitemap>"
-                    "</sitemapindex>"
-                ),
-            ),
-        )
-        .otherwise(F.lit("plain text, no sitemap here"))
-    )
-    res = sitemap_udf()(xml)
-    return docs.select(
-        "doc_id", res["kind"].alias("kind"), F.explode(res["entries"]).alias("e")
-    ).select(
-        "doc_id",
-        "kind",
-        F.col("e")["loc"].alias("loc"),
-        F.col("e")["lastmod"].alias("lastmod"),
-        F.col("e")["changefreq"].alias("changefreq"),
-        F.col("e")["priority"].alias("priority"),
-    )
-
-
-ORACLE_SITEMAP_PARSE = """
-SELECT doc_id, 'urlset' AS kind,
-       'https://e/p-' || doc_id || '?a=1&b=2' AS loc,
-       '2024-03-01' AS lastmod, 'daily' AS changefreq,
-       CAST(0.8 AS DOUBLE) AS priority
-FROM documents WHERE doc_id % 3 = 0
-UNION ALL
-SELECT doc_id, 'urlset', 'https://e/q-' || doc_id, NULL, NULL, NULL
-FROM documents WHERE doc_id % 3 = 0
-UNION ALL
-SELECT doc_id, 'index', 'https://e/s-' || doc_id || '.xml',
-       '2024-02-02', NULL, NULL
-FROM documents WHERE doc_id % 3 = 1
-"""
-
-
-def q_frontier_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-frontier prioritization composing the crawl-ops signals:
-    change tiers (one variant absent -> 'new' default), per-host politeness
-    delays (broadcast; two throttled hosts), and sitemap freshness (true /
-    false / unknown). Oracle restates the score arithmetic closed-form."""
-    from wpextract_spark.operators.frontier import frontier_priority
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    ds = did.cast("string")
-    urls = docs.select(
-        F.concat(F.lit("u"), ds).alias("url"),
-        F.concat(F.lit("h"), (did % 5).cast("string")).alias("host"),
-    )
-    schedule = docs.where(did % 4 != 3).select(
-        F.concat(F.lit("u"), ds).alias("url"),
-        F.when(did % 4 == 0, F.lit("hot"))
-        .when(did % 4 == 1, F.lit("warm"))
-        .otherwise(F.lit("static"))
-        .alias("tier"),
-    )
-    politeness = spark.range(2).select(
-        F.concat(F.lit("h"), F.col("id").cast("string")).alias("host"),
-        F.when(F.col("id") == 0, F.lit(1.0)).otherwise(F.lit(9.0)).alias(
-            "crawl_delay"
-        ),
-    )
-    freshness = docs.where(did % 3 != 2).select(
-        F.concat(F.lit("u"), ds).alias("url"),
-        (did % 3 == 0).alias("recently_modified"),
-    )
-    return frontier_priority(urls, schedule, politeness, freshness)
-
-
-ORACLE_FRONTIER_PRIORITY = """
-SELECT 'u' || doc_id AS url,
-       'h' || (doc_id % 5) AS host,
-       CASE doc_id % 4 WHEN 0 THEN 'hot' WHEN 1 THEN 'warm'
-                       WHEN 2 THEN 'static' ELSE 'new' END AS tier,
-       round(
-         CASE doc_id % 4 WHEN 0 THEN 1.0 WHEN 1 THEN 0.5
-                         WHEN 2 THEN 0.05 ELSE 0.8 END
-         * CASE doc_id % 5 WHEN 0 THEN 1.0 / 2.0
-                           WHEN 1 THEN 1.0 / 10.0 ELSE 1.0 END
-         + CASE WHEN doc_id % 3 = 0 THEN 0.5 ELSE 0.0 END,
-       6) AS priority
-FROM documents
-"""
-
-
 def q_publish_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Publish-date cascade: jsonld > og-article meta > <time> > URL
     pattern, with an invalid stronger signal (unparseable jsonld date)
@@ -1300,93 +1111,6 @@ JOIN sizes sa ON pairs.id_a = sa.id
 JOIN sizes sb ON pairs.id_b = sb.id
 WHERE greatest(round(common * 1.0 / sa.n, 6),
                round(common * 1.0 / sb.n, 6)) >= 0.9
-"""
-
-
-def q_feed_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RSS/Atom feed parsing: an RSS channel with a CDATA title and a
-    keyless (dropped) item, an Atom feed preferring the rel=alternate
-    link over rel=self, and a non-feed payload contributing nothing."""
-    from wpextract_spark.operators.sitemap import feed_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    ds = did.cast("string")
-    xml = (
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit("<rss><channel><title>Blog "),
-                ds,
-                F.lit(
-                    "</title><item><title><![CDATA[Post & "
-                ),
-                ds,
-                F.lit(
-                    "]]></title><link>https://e/p-"
-                ),
-                ds,
-                F.lit(
-                    "</link><pubDate>Mon, 01 Jan 2024 10:00:00 +0000</pubDate>"
-                    "<guid>g-"
-                ),
-                ds,
-                F.lit(
-                    "</guid></item><item><title>keyless</title></item>"
-                    "</channel></rss>"
-                ),
-            ),
-        )
-        .when(
-            did % 3 == 1,
-            F.concat(
-                F.lit("<feed><title>Atom "),
-                ds,
-                F.lit(
-                    '</title><entry><title>E</title>'
-                    '<link rel="self" href="https://e/self"/>'
-                    '<link rel="alternate" href="https://e/a-'
-                ),
-                ds,
-                F.lit(
-                    '"/><id>tag:e-'
-                ),
-                ds,
-                F.lit(
-                    "</id><updated>2024-02-02T00:00:00Z</updated></entry></feed>"
-                ),
-            ),
-        )
-        .otherwise(F.lit("<html><body>404 not a feed</body></html>"))
-    )
-    res = feed_udf()(xml)
-    return docs.select(
-        "doc_id",
-        res["kind"].alias("kind"),
-        res["title"].alias("feed_title"),
-        F.explode(res["entries"]).alias("e"),
-    ).select(
-        "doc_id",
-        "kind",
-        "feed_title",
-        F.col("e")["title"].alias("title"),
-        F.col("e")["link"].alias("link"),
-        F.col("e")["published"].alias("published"),
-        F.col("e")["guid"].alias("guid"),
-    )
-
-
-ORACLE_FEED_PARSE = """
-SELECT doc_id, 'rss' AS kind, 'Blog ' || doc_id AS feed_title,
-       'Post & ' || doc_id AS title,
-       'https://e/p-' || doc_id AS link,
-       'Mon, 01 Jan 2024 10:00:00 +0000' AS published,
-       'g-' || doc_id AS guid
-FROM documents WHERE doc_id % 3 = 0
-UNION ALL
-SELECT doc_id, 'atom', 'Atom ' || doc_id, 'E',
-       'https://e/a-' || doc_id, '2024-02-02T00:00:00Z', 'tag:e-' || doc_id
-FROM documents WHERE doc_id % 3 = 1
 """
 
 
@@ -3426,91 +3150,6 @@ FROM t5
 """
 
 
-def q_url_traps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawler-trap detection (operators/traps.py): a calendar host whose
-    every URL is one date template, a shop host minting md5 session-id
-    paths (hex-run mask), and three healthy sites whose busiest template
-    (/post/{N}) dominates its host but stays under the absolute URL
-    budget — exercising both halves of the AND. The oracle restates the
-    masking regexes and the integer cross-multiplied flag."""
-    from wpextract_spark.operators.traps import url_trap_signals
-
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    url = (
-        F.when(
-            d % 4 == 0,
-            F.concat(
-                F.lit("https://cal.example.org/events/"),
-                (d % 20 + 2000).cast("string"), F.lit("/"),
-                (d % 12 + 1).cast("string"), F.lit("/"), d.cast("string"),
-            ),
-        )
-        .when(
-            d % 4 == 1,
-            F.concat(
-                F.lit("https://shop.example.org/session/"),
-                F.md5(d.cast("string")),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("https://site"), (d % 3).cast("string"),
-                F.lit(".example.org"),
-                F.when(d % 5 == 0, F.lit("/about"))
-                .when(d % 5 == 1, F.lit("/contact"))
-                .when(d % 5 == 2, F.concat(F.lit("/post/"), d.cast("string")))
-                .when(
-                    d % 5 == 3,
-                    F.concat(F.lit("/tag/t"), (d % 7).cast("string")),
-                )
-                .otherwise(F.lit("/")),
-            )
-        )
-    )
-    return url_trap_signals(docs.select(url.alias("url")))
-
-
-ORACLE_URL_TRAPS = r"""
-WITH urls AS (
-  SELECT CASE
-    WHEN doc_id % 4 = 0 THEN 'https://cal.example.org/events/' ||
-      (doc_id % 20 + 2000) || '/' || (doc_id % 12 + 1) || '/' || doc_id
-    WHEN doc_id % 4 = 1 THEN 'https://shop.example.org/session/' ||
-      md5(doc_id::VARCHAR)
-    ELSE 'https://site' || (doc_id % 3) || '.example.org' ||
-      CASE doc_id % 5
-        WHEN 0 THEN '/about'
-        WHEN 1 THEN '/contact'
-        WHEN 2 THEN '/post/' || doc_id
-        WHEN 3 THEN '/tag/t' || (doc_id % 7)
-        ELSE '/' END
-    END AS url
-  FROM documents),
-shaped AS (
-  SELECT DISTINCT
-    lower(regexp_extract(url,
-      '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#]*@)?(\[[^\]/?#]*\]|[^/:?#]*)', 1))
-      AS host,
-    regexp_replace(regexp_replace(
-      CASE WHEN regexp_extract(url,
-             '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) = ''
-           THEN '/'
-           ELSE lower(regexp_extract(url,
-             '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1)) END,
-      '[0-9a-f]{8,}', '{H}', 'g'), '[0-9]+', '{N}', 'g') AS pattern,
-    url
-  FROM urls),
-counts AS (
-  SELECT host, pattern, count(*) AS n_urls FROM shaped GROUP BY 1, 2)
-SELECT host, pattern, n_urls,
-       (sum(n_urls) OVER (PARTITION BY host))::BIGINT AS host_urls,
-       n_urls >= 40 AND
-       n_urls * 100 >= sum(n_urls) OVER (PARTITION BY host) * 50 AS is_trap
-FROM counts
-"""
-
-
 def q_domain_priors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered-domain (eTLD+1) rollup (functions/domains.py): the
     grouping key the per-source anti-dominance cap and domain quality
@@ -3733,118 +3372,6 @@ FROM sents
 """
 
 
-def q_pathological_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consecutive-segment-repeat trap rule (operators/traps.py::
-    pathological_path, Heritrix's PathologicalPathDecideRule): gallery-
-    recursion and /x/x/x hit, a two-repeat and a non-consecutive repeat
-    don't. RE2 has no backreferences, so BOTH engines run the windowed
-    array-equality formulation — Spark exists/forall over sequences, the
-    oracle list_filter over generate_series."""
-    from wpextract_spark.operators.traps import pathological_path
-
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    url = F.concat(
-        F.lit("https://a.example.org"),
-        F.when(
-            d % 4 == 0,
-            F.concat(F.lit("/gallery/gallery/gallery/"), d.cast("string")),
-        )
-        .when(
-            d % 4 == 1,
-            F.concat(F.lit("/a/b/b/"), (d % 9).cast("string")),
-        )
-        .when(
-            d % 4 == 2,
-            F.concat(F.lit("/p/"), d.cast("string"), F.lit("/p")),
-        )
-        .otherwise(F.lit("/x/x/x")),
-    )
-    return docs.select(
-        "doc_id",
-        url.alias("url"),
-        pathological_path(url).alias("pathological"),
-    )
-
-
-ORACLE_PATHOLOGICAL_PATHS = r"""
-WITH u AS (
-  SELECT doc_id,
-         'https://a.example.org' ||
-         CASE doc_id % 4
-           WHEN 0 THEN '/gallery/gallery/gallery/' || doc_id
-           WHEN 1 THEN '/a/b/b/' || (doc_id % 9)
-           WHEN 2 THEN '/p/' || doc_id || '/p'
-           ELSE '/x/x/x' END AS url
-  FROM documents),
-s AS (
-  SELECT doc_id, url,
-         list_filter(string_split(lower(regexp_extract(url,
-           '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1)), '/'),
-           x -> x != '') AS segs
-  FROM u)
-SELECT doc_id, url,
-  CASE WHEN len(segs) >= 3 THEN
-    len(list_filter(generate_series(1, len(segs)-2),
-        i -> segs[i] = segs[i+1] AND segs[i+1] = segs[i+2])) > 0
-  ELSE FALSE END AS pathological
-FROM s
-"""
-
-
-def q_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Politeness-respecting fetch plan (operators/frontier.py::
-    fetch_schedule): the scheduler leg after frontier_priority — per-host
-    priority ranking with deterministic url tie-break, k-th fetch offset
-    (k-1)*crawl_delay seconds, one delay per host (its rows' max). Hosts
-    exercise a declared slow delay, a null delay (falls back to the
-    default), and the fast path. The oracle restates the window rank, the
-    per-host delay and the offset arithmetic (all delays binary-exact, so
-    round(6) is hash-stable)."""
-    from wpextract_spark.operators.frontier import fetch_schedule
-
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    frontier = docs.select(
-        F.concat(
-            F.lit("https://h"), (d % 7).cast("string"),
-            F.lit(".example.org/p/"), d.cast("string"),
-        ).alias("url"),
-        F.concat(
-            F.lit("h"), (d % 7).cast("string"), F.lit(".example.org")
-        ).alias("host"),
-        (d % 13).cast("double").alias("priority"),
-        F.when(d % 7 == 0, F.lit(5.0))
-        .when(d % 7 == 1, F.lit(None).cast("double"))
-        .otherwise(F.lit(0.5))
-        .alias("crawl_delay"),
-    )
-    return fetch_schedule(frontier, default_delay=1.0)
-
-
-ORACLE_FETCH_SCHEDULE = r"""
-WITH frontier AS (
-  SELECT 'https://h' || (doc_id % 7) || '.example.org/p/' || doc_id AS url,
-         'h' || (doc_id % 7) || '.example.org' AS host,
-         (doc_id % 13)::DOUBLE AS priority,
-         CASE WHEN doc_id % 7 = 0 THEN 5.0::DOUBLE
-              WHEN doc_id % 7 = 1 THEN NULL
-              ELSE 0.5::DOUBLE END AS crawl_delay
-  FROM documents),
-ranked AS (
-  SELECT url, host,
-         row_number() OVER (PARTITION BY host
-                            ORDER BY priority DESC, url ASC)::BIGINT
-           AS fetch_rank,
-         coalesce(max(crawl_delay) OVER (PARTITION BY host), 1.0::DOUBLE)
-           AS delay
-  FROM frontier)
-SELECT url, host, fetch_rank,
-       round((fetch_rank - 1) * delay, 6)::DOUBLE AS fetch_offset_s
-FROM ranked
-"""
-
-
 def q_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence-boundary-respecting chunker (operators/sentences.py::
     sentence_chunks, chunk_chars=80): constructed five-sentence docs span
@@ -3937,13 +3464,10 @@ QUERIES = {
     "q_fix_mojibake": q_fix_mojibake,
     "q_render_markdown": q_render_markdown,
     "q_site_boilerplate": q_site_boilerplate,
-    "q_recrawl_priority": q_recrawl_priority,
     "q_incremental_extract": q_incremental_extract,
     "q_robots_directives": q_robots_directives,
     "q_jsonld_extract": q_jsonld_extract,
     "q_hreflang_alternates": q_hreflang_alternates,
-    "q_sitemap_parse": q_sitemap_parse,
-    "q_frontier_priority": q_frontier_priority,
     "q_publish_dates": q_publish_dates,
     "q_warc_extract": q_warc_extract,
     "q_bpe_encode": q_bpe_encode,
@@ -3974,15 +3498,11 @@ QUERIES = {
     "q_tfidf_vectors": q_tfidf_vectors,
     "q_classify_changes": q_classify_changes,
     "q_containment_dups": q_containment_dups,
-    "q_feed_parse": q_feed_parse,
     "q_surt_keys": q_surt_keys,
-    "q_url_traps": q_url_traps,
     "q_sentence_stats": q_sentence_stats,
     "q_domain_priors": q_domain_priors,
     "q_domain_link_graph": q_domain_link_graph,
-    "q_fetch_schedule": q_fetch_schedule,
     "q_sentence_chunks": q_sentence_chunks,
-    "q_pathological_paths": q_pathological_paths,
     "q_compression_signal": q_compression_signal,
     "q_repetition_stats": q_repetition_stats,
     "q_gopher_quality": q_gopher_quality,
@@ -4009,13 +3529,10 @@ QUERIES = {
 
 ORACLES = {
     "q_surt_keys": ORACLE_SURT_KEYS,
-    "q_url_traps": ORACLE_URL_TRAPS,
     "q_sentence_stats": ORACLE_SENTENCE_STATS,
     "q_domain_priors": _oracle_domain_priors(),
     "q_domain_link_graph": _oracle_domain_link_graph(),
-    "q_fetch_schedule": ORACLE_FETCH_SCHEDULE,
     "q_sentence_chunks": ORACLE_SENTENCE_CHUNKS,
-    "q_pathological_paths": ORACLE_PATHOLOGICAL_PATHS,
     "q_extract_text_kernel": ORACLE_EXTRACT_TEXT,
     "q_extract_link_spans": ORACLE_LINK_SPANS,
     "q_extract_locale": ORACLE_LOCALE,
@@ -4058,17 +3575,13 @@ ORACLES = {
     "q_fix_mojibake": ORACLE_FIX_MOJIBAKE,
     "q_render_markdown": ORACLE_RENDER_MARKDOWN,
     "q_site_boilerplate": ORACLE_SITE_BOILERPLATE,
-    "q_recrawl_priority": ORACLE_RECRAWL_PRIORITY,
     "q_incremental_extract": ORACLE_INCREMENTAL_EXTRACT,
     "q_robots_directives": ORACLE_ROBOTS_DIRECTIVES,
     "q_jsonld_extract": ORACLE_JSONLD_EXTRACT,
     "q_hreflang_alternates": ORACLE_HREFLANG_ALTERNATES,
-    "q_sitemap_parse": ORACLE_SITEMAP_PARSE,
-    "q_frontier_priority": ORACLE_FRONTIER_PRIORITY,
     "q_publish_dates": ORACLE_PUBLISH_DATES,
     "q_classify_changes": ORACLE_CLASSIFY_CHANGES,
     "q_containment_dups": ORACLE_CONTAINMENT_DUPS,
-    "q_feed_parse": ORACLE_FEED_PARSE,
     "q_pdf_roundtrip": ORACLE_PDF_ROUNDTRIP,
     "q_main_content": ORACLE_MAIN_CONTENT,
     "q_pages_extract": _oracle_pages_extract(),
