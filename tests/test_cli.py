@@ -146,22 +146,6 @@ def test_build_corpus_cli_rejects_nonempty_out(spark, tmp_path):
     assert rc == 2
 
 
-def test_cli_distributed_json_byte_identical(spark, tmp_path):
-    """--distributed-json produces byte-identical exports to the default
-    driver-side sink through the real CLI surface."""
-    from wpextract_spark.cli import main
-
-    gate, dist = tmp_path / "gate", tmp_path / "dist"
-    for out_dir, extra in ((gate, []), (dist, ["--distributed-json"])):
-        rc = main(
-            ["extract", str(DATA / "download_out"), str(out_dir),
-             "-S", str(DATA / "site_scrape"), *extra]
-        )
-        assert rc == 0
-    for f in sorted(gate.glob("*.json")):
-        assert (dist / f.name).read_bytes() == f.read_bytes(), f.name
-
-
 def test_refresh_cli(spark, tmp_path):
     """The recrawl refresh loop end-to-end from the CLI: kernel runs only
     on changed/added pages, unchanged text carries verbatim, and the

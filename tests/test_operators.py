@@ -57,7 +57,7 @@ def test_resolve_span_array(spark):
          "destination": {"link": "x", "data_type": "tag", "idx": 99}},
     ]
     df = spark.createDataFrame(
-        [(0, links), (1, [])],
+        [(0, links), (1, []), (2, None), (3, [None, links[0]])],
         f"{ORD} long, links array<struct<text:string,href:string,"
         "destination:struct<link:string,data_type:string,idx:bigint>>>",
     )
@@ -72,6 +72,9 @@ def test_resolve_span_array(spark):
     assert resolved[5]["destination"]["idx"] == 99  # kept, not re-resolved
     assert [r["text"] for r in resolved] == list("abcdef")  # order preserved
     assert rows[1] == []  # empty arrays stay empty, not null
+    assert rows[2] == []  # a null array comes out empty
+    assert rows[3][0] is None  # a null element stays null, in place
+    assert rows[3][1]["destination"]["idx"] == 1
 
 
 def test_symmetrize_translations(spark):

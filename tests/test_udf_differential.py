@@ -45,7 +45,6 @@ CASES = {
     "self_url_udf": ["html"],
     "html_text_udf": ["html"],
     "locale_udf": ["url"],
-    "resolve_candidates_udf": ["url"],
     "page_meta_udf": ["html"],
     "markdown_udf": ["html"],
     "jsonld_udf": ["html"],

@@ -93,14 +93,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--tables", action="store_true",
         help="Also export entities as parquet tables under OUT_DIR/tables",
     )
-    ex.add_argument(
-        "--distributed-json", action="store_true",
-        help=(
-            "Render the JSON exports on the executors (per-partition shards "
-            "concatenated in order; byte-identical to the default sink) — "
-            "the path for corpora too large for driver-side serialization"
-        ),
-    )
     ex.set_defaults(func=cmd_extract)
 
     cb = sub.add_parser(
@@ -212,10 +204,7 @@ def cmd_extract(args: argparse.Namespace) -> int:
         json_prefix=args.json_prefix,
     )
     extractor.extract()
-    if args.distributed_json:
-        counts = extractor.export_distributed(out_dir)
-    else:
-        counts = extractor.export(out_dir)
+    counts = extractor.export(out_dir)
     if args.tables:
         extractor.export_tables(out_dir / "tables")
     summary = json.dumps({"out_dir": str(out_dir), "counts": counts})

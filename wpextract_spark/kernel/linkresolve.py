@@ -1,8 +1,9 @@
 """Link-resolution key expansion (reference ``extractors/data/link_resolver.py``).
 
-Resolution itself is a broadcast hash join on URL in the Spark pipeline; this
-module contains the pure candidate-key logic so the join path and the
-in-UDF map-probe path share one implementation:
+The Spark pipeline resolves each span by probing a broadcast
+``url -> linkable`` dict with :func:`resolve_against_map`, inside one
+Arrow-batched UDF per span column (``operators/resolve.py``). The probe
+tries the candidate keys in order:
 
 1. exact key: the href with a ``preview_id`` query stripped;
 2. fallback key: the category-slug-removal heuristic —
@@ -75,8 +76,8 @@ def resolve_against_map(
 ) -> dict[str, Any]:
     """Resolve one resolvable-link dict against a url -> linkable map.
 
-    Used by the in-UDF map-probe path (when the registry is driver-broadcast);
-    skips links that already carry a destination or have no href.
+    Called per span by ``operators/resolve.py::resolve_span_array``; skips
+    links that already carry a destination or have no href.
     """
     if link.get("destination") is not None or link.get("href") is None:
         return link

@@ -42,7 +42,6 @@ from wpextract_spark.functions.locale import extract_locale
 from wpextract_spark.functions.text import extract_html_text
 from wpextract_spark.htmlkit.dom import parse_html
 from wpextract_spark.kernel.content import extract_content
-from wpextract_spark.kernel.linkresolve import candidate_hrefs
 from wpextract_spark.kernel.selfurl import extract_self_url
 from wpextract_spark.kernel.translations import LangPicker, extract_translations
 
@@ -120,11 +119,6 @@ TRANSLATION_RESULT_TYPE = StructType(
         StructField("translations", ArrayType(TRANSLATION_TYPE)),
     ]
 )
-
-CANDIDATES_TYPE = StructType(
-    [StructField("exact", StringType()), StructField("heuristic", StringType())]
-)
-
 
 # ---------------------------------------------------------------------------
 # UDF factories
@@ -319,25 +313,6 @@ def locale_udf():
         return link.map(lambda value: extract_locale(value) if value is not None else None)
 
     return _locale
-
-
-def resolve_candidates_udf():
-    """href -> struct<exact, heuristic> lookup keys for registry joins."""
-
-    @F.pandas_udf(CANDIDATES_TYPE)
-    def _candidates(href: pd.Series) -> pd.DataFrame:
-        rows = []
-        for value in href:
-            cands = candidate_hrefs(value)
-            rows.append(
-                {
-                    "exact": cands[0] if cands else None,
-                    "heuristic": cands[1] if len(cands) > 1 else None,
-                }
-            )
-        return pd.DataFrame(rows, columns=["exact", "heuristic"])
-
-    return _candidates
 
 
 PAGE_META_RESULT_TYPE = StructType(

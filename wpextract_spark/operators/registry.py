@@ -7,9 +7,10 @@ pipeline: media -> posts -> pages -> tags -> categories (``extract.py:72-91``).
 
 Here the registry is a union of per-entity projections with an explicit
 precedence (stage ordinal, row ordinal); last-wins dedup is a max-precedence
-window. The deduped registry is small (one row per site entity) and is
-broadcast into every resolution join — the "broadcast URL->post-id index" of
-the north star.
+window. The deduped registry is small (one row per site entity); resolution
+collects it once into a broadcast url -> destination map
+(``operators/resolve.py::registry_map``) — the "broadcast URL->post-id index"
+of the north star.
 """
 
 from __future__ import annotations

@@ -1,88 +1,76 @@
-"""Span resolution + translation symmetrization as DataFrame algebra.
+"""Span resolution + translation symmetrization.
 
-Resolution (SURVEY.md §2.4 J3/J6) is a broadcast hash join: explode the span
-array, expand each href into its candidate keys (exact-after-preview-strip,
-category-slug heuristic), left-join the broadcast registry once per key, take
-the first hit by priority, then reassemble the array in original span order.
+Resolution (SURVEY.md §2.4 J2/J3/J6) is one narrow map probe. The
+deduplicated registry (one row per site entity) is collected once into a
+``url -> {link, data_type, idx}`` dict and broadcast; an Arrow-batched UDF
+walks each row's span array and resolves every element with
+``kernel/linkresolve.py::resolve_against_map`` — the exact key (href with a
+``preview_id`` query stripped) first, then the category-slug heuristic.
+Span order, already-resolved elements and null elements are kept as they
+are; a null array comes out as ``[]``.
 
 Symmetrization (J7) is pure relational algebra: resolved edges anti-joined
 against their reverses produce the missing back-edges, which are appended and
 re-resolved — the reference's resolve -> fix -> resolve sequence
 (``extract.py:135-142``) with no iteration (the fixpoint is one round).
 
-Scale notes: the registry side is always broadcast (site-entity cardinality);
-the exploded span table is the big side and never shuffles for the joins. The
-only shuffle is the groupBy that reassembles arrays, keyed by the row ordinal
-— uniform keys, no skew.
+Scale notes: the registry is site-entity sized — the same rows a broadcast
+join would ship — and the span arrays never leave their partition: no
+explode, no join, no shuffle.
 """
 
 from __future__ import annotations
 
+from typing import Union
+
+import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wpextract_spark.operators.extract import resolve_candidates_udf
+from wpextract_spark.kernel.linkresolve import resolve_against_map
 from wpextract_spark.sources.entities import ORD
 
 
-def _dest_struct(prefix: str):
-    return F.struct(
-        F.col(f"{prefix}.url").alias("link"),
-        F.col(f"{prefix}.data_type").alias("data_type"),
-        F.col(f"{prefix}.idx").alias("idx"),
+def registry_map(registry: DataFrame) -> Broadcast:
+    """Collect the deduplicated ``(url, data_type, idx)`` registry into a
+    broadcast ``url -> destination`` dict."""
+    return registry.sparkSession.sparkContext.broadcast(
+        {
+            row["url"]: {"link": row["url"], "data_type": row["data_type"], "idx": row["idx"]}
+            for row in registry.collect()
+        }
     )
 
 
-def resolve_span_array(df: DataFrame, array_col: str, registry: DataFrame) -> DataFrame:
+def resolve_span_array(
+    df: DataFrame, array_col: str, registry: Union[DataFrame, Broadcast]
+) -> DataFrame:
     """Resolve the ``destination`` of every span in ``df[array_col]``.
 
     ``array_col`` holds ``array<struct>`` whose element has at least
     ``href`` and ``destination`` fields; already-resolved elements are kept
-    as-is (reference ``link_resolver.py:20-24``). Rows are keyed by ``_ord``.
+    as-is (reference ``link_resolver.py:20-24``). ``registry`` is the
+    deduplicated registry frame, or the :func:`registry_map` built from it
+    (to resolve several columns with one collect).
     """
-    candidates = resolve_candidates_udf()
+    if isinstance(registry, DataFrame):
+        registry = registry_map(registry)
 
-    exploded = (
-        df.select(ORD, F.posexplode_outer(array_col).alias("pos", "item"))
-        .withColumn("_cand", candidates(F.col("item.href")))
-    )
-
-    reg_exact = F.broadcast(registry.select(F.struct("url", "data_type", "idx").alias("_r1")))
-    reg_heur = F.broadcast(registry.select(F.struct("url", "data_type", "idx").alias("_r2")))
-
-    resolved = (
-        exploded.join(reg_exact, F.col("_cand.exact") == F.col("_r1.url"), "left")
-        .join(reg_heur, F.col("_cand.heuristic") == F.col("_r2.url"), "left")
-        .withColumn(
-            "item",
-            F.when(
-                F.col("item").isNotNull(),
-                F.col("item").withField(
-                    "destination",
-                    # NB: a missed left join leaves _rN null, but F.struct of
-                    # null fields is non-null — guard each candidate.
-                    F.coalesce(
-                        F.col("item.destination"),
-                        F.when(F.col("_r1").isNotNull(), _dest_struct("_r1")),
-                        F.when(F.col("_r2").isNotNull(), _dest_struct("_r2")),
-                    ),
-                ),
-            ),
+    @F.pandas_udf(df.schema[array_col].dataType)
+    def _resolve(spans: pd.Series) -> pd.Series:
+        index = registry.value
+        return pd.Series(
+            [
+                []
+                if arr is None
+                else [None if s is None else resolve_against_map(s, index) for s in arr]
+                for arr in spans
+            ],
+            dtype="object",
         )
-    )
 
-    regrouped = resolved.groupBy(ORD).agg(
-        F.array_sort(
-            F.collect_list(
-                F.when(F.col("pos").isNotNull(), F.struct(F.col("pos"), F.col("item")))
-            )
-        ).alias("_sorted")
-    ).select(
-        ORD,
-        F.transform("_sorted", lambda x: x["item"]).alias(array_col),
-    )
-
-    return df.drop(array_col).join(regrouped, ORD, "left")
+    return df.withColumn(array_col, _resolve(F.col(array_col)))
 
 
 def symmetrize_translations(posts: DataFrame) -> DataFrame:

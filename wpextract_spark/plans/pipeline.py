@@ -6,11 +6,17 @@ Stage order and dataflow mirror the reference: crawl scrape -> entity loads
 declarative DataFrame algebra + Arrow-batched kernel UDFs; the registry is
 fully built before any resolution, exactly like the reference's dependency.
 
+Every UDF runs once per record. Each entity frame is materialised with
+``localCheckpoint`` right after its UDF projections, and posts once more
+after resolution, so the registry build, the self-joins of symmetrization,
+the export's ``_ord`` range-sort sampling and every sink read materialised
+rows instead of re-deriving the kernel in each branch of the plan.
+
 Scale shape: entity transforms are narrow (no shuffle); the scrape join is the
-only big join (posts x pages-table on URL — AQE-planned, skew-splittable); the
-resolution joins broadcast the registry; array reassembly shuffles on the row
-ordinal (uniform). The heavy parse stage is repartitioned by url hash for
-uniform load (north-star requirement) when ``repartition_parse > 0``.
+only big join (posts x pages-table on URL — AQE-planned, skew-splittable);
+resolution probes a broadcast url -> destination map inside one narrow UDF
+per span column, built from one collect of the deduplicated registry (one
+row per site entity).
 """
 
 from __future__ import annotations
@@ -29,8 +35,12 @@ from wpextract_spark.operators.extract import (
     translations_udf,
 )
 from wpextract_spark.operators.registry import build_registry, registry_contribution
-from wpextract_spark.operators.resolve import resolve_span_array, symmetrize_translations
-from wpextract_spark.sinks.parity import export_entity_json
+from wpextract_spark.operators.resolve import (
+    registry_map,
+    resolve_span_array,
+    symmetrize_translations,
+)
+from wpextract_spark.sinks.parity import export_entity_json_distributed
 from wpextract_spark.sources.entities import (
     CATEGORIES_EXPORT,
     MEDIA_EXPORT,
@@ -102,8 +112,6 @@ class SparkSiteExtractor:
             (html, <order_col>) — e.g. the Common-Crawl-style pages table.
         json_prefix: optional filename prefix for the dumps.
         translation_pickers: custom picker classes (plugin surface).
-        repartition_parse: partitions for the heavy parse stage; 0 = leave
-            partitioning alone (fine for site-scale corpora).
     """
 
     def __init__(
@@ -114,7 +122,6 @@ class SparkSiteExtractor:
         scrape_pages: Optional[DataFrame] = None,
         json_prefix: Optional[str] = None,
         translation_pickers: Optional[list[type[LangPicker]]] = None,
-        repartition_parse: int = 0,
     ) -> None:
         self.spark = spark
         self.json_root = Path(json_root)
@@ -122,7 +129,6 @@ class SparkSiteExtractor:
         self.scrape_pages = scrape_pages
         self.json_prefix = json_prefix
         self.translation_pickers = translation_pickers
-        self.repartition_parse = repartition_parse
         self.entities: dict[str, EntityFrame] = {}
         self.registry: Optional[DataFrame] = None
 
@@ -228,8 +234,6 @@ class SparkSiteExtractor:
                 .drop("_trans", "_scrape_url", "_scrape_html")
             )
 
-        if self.repartition_parse:
-            df = df.repartition(self.repartition_parse, F.xxhash64("link"))
         df = _apply_content_extract(df, safe("content.rendered"), "link")
         ef.df = df
         # title.text/excerpt.text only exist when the *.rendered inputs do
@@ -257,8 +261,6 @@ class SparkSiteExtractor:
         df = df.withColumn(safe("link_locale"), locale_udf()(F.col("link")))
         if ef.has("excerpt.rendered"):
             df = df.withColumn(safe("excerpt.text"), text(F.col(safe("excerpt.rendered"))))
-        if self.repartition_parse:
-            df = df.repartition(self.repartition_parse, F.xxhash64("link"))
         df = _apply_content_extract(df, safe("content.rendered"), "link")
         ef.df = df
         derived = ["link_locale"] + (
@@ -322,6 +324,14 @@ class SparkSiteExtractor:
         tags = self._load_simple("tags", TAGS_EXPORT)
         categories = self._load_simple("categories", CATEGORIES_EXPORT)
         users = self._load_users()
+        entities = {
+            "media": media, "posts": posts, "pages": pages,
+            "tags": tags, "categories": categories, "users": users,
+        }
+        # Materialise once: no later join branch or sink re-runs the UDFs.
+        for ef in entities.values():
+            if ef.df is not None:
+                ef.df = ef.df.localCheckpoint()
 
         # Registry: insertion order media -> posts -> pages -> tags ->
         # categories; duplicates resolve last-wins (reference links.py:85-89).
@@ -336,57 +346,39 @@ class SparkSiteExtractor:
             contributions.append(registry_contribution(tags.df, "link", "tag", 3))
         if categories.df is not None:
             contributions.append(registry_contribution(categories.df, "link", "category", 4))
-        registry = build_registry(contributions) if contributions else None
-        if registry is not None:
-            registry = registry.cache()
-        self.registry = registry
+        self.registry = build_registry(contributions) if contributions else None
 
         # Resolution: after ALL entities are registered (reference
         # extract.py:135-142); posts links, then translations x2 around
         # symmetrization. Images deliberately stay unresolved (J4 parity).
-        if posts.df is not None and registry is not None:
-            posts.df = resolve_span_array(posts.df, safe("links.internal"), registry)
-            if "translations" in posts.df.columns:
-                posts.df = resolve_span_array(posts.df, "translations", registry)
-                posts.df = symmetrize_translations(posts.df)
-                posts.df = resolve_span_array(posts.df, "translations", registry)
+        if posts.df is not None and self.registry is not None:
+            index = registry_map(self.registry)
+            df = resolve_span_array(posts.df, safe("links.internal"), index)
+            if "translations" in df.columns:
+                df = resolve_span_array(df, "translations", index)
+                df = symmetrize_translations(df)
+                df = resolve_span_array(df, "translations", index)
+            posts.df = df.localCheckpoint()
 
-        self.entities = {
-            "media": media, "posts": posts, "pages": pages,
-            "tags": tags, "categories": categories, "users": users,
-        }
+        self.entities = entities
         return self
 
     def export(self, out_dir: Path) -> dict[str, int]:
-        """Write reference-format JSON per entity; returns row counts.
-
-        This is the byte-parity sink (driver-side serializer replicating the
-        reference's key order/escaping), the CLI's default JSON output;
-        :meth:`export_distributed` renders the same bytes on the executors.
-        For bulk output use :meth:`export_tables`.
-        """
-        return self._export_json(out_dir, export_entity_json)
-
-    def export_distributed(self, out_dir: Path) -> dict[str, int]:
-        """Reference-format JSON per entity, rendered on the executors
-        (per-partition shards concatenated in sort order) — byte-identical
-        to :meth:`export` without the driver-side row loop; the 100x path
-        for JSON output. See ``sinks/parity.py:export_entity_json_distributed``."""
-        from wpextract_spark.sinks.parity import export_entity_json_distributed
-
-        return self._export_json(out_dir, export_entity_json_distributed)
-
-    def _export_json(self, out_dir: Path, sink) -> dict[str, int]:
-        """Write each entity through ``sink`` (one of the two parity JSON
-        writers) under its export file name; returns row counts."""
+        """Write reference-format JSON per entity (rendered on the executors,
+        see ``sinks/parity.py::export_entity_json_distributed``); returns row
+        counts. For bulk output use :meth:`export_tables`."""
         out_dir = Path(out_dir)
         out_dir.mkdir(parents=True, exist_ok=True)
         return {
-            name: sink(
+            name: export_entity_json_distributed(
                 ef.df, ef.export_columns, ef.rename, out_dir / self._json_name(f"{name}.json")
             )
             for name, ef in self.entities.items()
         }
+
+    # Alias kept because perfbench's site_extract workload calls, and its
+    # tracer patches, the export under this name.
+    export_distributed = export
 
     def export_tables(self, out_dir: Path) -> dict[str, int]:
         """Scale sink: one parquet table per entity, nested span structs

@@ -5,14 +5,14 @@ Writes one JSON array per entity with the reference's exact formatting:
 re-nested into dicts, timestamps ISO-8601, external links WITHOUT a
 ``destination`` key (absent, not null — dataclass asdict semantics).
 
-This sink exists for the pytest parity gate and small exports; the scale path
-writes the same struct schema straight to parquet
-(``SparkSiteExtractor.export_tables``, ``wpextract-spark extract --tables``).
+Records render on the executors (one shard per sorted partition, concatenated
+by the driver in partition order). The bulk hand-off writes the same struct
+schema straight to parquet (``SparkSiteExtractor.export_tables``,
+``wpextract-spark extract --tables``).
 """
 
 from __future__ import annotations
 
-import json
 import math
 from datetime import date, datetime
 from pathlib import Path
@@ -89,39 +89,10 @@ _SPAN_CONVERTERS = {
 }
 
 
-def export_entity_json(
-    df: Optional[DataFrame],
-    export_columns: list[str],
-    rename: dict[str, str],
-    path: Path,
-) -> int:
-    """Write the entity as a reference-format JSON array; returns row count.
-
-    Args:
-        df: the final entity frame (safe-named columns + ``_ord``), or None
-            for an absent entity (writes ``[]``, reference ``io.py:177-178``).
-        export_columns: dotted column names, in output order (pre-rename).
-        rename: dotted-name renames applied at export (RENAME_COLUMNS).
-        path: destination file.
-    """
-    if df is None:
-        path.write_text("[]")
-        return 0
-
-    records = []
-    ordered = df.orderBy(ORD)
-    for row in ordered.toLocalIterator():
-        records.append(_render_record(row, export_columns, rename))
-
-    with open(path, "w") as handle:
-        json.dump(records, handle, indent=2, allow_nan=False)
-    return len(records)
-
-
 def _render_record(
     row: Row, export_columns: list[str], rename: dict[str, str]
 ) -> dict[str, Any]:
-    """One exported record, identical for the driver and distributed sinks."""
+    """One exported record: ``id`` first, then the export columns re-nested."""
     record: dict[str, Any] = {"id": _plain(row["id"])}
     for dotted in export_columns:
         value = row[safe(dotted)]
@@ -137,14 +108,20 @@ def export_entity_json_distributed(
     rename: dict[str, str],
     path: Path,
 ) -> int:
-    """Scale path of :func:`export_entity_json`: byte-identical output,
-    rendered on the EXECUTORS.
+    """Write the entity as a reference-format JSON array, rendered on the
+    EXECUTORS; returns the row count.
+
+    Args:
+        df: the final entity frame (safe-named columns + ``_ord``), or None
+            for an absent entity (writes ``[]``, reference ``io.py:177-178``).
+        export_columns: dotted column names, in output order (pre-rename).
+        rename: dotted-name renames applied at export (RENAME_COLUMNS).
+        path: destination file.
 
     The sort by ``_ord`` range-partitions the frame, so partition index order
     IS global row order; each partition renders its rows to a JSON fragment
-    (the same ``_render_record`` + ``json.dumps(indent=2)`` the driver sink
-    uses, re-indented two spaces to sit inside the array) and writes one
-    shard file. The driver then concatenates shard bytes in partition order —
+    (``_render_record`` + ``json.dumps(indent=2)``, re-indented two spaces to
+    sit inside the array) and writes one shard file. The driver then concatenates shard bytes in partition order —
     O(#partitions) metadata work instead of O(#rows) serialization. On a real
     cluster ``path`` must be shared storage (the executors write the shards).
     """
