@@ -26,7 +26,7 @@ from pathlib import Path
 REPO = Path(__file__).parent.parent
 sys.path.insert(0, str(REPO))
 
-from bench import least_disturbed  # noqa: E402
+from bench import _hw_control, least_disturbed  # noqa: E402
 
 LEVELS = [2, 8, 32]
 
@@ -44,26 +44,11 @@ def _measure(cores: int, input_path: str) -> dict:
     return json.loads(line)
 
 
-def _control_work(_: int) -> float:
-    """Pure-Python kernel loop (no Spark): docs/sec for ~5s on one core."""
-    sys.path.insert(0, str(REPO))
-    from wpextract_spark.htmlkit.dom import parse_html
-    from wpextract_spark.kernel.content import extract_content
-    from wpextract_spark.sources.synth import synth_page
-
-    pages = [synth_page(i, 42) for i in range(200)]
-    t0 = time.perf_counter()
-    count = 0
-    while time.perf_counter() - t0 < 5:
-        for p in pages:
-            extract_content(parse_html(p["html"]), p["url"])
-            count += 1
-    return count / (time.perf_counter() - t0)
-
-
 def _control(cores: int) -> float:
+    """Summed no-Spark kernel rate of ``cores`` processes, each running
+    ``bench._hw_control`` (the UDF's own function) for ~5 s on one core."""
     with mp.Pool(cores) as pool:
-        rates = pool.map(_control_work, range(cores))
+        rates = pool.map(_hw_control, [5.0] * cores)
     return round(sum(rates), 1)
 
 

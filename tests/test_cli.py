@@ -2,7 +2,6 @@
 ``cli/_shared.py`` path validation), driving the real pipeline on the golden
 e2e corpus."""
 
-import json
 from pathlib import Path
 
 import pytest
@@ -12,7 +11,7 @@ DATA = Path(__file__).parent / "data" / "e2e"
 
 def test_cli_extract_golden_corpus(spark, tmp_path):
     """`extract JSON_ROOT OUT_DIR -S scrape_root` runs the full pipeline and
-    writes the six entity exports (counts match the reference corpus)."""
+    writes the six entity exports byte for byte as the reference goldens."""
     from wpextract_spark.cli import main
 
     out_dir = tmp_path / "json_out"
@@ -26,10 +25,12 @@ def test_cli_extract_golden_corpus(spark, tmp_path):
         ]
     )
     assert rc == 0
-    posts = json.loads((out_dir / "posts.json").read_text())
-    assert len(posts) == 54
-    for name in ("categories", "media", "pages", "tags", "users"):
-        assert (out_dir / f"{name}.json").exists()
+    golden_dir = DATA / "extract_out"
+    assert sorted(p.name for p in out_dir.iterdir()) == sorted(
+        p.name for p in golden_dir.iterdir()
+    )
+    for golden in golden_dir.iterdir():
+        assert (out_dir / golden.name).read_bytes() == golden.read_bytes(), golden.name
 
 
 def test_cli_out_dir_created_and_must_be_empty(tmp_path):

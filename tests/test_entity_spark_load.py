@@ -1,147 +1,12 @@
-"""Oversized-dump hardening (sources/entities.py): dumps at/above the size
-threshold parse on the EXECUTORS via spark.read.json instead of the
-driver-side json.load + row loop — with identical EntityFrame output."""
+"""Entity loader quarantine (sources/entities.py): a missing or empty dump
+loads as ``df=None``, like the reference's ``io.py:44-52``."""
 
-import json
-from pathlib import Path
-
-import pytest
-
-from wpextract_spark.sources.entities import (
-    POSTS_EXPORT,
-    USERS_EXPORT,
-    load_entity,
-)
-
-E2E = Path(__file__).parent / "data" / "e2e" / "download_out"
-
-
-def _og_expr_posts():
-    from pyspark.sql import functions as F
-
-    return {
-        "og_image_url": lambda raw, present: (
-            F.when(
-                F.size(F.col("yoast_head_json.og_image")) >= 1,
-                F.col("yoast_head_json.og_image")[0]["url"],
-            )
-            if "yoast_head_json.title" in present
-            and "yoast_head_json.og_image" in present
-            else F.lit(None)
-        )
-    }
-
-
-def _og_pandas_posts():
-    from wpextract_spark.sources.entities import og_image_url
-
-    return {
-        "og_image_url": lambda flat: (
-            flat["yoast_head_json.og_image"].apply(lambda v: og_image_url(v, True))
-            if "yoast_head_json.title" in flat.columns
-            and "yoast_head_json.og_image" in flat.columns
-            else flat["id"].apply(lambda _: None)
-        )
-    }
-
-
-@pytest.mark.parametrize(
-    "entity,export",
-    [("posts", POSTS_EXPORT), ("users", USERS_EXPORT), ("media", None)],
-)
-def test_spark_path_matches_driver_path_on_golden_corpus(spark, entity, export):
-    """Force the Spark path (threshold=0) on the reference's golden dumps:
-    rows, values, presence set, and ingest order must match the driver
-    path exactly."""
-    from wpextract_spark.sources.entities import MEDIA_EXPORT
-
-    needed = {
-        "posts": [c for c in POSTS_EXPORT],
-        "users": [c for c in USERS_EXPORT if c != "avatar"],
-        "media": [c for c in MEDIA_EXPORT],
-    }[entity]
-    derive = _og_pandas_posts() if entity == "posts" else None
-    derive_expr = _og_expr_posts() if entity == "posts" else None
-
-    path = E2E / f"{entity}.json"
-    driver_ef = load_entity(spark, entity, path, needed, derive=derive)
-    spark_ef = load_entity(
-        spark,
-        entity,
-        path,
-        needed,
-        derive_expr=derive_expr,
-        spark_read_threshold=0,
-    )
-    # Presence SET is exact (Spark's schema inference unions all records);
-    # presence ORDER is first-record order + later-record leaves appended,
-    # vs json_normalize's global first-encounter order — the documented
-    # approximation for dumps too big to flatten driver-side. Any column in
-    # the first record sits at its exact json_normalize position.
-    assert set(driver_ef.present) == set(spark_ef.present)
-    n_shared = sum(
-        1 for a, b in zip(driver_ef.present, spark_ef.present) if a == b
-    )
-    assert n_shared >= len(driver_ef.present) * 0.8
-    d_rows = [r.asDict() for r in driver_ef.df.orderBy("_ord").collect()]
-    s_rows = [r.asDict() for r in spark_ef.df.orderBy("_ord").collect()]
-    assert len(d_rows) == len(s_rows) > 0
-    assert set(d_rows[0]) == set(s_rows[0])
-    for dr, sr in zip(d_rows, s_rows):
-        for col in dr:
-            assert dr[col] == sr[col], (col, dr["id"], dr[col], sr[col])
-
-
-def test_threshold_routes_large_dump_to_executors(spark, tmp_path):
-    """A >100 MB synthetic dump loads through the Spark path (the natural
-    threshold, not a forced one) with correct types, order, and derived
-    column."""
-    n = 60_000
-    filler = "x" * 1800
-    records = [
-        {
-            "id": i,
-            "link": f"https://example.org/p{i}/",
-            "title": {"rendered": f"Post {i}"},
-            "content": {"rendered": f"<p>{filler}</p>"},
-            "author": i % 7,
-            "sticky": i % 2 == 0,
-            "categories": [i % 3, 100 + i % 5],
-            "date_gmt": "2021-06-02T12:00:00",
-            "yoast_head_json": {
-                "title": f"Post {i}",
-                "og_image": [{"url": f"https://img.example.org/{i}.png"}],
-            },
-        }
-        for i in range(n)
-    ]
-    path = tmp_path / "posts.json"
-    with open(path, "w") as fh:
-        json.dump(records, fh)
-    assert path.stat().st_size > 100 << 20, path.stat().st_size
-
-    needed = [
-        "link", "title.rendered", "author", "sticky", "categories",
-        "date_gmt", "yoast_head_json.title",
-    ]
-    ef = load_entity(spark, "posts", path, needed, derive_expr=_og_expr_posts())
-    df = ef.df
-    # Parsed on executors: the plan must NOT be a parallelized local
-    # collection (driver path uses createDataFrame).
-    assert "Scan json" in df._jdf.queryExecution().executedPlan().toString()
-    rows = df.orderBy("_ord").limit(5).collect()
-    assert [r["id"] for r in rows] == [0, 1, 2, 3, 4]
-    assert rows[3]["og_image_url"] == "https://img.example.org/3.png"
-    assert rows[2]["sticky"] is True and rows[1]["sticky"] is False
-    assert rows[4]["categories"] == [1, 104]
-    assert rows[0]["date_gmt"].year == 2021
-    assert df.count() == n
-    assert "yoast_head_json.og_image" in ef.present
+from wpextract_spark.sources.entities import load_entity
 
 
 def test_missing_and_empty_still_quarantine(spark, tmp_path):
     empty = tmp_path / "tags.json"
     empty.write_text("[]")
-    assert load_entity(spark, "tags", empty, ["name"], spark_read_threshold=0).df is None
+    assert load_entity(spark, "tags", empty, ["name"]).df is None
     missing = tmp_path / "nope.json"
     assert load_entity(spark, "nope", missing, ["name"]).df is None

@@ -137,7 +137,13 @@ def test_crawl_first_wins(spark):
         ],
         "path string, html string",
     )
-    out = {r["url"]: r for r in crawl_self_urls(pages).collect()}
+    crawled = crawl_self_urls(pages)
+    # The IS NOT NULL filter on the self-URL must not push a second
+    # evaluation of the UDF below the projection (plan read before running,
+    # while AQE prints only the initial plan).
+    plan = crawled._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    out = {r["url"]: r for r in crawled.collect()}
     assert set(out) == {"https://s.org/p/", "https://s.org/q/"}
 
 

@@ -3,6 +3,7 @@ golden e2e corpus and compare exported JSON for exact equality (the reference's
 own gate, tests/e2e/test_e2e.py:52-79)."""
 
 import json
+import shutil
 from pathlib import Path
 
 import pandas as pd
@@ -172,3 +173,39 @@ def test_each_udf_runs_once_per_record(spark, monkeypatch, tmp_path):
     assert ex.export_tables(tmp_path / "tables") == EXPECTED_DATA_LEN
     assert content.value == EXPECTED_DATA_LEN["posts"] + EXPECTED_DATA_LEN["pages"]
     assert translations.value == EXPECTED_DATA_LEN["posts"]
+
+
+def _key_paths(record: dict, prefix: str = "") -> list[str]:
+    """Dotted key paths of a nested export record, in file order."""
+    paths = []
+    for key, value in record.items():
+        paths.append(prefix + key)
+        if isinstance(value, dict):
+            paths.extend(_key_paths(value, f"{prefix}{key}."))
+    return paths
+
+
+def test_presence_gated_export_order(spark, tmp_path):
+    """Keys derived from inputs a run lacks are absent and the rest keep
+    the golden order: no scrape (no ``language``/``translations``), posts
+    without ``excerpt`` and media without ``caption``."""
+    from wpextract_spark.plans.pipeline import SparkSiteExtractor
+
+    json_root = tmp_path / "dumps"
+    shutil.copytree(DATA / "download_out", json_root)
+    for name, key in (("posts", "excerpt"), ("media", "caption")):
+        path = json_root / f"{name}.json"
+        records = json.loads(path.read_text())
+        assert all(key in r for r in records)
+        path.write_text(json.dumps([{k: v for k, v in r.items() if k != key} for r in records]))
+
+    ex = SparkSiteExtractor(spark, json_root=json_root).extract()
+    assert ex.export(tmp_path / "out") == EXPECTED_DATA_LEN
+    gated = {"posts": {"excerpt", "language", "translations"}, "media": {"caption"}}
+    for name, keys in gated.items():
+        ours = json.loads((tmp_path / "out" / f"{name}.json").read_text())
+        golden = json.loads((DATA / "extract_out" / f"{name}.json").read_text())
+        assert len(ours) == len(golden)
+        for mine, gold in zip(ours, golden):
+            expected = [p for p in _key_paths(gold) if p.split(".")[0] not in keys]
+            assert _key_paths(mine) == expected, (name, mine["id"])

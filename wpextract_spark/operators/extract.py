@@ -16,10 +16,10 @@ quarantine ``text IS NOT NULL``) is deterministic, so Catalyst substitutes
 the UDF into it and pushes it below the projection (and below any join
 under that), which evaluates the kernel twice — once under the filter, once
 for the projection. The factories stay deterministic so that unrelated
-filters (``url = ...``) keep landing below the kernel; the two call sites
-that filter on the kernel's output mark it ``.asNondeterministic()``
-instead: ``plans.incremental.extract_pages`` and
-``plans.corpus_build.extract_docs``.
+filters (``url = ...``) keep landing below the kernel; the three call sites
+that filter on a UDF's output mark it ``.asNondeterministic()`` instead:
+``plans.incremental.extract_pages``, ``plans.corpus_build.extract_docs``
+and ``sources.scrape.crawl_self_urls``.
 """
 
 from __future__ import annotations

@@ -59,7 +59,8 @@ from wpextract_spark.sources.entities import (
 from wpextract_spark.sources.scrape import crawl_self_urls, load_scrape_dir
 
 #: Derived (computed) columns per entity — everything else in the export
-#: schema must come from the input dump.
+#: schema must come from the input dump. Which of them a run exports, and in
+#: what order, is read off the entity frame (see ``_export_order``).
 _POSTS_DERIVED = {
     "content.text", "title.text", "excerpt.text", "og_image_url", "link_locale",
     "language", "translations", "links.internal", "links.external", "embeds", "images",
@@ -85,11 +86,13 @@ def _raw_needed(export: list[str], derived: set[str]) -> list[str]:
     return [c for c in export if c not in derived]
 
 
-def _export_order(ef: EntityFrame, export: list[str], derived_order: list[str]) -> list[str]:
+def _export_order(ef: EntityFrame, export: list[str], derived: set[str]) -> list[str]:
     """Final export columns: input order filtered to the export set, then the
-    derived columns in creation order (pandas column-append semantics)."""
-    from_input = [c for c in ef.present if c in export and c not in derived_order]
-    from_derived = [c for c in derived_order if c in export]
+    derived columns in the order ``ef.df`` created them (pandas column-append
+    semantics); a derived column the pipeline did not create is absent."""
+    from_input = [c for c in ef.present if c in export and c not in derived]
+    by_safe = {safe(c): c for c in derived if c in export}
+    from_derived = [by_safe[c] for c in ef.df.columns if c in by_safe]
     return from_input + from_derived
 
 
@@ -180,8 +183,7 @@ class SparkSiteExtractor:
         if ef.has("title.rendered"):
             df = df.withColumn(safe("title.text"), text(F.col(safe("title.rendered"))))
         ef.df = df
-        derived = [c for c in ("description.text", "caption.text", "title.text") if ef.has(c.replace(".text", ".rendered"))]
-        ef.export_columns = _export_order(ef, MEDIA_EXPORT, derived)
+        ef.export_columns = _export_order(ef, MEDIA_EXPORT, _MEDIA_DERIVED)
         return ef
 
     def _load_posts(self, url_map: Optional[DataFrame]) -> EntityFrame:
@@ -190,21 +192,10 @@ class SparkSiteExtractor:
             _raw_needed(POSTS_EXPORT, _POSTS_DERIVED),
             derive={
                 "og_image_url": lambda flat: (
-                    flat["yoast_head_json.og_image"].apply(lambda v: og_image_url(v, True))
+                    flat["yoast_head_json.og_image"].apply(og_image_url)
                     if "yoast_head_json.title" in flat.columns
                     and "yoast_head_json.og_image" in flat.columns
                     else flat["id"].apply(lambda _: None)
-                )
-            },
-            derive_expr={
-                "og_image_url": lambda raw, present: (
-                    F.when(
-                        F.size(F.col("yoast_head_json.og_image")) >= 1,
-                        F.col("yoast_head_json.og_image")[0]["url"],
-                    )
-                    if "yoast_head_json.title" in present
-                    and "yoast_head_json.og_image" in present
-                    else F.lit(None)
                 )
             },
         )
@@ -219,8 +210,7 @@ class SparkSiteExtractor:
         if ef.has("excerpt.rendered"):
             df = df.withColumn(safe("excerpt.text"), text(F.col(safe("excerpt.rendered"))))
 
-        translations_enabled = url_map is not None
-        if translations_enabled:
+        if url_map is not None:
             joined = df.join(
                 url_map.withColumnRenamed("url", "_scrape_url").withColumnRenamed("html", "_scrape_html"),
                 df["link"] == F.col("_scrape_url"),
@@ -236,16 +226,7 @@ class SparkSiteExtractor:
 
         df = _apply_content_extract(df, safe("content.rendered"), "link")
         ef.df = df
-        # title.text/excerpt.text only exist when the *.rendered inputs do
-        # (same schema-presence gate as _load_media's derived list).
-        derived = ["og_image_url", "link_locale"] + [
-            c for c in ("title.text", "excerpt.text")
-            if ef.has(c.replace(".text", ".rendered"))
-        ]
-        if translations_enabled:
-            derived += ["language", "translations"]
-        derived += ["content.text", "links.internal", "links.external", "embeds", "images"]
-        ef.export_columns = _export_order(ef, POSTS_EXPORT, derived)
+        ef.export_columns = _export_order(ef, POSTS_EXPORT, _POSTS_DERIVED)
         return ef
 
     def _load_pages(self) -> EntityFrame:
@@ -263,10 +244,7 @@ class SparkSiteExtractor:
             df = df.withColumn(safe("excerpt.text"), text(F.col(safe("excerpt.rendered"))))
         df = _apply_content_extract(df, safe("content.rendered"), "link")
         ef.df = df
-        derived = ["link_locale"] + (
-            ["excerpt.text"] if ef.has("excerpt.rendered") else []
-        ) + ["content.text", "links.internal", "links.external", "embeds", "images"]
-        ef.export_columns = _export_order(ef, PAGES_EXPORT, derived)
+        ef.export_columns = _export_order(ef, PAGES_EXPORT, _PAGES_DERIVED)
         return ef
 
     def _load_simple(self, name: str, export: list[str]) -> EntityFrame:
@@ -282,7 +260,7 @@ class SparkSiteExtractor:
             df = df.withColumn("parent", F.nullif(F.col("parent"), F.lit(0)))
         df = df.withColumn(safe("link_locale"), locale_udf()(F.col("link")))
         ef.df = df
-        ef.export_columns = _export_order(ef, export, ["link_locale"])
+        ef.export_columns = _export_order(ef, export, _SIMPLE_DERIVED)
         return ef
 
     def _load_users(self) -> EntityFrame:
@@ -291,25 +269,15 @@ class SparkSiteExtractor:
             _raw_needed(USERS_EXPORT, _USERS_DERIVED),
             derive={
                 "avatar": lambda flat: (
-                    flat["yoast_head_json.og_image"].apply(lambda v: og_image_url(v, False))
+                    flat["yoast_head_json.og_image"].apply(og_image_url)
                     if "yoast_head_json.og_image" in flat.columns
                     else flat["id"].apply(lambda _: None)
-                )
-            },
-            derive_expr={
-                "avatar": lambda raw, present: (
-                    F.when(
-                        F.size(F.col("yoast_head_json.og_image")) >= 1,
-                        F.col("yoast_head_json.og_image")[0]["url"],
-                    )
-                    if "yoast_head_json.og_image" in present
-                    else F.lit(None)
                 )
             },
         )
         if ef.df is None:
             return ef
-        ef.export_columns = _export_order(ef, USERS_EXPORT, ["avatar"])
+        ef.export_columns = _export_order(ef, USERS_EXPORT, _USERS_DERIVED)
         return ef
 
     # -- lifecycle -----------------------------------------------------------

@@ -8,9 +8,11 @@ reproduce that exactly by deriving the column set driver-side from the same
 flattening, then shipping only the needed columns to Spark with declared types.
 
 Entity dumps are site *metadata* (small by construction — thousands of rows per
-site, not billions); the heavyweight work (HTML parsing, text extraction,
-locale) happens in distributed Arrow-batched stages afterwards. At Common-Crawl
-scale, entities arrive as Iceberg tables directly and skip this loader.
+site, not billions), so the driver parses each one; the heavyweight work (HTML
+parsing, text extraction, locale) happens in distributed Arrow-batched stages
+afterwards. A multiLine JSON file is a single input split, so an executor-side
+``spark.read.json`` would not parse it in parallel either, and it would only
+approximate json_normalize's first-seen column order.
 
 Column names are "safe-named" for Spark (``.`` -> ``__``); the dotted names are
 restored at export by the parity sink.
@@ -175,113 +177,12 @@ class EntityFrame:
         return dotted in self.present
 
 
-def og_image_url(raw_value: Any, strict_nan_check: bool) -> Optional[str]:
+def og_image_url(raw_value: Any) -> Optional[str]:
     """First og_image URL, reference semantics (``posts.py:89-96``,
-    ``users.py:25-30``). ``strict_nan_check`` mirrors the posts variant which
-    also guards against a NaN cell."""
-    if strict_nan_check and (raw_value is None or _is_nan(raw_value)):
-        return None
+    ``users.py:25-30``): missing, NaN or empty -> None."""
     if raw_value is None or _is_nan(raw_value) or len(raw_value) == 0:
         return None
     return raw_value[0]["url"]
-
-
-#: Dumps at or above this size skip the driver-side json.load + row loop and
-#: parse on the EXECUTORS via spark.read.json. Entity dumps are site
-#: metadata (thousands of rows), so the driver path is the common case; the
-#: threshold is a guard against someone pointing the loader at a multi-GB
-#: dump and silently running it on one core.
-SPARK_READ_THRESHOLD = 64 << 20
-
-
-def _schema_leaves(schema, prefix: str = "") -> list[tuple[str, Any]]:
-    """``(dotted leaf name, dataType)`` pairs of a Spark schema, descending
-    STRUCTS only — mirrors pd.json_normalize, which flattens nested dicts
-    but leaves arrays (incl. arrays of objects) as single object-valued
-    columns. Types are collected during the walk because leaf names are not
-    re-splittable: JSON keys may contain literal dots (Yoast emits
-    ``twitter_misc.Est. reading time``)."""
-    out: list[tuple[str, Any]] = []
-    for f in schema.fields:
-        dotted = f"{prefix}{f.name}"
-        if isinstance(f.dataType, StructType):
-            out.extend(_schema_leaves(f.dataType, dotted + "."))
-        else:
-            out.append((dotted, f.dataType))
-    return out
-
-
-def _first_record_columns(path: Path) -> list[str]:
-    """Dotted column order of the FIRST record (bounded head read +
-    json_normalize), so the Spark path reproduces json_normalize's
-    first-seen column order instead of Spark's alphabetical inference.
-    Columns that only appear in later records are appended afterwards in
-    inferred-schema order — the reference's pandas loader would interleave
-    them at first encounter; for WP dumps (uniform key sets) the two agree
-    exactly."""
-    with open(path, "rb") as handle:
-        head = handle.read(8 << 20).decode("utf-8", errors="ignore")
-    stripped = head.lstrip()
-    if not stripped.startswith("["):
-        return []
-    idx = 1
-    while idx < len(stripped) and stripped[idx].isspace():
-        idx += 1
-    try:
-        first, _ = json.JSONDecoder().raw_decode(stripped, idx)
-        return [str(c) for c in pd.json_normalize([first]).columns]
-    except ValueError:
-        return []
-
-
-def _load_entity_spark(
-    spark: SparkSession,
-    name: str,
-    path: Path,
-    needed: list[str],
-    derive_expr: Optional[dict[str, Any]] = None,
-) -> EntityFrame:
-    """Executor-side loader for oversized dumps: spark.read.json parses the
-    records distributed (schema inference doubles as the union presence
-    set); needed dotted columns become struct-path projections cast to the
-    same types the driver path infers. Row order: a single multiLine JSON
-    file parses as one input split, so ``monotonically_increasing_id`` is
-    the file order — at true crawl scale entities arrive as tables with an
-    explicit order column and skip this loader entirely (module
-    docstring)."""
-    raw_df = spark.read.option("multiLine", "true").json(str(path))
-    if not raw_df.columns or raw_df.isEmpty():
-        return EntityFrame(name=name, df=None)
-
-    leaves = _schema_leaves(raw_df.schema)
-    leaf_types = dict(leaves)
-    inferred = [name for name, _ in leaves]
-    head_order = _first_record_columns(path)
-    present = [c for c in head_order if c in leaf_types] + [
-        c for c in inferred if c not in head_order
-    ]
-
-    cols = [c for c in needed if c in present]
-    if "id" not in cols:
-        cols = ["id", *cols]
-
-    import pyspark.sql.functions as F
-
-    exprs = []
-    for dotted in cols:
-        col = F.col(dotted)
-        hint = _TYPE_HINTS.get(dotted)
-        if hint is not None:
-            col = col.cast(hint)
-        elif not isinstance(
-            leaf_types[dotted], (LongType, DoubleType, BooleanType, StringType)
-        ):
-            col = col.cast(StringType())  # driver path's sample fallback
-        exprs.append(col.alias(safe(dotted)))
-    for col_name, fn in (derive_expr or {}).items():
-        exprs.append(fn(raw_df, present).cast(StringType()).alias(safe(col_name)))
-    exprs.append(F.monotonically_increasing_id().alias(ORD))
-    return EntityFrame(name=name, df=raw_df.select(exprs), present=present)
 
 
 def load_entity(
@@ -290,8 +191,6 @@ def load_entity(
     path: Path,
     needed: list[str],
     derive: Optional[dict[str, Any]] = None,
-    derive_expr: Optional[dict[str, Any]] = None,
-    spark_read_threshold: int = SPARK_READ_THRESHOLD,
 ) -> EntityFrame:
     """Load one entity dump into a typed Spark DataFrame.
 
@@ -305,12 +204,6 @@ def load_entity(
             flattened frame, ``{column_name: fn(flat_df) -> pd.Series}`` —
             used for O(1)-per-row scalar plucks whose presence-gating depends
             on the input column set (og_image_url, avatar).
-        derive_expr: the same derived columns as Spark Column factories,
-            ``{column_name: fn(raw_df, present) -> Column}`` — used by the
-            executor-side path for oversized dumps.
-        spark_read_threshold: dumps at/above this many bytes parse on the
-            executors via :func:`_load_entity_spark` instead of the
-            driver-side row loop.
 
     Returns:
         EntityFrame with ``df=None`` if the file is missing or empty
@@ -318,8 +211,6 @@ def load_entity(
     """
     if not path.is_file():
         return EntityFrame(name=name, df=None)
-    if path.stat().st_size >= spark_read_threshold:
-        return _load_entity_spark(spark, name, path, needed, derive_expr)
     with open(path) as handle:
         raw = json.load(handle)
     if len(raw) == 0:

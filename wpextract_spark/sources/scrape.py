@@ -40,7 +40,10 @@ def crawl_self_urls(pages: DataFrame, html_col: str = "html", order_col: str = "
     (documented divergence — affects only corpora with duplicate canonical
     URLs *and* differing content).
     """
-    with_url = pages.withColumn("_self_url", self_url_udf()(F.col(html_col))).where(
+    # Nondeterministic so the IS NOT NULL filter stays above the UDF instead
+    # of a pushed-down second evaluation (operators/extract.py docstring).
+    self_url = self_url_udf().asNondeterministic()
+    with_url = pages.withColumn("_self_url", self_url(F.col(html_col))).where(
         F.col("_self_url").isNotNull()
     )
     window = Window.partitionBy("_self_url").orderBy(F.asc(order_col))
