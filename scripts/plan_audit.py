@@ -36,14 +36,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _outer_plan(plan: str) -> str:
-    """Strip cached-relation interiors and AQE '== Initial Plan ==' dumps.
+    """Strip AQE '== Initial Plan ==' dumps.
 
-    Iterative operators (PageRank, CC) persist loop-invariant sides and
-    lazily checkpoint per round; the raw toString then re-prints each
-    InMemoryRelation's full child plan (twice, once per AQE section) at
-    every reference, counting one-time pre-loop exchanges as if they ran
-    per iteration. Only the OUTER plan's operators execute when the query
-    runs, so tally those.
+    An adaptive plan prints its operators twice (final and initial plan);
+    only the final plan's operators execute when the query runs, so tally
+    those.
     """
     kept, skip_indent = [], None
     for line in plan.splitlines():
@@ -52,7 +49,7 @@ def _outer_plan(plan: str) -> str:
             if indent > skip_indent:
                 continue
             skip_indent = None
-        if "InMemoryRelation" in line or "== Initial Plan ==" in line:
+        if "== Initial Plan ==" in line:
             skip_indent = indent
             continue
         kept.append(line)

@@ -52,9 +52,8 @@ def test_simhash_mega_bucket_cap(spark):
 
 
 def test_lang_id_ngram_and_bpe_edges(spark):
-    from pyspark.sql import functions as F
-
-    from wpextract_spark.operators.textstats import bpe_token_stats, lang_id_ngram
+    from wpextract_spark.operators.packing import sequence_pack
+    from wpextract_spark.operators.textstats import lang_id_ngram
 
     docs = spark.createDataFrame(
         [
@@ -72,11 +71,9 @@ def test_lang_id_ngram_and_bpe_edges(spark):
     assert langs[3] is None and langs[4] is None
     assert langs[5] == "und"
 
-    bpe = {r["doc_id"]: r for r in bpe_token_stats(docs).collect()}
-    # "it's 42 degrees, isn't it?" -> it|'s| 42| degrees|,| isn|'t| it|?
-    assert bpe[6]["n_bpe_tokens"] == 9
-    assert bpe[6]["n_ws_tokens"] == 5
-    assert bpe[4]["n_bpe_tokens"] is None or bpe[4]["n_bpe_tokens"] == 0
+    packed = {r["doc_id"]: r["n_tokens"] for r in sequence_pack(docs).collect()}
+    # "it's 42 degrees, isn't it?" -> it|'s| 42| degrees|,| isn|'t| it|? + EOS
+    assert packed[6] == 10
 
 
 def test_lang_id_whitespace_only_text(spark):

@@ -8,7 +8,11 @@ from pyspark.sql import functions as F
 
 from wpextract_spark.operators.extract import RESOLVABLE_LINK_TYPE
 from wpextract_spark.operators.registry import build_registry, registry_contribution
-from wpextract_spark.operators.resolve import resolve_span_array, symmetrize_translations
+from wpextract_spark.operators.resolve import (
+    registry_map,
+    resolve_span_array,
+    symmetrize_translations,
+)
 from wpextract_spark.sources.entities import ORD
 from wpextract_spark.sources.scrape import crawl_self_urls
 
@@ -61,7 +65,7 @@ def test_resolve_span_array(spark):
         f"{ORD} long, links array<struct<text:string,href:string,"
         "destination:struct<link:string,data_type:string,idx:bigint>>>",
     )
-    out = resolve_span_array(df, "links", registry)
+    out = resolve_span_array(df, "links", registry_map(registry))
     rows = {r[ORD]: r["links"] for r in out.collect()}
     resolved = rows[0]
     assert resolved[0]["destination"]["idx"] == 1
@@ -248,33 +252,3 @@ def test_corpus_profile_exact_percentiles(spark):
     assert r["p50_tokens"] == 3.0          # exact interpolated median
     assert r["max_tokens"] == 100
     assert abs(r["mean_tokens"] - 22.0) < 1e-9
-
-
-def test_corpus_profile_approx_mode_runs(spark):
-    from wpextract_spark.operators.textstats import corpus_profile
-
-    rows = [(i, "en" if i % 2 else "de", "a b c") for i in range(20)]
-    df = spark.createDataFrame(rows, ["doc_id", "lang", "text"])
-    out = {r["lang"]: r for r in corpus_profile(df, approx=True).collect()}
-    assert set(out) == {"en", "de"}
-    # every doc is 3 tokens; any percentile sketch must say exactly 3
-    assert out["en"]["p50_tokens"] == 3.0 and out["en"]["p95_tokens"] == 3.0
-
-
-def test_vocab_build_counts_and_topk(spark):
-    from wpextract_spark.operators.textstats import vocab_build
-
-    df = spark.createDataFrame(
-        [(0, "a a b c"), (1, "a b"), (2, "c")], ["doc_id", "text"]
-    )
-    v = {r["token"]: r for r in vocab_build(df, min_count=1).collect()}
-    assert v["a"]["term_count"] == 3 and v["a"]["doc_freq"] == 2
-    assert v["c"]["term_count"] == 2 and v["c"]["doc_freq"] == 2
-    top1 = vocab_build(df, min_count=1, top_k=1).collect()
-    assert [r["token"] for r in top1] == ["a"]
-    # top-k plans as TakeOrdered (distributed partial top-k), not global sort
-    plan = (
-        vocab_build(df, min_count=1, top_k=5)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in plan

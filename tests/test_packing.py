@@ -38,19 +38,6 @@ def test_matches_naive_cumsum_any_bucket_width(spark):
         assert got == expected, f"bucket_width={bw}"
 
 
-def test_materialized_single_pass_matches(spark):
-    texts = [f"tok{i} " * (i % 11 + 2) for i in range(40)]
-    df = _docs(spark, texts)
-    plain = sorted(tuple(r) for r in sequence_pack(df, seq_len=32, bucket_width=8).collect())
-    mat = sorted(
-        tuple(r)
-        for r in sequence_pack(
-            df, seq_len=32, bucket_width=8, materialize=True
-        ).collect()
-    )
-    assert mat == plain
-
-
 def test_offsets_are_contiguous(spark):
     df = _docs(spark, ["a b c", "d e", "f g h i"])
     rows = {

@@ -11,7 +11,7 @@ def _plan(df) -> str:
 
 def test_resolution_is_one_narrow_probe(spark):
     from wpextract_spark.operators.registry import build_registry, registry_contribution
-    from wpextract_spark.operators.resolve import resolve_span_array
+    from wpextract_spark.operators.resolve import registry_map, resolve_span_array
     from wpextract_spark.operators.extract import RESOLVABLE_LINK_TYPE
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
@@ -27,7 +27,7 @@ def test_resolution_is_one_narrow_probe(spark):
             "link", "post", stage=1,
         )]
     )
-    plan = _plan(resolve_span_array(df, "links", reg))
+    plan = _plan(resolve_span_array(df, "links", registry_map(reg)))
     # The registry is probed as a broadcast map inside one Arrow UDF: the
     # span table is never exploded, joined or shuffled.
     assert "Exchange" not in plan, plan
@@ -105,75 +105,14 @@ def test_registry_outputs_driver_hashable_types(spark):
 
 
 def test_textstats_queries_are_codegen_only(spark):
-    """Token/quality/fingerprint/BPE stats must stay whole-stage-codegen JVM
+    """Token/quality/fingerprint stats must stay whole-stage-codegen JVM
     expressions — no Python workers (BatchEvalPython/ArrowEvalPython) in the
     plan."""
-    from wpextract_spark.plans.queries import (
-        q_bpe_tokens,
-        q_fingerprints,
-        q_quality_scores,
-        q_token_stats,
-    )
+    from wpextract_spark.plans.queries import q_fingerprints, q_quality_scores, q_token_stats
 
-    for fn in (q_token_stats, q_quality_scores, q_fingerprints, q_bpe_tokens):
+    for fn in (q_token_stats, q_quality_scores, q_fingerprints):
         plan = _plan(fn(spark, "/root/testdata/sf0.001"))
         assert "EvalPython" not in plan, f"{fn.__name__} fell back to Python:\n{plan}"
-
-
-def test_bm25_four_exchanges_single_token_lineage(spark):
-    """BM25's pinned plan (PLANS.md): per-term document frequencies come
-    from a WINDOW over the tf table — one scan->explode lineage — never a
-    second explode; corpus totals are a 1-row SinglePartition aggregate.
-    Exactly 4 computational shuffles: (doc,term) tf agg, the token window,
-    the per-doc sum, the totals single-partition — anything more means the
-    df computation regressed to a second corpus lineage."""
-    from wpextract_spark.plans.queries import q_bm25
-
-    df = q_bm25(spark, "/root/testdata/sf0.001")
-    df.write.format("noop").mode("overwrite").save()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    exchanges = [
-        l
-        for l in plan.splitlines()
-        if "Exchange" in l
-        and "Broadcast" not in l
-        and "Reused" not in l
-        and "RoundRobin" not in l  # input-loader repartitions, not operator shuffles
-    ]
-    assert len(exchanges) == 4, exchanges
-    keyed = [l for l in exchanges if "hashpartitioning" in l]
-    assert len(keyed) == 3 and sum("SinglePartition" in l for l in exchanges) == 1
-    # the explode feeding tf must appear exactly once (single token lineage)
-    assert plan.count("Generate explode") == 1, plan
-
-
-def test_collocations_scans_corpus_twice(spark):
-    """PMI totals and unigram-join sides must read the persisted count
-    tables, not re-execute the scan->explode lineage: after execution the
-    outer plan contains no parquet scan at all (both real corpus passes
-    happen inside the two cached relations)."""
-    import re
-
-    from wpextract_spark.plans.queries import q_collocations
-
-    df = q_collocations(spark, "/root/testdata/sf0.001")
-    df.write.format("noop").mode("overwrite").save()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    outer, skip = [], None
-    for line in plan.splitlines():
-        indent = len(line) - len(line.lstrip(" :+-*("))
-        if skip is not None:
-            if indent > skip:
-                continue
-            skip = None
-        if "InMemoryRelation" in line or "== Initial Plan ==" in line:
-            skip = indent
-            continue
-        outer.append(line)
-    outer_txt = "\n".join(outer)
-    assert not re.search(r"FileScan parquet", outer_txt)
-    # exactly the two cached count tables feed everything downstream
-    assert outer_txt.count("InMemoryTableScan") >= 4
 
 
 def test_redirect_loop_lineage_is_truncated(spark):

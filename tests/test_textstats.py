@@ -1,52 +1,3 @@
-
-
-def test_bm25_analytic_values(spark):
-    """Hand-computed Okapi BM25 on a 3-doc corpus (k1=1.2, b=0.75,
-    idf = ln(1 + (N-df+0.5)/(df+0.5)))."""
-    import math
-
-    import pytest
-
-    from wpextract_spark.operators.textstats import bm25_scores
-
-    docs = spark.createDataFrame(
-        [(1, "spark spark query"), (2, "query join join join"), (3, "table scan")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["bm25"] for r in bm25_scores(docs, ["spark", "join"]).collect()}
-    assert set(got) == {1, 2}  # doc 3 matches no term
-
-    def idf(df, n=3):
-        return math.log(1 + (n - df + 0.5) / (df + 0.5))
-
-    def tf_part(tf, dl, avgdl, k1=1.2, b=0.75):
-        return tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
-
-    avgdl = (3 + 4 + 2) / 3
-    assert got[1] == pytest.approx(idf(1) * tf_part(2, 3, avgdl), abs=1e-6)
-    assert got[2] == pytest.approx(idf(1) * tf_part(3, 4, avgdl), abs=1e-6)
-
-
-def test_bm25_multi_term_sums(spark):
-    import math
-
-    import pytest
-
-    from wpextract_spark.operators.textstats import bm25_scores
-
-    docs = spark.createDataFrame(
-        [(1, "a b"), (2, "a c")], "doc_id long, text string"
-    )
-    got = {r["doc_id"]: r["bm25"] for r in bm25_scores(docs, ["a", "b"]).collect()}
-
-    def idf(df, n=2):
-        return math.log(1 + (n - df + 0.5) / (df + 0.5))
-
-    part = 1 * 2.2 / (1 + 1.2 * (0.25 + 0.75 * 2 / 2.0))
-    assert got[1] == pytest.approx((idf(2) + idf(1)) * part, abs=1e-6)
-    assert got[2] == pytest.approx(idf(2) * part, abs=1e-6)
-
-
 # --- compression quality signal ---------------------------------------------
 
 

@@ -217,6 +217,15 @@ def cmd_extract(args: argparse.Namespace) -> int:
     return 0
 
 
+def _read_pages(spark, path: Path, input_format: str):
+    """The pages frame from a parquet table or a WARC dir/glob."""
+    if input_format == "warc":
+        from wpextract_spark.sources.warc import read_warc_records, warc_to_pages
+
+        return warc_to_pages(read_warc_records(spark, str(path)))
+    return spark.read.parquet(str(path))
+
+
 def cmd_build_corpus(args: argparse.Namespace) -> int:
     try:
         out_dir = _empty_directory(str(args.out_dir))
@@ -229,12 +238,7 @@ def cmd_build_corpus(args: argparse.Namespace) -> int:
     from wpextract_spark.session import get_session
 
     spark = get_session("wpextract-spark-cli", master=args.master)
-    if args.input_format == "warc":
-        from wpextract_spark.sources.warc import read_warc_records, warc_to_pages
-
-        pages = warc_to_pages(read_warc_records(spark, str(args.pages)))
-    else:
-        pages = spark.read.parquet(str(args.pages))
+    pages = _read_pages(spark, args.pages, args.input_format)
     benchmark = (
         spark.read.parquet(str(args.benchmark))
         if args.benchmark is not None
@@ -272,12 +276,7 @@ def cmd_refresh(args: argparse.Namespace) -> int:
 
     spark = get_session("wpextract-spark-cli", master=args.master)
     prev = spark.read.parquet(str(args.prev_corpus))
-    if args.input_format == "warc":
-        from wpextract_spark.sources.warc import read_warc_records, warc_to_pages
-
-        pages = warc_to_pages(read_warc_records(spark, str(args.pages)))
-    else:
-        pages = spark.read.parquet(str(args.pages))
+    pages = _read_pages(spark, args.pages, args.input_format)
     corpus, diff = incremental_update(prev, pages)
     corpus.write.parquet(str(out_dir / "corpus"))
     diff.write.parquet(str(out_dir / "diff"))

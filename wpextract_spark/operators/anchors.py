@@ -78,8 +78,7 @@ def domain_link_graph(
     (everyone -> big-platform) is exactly the row partial aggregation
     collapses before the shuffle. Output size is bounded by distinct
     domain pairs, making the rollup the scale-safe input to iterative
-    graph algorithms (feed it to ``graphrank.pagerank`` weighted by
-    ``n_links``).
+    graph algorithms weighted by ``n_links``.
     """
     from wpextract_spark.functions.domains import registered_domain
     from wpextract_spark.functions.urls import url_host

@@ -24,7 +24,7 @@ The single-partition step touches one row per bucket, never per document.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wpextract_spark.operators.textstats import BPE_SPLIT_RE
@@ -36,18 +36,13 @@ def sequence_pack(
     text_col: str = "text",
     seq_len: int = 2048,
     bucket_width: int = 65536,
-    materialize: bool = False,
-    token_counter: "Column | None" = None,
 ) -> DataFrame:
     """Per-document packing position: ``(id, n_tokens, offset, seq_index,
     n_seqs_spanned)``.
 
-    ``n_tokens`` counts BPE-style regex tokens plus one EOS separator by
-    default; pass ``token_counter`` (a Column producing a per-row token
-    count, e.g. :func:`wpextract_spark.operators.bpe.bpe_token_count_expr`
-    for REAL trained-merge BPE counts) to pack genuine token streams;
-    ``offset`` is the exclusive prefix sum of ``n_tokens`` in ``id`` order
-    (the document's first token position in the packed stream);
+    ``n_tokens`` counts BPE-style regex tokens (``BPE_SPLIT_RE``) plus one
+    EOS separator; ``offset`` is the exclusive prefix sum of ``n_tokens`` in
+    ``id`` order (the document's first token position in the packed stream);
     ``seq_index`` is the training sequence containing that first token;
     ``n_seqs_spanned`` is how many ``seq_len`` windows the document touches.
 
@@ -56,33 +51,15 @@ def sequence_pack(
     physical parallelism); size it so the id range / bucket_width is
     comfortably driver-small while each bucket holds enough rows to fill a
     task.
-
-    The token counts feed two consumers (the in-bucket cumsum and the
-    bucket totals) and Catalyst does not share un-materialized subtrees
-    across a window and an aggregate, so by default the narrow
-    ``(id, n_tokens, bucket)`` projection is computed twice — twice the
-    tokenizer regex, not twice the corpus I/O columns. Pass
-    ``materialize=True`` to ``localCheckpoint`` that 3-column projection
-    once (tiny next to the text column) and make the whole operator a
-    strict single pass over the corpus — the right call on a real cluster;
-    left off by default so the operator stays side-effect-free for plan
-    inspection and the oracle gate.
     """
     n_tokens = (
-        token_counter
-        if token_counter is not None
-        else (
-            F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_SPLIT_RE), 0))
-            + 1
-        ).cast("long")
-    )
+        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_SPLIT_RE), 0)) + 1
+    ).cast("long")
     base = docs.select(
         F.col(id_col),
         n_tokens.alias("n_tokens"),
         F.floor(F.col(id_col) / bucket_width).alias("_bucket"),
     )
-    if materialize:
-        base = base.localCheckpoint(eager=True)
     in_bucket = Window.partitionBy("_bucket").orderBy(id_col)
     # Exclusive cumsum within the bucket: sum over preceding rows only.
     local = base.withColumn(

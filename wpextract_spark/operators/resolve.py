@@ -21,8 +21,6 @@ explode, no join, no shuffle.
 
 from __future__ import annotations
 
-from typing import Union
-
 import pandas as pd
 from pyspark import Broadcast
 from pyspark.sql import DataFrame
@@ -43,19 +41,15 @@ def registry_map(registry: DataFrame) -> Broadcast:
     )
 
 
-def resolve_span_array(
-    df: DataFrame, array_col: str, registry: Union[DataFrame, Broadcast]
-) -> DataFrame:
+def resolve_span_array(df: DataFrame, array_col: str, registry: Broadcast) -> DataFrame:
     """Resolve the ``destination`` of every span in ``df[array_col]``.
 
     ``array_col`` holds ``array<struct>`` whose element has at least
     ``href`` and ``destination`` fields; already-resolved elements are kept
     as-is (reference ``link_resolver.py:20-24``). ``registry`` is the
-    deduplicated registry frame, or the :func:`registry_map` built from it
-    (to resolve several columns with one collect).
+    :func:`registry_map` of the deduplicated registry, so several columns
+    resolve against one collect.
     """
-    if isinstance(registry, DataFrame):
-        registry = registry_map(registry)
 
     @F.pandas_udf(df.schema[array_col].dataType)
     def _resolve(spans: pd.Series) -> pd.Series:

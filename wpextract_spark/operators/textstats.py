@@ -179,48 +179,22 @@ def lang_id_ngram(
 BPE_SPLIT_RE = r"'s|'t|'re|'ve|'m|'ll|'d| ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 \t\n\x0B\f\r']+"
 
 
-def bpe_token_stats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, n_bpe_tokens, n_ws_tokens, tokens_per_word): regex
-    pre-tokenization count (the GPT-2-style split, minus lookahead) next to
-    the whitespace count — all JVM expressions, whole-stage codegen."""
-    n_bpe = F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_SPLIT_RE), 0))
-    n_ws = F.size(_words(text_col))
-    return docs.select(
-        F.col(id_col),
-        n_bpe.alias("n_bpe_tokens"),
-        n_ws.alias("n_ws_tokens"),
-        F.round(n_bpe / F.greatest(n_ws, F.lit(1)), 6).alias("tokens_per_word"),
-    )
-
-
 def corpus_profile(
     docs: DataFrame,
     group_col: str = "lang",
     text_col: str = "text",
-    approx: bool = False,
 ) -> DataFrame:
     """Per-group corpus shape report: ``(group, n_docs, total_tokens,
     mean_tokens, p50_tokens, p95_tokens, max_tokens)`` over whitespace
     token counts — the summary a pipeline prints before/after every
     curation stage.
 
-    ``approx=True`` (the 100 TB path) uses ``approx_percentile`` — a
-    fixed-size mergeable sketch per group, so the aggregation stays one
-    map-side-combined shuffle regardless of corpus size. ``approx=False``
-    computes exact interpolated percentiles (Spark's ``percentile`` buffers
-    each group's values — fine up to millions of rows per group, and
-    bit-identical to DuckDB's ``quantile_cont``, which is what the oracle
-    gate checks; the sketch path is checked rows-only by the same query
-    shape).
+    Percentiles are exact and interpolated: Spark's ``percentile`` buffers
+    each group's values (fine up to millions of rows per group) and is
+    bit-identical to DuckDB's ``quantile_cont``, which the oracle gate
+    checks.
     """
     n_tokens = F.size(_words(text_col)).cast("long")
-    pct = (
-        (lambda q: F.expr(f"approx_percentile(_nt, {q}, 10000)").cast("double"))
-        if approx
-        else (lambda q: F.percentile(F.col("_nt"), F.lit(q)))
-    )
     return (
         docs.select(F.col(group_col), n_tokens.alias("_nt"))
         .groupBy(group_col)
@@ -228,243 +202,9 @@ def corpus_profile(
             F.count("*").alias("n_docs"),
             F.sum("_nt").alias("total_tokens"),
             F.round(F.avg("_nt"), 6).alias("mean_tokens"),
-            F.round(pct(0.5), 6).alias("p50_tokens"),
-            F.round(pct(0.95), 6).alias("p95_tokens"),
+            F.round(F.percentile(F.col("_nt"), F.lit(0.5)), 6).alias("p50_tokens"),
+            F.round(F.percentile(F.col("_nt"), F.lit(0.95)), 6).alias("p95_tokens"),
             F.max("_nt").alias("max_tokens"),
-        )
-    )
-
-
-def vocab_build(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 2,
-    top_k: int | None = None,
-) -> DataFrame:
-    """Corpus vocabulary: ``(token, term_count, doc_freq)`` — the tokenizer-
-    training / feature-hashing precursor every text pipeline runs once.
-
-    One explode + one groupBy with map-side partial aggregation; the
-    ``count(distinct doc)`` uses Spark's expand-based distinct aggregate
-    (still one shuffle keyed by token — uniform unless the corpus is one
-    word, and `min_count` prunes the heavy tail before any ordering).
-    ``top_k`` selects via orderBy+limit — Spark plans TakeOrdered (per-
-    partition partial top-k merged on the driver), NOT a global sort, so
-    the selection is scale-safe. Ties broken by token for determinism.
-    """
-    words = docs.select(
-        F.col(id_col), F.explode(_words(text_col)).alias("token")
-    )
-    vocab = (
-        words.groupBy("token")
-        .agg(
-            F.count("*").alias("term_count"),
-            F.countDistinct(id_col).alias("doc_freq"),
-        )
-        .where(F.col("term_count") >= min_count)
-    )
-    if top_k is not None:
-        vocab = vocab.orderBy(F.desc("term_count"), F.asc("token")).limit(top_k)
-    return vocab
-
-
-def inverted_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 2,
-    postings_k: int = 5,
-) -> DataFrame:
-    """Inverted index with tf-ranked posting lists: ``(token, doc_freq,
-    postings)`` where ``postings`` is the top-``postings_k`` doc ids by
-    (term frequency DESC, doc id ASC) — the search-engine build step.
-
-    Plan: explode -> (token, doc) tf aggregation (map-side partial combine
-    shrinks the explode before its shuffle) -> per-token row_number window ->
-    collect only the <=k surviving structs per token. Both the window and
-    the final groupBy partition by token, so the second aggregation reuses
-    the window's exchange; posting lists are bounded at k entries per token
-    regardless of corpus size, so no token — however frequent — can blow up
-    a single output row. ``collect_list`` order is nondeterministic;
-    determinism comes from sorting the (rank, id) structs after collection.
-    """
-    from pyspark.sql import Window
-
-    tf = (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(_words(text_col)).alias("token"))
-        .groupBy("token", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    w = Window.partitionBy("token").orderBy(F.desc("tf"), F.asc("doc_id"))
-    ranked = tf.withColumn("rk", F.row_number().over(w))
-    return (
-        ranked.groupBy("token")
-        .agg(
-            F.count(F.lit(1)).alias("doc_freq"),
-            F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.when(
-                            F.col("rk") <= postings_k,
-                            F.struct(F.col("rk"), F.col("doc_id")),
-                        )
-                    )
-                ),
-                lambda s: s["doc_id"],
-            ).alias("postings"),
-        )
-        .where(F.col("doc_freq") >= min_df)
-    )
-
-
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Okapi BM25 relevance of every matching document against a
-    bag-of-terms query: ``(doc_id, bm25)`` for documents containing at
-    least one query term. The retrieval-scoring step of a search/RAG
-    pipeline (Robertson/Sparck-Jones idf, the Lucene ``ln(1 + ...)``
-    form, so idf stays positive for df > N/2).
-
-    100-TB shape: the explode is filtered to the query terms immediately
-    (column-pruned scan -> explode -> filter, no full-vocabulary shuffle);
-    document length rides through the explode so no doc-table rejoin;
-    per-term document frequencies come from a window over the tf table
-    itself (a second reference would re-execute the whole scan->explode
-    lineage — Spark does not reuse the duplicated exchange here); corpus
-    totals (N, avgdl) are a 1-row broadcast cross-join. One lineage, three
-    shuffles: (doc, term) tf aggregation, the token window, the per-doc sum.
-    """
-    # NULL text must not reach the corpus totals: Spark's size(NULL) is -1,
-    # which would skew avgdl and count the doc in N, while SQL engines drop
-    # NULLs from AVG — filter once so both engines see the same corpus.
-    docs = docs.where(F.col(text_col).isNotNull())
-    dl = F.size(_words(text_col))
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        dl.alias("dl"),
-        F.explode(_words(text_col)).alias("token"),
-    ).where(F.col("token").isin(list(query_terms)))
-    from pyspark.sql import Window
-
-    tf = toks.groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl")
-    )
-    tf = tf.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("token"))
-    )
-    totals = docs.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg(dl).alias("avgdl"),
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf_part = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
-    return (
-        tf.crossJoin(F.broadcast(totals))
-        .select("doc_id", (idf * tf_part).alias("s"))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("s"), 6).alias("bm25"))
-    )
-
-
-def collocations(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_pair_count: int = 5,
-) -> DataFrame:
-    """Bigram collocations scored by pointwise mutual information:
-    ``(w1, w2, pair_count, pmi)`` with ``pmi = ln(p(w1,w2) / (p(w1)p(w2)))``
-    over the bigram/unigram distributions — the phrase-mining step of a
-    tokenizer/embedding pipeline.
-
-    Bigrams come from ``slice``+``arrays_zip`` (never ``sequence(1, n)``,
-    which DESCENDS when n < 1), so docs with fewer than two tokens
-    contribute nothing. Aggregations are plain token-keyed groupBys with
-    map-side combine; the two unigram-count joins are token-keyed shuffles
-    (broadcast-eligible for bounded vocabularies — AQE decides from stats).
-    The PMI ratio is computed in ONE double expression in the exact form the
-    SQL oracle restates, then rounded to 6 decimals so engine ulp noise
-    cannot reach a comparator. Corpus totals (unigram/bigram counts) are
-    1-row aggregates broadcast-cross-joined in — no eager ``.count()``
-    action, the whole operator stays one lazy dataflow.
-
-    The corpus is scanned exactly TWICE (one unigram explode, one bigram
-    explode): every other consumer — the two unigram-count join sides and
-    both totals — reads the persisted count tables, which are
-    aggregation-sized, not corpus-sized. Without the persists each
-    reference re-executes the full scan->explode lineage (Spark does not
-    reuse the duplicated exchanges; measured 5 corpus scans for this
-    operator at head of round 3).
-
-    The two persisted count tables are registered with
-    :mod:`wpextract_spark.operators.cache`; call
-    ``cache.release("collocations")`` after consuming the result to drop
-    their blocks in a long-lived session.
-    """
-    from pyspark import StorageLevel
-
-    from wpextract_spark.operators.cache import track
-
-    toks = docs.select(_words(text_col).alias("ts"))
-    uni = toks.select(F.explode("ts").alias("w"))
-    ucnt = track(
-        uni.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-        scope="collocations",
-    )
-    pairs = toks.select(
-        F.explode(
-            F.arrays_zip(
-                F.slice(F.col("ts"), 1, F.size("ts") - 1).alias("w1"),
-                F.slice(F.col("ts"), 2, F.size("ts") - 1).alias("w2"),
-            )
-        ).alias("bg")
-    ).select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    pcnt_all = track(
-        pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("pair_count"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-        scope="collocations",
-    )
-    # Totals from the count tables (sum of counts == total token/bigram
-    # occurrences), NOT from a corpus re-scan.
-    totals = F.broadcast(
-        ucnt.agg(F.sum("c").cast("double").alias("n_uni")).crossJoin(
-            pcnt_all.agg(F.sum("pair_count").cast("double").alias("n_big"))
-        )
-    )
-    pcnt = pcnt_all.where(F.col("pair_count") >= min_pair_count)
-    c1 = ucnt.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
-    c2 = ucnt.select(F.col("w").alias("w2"), F.col("c").alias("c2"))
-    return (
-        pcnt.join(c1, "w1")
-        .join(c2, "w2")
-        .crossJoin(totals)
-        .select(
-            "w1",
-            "w2",
-            "pair_count",
-            F.round(
-                F.log(
-                    (F.col("pair_count") * F.col("n_uni") * F.col("n_uni"))
-                    / (F.col("n_big") * F.col("c1") * F.col("c2"))
-                ),
-                6,
-            ).alias("pmi"),
         )
     )
 
@@ -483,7 +223,7 @@ def compression_signal_udf(level: int = 6):
     quality signal (Dolma/RefinedWeb-style).
 
     Templated or repetitive text compresses far below natural prose, so a
-    LOW zlib ratio flags junk the perplexity and heuristic gates miss.
+    LOW zlib ratio flags junk the heuristic gates miss.
     Lengths are UTF-8 bytes; ``ratio = zlib_len / raw_len`` (null for empty
     text). Deterministic for a fixed zlib level; not SQL-expressible, so
     the driver records a rows-only check — the pytest gate pins values on
