@@ -82,9 +82,10 @@ def _worker(input_path: str, cores: int, trials: int) -> dict:
         ],
         capture_output=True,
         text=True,
+        timeout=3600,
     )
     if proc.returncode:
-        raise RuntimeError(f"probe failed:\n{proc.stderr[-2000:]}")
+        raise RuntimeError(f"worker local[{cores}] failed:\n{proc.stderr[-2000:]}")
     line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
     return json.loads(line)
 

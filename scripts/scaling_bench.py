@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import json
 import multiprocessing as mp
-import subprocess
 import sys
 import tempfile
 import time
@@ -26,22 +25,9 @@ from pathlib import Path
 REPO = Path(__file__).parent.parent
 sys.path.insert(0, str(REPO))
 
-from bench import _hw_control, least_disturbed  # noqa: E402
+from bench import _hw_control, _worker, least_disturbed  # noqa: E402
 
 LEVELS = [2, 8, 32]
-
-
-def _measure(cores: int, input_path: str) -> dict:
-    proc = subprocess.run(
-        [sys.executable, str(REPO / "scripts" / "scaling_worker.py"), str(cores), input_path],
-        capture_output=True,
-        text=True,
-        timeout=3600,
-    )
-    if proc.returncode != 0:
-        raise RuntimeError(f"worker local[{cores}] failed:\n{proc.stderr[-2000:]}")
-    line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
 
 
 def _control(cores: int) -> float:
@@ -91,7 +77,7 @@ def main() -> None:
             round_res: dict[int, dict] = {}
             for cores in LEVELS:
                 time.sleep(15)  # let prior JVM shutdown/load fully drain
-                round_res[cores] = _measure(cores, input_path)
+                round_res[cores] = _worker(input_path, cores, trials=3)
             spark_rounds.append(round_res)
     for _round in range(ROUNDS):
         hw_round: dict[int, float] = {}

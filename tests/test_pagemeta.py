@@ -1,14 +1,11 @@
-"""Head-metadata kernel + operator, and anchor-text aggregation."""
+"""Head-metadata kernel + operator."""
 
 from __future__ import annotations
-
-from collections import Counter
 
 from pyspark.sql import functions as F
 
 from wpextract_spark.htmlkit import parse_html
 from wpextract_spark.kernel.pagemeta import extract_page_meta
-from wpextract_spark.operators.anchors import anchor_text_agg
 from wpextract_spark.operators.extract import page_meta_udf
 
 
@@ -79,33 +76,6 @@ class TestPageMetaOperator:
         by_title = {r["title"]: r for r in out}
         assert by_title["T"]["error"] is None
         assert by_title[None]["robots_noindex"] is None  # null input -> null row
-
-
-class TestAnchorTextAgg:
-    def test_matches_python_reference(self, spark):
-        spans = [
-            ("a", "home"), ("a", "home"), ("a", "site"),
-            ("b", "x"), ("b", "y"), ("b", "y"), ("b", "z"),
-            ("c", "solo"),
-        ]
-        df = spark.createDataFrame(spans, ["target", "anchor"]).repartition(5)
-        got = {r["target"]: r for r in anchor_text_agg(df).collect()}
-
-        for target in {t for t, _ in spans}:
-            texts = Counter(a for t, a in spans if t == target)
-            row = got[target]
-            assert row["n_links"] == sum(texts.values())
-            assert row["n_texts"] == len(texts)
-            # argmax: highest count, ties -> lexicographically greatest text
-            top = max(texts.items(), key=lambda kv: (kv[1], kv[0]))
-            assert (row["top_text"], row["top_text_cnt"]) == top
-
-    def test_plan_is_two_stage_agg_no_window(self, spark):
-        df = spark.createDataFrame([("a", "x")], ["target", "anchor"])
-        plan = anchor_text_agg(df)._jdf.queryExecution().executedPlan().toString()
-        assert "Window" not in plan  # argmax via max(struct), not row_number
-        n_exchanges = plan.count("Exchange")
-        assert n_exchanges <= 2, plan
 
 
 # --- hreflang alternates ------------------------------------------------------

@@ -70,44 +70,6 @@ def test_no_shuffle_map_only_plan(spark):
     assert "Exchange" not in plan
 
 
-def test_sentence_chunks_respect_boundaries(spark):
-    from wpextract_spark.operators.sentences import sentence_chunks
-
-    # sentences of len 8 ("Sent 01." etc); chunk_chars=20 -> starts at
-    # 0, 9, 18, 27 -> chunks 0, 0, 0, 1
-    text = "Sent 01. Sent 02. Sent 03. Sent 04."
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    rows = {
-        r["chunk_id"]: r.asDict()
-        for r in sentence_chunks(df, chunk_chars=20).collect()
-    }
-    assert rows[0]["chunk_text"] == "Sent 01. Sent 02. Sent 03."
-    assert rows[0]["n_sentences"] == 3
-    assert rows[1]["chunk_text"] == "Sent 04."
-    assert rows[1]["chunk_len"] == 8
-    # no sentence is ever split: rebuilding the doc from ordered chunks
-    # round-trips exactly
-    rebuilt = " ".join(rows[k]["chunk_text"] for k in sorted(rows))
-    assert rebuilt == text
-
-
-def test_sentence_chunks_never_split_a_long_sentence(spark):
-    from wpextract_spark.operators.sentences import sentence_chunks
-
-    long_sent = "word " * 30 + "end."  # 154 chars, >> chunk_chars
-    df = spark.createDataFrame(
-        [(1, long_sent + " Short after.")], "doc_id long, text string"
-    )
-    rows = sorted(
-        (r["chunk_id"], r["chunk_text"])
-        for r in sentence_chunks(df, chunk_chars=50).collect()
-    )
-    # the long sentence stays whole in chunk 0; the next sentence starts
-    # at offset 155 -> chunk 3 (ids are offset-derived, not dense)
-    assert rows[0] == (0, long_sent)
-    assert rows[1] == (3, "Short after.")
-
-
 @settings(max_examples=20, deadline=None)
 @given(
     texts=st.lists(

@@ -8,9 +8,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from wpextract_spark.functions.text import (
-    ensure_prefix,
-    ensure_prefixes,
-    ensure_suffix,
     extract_html_text,
     remove_ends,
     remove_prefix,
@@ -26,12 +23,6 @@ def test_affix_helpers():
     assert remove_suffix("python", "py") == "python"
     assert remove_ends("pypythonpy", "py") == "python"
     assert remove_ends("python", "foo") == "python"
-    assert ensure_prefix("python", "foo") == "foopython"
-    assert ensure_prefix("foopython", "foo") == "foopython"
-    assert ensure_suffix("python", "foo") == "pythonfoo"
-    assert ensure_suffix("pythonfoo", "foo") == "pythonfoo"
-    assert ensure_prefixes("example.org", ("http://", "https://"), "http://") == "http://example.org"
-    assert ensure_prefixes("https://example.org", ("http://", "https://"), "http://") == "https://example.org"
 
 
 @pytest.mark.parametrize(

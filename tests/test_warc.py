@@ -5,7 +5,7 @@ generator (sources/warcgen.py) — gzip-member and plain framing, HTTP
 payload split, quarantine on malformed input — and the distributed
 binaryFile -> mapInPandas path (sources/warc.py) round-tripped against
 ``generate_pages``: the pages that went into the WARC come back out
-byte-identical (url + html), and WET text matches the pages' text column.
+byte-identical (url + html).
 """
 
 from __future__ import annotations
@@ -141,16 +141,13 @@ class TestKernel:
 class TestDistributed:
     @pytest.fixture(scope="class")
     def warc_dir(self, tmp_path_factory):
-        """3 .warc.gz + 3 .wet.gz files of 20 pages each, disjoint ranges."""
+        """3 .warc.gz files of 20 pages each, disjoint ranges."""
         root = tmp_path_factory.mktemp("warcs")
         pages = _pages(60)
         for shard in range(3):
             chunk = pages[shard * 20 : (shard + 1) * 20]
             (root / f"part-{shard}.warc.gz").write_bytes(
                 build_warc(chunk, filename=f"part-{shard}.warc.gz")
-            )
-            (root / f"part-{shard}.wet.gz").write_bytes(
-                build_wet(chunk, filename=f"part-{shard}.wet.gz")
             )
         return root
 
@@ -176,15 +173,6 @@ class TestDistributed:
             read_warc_records(spark, str(warc_dir) + "/*.warc.gz")
         )._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan  # file-per-task scan, no shuffle
-
-    def test_wet_matches_text_column(self, spark, warc_dir):
-        from wpextract_spark.sources.synth import generate_pages
-        from wpextract_spark.sources.warc import read_warc_records, wet_to_docs
-
-        docs = wet_to_docs(read_warc_records(spark, str(warc_dir) + "/*.wet.gz"))
-        got = {r["url"]: r["text"] for r in docs.collect()}
-        want = {r["url"]: r["text"] for r in generate_pages(spark, 60, seed=42).collect()}
-        assert got == want
 
     def test_warcinfo_records_visible_and_typed(self, spark, warc_dir):
         from wpextract_spark.sources.warc import read_warc_records

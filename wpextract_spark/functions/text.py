@@ -67,18 +67,6 @@ def remove_ends(text: str, affix: str) -> str:
     return remove_prefix(remove_suffix(text, affix), affix)
 
 
-def ensure_prefix(text: str, prefix: str) -> str:
-    return text if text.startswith(prefix) else prefix + text
-
-
-def ensure_prefixes(text: str, prefixes: tuple[str, ...], default: str) -> str:
-    return text if text.startswith(prefixes) else default + text
-
-
-def ensure_suffix(text: str, suffix: str) -> str:
-    return text if text.endswith(suffix) else text + suffix
-
-
 def attr_concat(val) -> str:
     """Join multi-valued attribute lists with a space; pass strings through."""
     if isinstance(val, list):

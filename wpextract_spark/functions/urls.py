@@ -78,42 +78,3 @@ def canonicalize_url(url: Column | str) -> Column:
         F.size(params) > 0, F.concat(F.lit("?"), F.concat_ws("&", params))
     ).otherwise(F.lit(""))
     return F.concat(prefix, path, qcanon)
-
-
-def surt_key(url: Column | str) -> Column:
-    """Sort-friendly URI Reordering Transform (SURT) key, the web-archiving
-    canonical form used by Heritrix / OpenWayback / Common Crawl's CDX
-    indexes: ``https://www.blog.example.org:8080/Post/7?b=2&a=1`` becomes
-    ``org,example,blog:8080)/post/7?a=1&b=2``.
-
-    Built on :func:`canonicalize_url` (fragment stripped, default ports
-    dropped, tracking params removed, query sorted), then:
-
-    * scheme dropped — http/https duplicates collapse;
-    * a single leading ``www<digits>.`` label dropped when at least two
-      labels remain, so ``www.org`` and ``www2.com`` keep their own keys
-      instead of colliding with the bare public suffix;
-    * host labels reversed and comma-joined, so all URLs of a registered
-      domain sort adjacently — range-partitioning a 10^12-row crawl index
-      on this key gives per-site locality for free (host-level scans stay
-      partition-pruned instead of scattering over the table);
-    * non-default port kept after the reversed host (``:8080``);
-    * path + query lowercased (SURT semantics: rest-of-URL case folds).
-
-    Pure column expressions, whole-stage codegen, no lookaround / no
-    backreference regex — the DuckDB oracle restates the identical steps.
-    """
-    u = canonicalize_url(url)
-    prefix = F.regexp_extract(u, r"^([a-z][a-z0-9+.-]*://[^/?#]*)", 1)
-    rest = F.lower(F.substring(u, F.length(prefix) + 1, F.lit(2_000_000_000)))
-    rest = F.when(rest == "", F.lit("/")).otherwise(rest)
-    hostport = F.regexp_extract(prefix, r"^[a-z][a-z0-9+.-]*://([^/?#]*)", 1)
-    port = F.regexp_extract(hostport, r":([0-9]+)$", 1)
-    host = F.regexp_replace(hostport, r":[0-9]+$", "")
-    bare = F.regexp_replace(host, r"^www[0-9]*\.", "")
-    host = F.when(F.size(F.split(bare, r"\.")) >= 2, bare).otherwise(host)
-    rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
-    portpart = F.when(port != "", F.concat(F.lit(":"), port)).otherwise(
-        F.lit("")
-    )
-    return F.concat(rev, portpart, F.lit(")"), rest)

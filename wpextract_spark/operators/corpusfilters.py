@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from wpextract_spark.functions.urls import url_host
-from wpextract_spark.operators.dedup import WS
+from wpextract_spark.operators.dedup import WS, split_words
 
 #: Tracking query parameters dropped by URL canonicalization-style filters
 #: and the C4/Gopher rule constants below. Kept module-level so oracles can
@@ -44,10 +44,6 @@ GOPHER_MAX_SYMBOL_RATIO = 0.1
 PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_IPV4 = r"\b(\d{1,3}\.){3}\d{1,3}\b"
 PII_PHONE = r"\+?\d([ -]?\d){7,}"
-
-
-def _words(text_col: str) -> Column:
-    return F.split(F.trim(F.col(text_col)), WS)
 
 
 def repetition_stats(
@@ -72,7 +68,7 @@ def repetition_stats(
     document count, not the gram count. The final join back to the per-row
     stats is doc_id-keyed (uniform, AQE-broadcastable).
     """
-    words = _words(text_col)
+    words = split_words(text_col)
     base = docs.select(
         F.col(id_col),
         F.length(F.col(text_col)).alias("n_chars"),
@@ -143,7 +139,7 @@ def _gopher_metrics(text_col: str) -> dict[str, Column]:
     """The Gopher rule metrics as named column expressions (shared by the
     standalone flags operator and the fused curation pipeline, which embeds
     ``keep`` directly in its single-lineage flag projection)."""
-    words = _words(text_col)
+    words = split_words(text_col)
     n_words = F.size(words)
     # sum(len(word)) == len(text) minus separator runs: one regexp pass.
     total_word_chars = F.length(

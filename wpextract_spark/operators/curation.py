@@ -27,10 +27,10 @@ from wpextract_spark.operators.corpusfilters import (
     gopher_keep_expr,
 )
 from wpextract_spark.operators.dedup import (
-    WS,
     containment_pairs,
     lsh_candidate_pairs,
     ngram_jaccard_pairs,
+    split_words,
 )
 
 
@@ -99,7 +99,7 @@ def curation_pipeline(
             key = F.md5(
                 F.concat_ws(
                     " ",
-                    F.slice(F.split(F.trim(F.col(text_col)), WS), 1, exact_key_words),
+                    F.slice(split_words(text_col), 1, exact_key_words),
                 )
             )
         ew = Window.partitionBy("_key")

@@ -18,7 +18,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Split pattern for whitespace tokenization, shared with the oracles.
@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 WS = r"[ \t\n\x0B\f\r]+"
 
 
-def _words(text_col: str):
+def split_words(text_col: str) -> Column:
+    """Whitespace tokens of the trimmed text (``[""]`` for blank text)."""
     return F.split(F.trim(F.col(text_col)), WS)
 
 
@@ -57,12 +58,12 @@ def minhash_signatures(
 
     Entirely row-local — ``array_min`` over a ``transform`` of the distinct-
     word array, NO explode/groupBy: the signature never shuffles, so every
-    LSH consumer starts its plan one exchange lighter. (``_words`` always
+    LSH consumer starts its plan one exchange lighter. (``split_words`` always
     yields at least one element — split of an empty string is [''] — so no
     doc row is lost and no null signature appears, matching what the old
     explode+min aggregation produced.)
     """
-    words = F.array_distinct(_words(text_col))
+    words = F.array_distinct(split_words(text_col))
 
     # Bind i in a helper, NOT a default arg: transform() dispatches on lambda
     # ARITY, so a two-parameter lambda would receive the element index as its
@@ -133,7 +134,7 @@ def _gram_pair_counts(
     """(id_a, id_b, common, na, nb) for every pair sharing >= 1 distinct
     word-n-gram — the shared propose/verify machinery behind both the
     symmetric (Jaccard) and directed (containment) gram metrics."""
-    words = _words(text_col)
+    words = split_words(text_col)
     # Docs with fewer than n words yield NO grams: sequence(0, size-n) with
     # size < n would DESCEND (0, -1, ...) and slice(words, 0, n) aborts the
     # whole stage — one short/empty doc must not kill a corpus-scale job.
@@ -279,7 +280,7 @@ def simhash(
     """
     if bits > 64:
         raise ValueError("bits > 64 not supported (two md5s give 64 nibbles)")
-    words = F.array_distinct(_words(text_col))
+    words = F.array_distinct(split_words(text_col))
 
     def _h(w):
         return F.concat(F.md5(w), F.md5(F.concat(F.lit("#"), w))) if bits > 32 else F.md5(w)

@@ -140,9 +140,9 @@ def source_mix(
     all). Output keeps every row with ``(n_words, rate_key, selected)`` so
     callers can audit the cut before applying it.
     """
-    from wpextract_spark.operators.dedup import WS
+    from wpextract_spark.operators.dedup import split_words
 
-    n_words = F.size(F.split(F.trim(F.col(text_col)), WS, -1))
+    n_words = F.size(split_words(text_col))
     base = docs.select(
         F.col(id_col), F.col(source_col), n_words.alias("n_words")
     )

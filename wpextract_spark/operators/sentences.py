@@ -1,8 +1,8 @@
 """Sentence segmentation as pure column expressions.
 
 Training pipelines need sentence boundaries constantly — sentence-level
-dedup (the WMT/ParaCrawl regime), quality signals (mean sentence length is
-a Gopher-style filter), and chunkers that refuse to split mid-sentence.
+dedup (the WMT/ParaCrawl regime) and quality signals (mean sentence length
+is a Gopher-style filter).
 A full Punkt model is overkill for corpus statistics; the workhorse is a
 deterministic rule: protect known abbreviation dots, then treat every
 maximal ``[.!?]+`` run as a terminator.
@@ -75,65 +75,4 @@ def sentence_stats(
         ).alias("sentence_chars"),
         F.coalesce(F.array_max(lens), F.lit(0)).alias("max_sentence_len"),
         F.element_at(arr, 1).alias("first_sentence"),
-    )
-
-
-def sentence_chunks(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_chars: int = 512,
-) -> DataFrame:
-    """Chunk documents WITHOUT splitting mid-sentence: each sentence joins
-    the chunk its start offset falls in (``floor(start / chunk_chars)``,
-    offsets counting one joining space per boundary). Chunks therefore
-    break only at sentence boundaries and target ``chunk_chars`` — the
-    contract RAG indexes and context-window packing want, versus the
-    word-window chunker in ``operators/chunking.py`` which cuts anywhere.
-
-    Returns ``(id, chunk_id, n_sentences, chunk_len, chunk_text)``.
-    Deterministic across engines and partitionings: sentence order is
-    pinned by the explode position, the cumulative offset is an exact
-    integer sum, and chunk text is rebuilt position-sorted.
-
-    Scale shape: the explode is narrow (fan-out bounded by sentences per
-    document); one exchange for the per-document offset window and one
-    for the (id, chunk) rebuild — both keyed on uniform document ids, no
-    global window, no collect.
-    """
-    from pyspark.sql import Window
-
-    sent = F.posexplode(split_sentences(text_col)).alias("pos", "sentence")
-    exploded = df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col), sent
-    )
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    start = F.coalesce(
-        F.sum(F.length("sentence") + F.lit(1)).over(w), F.lit(0)
-    )
-    placed = exploded.select(
-        F.col(id_col),
-        F.floor(start / F.lit(chunk_chars)).alias("chunk_id"),
-        F.struct(F.col("pos"), F.col("sentence")).alias("ps"),
-    )
-    ordered = F.array_sort(F.collect_list("ps"))
-    return (
-        placed.groupBy(id_col, "chunk_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sentences"),
-            F.concat_ws(
-                " ", F.transform(ordered, lambda x: x["sentence"])
-            ).alias("chunk_text"),
-        )
-        .select(
-            id_col,
-            "chunk_id",
-            "n_sentences",
-            F.length("chunk_text").alias("chunk_len"),
-            "chunk_text",
-        )
     )

@@ -10,12 +10,12 @@ restates the same profiles in SQL (plans/queries.py:_oracle_lang_id).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StringType
 
-from wpextract_spark.operators.dedup import WS
+from wpextract_spark.operators.dedup import WS, split_words
 
 #: Small multilingual stopword profiles for the lang-id heuristic.
 _LANG_PROFILES = {
@@ -28,10 +28,6 @@ _LANG_PROFILES = {
 _STOPWORDS_EN = sorted(_LANG_PROFILES["en"])
 
 
-def _words(text_col: str) -> Column:
-    return F.split(F.trim(F.col(text_col)), WS)
-
-
 def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, n_tokens, n_chars, approx_bpe_tokens).
 
@@ -40,7 +36,7 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     """
     return docs.select(
         F.col(id_col),
-        F.size(_words(text_col)).alias("n_tokens"),
+        F.size(split_words(text_col)).alias("n_tokens"),
         F.length(F.col(text_col)).alias("n_chars"),
         F.ceil(F.length(F.col(text_col)) / 4).cast("long").alias("approx_bpe_tokens"),
     )
@@ -52,7 +48,7 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     The quality score is the trivial-but-effective web-corpus filter: enough
     tokens, plausible mean word length, presence of function words.
     """
-    words = _words(text_col)
+    words = split_words(text_col)
     n_tokens = F.size(words)
     # InSet hash probe per word (stopword list > inSetConversionThreshold)
     # instead of an O(|stopwords|) array scan per word.
@@ -83,7 +79,7 @@ def fingerprints(
     A single stable 32-hex fingerprint robust to local edits outside the
     minimal shingle; shift-resistant unlike a whole-text hash.
     """
-    words = _words(text_col)
+    words = split_words(text_col)
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
         lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, n))),
@@ -194,7 +190,7 @@ def corpus_profile(
     bit-identical to DuckDB's ``quantile_cont``, which the oracle gate
     checks.
     """
-    n_tokens = F.size(_words(text_col)).cast("long")
+    n_tokens = F.size(split_words(text_col)).cast("long")
     return (
         docs.select(F.col(group_col), n_tokens.alias("_nt"))
         .groupBy(group_col)

@@ -144,63 +144,6 @@ FROM documents
 """
 
 
-def q_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anchor-text aggregation over the internal-link graph: the classic
-    web-scale "anchor file" (per-target link counts + dominant anchor),
-    built from REAL kernel link extraction on constructed pages.
-
-    100-TB shape: ``operators/anchors.py`` — two chained hash aggs, the
-    first keyed on (target, anchor) so mega-target skew is diluted across
-    anchor strings before the target-keyed stage runs.
-    """
-    from wpextract_spark.operators.anchors import anchor_text_agg
-
-    docs = _t(spark, sf_dir, "documents")
-    n_int = (F.col("doc_id") % 3).cast("int")
-    links = F.when(n_int < 1, F.lit("")).otherwise(
-        F.concat_ws(
-            "",
-            F.transform(
-                F.sequence(F.lit(1), n_int),
-                lambda i: F.concat(
-                    F.lit('<a href="/p/'),
-                    ((F.col("doc_id") + i) % 40).cast("string"),
-                    F.lit('">t'),
-                    ((F.col("doc_id") + 2 * i) % 5).cast("string"),
-                    F.lit("</a>"),
-                ),
-            ),
-        )
-    )
-    html = F.concat(F.lit("<p>x</p>"), links)
-    url = F.concat(F.lit("https://example.org/doc-"), F.col("doc_id").cast("string"), F.lit("/"))
-    res = content_extract_udf()(html, url)
-    spans = docs.select(F.explode(res["links_internal"]).alias("l")).select(
-        F.col("l.href").alias("target"), F.col("l.text").alias("anchor")
-    )
-    return anchor_text_agg(spans, "target", "anchor")
-
-
-ORACLE_ANCHOR_TEXTS = """
-WITH spans AS (
-  SELECT 'https://example.org/p/' || ((doc_id + g.i) % 40) AS target,
-         't' || ((doc_id + 2 * g.i) % 5) AS anchor
-  FROM documents, LATERAL unnest(generate_series(1, doc_id % 3)) AS g(i)
-),
-t1 AS (SELECT target, anchor, count(*) AS text_cnt FROM spans GROUP BY 1, 2),
-ranked AS (
-  SELECT target, anchor, text_cnt,
-         row_number() OVER (PARTITION BY target
-                            ORDER BY text_cnt DESC, anchor DESC) AS rn,
-         CAST(sum(text_cnt) OVER (PARTITION BY target) AS BIGINT) AS n_links,
-         count(*) OVER (PARTITION BY target) AS n_texts
-  FROM t1)
-SELECT target, n_links, n_texts,
-       anchor AS top_text, text_cnt AS top_text_cnt
-FROM ranked WHERE rn = 1
-"""
-
-
 def q_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Head-metadata extraction (title / description / Open Graph /
     canonical / robots / declared lang) via the real DOM kernel on
@@ -2305,35 +2248,6 @@ FROM w JOIN k USING (source)
 """
 
 
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping word-window chunking with provenance offsets
-    (operators/chunking.py): 32-word windows, 8-word overlap, zero-shuffle
-    row-local explode. The oracle restates the window formula over a
-    range() join with DuckDB list slicing."""
-    from wpextract_spark.operators.chunking import chunk_documents
-
-    return chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_size=32, overlap=8
-    )
-
-
-ORACLE_CHUNK_DOCUMENTS = rf"""
-WITH w AS (
-  SELECT doc_id, string_split_regex(trim(text), '{WS_SQL}') AS ws
-  FROM documents),
-c AS (
-  SELECT doc_id, ws,
-         1 + (greatest(len(ws) - 32, 0) + 23) // 24 AS n_chunks
-  FROM w)
-SELECT doc_id,
-       CAST(i.v AS INTEGER) AS chunk_id,
-       CAST(i.v * 24 AS INTEGER) AS start_word,
-       CAST(len(ws[i.v * 24 + 1 : i.v * 24 + 32]) AS INTEGER) AS n_words,
-       array_to_string(ws[i.v * 24 + 1 : i.v * 24 + 32], ' ') AS chunk_text
-FROM c JOIN range(100000) i(v) ON i.v < n_chunks
-"""
-
-
 def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RefinedWeb-style URL curation (operators/corpusfilters.py:url_filter):
     domain blocklist with subdomain coverage via the suffix-chain trick
@@ -2677,301 +2591,6 @@ GROUP BY 1, 2
 """
 
 
-def q_surt_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURT canonical crawl-index keys (functions/urls.py::surt_key):
-    quadruplets of documents share one page behind four surface forms
-    (www + mixed-case path + fragment + tracking params / explicit
-    default ports / trailing slash / reordered params), and the SURT key
-    collapses the query-carrying variants while keeping the query-less
-    one distinct. The oracle restates canonicalization AND the SURT
-    transform (host reversal, www strip when two labels remain,
-    rest-of-URL casefold) in SQL."""
-    from wpextract_spark.functions.urls import surt_key
-
-    docs = _t(spark, sf_dir, "documents")
-    base = F.floor(F.col("doc_id") / 4).cast("long")
-    k = (base % 20).cast("string")
-    b = base.cast("string")
-    v = F.col("doc_id") % 4
-    url = (
-        F.when(
-            v == 0,
-            F.concat(
-                F.lit("https://WWW.site"), k, F.lit(".example.org/Post/"),
-                b, F.lit("/?b=2&utm_source=feed&a=1#top"),
-            ),
-        )
-        .when(
-            v == 1,
-            F.concat(
-                F.lit("http://site"), k, F.lit(".example.org:80/Post/"),
-                b, F.lit("?a=1&b=2"),
-            ),
-        )
-        .when(
-            v == 2,
-            F.concat(
-                F.lit("https://site"), k, F.lit(".example.org:443/post/"),
-                b, F.lit("/"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("https://site"), k, F.lit(".example.org/post/"),
-                b, F.lit("?b=2&a=1&ref=feed"),
-            ),
-        )
-    )
-    urls = docs.select("doc_id", url.alias("url"))
-    return urls.select("doc_id", "url", surt_key("url").alias("surt"))
-
-
-ORACLE_SURT_KEYS = r"""
-WITH raw AS (
-  SELECT doc_id,
-         CASE doc_id % 4
-           WHEN 0 THEN 'https://WWW.site' || ((doc_id // 4) % 20) ||
-                       '.example.org/Post/' || (doc_id // 4) ||
-                       '/?b=2&utm_source=feed&a=1#top'
-           WHEN 1 THEN 'http://site' || ((doc_id // 4) % 20) ||
-                       '.example.org:80/Post/' || (doc_id // 4) || '?a=1&b=2'
-           WHEN 2 THEN 'https://site' || ((doc_id // 4) % 20) ||
-                       '.example.org:443/post/' || (doc_id // 4) || '/'
-           ELSE 'https://site' || ((doc_id // 4) % 20) ||
-                '.example.org/post/' || (doc_id // 4) || '?b=2&a=1&ref=feed'
-         END AS url
-  FROM documents),
-s1 AS (SELECT doc_id, url, regexp_replace(url, '#.*', '') AS u FROM raw),
-s2 AS (
-  SELECT doc_id, url, u,
-         lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1))
-           AS prefix
-  FROM s1),
-s3 AS (
-  SELECT doc_id, url,
-         CASE WHEN starts_with(prefix, 'https://') AND ends_with(prefix, ':443')
-                THEN prefix[1:length(prefix)-4]
-              WHEN starts_with(prefix, 'http://') AND ends_with(prefix, ':80')
-                THEN prefix[1:length(prefix)-3]
-              ELSE prefix END AS prefix,
-         u[length(prefix)+1:] AS rest
-  FROM s2),
-s4 AS (
-  SELECT doc_id, url, prefix,
-         CASE WHEN strpos(rest, '?') > 0 THEN rest[1:strpos(rest, '?')-1]
-              ELSE rest END AS path,
-         CASE WHEN strpos(rest, '?') > 0 THEN rest[strpos(rest, '?')+1:]
-              ELSE '' END AS query
-  FROM s3),
-s5 AS (
-  SELECT doc_id, url, prefix,
-         CASE WHEN length(path) > 1 AND ends_with(path, '/')
-              THEN path[1:length(path)-1] ELSE path END AS path,
-         list_sort(list_filter(string_split(query, '&'),
-           p -> p != '' AND NOT regexp_matches(p, '^(utm_[^=]*|fbclid|gclid|ref)(=.*)?$')))
-           AS params
-  FROM s4),
-c AS (
-  SELECT doc_id, url,
-         prefix || path ||
-         CASE WHEN len(params) > 0 THEN '?' || array_to_string(params, '&')
-              ELSE '' END AS canon
-  FROM s5),
-t1 AS (
-  SELECT doc_id, url, canon,
-         regexp_extract(canon, '^([a-z][a-z0-9+.-]*://[^/?#]*)', 1) AS prefix
-  FROM c),
-t2 AS (
-  SELECT doc_id, url,
-         regexp_extract(prefix, '^[a-z][a-z0-9+.-]*://([^/?#]*)', 1)
-           AS hostport,
-         CASE WHEN canon[length(prefix)+1:] = '' THEN '/'
-              ELSE lower(canon[length(prefix)+1:]) END AS rest
-  FROM t1),
-t3 AS (
-  SELECT doc_id, url, rest,
-         regexp_extract(hostport, ':([0-9]+)$', 1) AS port,
-         regexp_replace(hostport, ':[0-9]+$', '') AS host
-  FROM t2),
-t4 AS (
-  SELECT doc_id, url, rest, port, host,
-         regexp_replace(host, '^www[0-9]*\.', '') AS bare
-  FROM t3),
-t5 AS (
-  SELECT doc_id, url, rest, port,
-         CASE WHEN len(string_split(bare, '.')) >= 2 THEN bare
-              ELSE host END AS host
-  FROM t4)
-SELECT doc_id, url,
-       array_to_string(list_reverse(string_split(host, '.')), ',') ||
-       CASE WHEN port <> '' THEN ':' || port ELSE '' END || ')' || rest
-         AS surt
-FROM t5
-"""
-
-
-def q_domain_priors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered-domain (eTLD+1) rollup (functions/domains.py): the
-    grouping key the per-source anti-dominance cap and domain quality
-    priors must use — subdomain fan-out (blog0-4.example.co.uk +
-    www.example.co.uk) folds into ONE publisher, two-label public
-    suffixes (co.uk, com.au) take the third label, IP literals and
-    single-label hosts pass through. The oracle restates the suffix rule
-    over the same literal suffix list."""
-    from wpextract_spark.functions.domains import registered_domain
-
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    host = (
-        F.when(
-            d % 6 == 0,
-            F.concat(
-                F.lit("blog"), (d % 5).cast("string"),
-                F.lit(".example.co.uk"),
-            ),
-        )
-        .when(d % 6 == 1, F.lit("www.example.co.uk"))
-        .when(
-            d % 6 == 2,
-            F.concat(
-                F.lit("shop"), (d % 7).cast("string"),
-                F.lit(".store.com.au"),
-            ),
-        )
-        .when(d % 6 == 3, F.lit("deep.sub.domain.example.org"))
-        .when(d % 6 == 4, F.lit("192.168.0.1"))
-        .otherwise(F.lit("localhost"))
-    )
-    return (
-        docs.select(registered_domain(host).alias("domain"), "n_chars")
-        .groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-    )
-
-
-def _oracle_domain_priors() -> str:
-    from wpextract_spark.functions.domains import MULTI_SUFFIXES
-
-    suffixes = ", ".join(f"'{s}'" for s in MULTI_SUFFIXES)
-    return rf"""
-WITH hosts AS (
-  SELECT doc_id, n_chars,
-         CASE doc_id % 6
-           WHEN 0 THEN 'blog' || (doc_id % 5) || '.example.co.uk'
-           WHEN 1 THEN 'www.example.co.uk'
-           WHEN 2 THEN 'shop' || (doc_id % 7) || '.store.com.au'
-           WHEN 3 THEN 'deep.sub.domain.example.org'
-           WHEN 4 THEN '192.168.0.1'
-           ELSE 'localhost' END AS host
-  FROM documents),
-lab AS (
-  SELECT n_chars,
-         lower(regexp_replace(host, '\.$', '')) AS h,
-         string_split(lower(regexp_replace(host, '\.$', '')), '.') AS labels
-  FROM hosts),
-reg AS (
-  SELECT n_chars,
-    CASE
-      WHEN regexp_matches(h, '^[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+$')
-           OR len(labels) <= 1 THEN h
-      WHEN len(labels) >= 3 AND
-           array_to_string(labels[len(labels)-1:], '.') IN ({suffixes})
-        THEN array_to_string(labels[len(labels)-2:], '.')
-      ELSE array_to_string(labels[len(labels)-1:], '.')
-    END AS domain
-  FROM lab)
-SELECT domain, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS total_chars
-FROM reg GROUP BY domain
-"""
-
-
-def q_domain_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-level link-graph rollup (operators/anchors.py::
-    domain_link_graph): page edges derive from lineitem keys with
-    subdomain-meshed co.uk sources and a www/.org + .co.uk dst mix, so
-    the eTLD+1 fold is doing real work (sub0-2.siteM.co.uk collapse into
-    siteM.co.uk; intra marks the self-promotion edges). One projection +
-    one hash agg on the domain pair. The oracle restates the host
-    extraction, the suffix rule over the same literal list, and the
-    rollup."""
-    from wpextract_spark.operators.anchors import domain_link_graph
-
-    li = _t(spark, sf_dir, "lineitem")
-    s = F.col("l_orderkey") % 50
-    t = F.col("l_partkey") % 40
-    src_url = F.concat(
-        F.lit("https://sub"), (s % 3).cast("string"),
-        F.lit(".site"), (s % 10).cast("string"),
-        F.lit(".co.uk/p/"), s.cast("string"),
-    )
-    dst_url = F.when(
-        F.col("l_partkey") % 2 == 0,
-        F.concat(
-            F.lit("https://www.example"), (t % 5).cast("string"),
-            F.lit(".org/x/"), t.cast("string"),
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit("https://site"), (t % 10).cast("string"),
-            F.lit(".co.uk/p/"), t.cast("string"),
-        )
-    )
-    return domain_link_graph(
-        li.select(src_url.alias("src_url"), dst_url.alias("dst_url"))
-    )
-
-
-def _sql_registered_domain(host_expr: str) -> str:
-    """DuckDB restatement of functions/domains.py::registered_domain over
-    a host-valued SQL expression (same literal suffix list)."""
-    from wpextract_spark.functions.domains import MULTI_SUFFIXES
-
-    suffixes = ", ".join(f"'{s}'" for s in MULTI_SUFFIXES)
-    h = f"lower(regexp_replace({host_expr}, '\\.$', ''))"
-    labels = f"string_split({h}, '.')"
-    return rf"""CASE
-      WHEN regexp_matches({h}, '^[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+$')
-           OR len({labels}) <= 1 THEN {h}
-      WHEN len({labels}) >= 3 AND
-           array_to_string({labels}[len({labels})-1:], '.') IN ({suffixes})
-        THEN array_to_string({labels}[len({labels})-2:], '.')
-      ELSE array_to_string({labels}[len({labels})-1:], '.')
-    END"""
-
-
-def _oracle_domain_link_graph() -> str:
-    def host(col: str) -> str:
-        return (
-            f"lower(regexp_extract({col}, "
-            r"'^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#]*@)?(\[[^\]/?#]*\]|[^/:?#]*)', 1))"
-        )
-
-    src_rule = _sql_registered_domain(host("src_url"))
-    dst_rule = _sql_registered_domain(host("dst_url"))
-    return rf"""
-WITH e AS (
-  SELECT 'https://sub' || (l_orderkey % 50) % 3 || '.site' ||
-         (l_orderkey % 50) % 10 || '.co.uk/p/' || (l_orderkey % 50)
-           AS src_url,
-         CASE WHEN l_partkey % 2 = 0
-           THEN 'https://www.example' || (l_partkey % 40) % 5 || '.org/x/' ||
-                (l_partkey % 40)
-           ELSE 'https://site' || (l_partkey % 40) % 10 || '.co.uk/p/' ||
-                (l_partkey % 40) END AS dst_url
-  FROM lineitem),
-doms AS (
-  SELECT {src_rule} AS src_domain,
-         {dst_rule} AS dst_domain
-  FROM e)
-SELECT src_domain, dst_domain, count(*)::BIGINT AS n_links,
-       src_domain = dst_domain AS intra
-FROM doms GROUP BY src_domain, dst_domain
-"""
-
-
 def q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence segmentation census (operators/sentences.py): documents
     get deterministic sentence-y text mixing protected abbreviations
@@ -3032,74 +2651,6 @@ FROM sents
 """
 
 
-def q_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sentence-boundary-respecting chunker (operators/sentences.py::
-    sentence_chunks, chunk_chars=80): constructed five-sentence docs span
-    three chunks, so the offset window, the floor placement, and the
-    position-sorted rebuild all do real work. The oracle restates the
-    split, the cumulative start offsets, and the ORDER BY string
-    rebuild."""
-    from wpextract_spark.operators.sentences import sentence_chunks
-
-    docs = _t(spark, sf_dir, "documents")
-    text = F.concat(
-        F.substring(F.col("text"), 1, 35), F.lit(". "),
-        F.substring(F.col("text"), 36, 45), F.lit("! "),
-        F.substring(F.col("text"), 81, 30), F.lit("? "),
-        F.substring(F.col("text"), 111, 60), F.lit(". tail "),
-        (F.col("doc_id") % 5).cast("string"),
-    )
-    return sentence_chunks(
-        docs.where(F.col("text").isNotNull())
-        .select("doc_id", text.alias("text")),
-        chunk_chars=80,
-    )
-
-
-ORACLE_SENTENCE_CHUNKS = r"""
-WITH made AS (
-  SELECT doc_id,
-         substr(text, 1, 35) || '. ' || substr(text, 36, 45) || '! ' ||
-         substr(text, 81, 30) || '? ' || substr(text, 111, 60) ||
-         '. tail ' || (doc_id % 5) AS text
-  FROM documents WHERE text IS NOT NULL),
-prot AS (
-  SELECT doc_id,
-         regexp_replace(
-           regexp_replace(replace(text, chr(1), ''), '\b([ei])\.([ge])\.',
-                          '\1' || chr(1) || '\2' || chr(1), 'g'),
-           '\b(Mr|Mrs|Ms|Dr|Prof|St|vs|etc|No|Fig|Jr|Sr|Inc|Ltd|cf|al)\.',
-           '\1' || chr(1), 'g') AS p
-  FROM made),
-sents AS (
-  SELECT doc_id,
-         list_filter(
-           list_transform(
-             regexp_extract_all(p, '[^.!?]+[.!?]+|[^.!?]+$'),
-             s -> trim(replace(s, chr(1), '.'))),
-           s -> s != '') AS arr
-  FROM prot),
-exploded AS (
-  SELECT doc_id, u.pos AS pos, arr[u.pos] AS sentence
-  FROM sents, LATERAL unnest(generate_series(1, len(arr))) AS u(pos)),
-placed AS (
-  SELECT doc_id, pos, sentence,
-         coalesce(sum(length(sentence) + 1) OVER (
-           PARTITION BY doc_id ORDER BY pos
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS start_off
-  FROM exploded),
-chunks AS (
-  SELECT doc_id, (start_off // 80)::BIGINT AS chunk_id,
-         count(*)::BIGINT AS n_sentences,
-         string_agg(sentence, ' ' ORDER BY pos) AS chunk_text
-  FROM placed GROUP BY doc_id, start_off // 80)
-SELECT doc_id, chunk_id, n_sentences,
-       length(chunk_text)::BIGINT AS chunk_len, chunk_text
-FROM chunks
-"""
-
-
 QUERIES = {
     # --- Stalest-first driver-window ordering (maintained by
     # scripts/rotate_registry.py): the correctness driver checks
@@ -3131,10 +2682,8 @@ QUERIES = {
     "q_publish_dates": q_publish_dates,
     "q_warc_extract": q_warc_extract,
     "q_url_filter": q_url_filter,
-    "q_chunk_documents": q_chunk_documents,
     "q_source_mix": q_source_mix,
     "q_snapshot_diff": q_snapshot_diff,
-    "q_anchor_texts": q_anchor_texts,
     "q_page_metadata": q_page_metadata,
     "q_line_dedup": q_line_dedup,
     "q_pii_scrub": q_pii_scrub,
@@ -3152,18 +2701,14 @@ QUERIES = {
     "q_corpus_profile": q_corpus_profile,
     "q_classify_changes": q_classify_changes,
     "q_containment_dups": q_containment_dups,
-    "q_surt_keys": q_surt_keys,
     "q_sentence_stats": q_sentence_stats,
-    "q_domain_priors": q_domain_priors,
-    "q_domain_link_graph": q_domain_link_graph,
-    "q_sentence_chunks": q_sentence_chunks,
-    # ---- below the 50-entry driver window ----
     "q_compression_signal": q_compression_signal,
     "q_repetition_stats": q_repetition_stats,
     "q_gopher_quality": q_gopher_quality,
     "q_dedup_clusters": q_dedup_clusters,
     "q_lang_id_ngram": q_lang_id_ngram,
     "q_extract_text_kernel": q_extract_text_kernel,
+    # ---- below the 50-entry driver window ----
     "q_extract_link_spans": q_extract_link_spans,
     "q_extract_locale": q_extract_locale,
     "q_registry_last_wins": q_registry_last_wins,
@@ -3179,11 +2724,7 @@ QUERIES = {
 }
 
 ORACLES = {
-    "q_surt_keys": ORACLE_SURT_KEYS,
     "q_sentence_stats": ORACLE_SENTENCE_STATS,
-    "q_domain_priors": _oracle_domain_priors(),
-    "q_domain_link_graph": _oracle_domain_link_graph(),
-    "q_sentence_chunks": ORACLE_SENTENCE_CHUNKS,
     "q_extract_text_kernel": ORACLE_EXTRACT_TEXT,
     "q_extract_link_spans": ORACLE_LINK_SPANS,
     "q_extract_locale": ORACLE_LOCALE,
@@ -3208,10 +2749,8 @@ ORACLES = {
     "q_lang_id_ngram": _oracle_lang_id_ngram(),
     "q_warc_extract": ORACLE_WARC_EXTRACT,
     "q_url_filter": ORACLE_URL_FILTER,
-    "q_chunk_documents": ORACLE_CHUNK_DOCUMENTS,
     "q_source_mix": ORACLE_SOURCE_MIX,
     "q_snapshot_diff": ORACLE_SNAPSHOT_DIFF,
-    "q_anchor_texts": ORACLE_ANCHOR_TEXTS,
     "q_page_metadata": ORACLE_PAGE_METADATA,
     "q_robots_filter": ORACLE_ROBOTS_FILTER,
     "q_redirect_chains": ORACLE_REDIRECT_CHAINS,

@@ -48,10 +48,6 @@ def safe(name: str) -> str:
     return name.replace(".", "__")
 
 
-def unsafe(name: str) -> str:
-    return name.replace("__", ".")
-
-
 # Reference export schemas (EXPORT_COLUMNS / RENAME_COLUMNS per entity module).
 POSTS_EXPORT = [
     "author", "categories", "comment_status", "content.rendered", "content.text",

@@ -84,17 +84,6 @@ def warc_to_pages(records: DataFrame) -> DataFrame:
     )
 
 
-def wet_to_docs(records: DataFrame) -> DataFrame:
-    """Project WET ``conversion`` records onto (url, warc_ts, text)."""
-    return records.where(F.col("rec_type") == "conversion").select(
-        "url",
-        F.to_timestamp_ntz(F.col("warc_date"), F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")).alias(
-            "warc_ts"
-        ),
-        F.decode(F.col("payload"), "UTF-8").alias("text"),
-    )
-
-
 def warc_build_udf():
     """(doc_id, source, text) -> deterministic single-doc .warc.gz payload
     (sources/warcgen.py) — the query-side builder."""
