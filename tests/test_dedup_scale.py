@@ -1,54 +1,6 @@
-"""Scale-hardening semantics of the near-dup operators: 64-bit SimHash
-signatures and the mega-bucket guards that keep one degenerate bucket from
-turning the candidate self-join quadratic."""
-
-import pytest
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog near the river bank"),
-        (2, "the quick brown fox jumps over the lazy dog near the river bank"),
-        (3, "completely different words about spark shuffles and parquet scans"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_simhash_finds_exact_pair_at_64_bits(docs):
-    from wpextract_spark.operators.dedup import simhash_near_dup_pairs
-
-    pairs = simhash_near_dup_pairs(docs).collect()
-    assert [(r["id_a"], r["id_b"], r["hamming"]) for r in pairs] == [(1, 2, 0)]
-
-
-def test_simhash_signature_uses_upper_bits(spark):
-    """Bits 32..63 must come from the second hash, not degenerate to 0 —
-    otherwise half the bands are constant-key mega buckets."""
-    from wpextract_spark.operators.dedup import simhash
-
-    df = spark.createDataFrame(
-        [(i, f"word{i} token{i} item{i} thing{i}") for i in range(40)],
-        "doc_id long, text string",
-    )
-    sigs = [r["simhash"] for r in simhash(df, bits=64).collect()]
-    assert all(len(s) == 64 for s in sigs)
-    upper_halves = {s[32:] for s in sigs}
-    assert len(upper_halves) > 1  # not constant across docs
-
-
-def test_simhash_mega_bucket_cap(spark):
-    from wpextract_spark.operators.dedup import simhash_near_dup_pairs
-
-    n = 12
-    df = spark.createDataFrame(
-        [(i, "same boilerplate text repeated on every page") for i in range(n)],
-        "doc_id long, text string",
-    )
-    uncapped = simhash_near_dup_pairs(df, max_bucket=None).count()
-    assert uncapped == n * (n - 1) // 2
-    capped = simhash_near_dup_pairs(df, max_bucket=5).count()
-    assert capped == 0  # every chunk bucket holds all 12 docs -> dropped
+"""Edge cases of the corpus operators: n-gram and stopword language ID on
+tiny or whitespace-only text, n-gram Jaccard on documents shorter than n,
+the salted join's join-type guard, and containment dedup."""
 
 
 def test_lang_id_ngram_and_bpe_edges(spark):

@@ -102,3 +102,79 @@ def test_every_package_module_is_reachable_from_an_entry_point():
     assert sorted(set(modules) - seen) == ["wpextract_spark.pywarm_daemon"]
     session = (pkg / "session.py").read_text()
     assert '"spark.python.daemon.module", "wpextract_spark.pywarm_daemon"' in session
+
+
+PYFILES_PROBE = """
+import sys
+
+from pyspark.sql import functions as F
+
+from wpextract_spark.operators.extract import content_extract_udf
+from wpextract_spark.session import default_builder
+
+spark = default_builder("pyfiles-probe", master=sys.argv[1]).getOrCreate()
+pages = spark.createDataFrame(
+    [(i, f"<html><body><p>page {i}</p></body></html>", f"https://example.org/{i}/")
+     for i in range(20)],
+    "i long, html string, url string",
+).repartition(4)
+out = pages.select("i", content_extract_udf()("html", "url").alias("r"))
+rows = out.select("i", "r.text", "r.error").orderBy("i").collect()
+print(rows[7].text, sum(r.error is not None for r in rows))
+spark.stop()
+"""
+
+
+def test_pyfiles_zip_runs_udfs_on_separate_executors(tmp_path):
+    """The deployment shape end to end: ``spark-submit --py-files`` on
+    ``local-cluster``, whose two executors are their own JVMs and see the
+    package only through the zip. A session from ``default_builder`` must run
+    the content kernel there, and stopping it must leave no executor or
+    Python worker behind."""
+    import os
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    zip_path = tmp_path / "wpx.zip"
+    subprocess.run(
+        [sys.executable, str(REPO / "scripts" / "make_pyfiles.py"), str(zip_path)],
+        check=True,
+        capture_output=True,
+    )
+    probe = tmp_path / "probe.py"
+    probe.write_text(PYFILES_PROBE)
+    # Each executor runs in $SPARK_HOME/work/<app>/<n>; a private Spark home
+    # of symlinks keeps those directories inside tmp_path.
+    home = tmp_path / "spark_home"
+    home.mkdir()
+    for entry in Path(_find_spark_home()).iterdir():
+        if entry.name != "work":
+            (home / entry.name).symlink_to(entry)
+    work = home / "work"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        SPARK_HOME=str(home),
+        PYSPARK_PYTHON=sys.executable,
+        PYSPARK_DRIVER_PYTHON=sys.executable,
+    )
+    master = "local-cluster[2,1,1024]"
+    res = subprocess.run(
+        ["timeout", "-k", "10", "300", str(home / "bin" / "spark-submit"), "--master", master,
+         "--py-files", str(zip_path), str(probe), master],
+        capture_output=True,
+        text=True,
+        cwd=tmp_path,  # make sure the repo checkout isn't on the path
+        env=env,
+    )
+    assert res.returncode == 0, res.stderr[-4000:]
+    assert res.stdout.strip().splitlines()[-1] == "page 7 0"
+
+    def _cwd(pid: str) -> str:
+        try:
+            return os.readlink(f"/proc/{pid}/cwd")
+        except OSError:
+            return ""
+
+    assert any(work.glob("app-*/*/stderr")), "no executor ran"
+    leftover = [p for p in os.listdir("/proc") if p.isdigit() and _cwd(p).startswith(str(work))]
+    assert leftover == []

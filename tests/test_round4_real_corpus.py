@@ -12,14 +12,12 @@ import pytest
 
 from wpextract_spark.htmlkit import parse_html
 from wpextract_spark.kernel.markdown import render_markdown
-from wpextract_spark.kernel.mojibake import fix_mojibake
 from wpextract_spark.kernel.pagemeta import extract_alternates
 from wpextract_spark.kernel.structdata import (
     extract_jsonld,
     extract_publish_signals,
     jsonld_summary,
 )
-from wpextract_spark.operators.textnorm import _dedup_key, _normalize
 
 E2E = Path(__file__).parent / "data" / "e2e"
 
@@ -62,25 +60,6 @@ def test_structdata_kernels_total_on_real_posts(posts):
         signals = extract_publish_signals(root)
         assert set(signals) == {"jsonld_date", "meta_time", "time_attr"}
         assert isinstance(extract_alternates(root), list)
-
-
-def test_textnorm_and_mojibake_preserve_real_text(posts):
-    import pandas as pd
-
-    gold = json.load(open(E2E / "extract_out" / "posts.json"))
-    texts = [p["content"]["text"] for p in gold if p["content"]["text"]]
-    assert texts
-    series = pd.Series(texts)
-    normalized = _normalize(series)
-    keys = _dedup_key(series)
-    for raw, norm, key in zip(texts, normalized, keys):
-        # already-extracted text is clean: canonicalization may fold
-        # typography but must keep the words (same letter-digit skeleton
-        # modulo case/accents/width).
-        assert fix_mojibake(raw) == raw  # no false-positive "repair"
-        assert norm  # never emptied
-        assert key == key.strip()
-        assert len(key) <= len(raw) + raw.count(" ")
 
 
 def test_real_scrape_pages_alternates(posts):

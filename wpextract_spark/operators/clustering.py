@@ -1,6 +1,6 @@
 """Graph clustering for dedup: connected components over near-dup pairs.
 
-Pairwise near-duplicate detection (MinHash LSH / SimHash / n-gram Jaccard) emits
+Pairwise near-duplicate detection (MinHash LSH / n-gram Jaccard / containment) emits
 *edges*; an actual dedup pass needs *clusters* — the transitive closure of
 "is a near-dup of" — plus one canonical survivor per cluster. This module
 turns a pair DataFrame into a (node, cluster_id) assignment with the

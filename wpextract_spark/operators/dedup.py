@@ -259,118 +259,6 @@ def containment_pairs(
     )
 
 
-def simhash(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 16
-) -> DataFrame:
-    """SimHash signature (as a 0/1 string) from distinct-word bit votes.
-
-    Bit ``b`` of word ``w`` is the high bit of hex nibble ``b`` of
-    ``md5(w)`` (i.e. nibble in [8..f]) — chosen so the identical expression
-    runs in SQL engines for oracle checks. md5 has 32 nibbles, so signatures
-    wider than 32 bits draw nibbles 32.. from a second independent hash,
-    ``md5('#' || w)`` (same construction in the oracles). Output:
-    (id, simhash string).
-
-    The signature is a per-row column expression: no aggregation, no
-    shuffle. Hash the distinct-word array once, then bit ``b``'s vote is
-    ``2 * |words with nibble b set| - |words|`` (identical to the classic
-    per-word +1/-1 sum) via one ``filter``/``size`` scan per bit — cheaper
-    than folding per-word vote arrays, which allocates a bits-length array
-    per word.
-    """
-    if bits > 64:
-        raise ValueError("bits > 64 not supported (two md5s give 64 nibbles)")
-    words = F.array_distinct(split_words(text_col))
-
-    def _h(w):
-        return F.concat(F.md5(w), F.md5(F.concat(F.lit("#"), w))) if bits > 32 else F.md5(w)
-
-    hashes = F.transform(words, _h)
-    n = F.size(hashes)
-
-    def _bit(b: int):
-        set_count = F.size(
-            F.filter(hashes, lambda h: h.substr(b + 1, 1).isin(*"89abcdef"))
-        )
-        return F.when(set_count * 2 - n > 0, F.lit("1")).otherwise(F.lit("0"))
-
-    return docs.select(
-        F.col(id_col), F.concat(*[_bit(b) for b in range(bits)]).alias("simhash")
-    )
-
-
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 64,
-    bands: int = 8,
-    max_hamming: int = 3,
-    max_bucket: int | None = 100,
-) -> DataFrame:
-    """SimHash near-duplicate pairs: banded bucketing + exact Hamming verify.
-
-    Split the ``bits``-bit signature into ``bands`` chunks; by pigeonhole,
-    any pair within Hamming distance < ``bands`` shares at least one intact
-    chunk, so candidates come from equality joins on chunk values (no
-    quadratic sweep), then the full Hamming distance filters to
-    <= ``max_hamming``. Output: (id_a, id_b, hamming).
-
-    Scale shape: the chunk key space is ``bands * 2^(bits/bands)`` — at the
-    old 16/2 default that was 512 keys, i.e. bucket width O(N/512) and a
-    quadratic pair blowup at corpus scale. The 64/8 default gives 8 * 2^8 =
-    2048 structurally *selective* keys (random docs rarely agree on 8
-    signature bits), and ``max_bucket`` drops degenerate chunk buckets
-    (boilerplate/empty text collapses signatures) before the self-join,
-    exactly like :func:`lsh_candidate_pairs` — bounding the worst case at
-    ``keys * max_bucket^2 / 2`` pairs. Capped buckets lose only pairs the
-    remaining ``bands - 1`` chunks can still propose. Pass None to disable.
-    """
-    if bits % bands:
-        raise ValueError("bits must be divisible by bands")
-    width = bits // bands
-    sig = simhash(docs, id_col, text_col, bits)
-    chunk_cols = [
-        F.concat_ws("|", F.lit(b), F.substring("simhash", b * width + 1, width))
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        F.col(id_col), F.col("simhash"), F.explode(F.array(*chunk_cols)).alias("chunk")
-    )
-    if max_bucket is not None:
-        bucket_n = F.count("*").over(Window.partitionBy("chunk"))
-        banded = banded.withColumn("_n", bucket_n).where(F.col("_n") <= max_bucket).drop("_n")
-    left = banded.alias("l")
-    right = banded.alias("r")
-    # Hamming via popcount(xor) over 32-bit segments of the signature: a few
-    # JVM ops per pair instead of `bits` chained substring comparisons (~10x
-    # on the candidate sweep, which dominates this operator). Segmenting keeps
-    # the conv()->long exact for any width (a full 64-bit string would
-    # overflow long's sign bit).
-    n_seg = (bits + 31) // 32
-
-    def _seg(col: str, s: int):
-        return F.conv(F.substring(F.col(col), s * 32 + 1, 32), 2, 10).cast("long")
-
-    hamming = sum(
-        F.bit_count(_seg("l.simhash", s).bitwiseXOR(_seg("r.simhash", s)))
-        for s in range(n_seg)
-    )
-    return (
-        left.join(right, F.col("l.chunk") == F.col("r.chunk"))
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        # Filter BEFORE the distinct: the near-dup predicate kills ~99% of
-        # candidate pairs, so the pair-dedup shuffle moves only survivors.
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 # ---------------------------------------------------------------------------
 # Incremental dedup against an already-ingested corpus (bloom prefilter)
 # ---------------------------------------------------------------------------

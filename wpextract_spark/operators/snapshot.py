@@ -33,8 +33,8 @@ def snapshot_diff(
     Output: ``(id, old_fp, new_fp, status)`` with status one of ``added``
     (only in ``new``), ``removed`` (only in ``old``), ``changed`` (both,
     fingerprints differ), ``unchanged``. ``fingerprint`` defaults to
-    ``md5(text_col)``; pass any deterministic column expression (e.g. a
-    simhash for near-identity tolerance).
+    ``md5(text_col)``; pass any deterministic column expression to choose
+    what counts as a change.
 
     Precondition: ``id_col`` is unique per snapshot (run
     ``corpusfilters.url_dedup`` first on raw crawls) — a full-outer join on

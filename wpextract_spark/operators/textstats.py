@@ -12,7 +12,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.types import StringType
 
 from wpextract_spark.operators.dedup import WS, split_words
@@ -203,44 +202,3 @@ def corpus_profile(
             F.max("_nt").alias("max_tokens"),
         )
     )
-
-
-COMPRESSION_TYPE = T.StructType(
-    [
-        T.StructField("raw_len", T.LongType()),
-        T.StructField("zlib_len", T.LongType()),
-        T.StructField("ratio", T.DoubleType()),
-    ]
-)
-
-
-def compression_signal_udf(level: int = 6):
-    """(text) -> struct<raw_len, zlib_len, ratio>: the compressibility
-    quality signal (Dolma/RefinedWeb-style).
-
-    Templated or repetitive text compresses far below natural prose, so a
-    LOW zlib ratio flags junk the heuristic gates miss.
-    Lengths are UTF-8 bytes; ``ratio = zlib_len / raw_len`` (null for empty
-    text). Deterministic for a fixed zlib level; not SQL-expressible, so
-    the driver records a rows-only check — the pytest gate pins values on
-    known-entropy corpora instead. Map-side, shuffle-free, Arrow-batched.
-    """
-    import zlib
-
-    def _one(value):
-        if value is None:
-            return (None, None, None)
-        raw = value.encode("utf-8")
-        comp = len(zlib.compress(raw, level))
-        if not raw:
-            return (0, comp, None)
-        return (len(raw), comp, comp / len(raw))
-
-    @F.pandas_udf(COMPRESSION_TYPE)
-    def _signal(text: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            [_one(value) for value in text],
-            columns=["raw_len", "zlib_len", "ratio"],
-        )
-
-    return _signal

@@ -7,8 +7,9 @@ hash with columns sorted by name):
 * floats are rounded to 6 decimals on both sides;
 * hashing uses md5-over-UTF-8 (identical in Spark and DuckDB).
 
-Queries marked NO_ORACLE are genuinely non-SQL-expressible (Python kernel
-semantics); the driver records a weaker rows-only check for them.
+Every query has a DuckDB oracle; tests/test_plans.py keeps the two dicts
+in step and the registry at most 50 entries long, so the driver, which runs
+the first 50, checks every query each round.
 """
 
 from __future__ import annotations
@@ -18,11 +19,9 @@ from pyspark.sql import functions as F
 
 from wpextract_spark.operators.dedup import (
     exact_duplicate_groups,
-    simhash_near_dup_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash,
 )
 from wpextract_spark.operators.extract import content_extract_udf, locale_udf
 from wpextract_spark.operators.skew import salted_agg, salted_join
@@ -140,73 +139,6 @@ SELECT doc_id,
        CASE WHEN doc_id % 3 > 0
             THEN 'https://example.org/p/' || (doc_id + 1)
             ELSE NULL END AS first_internal_href
-FROM documents
-"""
-
-
-def q_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Head-metadata extraction (title / description / Open Graph /
-    canonical / robots / declared lang) via the real DOM kernel on
-    constructed pages — the crawl-triage stage that gates retention and
-    routes languages before the heavy content kernel runs."""
-    from wpextract_spark.operators.extract import page_meta_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    robots = (
-        F.when(did % 4 == 0, F.lit('<meta name="robots" content="noindex, follow">'))
-        .when(did % 4 == 1, F.lit('<meta name="robots" content="none">'))
-        .when(did % 4 == 2, F.lit('<meta name="robots" content="index, NOFOLLOW">'))
-        .otherwise(F.lit(""))
-    )
-    canonical = F.when(
-        did % 2 == 0,
-        F.concat(
-            F.lit('<link rel="canonical" href="https://example.org/c/'),
-            did.cast("string"),
-            F.lit('/">'),
-        ),
-    ).otherwise(F.lit(""))
-    html = F.concat(
-        F.lit('<html lang="'),
-        F.col("lang"),
-        F.lit('"><head><title>Doc  '),  # double space: title squash is real
-        did.cast("string"),
-        F.lit("</title>"),
-        F.lit('<meta name="description" content="d'),
-        (did % 6).cast("string"),
-        F.lit('">'),
-        F.lit('<meta property="og:title" content="OG '),
-        did.cast("string"),
-        F.lit('">'),
-        canonical,
-        robots,
-        F.lit("</head><body><p>x</p></body></html>"),
-    )
-    meta = page_meta_udf()(html)
-    return docs.select(
-        "doc_id",
-        meta["title"].alias("title"),
-        meta["description"].alias("description"),
-        meta["og_title"].alias("og_title"),
-        meta["canonical"].alias("canonical"),
-        meta["robots_noindex"].alias("robots_noindex"),
-        meta["robots_nofollow"].alias("robots_nofollow"),
-        meta["lang"].alias("decl_lang"),
-    )
-
-
-ORACLE_PAGE_METADATA = """
-SELECT doc_id,
-       'Doc ' || doc_id AS title,
-       'd' || (doc_id % 6) AS description,
-       'OG ' || doc_id AS og_title,
-       CASE WHEN doc_id % 2 = 0
-            THEN 'https://example.org/c/' || doc_id || '/'
-            ELSE NULL END AS canonical,
-       doc_id % 4 IN (0, 1) AS robots_noindex,
-       doc_id % 4 IN (1, 2) AS robots_nofollow,
-       lang AS decl_lang
 FROM documents
 """
 
@@ -337,204 +269,6 @@ SELECT l.src,
        t.src IS NULL AS resolved
 FROM last l LEFT JOIN (SELECT DISTINCT src FROM edges) t ON l.cur = t.src
 WHERE l.rn = 1
-"""
-
-
-def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode canonicalization: NFC + typographic-punctuation fold +
-    zero-width/control strip + horizontal-whitespace collapse over text
-    decorated with every dirty-web-text species (curly quotes, combining
-    accents, NBSP, BEL, ZWSP, CRLF, VT). The oracle is an independent
-    DuckDB reimplementation (nfc_normalize/translate/regexp chains), not a
-    restated construction."""
-    from wpextract_spark.operators.textnorm import normalize_text_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    deco = (
-        F.when(did % 6 == 0, F.lit("“Quo’s” – café — A B"))
-        .when(did % 6 == 1, F.lit("xy​ z\t\tw"))
-        .when(did % 6 == 2, F.lit("wait… café ‘q’"))  # decomposed e+U+0301
-        .when(did % 6 == 3, F.lit("  lead  trail  "))
-        .when(did % 6 == 4, F.lit("line1\r\n  line23"))
-        .otherwise(F.lit("plain"))
-    )
-    dirty = F.concat(F.col("text"), F.lit(" "), deco)
-    return docs.select("doc_id", normalize_text_udf()(dirty).alias("clean"))
-
-
-ORACLE_NORMALIZE_TEXT = """
-WITH dirty AS (
-  SELECT doc_id,
-         text || ' ' || CASE doc_id % 6
-           WHEN 0 THEN '“Quo’s” – café — A B'
-           WHEN 1 THEN 'x' || chr(7) || 'y​ z' || chr(9) || chr(9) || 'w'
-           WHEN 2 THEN 'wait… cafe' || chr(769) || ' ‘q’'
-           WHEN 3 THEN '  lead  trail  '
-           WHEN 4 THEN 'line1' || chr(13) || chr(10) || '  line2' || chr(11) || '3'
-           ELSE 'plain' END AS s
-  FROM documents)
-SELECT doc_id,
-       trim(regexp_replace(
-         regexp_replace(
-           translate(replace(nfc_normalize(s), '…', '...'),
-                     ' ‘’“”–—​‌‍﻿',
-                     ' ''''""--'),
-           '[\\x00-\\x08\\x0e-\\x1f\\x7f]', '', 'g'),
-         '[ \\t\\r\\f\\v]+', ' ', 'g')) AS clean
-FROM dirty
-"""
-
-
-def q_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style dedup keys: two surface variants per document — one
-    accented/lowercase, one shouting with extra punctuation and an NBSP —
-    must collapse to ONE key per document (case/accent/punct/digit
-    invariance), then a JVM groupBy turns keys into dedup verdicts. The
-    oracle rebuilds the key with strip_accents/lower/regexp chains."""
-    from wpextract_spark.operators.textnorm import dedup_key_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    v0 = docs.select(
-        (did * 2).alias("vid"),
-        F.concat(F.lit("élève: "), F.col("text")).alias("s"),
-    )
-    v1 = docs.select(
-        (did * 2 + 1).alias("vid"),
-        F.concat(
-            F.lit("ELEVE "), F.upper(F.col("text")), F.lit(" !! ")
-        ).alias("s"),
-    )
-    keyed = v0.unionAll(v1).select(
-        "vid", dedup_key_udf()(F.col("s")).alias("dkey")
-    )
-    return keyed.groupBy("dkey").agg(
-        F.count("*").alias("n_docs"), F.min("vid").alias("keep_id")
-    )
-
-
-ORACLE_DEDUP_KEYS = """
-WITH variants AS (
-  SELECT doc_id * 2 AS vid, 'élève: ' || text AS s FROM documents
-  UNION ALL
-  SELECT doc_id * 2 + 1, 'ELEVE ' || upper(text) || ' !! ' FROM documents
-),
-keyed AS (
-  SELECT vid,
-         trim(regexp_replace(regexp_replace(regexp_replace(
-           lower(strip_accents(s)),
-           '[0-9]', '0', 'g'),
-           '[^a-z0 \\t\\n\\r\\f\\v]', '', 'g'),
-           '[ \\t\\n\\r\\f\\v]+', ' ', 'g')) AS dkey
-  FROM variants)
-SELECT dkey, count(*) AS n_docs, min(vid) AS keep_id
-FROM keyed GROUP BY dkey
-"""
-
-
-def q_fix_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Encoding repair: UTF-8-decoded-as-cp1252 mojibake unwound (single and
-    double), with the two conservative negative controls — clean accented
-    text never touched, and a stray € (invalid as a UTF-8 continuation
-    start) aborting the whole-string repair. Oracle restates the known
-    repaired forms of the constructed corruption."""
-    from wpextract_spark.operators.encoding import fix_mojibake_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    deco = (
-        F.when(did % 6 == 0, F.lit("cafÃ© crawl"))
-        .when(did % 6 == 1, F.lit("ÃƒÂ© twice"))
-        .when(did % 6 == 2, F.lit("déjà vu"))
-        .when(did % 6 == 3, F.lit("dealâ€”done"))
-        .when(did % 6 == 4, F.lit("€99 caffÃ¨"))
-        .otherwise(F.lit("plain ascii"))
-    )
-    dirty = F.concat(F.col("text"), F.lit(" "), deco)
-    res = fix_mojibake_udf()(dirty)
-    return docs.select(
-        "doc_id",
-        res["fixed"].alias("fixed"),
-        res["changed"].alias("changed"),
-    )
-
-
-ORACLE_FIX_MOJIBAKE = """
-SELECT doc_id,
-       text || ' ' || CASE doc_id % 6
-         WHEN 0 THEN 'café crawl'
-         WHEN 1 THEN 'é twice'
-         WHEN 2 THEN 'déjà vu'
-         WHEN 3 THEN 'deal—done'
-         WHEN 4 THEN '€99 caffÃ¨'
-         ELSE 'plain ascii' END AS fixed,
-       doc_id % 6 IN (0, 1, 3) AS changed
-FROM documents
-"""
-
-
-def q_render_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structure-preserving HTML→Markdown over the real DOM kernel:
-    headings, lists with inline emphasis, blockquotes, fenced code + hr,
-    pipe tables and links — one construction variant per feature family,
-    markdown restated closed-form in the oracle."""
-    from wpextract_spark.operators.extract import markdown_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    ds = did.cast("string")
-    html = (
-        F.when(
-            did % 5 == 0,
-            F.concat(
-                F.lit("<h2>Doc "), ds, F.lit("</h2><p>"),
-                F.col("text"), F.lit("</p>"),
-            ),
-        )
-        .when(
-            did % 5 == 1,
-            F.concat(
-                F.lit("<ul><li>item "), ds,
-                F.lit("</li><li>has <strong>bold</strong></li></ul>"),
-            ),
-        )
-        .when(
-            did % 5 == 2,
-            F.concat(
-                F.lit("<blockquote><p>"), F.col("text"),
-                F.lit("</p></blockquote>"),
-            ),
-        )
-        .when(
-            did % 5 == 3,
-            F.concat(F.lit("<pre>x = "), ds, F.lit("</pre><hr><p>done</p>")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("<table><tr><th>k</th><th>v</th></tr><tr><td>id</td><td>"),
-                ds,
-                F.lit('</td></tr></table><p>See <a href="/p/'),
-                ds, F.lit('">post '), ds, F.lit("</a>.</p>"),
-            )
-        )
-    )
-    return docs.select("doc_id", markdown_udf()(html).alias("markdown"))
-
-
-ORACLE_RENDER_MARKDOWN = """
-SELECT doc_id,
-  CASE doc_id % 5
-    WHEN 0 THEN '## Doc ' || doc_id || chr(10) || chr(10) || text
-    WHEN 1 THEN '- item ' || doc_id || chr(10) || '- has **bold**'
-    WHEN 2 THEN '> ' || text
-    WHEN 3 THEN '```' || chr(10) || 'x = ' || doc_id || chr(10) || '```'
-                || chr(10) || chr(10) || '---' || chr(10) || chr(10) || 'done'
-    ELSE '| k | v |' || chr(10) || '| --- | --- |' || chr(10)
-         || '| id | ' || doc_id || ' |' || chr(10) || chr(10)
-         || 'See [post ' || doc_id || '](/p/' || doc_id || ').'
-  END AS markdown
-FROM documents
 """
 
 
@@ -694,273 +428,6 @@ SELECT doc_id,
          WHEN 2 THEN 'https://h2/map.xml' END AS sitemaps,
        CASE doc_id % 4 WHEN 0 THEN 2 WHEN 2 THEN 1 ELSE 0 END AS n_sitemaps,
        CASE doc_id % 4 WHEN 0 THEN CAST(1.5 AS DOUBLE) END AS crawl_delay
-FROM documents
-"""
-
-
-def q_compression_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressibility quality signal: zlib ratio over document text with a
-    repetitive decoration on every 3rd doc (which must compress visibly
-    harder). zlib is not SQL-expressible, so the oracle is
-    construction-derived (_oracle_compression_signal): expected
-    (raw_len, zlib_len, ratio) computed per doc_id with stdlib zlib over
-    the deterministic sf0.01 corpus at registry-build time, emitted as a
-    literal VALUES table — the same pattern as the extraction goldens.
-    Value semantics are additionally pinned by tests/test_textstats.py on
-    known-entropy corpora."""
-    from wpextract_spark.operators.textstats import compression_signal_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    # every 3rd doc gets highly repetitive padding: its ratio must drop.
-    padded = F.when(
-        did % 3 == 0, F.concat(F.col("text"), F.repeat(F.lit(" spam"), 40))
-    ).otherwise(F.col("text"))
-    res = compression_signal_udf()(padded)
-    return docs.select(
-        "doc_id",
-        res["raw_len"].alias("raw_len"),
-        res["zlib_len"].alias("zlib_len"),
-        res["ratio"].alias("ratio"),
-    )
-
-
-def _oracle_compression_signal(
-    sf_dir: str = "/root/testdata/sf0.01",
-) -> str:
-    """zlib is deterministic but not SQL-expressible, so the oracle is a
-    construction-derived golden: re-apply q_compression_signal's exact
-    padding rule to the deterministic sf0.01 corpus (the driver's
-    correctness scale) and compute (raw_len, zlib_len, ratio) with stdlib
-    zlib at registry-build time. Ratio literals carry full repr precision
-    so the double round-trips exactly through DuckDB."""
-    import zlib as _zlib
-
-    import duckdb as _duckdb
-
-    try:
-        rows = _duckdb.connect().execute(
-            "SELECT doc_id, text FROM read_parquet("
-            f"'{sf_dir}/documents.parquet') ORDER BY doc_id"
-        ).fetchall()
-    except Exception:  # pragma: no cover - corpus missing in exotic envs
-        return None
-    vals = []
-    for did, text in rows:
-        padded = text + " spam" * 40 if did % 3 == 0 else text
-        raw = padded.encode("utf-8") if padded is not None else b""
-        comp = len(_zlib.compress(raw, 6))
-        if padded is None:
-            vals.append(f"({did}, NULL, NULL, NULL)")
-        elif not raw:
-            vals.append(f"({did}, 0, {comp}, NULL)")
-        else:
-            vals.append(
-                f"({did}, {len(raw)}, {comp}, {comp / len(raw)!r})"
-            )
-    values = ",\n".join(vals)
-    return f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(raw_len AS BIGINT) AS raw_len,
-       CAST(zlib_len AS BIGINT) AS zlib_len,
-       CAST(ratio AS DOUBLE) AS ratio
-FROM (VALUES
-{values}
-) AS t(doc_id, raw_len, zlib_len, ratio)
-"""
-
-
-def q_jsonld_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """schema.org JSON-LD extraction: Yoast-style @graph envelope, simple
-    object with a bare-string author, a malformed block next to a valid
-    one (per-block skip), and a page with no JSON-LD at all."""
-    from wpextract_spark.operators.extract import jsonld_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    ds = did.cast("string")
-    open_tag = '<script type="application/ld+json">'
-    block = (
-        F.when(
-            did % 4 == 0,
-            F.concat(
-                F.lit(
-                    open_tag
-                    + '{"@context":"https://schema.org","@graph":['
-                    + '{"@type":"WebSite","name":"S"},'
-                    + '{"@type":"Article","headline":"Post '
-                ),
-                ds,
-                F.lit('","datePublished":"2024-01-02","author":'),
-                F.lit('{"@type":"Person","name":"Author '),
-                ds,
-                F.lit('"}}]}</script>'),
-            ),
-        )
-        .when(
-            did % 4 == 1,
-            F.concat(
-                F.lit(open_tag + '{"@type":"NewsArticle","headline":"News '),
-                ds,
-                F.lit('","author":"Jane"}</script>'),
-            ),
-        )
-        .when(
-            did % 4 == 2,
-            F.lit(
-                open_tag + "{oops</script>"
-                + open_tag + '[{"@type":"BreadcrumbList"}]</script>'
-            ),
-        )
-        .otherwise(F.lit("<script>var x=1;</script>"))
-    )
-    html = F.concat(
-        F.lit("<html><head>"), block, F.lit("</head><body><p>x</p></body></html>")
-    )
-    res = jsonld_udf()(html)
-    return docs.select(
-        "doc_id",
-        res["types"].alias("types"),
-        res["n_objects"].alias("n_objects"),
-        res["headline"].alias("headline"),
-        res["date_published"].alias("date_published"),
-        res["author"].alias("author"),
-    )
-
-
-ORACLE_JSONLD_EXTRACT = """
-SELECT doc_id,
-       CASE doc_id % 4
-         WHEN 0 THEN 'WebSite,Article'
-         WHEN 1 THEN 'NewsArticle'
-         WHEN 2 THEN 'BreadcrumbList' END AS types,
-       CASE doc_id % 4 WHEN 0 THEN 2 WHEN 1 THEN 1 WHEN 2 THEN 1
-                       ELSE 0 END AS n_objects,
-       CASE doc_id % 4
-         WHEN 0 THEN 'Post ' || doc_id
-         WHEN 1 THEN 'News ' || doc_id END AS headline,
-       CASE doc_id % 4 WHEN 0 THEN '2024-01-02' END AS date_published,
-       CASE doc_id % 4
-         WHEN 0 THEN 'Author ' || doc_id
-         WHEN 1 THEN 'Jane' END AS author
-FROM documents
-"""
-
-
-def q_hreflang_alternates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hreflang alternate discovery (the generic-web translation channel):
-    heads carry 3 / 1 / 0 rel=alternate links per variant, mixed-case
-    hreflang lowered, bare hreflang without href dropped, non-hreflang
-    alternates (RSS) ignored. Exploded to one row per alternate."""
-    from wpextract_spark.operators.extract import alternates_udf
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    ds = did.cast("string")
-    links = (
-        F.when(
-            did % 3 == 0,
-            F.concat(
-                F.lit('<link rel="alternate" hreflang="EN-us" href="https://e/en/doc-'),
-                ds,
-                F.lit('"><link rel="alternate" hreflang="de" href="https://e/de/doc-'),
-                ds,
-                F.lit('"><link rel="alternate" hreflang="x-default" href="https://e/doc-'),
-                ds,
-                F.lit('">'),
-            ),
-        )
-        .when(
-            did % 3 == 1,
-            F.concat(
-                F.lit('<link rel="alternate" hreflang="fr" href="https://e/fr/doc-'),
-                ds,
-                F.lit('"><link rel="alternate" hreflang="es">'),
-            ),
-        )
-        .otherwise(
-            F.lit('<link rel="alternate" type="application/rss+xml" href="https://e/feed">')
-        )
-    )
-    html = F.concat(F.lit("<html><head>"), links, F.lit("</head><body></body></html>"))
-    return docs.select(
-        "doc_id", F.explode(alternates_udf()(html)).alias("alt")
-    ).select(
-        "doc_id",
-        F.col("alt")["hreflang"].alias("hreflang"),
-        F.col("alt")["href"].alias("href"),
-    )
-
-
-ORACLE_HREFLANG_ALTERNATES = """
-SELECT doc_id, 'en-us' AS hreflang,
-       'https://e/en/doc-' || doc_id AS href
-FROM documents WHERE doc_id % 3 = 0
-UNION ALL
-SELECT doc_id, 'de', 'https://e/de/doc-' || doc_id
-FROM documents WHERE doc_id % 3 = 0
-UNION ALL
-SELECT doc_id, 'x-default', 'https://e/doc-' || doc_id
-FROM documents WHERE doc_id % 3 = 0
-UNION ALL
-SELECT doc_id, 'fr', 'https://e/fr/doc-' || doc_id
-FROM documents WHERE doc_id % 3 = 1
-"""
-
-
-def q_publish_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Publish-date cascade: jsonld > og-article meta > <time> > URL
-    pattern, with an invalid stronger signal (unparseable jsonld date)
-    falling through to the URL, and a no-signal page yielding nulls."""
-    from wpextract_spark.operators.dates import publish_dates
-
-    docs = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    ds = did.cast("string")
-    ld = '<script type="application/ld+json">'
-    html = (
-        F.when(
-            did % 6 == 0,
-            F.lit(
-                ld + '{"@type":"Article","datePublished":"2024-01-02T10:00:00Z"}'
-                '</script><meta property="article:published_time" '
-                'content="2023-12-31T23:59:59Z">'
-            ),
-        )
-        .when(
-            did % 6 == 1,
-            F.lit(
-                '<meta property="article:published_time" '
-                'content="2023-12-31T23:59:59Z">'
-            ),
-        )
-        .when(did % 6 == 2, F.lit('<time datetime="2022-05-05">May 5</time>'))
-        .when(did % 6 == 3, F.lit("<p>no in-page signal</p>"))
-        .when(
-            did % 6 == 4,
-            F.lit(ld + '{"@type":"Article","datePublished":"not-a-date"}</script>'),
-        )
-        .otherwise(F.lit("<p>nothing at all</p>"))
-    )
-    url = F.when(
-        (did % 6).isin(3, 4),
-        F.concat(F.lit("https://e/2021/07/15/post-"), ds),
-    ).otherwise(F.concat(F.lit("https://e/post-"), ds))
-    pages = docs.select("doc_id", html.alias("html"), url.alias("url"))
-    return publish_dates(pages)
-
-
-ORACLE_PUBLISH_DATES = """
-SELECT doc_id,
-       CASE doc_id % 6
-         WHEN 0 THEN DATE '2024-01-02'
-         WHEN 1 THEN DATE '2023-12-31'
-         WHEN 2 THEN DATE '2022-05-05'
-         WHEN 3 THEN DATE '2021-07-15'
-         WHEN 4 THEN DATE '2021-07-15' END AS publish_date,
-       CASE doc_id % 6
-         WHEN 0 THEN 'jsonld' WHEN 1 THEN 'meta' WHEN 2 THEN 'time'
-         WHEN 3 THEN 'url' WHEN 4 THEN 'url' END AS date_source
 FROM documents
 """
 
@@ -1468,76 +935,6 @@ FROM pairs
 JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
 WHERE common * 1.0 / (sa.n_grams + sb.n_grams - common) >= 0.02
-"""
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return simhash(docs, bits=8)
-
-
-def _oracle_simhash(bits: int = 8) -> str:
-    votes = ", ".join(
-        f"sum(CASE WHEN substr(md5(w), {b + 1}, 1) IN ('8','9','a','b','c','d','e','f') "
-        f"THEN 1 ELSE -1 END) AS v_{b}"
-        for b in range(bits)
-    )
-    concat = " || ".join(f"(CASE WHEN v_{b} > 0 THEN '1' ELSE '0' END)" for b in range(bits))
-    return rf"""
-WITH w AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '{WS_SQL}'))) AS w
-  FROM documents),
-v AS (SELECT doc_id, {votes} FROM w GROUP BY doc_id)
-SELECT doc_id, {concat} AS simhash FROM v
-"""
-
-
-def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: 64-bit signatures, 8-band chunk join with a
-    mega-bucket cap, exact Hamming verify via segmented popcount."""
-    docs = _t(spark, sf_dir, "documents")
-    return simhash_near_dup_pairs(
-        docs, bits=64, bands=8, max_hamming=3, max_bucket=100
-    )
-
-
-def _oracle_simhash_near_dups(
-    bits: int = 64, bands: int = 8, max_hamming: int = 3, max_bucket: int = 100
-) -> str:
-    width = bits // bands
-    # Nibbles 32.. come from the second independent hash md5('#' || w),
-    # mirroring operators/dedup.py simhash().
-    h = "md5(w) || md5('#' || w)" if bits > 32 else "md5(w)"
-    votes = ", ".join(
-        f"sum(CASE WHEN substr(h, {b + 1}, 1) IN ('8','9','a','b','c','d','e','f') "
-        f"THEN 1 ELSE -1 END) AS v_{b}"
-        for b in range(bits)
-    )
-    concat = " || ".join(f"(CASE WHEN v_{b} > 0 THEN '1' ELSE '0' END)" for b in range(bits))
-    chunks = ", ".join(
-        f"'{b}' || '|' || substr(simhash, {b * width + 1}, {width})" for b in range(bands)
-    )
-    hamming = " + ".join(
-        f"(CASE WHEN substr(sa, {b + 1}, 1) <> substr(sb, {b + 1}, 1) THEN 1 ELSE 0 END)"
-        for b in range(bits)
-    )
-    return rf"""
-WITH w AS (
-  SELECT doc_id, {h} AS h FROM (
-    SELECT doc_id, unnest(list_distinct(string_split_regex(trim(text), '{WS_SQL}'))) AS w
-    FROM documents)),
-v AS (SELECT doc_id, {votes} FROM w GROUP BY doc_id),
-s AS (SELECT doc_id, {concat} AS simhash FROM v),
-chunks AS (SELECT doc_id, simhash, unnest([{chunks}]) AS chunk FROM s),
-capped AS (
-  SELECT * FROM chunks QUALIFY count(*) OVER (PARTITION BY chunk) <= {max_bucket}),
-pairs AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-                  l.simhash AS sa, r.simhash AS sb
-  FROM capped l JOIN capped r ON l.chunk = r.chunk AND l.doc_id < r.doc_id)
-SELECT id_a, id_b, hamming FROM (
-  SELECT id_a, id_b, {hamming} AS hamming FROM pairs)
-WHERE hamming <= {max_hamming}
 """
 
 
@@ -2200,54 +1597,6 @@ FROM old FULL OUTER JOIN new ON old.doc_id = new.doc_id
 """
 
 
-def q_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget corpus mixing (operators/sampling.py:source_mix):
-    per-source keep rates min(1, budget/total_words) realized through the
-    md5-threshold rule with EXACT integer thresholds (budget * 2^32 //
-    total) so Spark and the oracle compare bit-identical hex strings.
-    Budgets exercise all regimes: partial rate (src0), keep-all sentinel
-    (src1), zero (src2), and a default for every other source."""
-    from wpextract_spark.operators.sampling import source_mix
-
-    return source_mix(
-        _t(spark, sf_dir, "documents"),
-        budgets={"src0": 1500, "src1": 10_000_000, "src2": 0},
-        default_budget=800,
-        salt="mix",
-    )
-
-
-ORACLE_SOURCE_MIX = rf"""
-WITH w AS (
-  SELECT doc_id, source,
-         len(string_split_regex(trim(text), '{WS_SQL}')) AS n_words
-  FROM documents),
-t AS (
-  SELECT source, sum(n_words) AS total FROM w GROUP BY source),
-r AS (
-  SELECT source, total,
-         CASE WHEN source = 'src0' THEN 1500
-              WHEN source = 'src1' THEN 10000000
-              WHEN source = 'src2' THEN 0
-              ELSE 800 END AS budget
-  FROM t),
-k AS (
-  SELECT source,
-         CASE WHEN budget >= total THEN 'g'
-              WHEN budget <= 0 THEN ''
-              ELSE printf('%08x',
-                     CAST(CAST(budget AS HUGEINT) * 4294967296 // total
-                          AS BIGINT))
-         END AS rate_key
-  FROM r)
-SELECT w.doc_id, w.source, CAST(w.n_words AS INTEGER) AS n_words,
-       k.rate_key,
-       substr(md5('mix:' || CAST(w.doc_id AS VARCHAR)), 1, 8) < k.rate_key
-         AS selected
-FROM w JOIN k USING (source)
-"""
-
-
 def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RefinedWeb-style URL curation (operators/corpusfilters.py:url_filter):
     domain blocklist with subdomain coverage via the suffix-chain trick
@@ -2562,103 +1911,7 @@ FROM t GROUP BY lang
 """
 
 
-def q_span_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document verbatim-span duplication (13-token spans, gram
-    document-frequency capped at 50)."""
-    from wpextract_spark.operators.dedup import span_dup_pairs
-
-    return span_dup_pairs(
-        _t(spark, sf_dir, "documents"), n=13, max_gram_docs=50
-    )
-
-
-def _oracle_span_dups() -> str:
-    from wpextract_spark.operators.dedup import WS
-
-    return rf"""
-WITH g0 AS (
-  SELECT doc_id, md5(gram) AS gram FROM (
-    SELECT DISTINCT doc_id,
-           array_to_string(list_slice(ts, pos, pos + 12), ' ') AS gram
-    FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '{WS}') AS ts
-          FROM documents),
-         LATERAL unnest(generate_series(1, greatest(len(ts) - 12, 0))) AS g(pos))),
-f AS (SELECT gram FROM g0 GROUP BY gram HAVING count(*) <= 50),
-gg AS (SELECT g0.doc_id, g0.gram FROM g0 JOIN f USING (gram))
-SELECT l.doc_id AS id_a, r.doc_id AS id_b, count(*) AS n_shared_spans
-FROM gg l JOIN gg r ON l.gram = r.gram AND l.doc_id < r.doc_id
-GROUP BY 1, 2
-"""
-
-
-def q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sentence segmentation census (operators/sentences.py): documents
-    get deterministic sentence-y text mixing protected abbreviations
-    (Dr. / Mr. / No. / Fig. / e.g.), three terminator kinds, a
-    multi-terminator run, and an unterminated tail. Integer outputs
-    (counts and exact char totals) so the cross-engine hash has no float
-    rounding hazard; the oracle restates the protect/extract/restore
-    steps with RE2 regexes."""
-    from wpextract_spark.operators.sentences import sentence_stats
-
-    docs = _t(spark, sf_dir, "documents")
-    text = F.concat(
-        F.lit("Dr. Watson met Mr. "),
-        F.substring(F.col("text"), 1, 30),
-        F.lit(". The case (No. "),
-        (F.col("doc_id") % 10).cast("string"),
-        F.lit(") was odd!! Was it? See Fig. 2 e.g. here. "),
-        F.substring(F.col("text"), 31, 40),
-    )
-    return sentence_stats(
-        docs.where(F.col("text").isNotNull())
-        .select("doc_id", text.alias("text"))
-    )
-
-
-ORACLE_SENTENCE_STATS = r"""
-WITH made AS (
-  SELECT doc_id,
-         'Dr. Watson met Mr. ' || substr(text, 1, 30) ||
-         '. The case (No. ' || (doc_id % 10) ||
-         ') was odd!! Was it? See Fig. 2 e.g. here. ' ||
-         substr(text, 31, 40) AS text
-  FROM documents WHERE text IS NOT NULL),
-prot AS (
-  SELECT doc_id,
-         regexp_replace(
-           regexp_replace(replace(text, chr(1), ''), '\b([ei])\.([ge])\.',
-                          '\1' || chr(1) || '\2' || chr(1), 'g'),
-           '\b(Mr|Mrs|Ms|Dr|Prof|St|vs|etc|No|Fig|Jr|Sr|Inc|Ltd|cf|al)\.',
-           '\1' || chr(1), 'g') AS p
-  FROM made),
-sents AS (
-  SELECT doc_id,
-         list_filter(
-           list_transform(
-             regexp_extract_all(p, '[^.!?]+[.!?]+|[^.!?]+$'),
-             s -> trim(replace(s, chr(1), '.'))),
-           s -> s != '') AS arr
-  FROM prot)
-SELECT doc_id,
-       len(arr) AS n_sentences,
-       coalesce(list_sum(list_transform(arr, s -> length(s))), 0)::BIGINT
-         AS sentence_chars,
-       coalesce(list_max(list_transform(arr, s -> length(s))), 0)
-         AS max_sentence_len,
-       arr[1] AS first_sentence
-FROM sents
-"""
-
-
 QUERIES = {
-    # --- Stalest-first driver-window ordering (maintained by
-    # scripts/rotate_registry.py): the correctness driver checks
-    # the FIRST 50 entries, so queries with the least / oldest
-    # driver-green history lead and multi-round-green entries sit
-    # at the tail (those are additionally pinned by the pytest
-    # gate and byte-parity e2e).
-    "q_simhash_near_dups": q_simhash_near_dups,
     "q_salted_agg": q_salted_agg,
     "q_salted_join": q_salted_join,
     "q_token_stats": q_token_stats,
@@ -2670,21 +1923,12 @@ QUERIES = {
     "q_main_content": q_main_content,
     "q_robots_filter": q_robots_filter,
     "q_redirect_chains": q_redirect_chains,
-    "q_normalize_text": q_normalize_text,
-    "q_dedup_keys": q_dedup_keys,
-    "q_fix_mojibake": q_fix_mojibake,
-    "q_render_markdown": q_render_markdown,
     "q_site_boilerplate": q_site_boilerplate,
     "q_incremental_extract": q_incremental_extract,
     "q_robots_directives": q_robots_directives,
-    "q_jsonld_extract": q_jsonld_extract,
-    "q_hreflang_alternates": q_hreflang_alternates,
-    "q_publish_dates": q_publish_dates,
     "q_warc_extract": q_warc_extract,
     "q_url_filter": q_url_filter,
-    "q_source_mix": q_source_mix,
     "q_snapshot_diff": q_snapshot_diff,
-    "q_page_metadata": q_page_metadata,
     "q_line_dedup": q_line_dedup,
     "q_pii_scrub": q_pii_scrub,
     "q_c4_filter": q_c4_filter,
@@ -2696,19 +1940,15 @@ QUERIES = {
     "q_stratified_sample": q_stratified_sample,
     "q_hash_split": q_hash_split,
     "q_incremental_dedup": q_incremental_dedup,
-    "q_span_dups": q_span_dups,
     "q_pack_sequences": q_pack_sequences,
     "q_corpus_profile": q_corpus_profile,
     "q_classify_changes": q_classify_changes,
     "q_containment_dups": q_containment_dups,
-    "q_sentence_stats": q_sentence_stats,
-    "q_compression_signal": q_compression_signal,
     "q_repetition_stats": q_repetition_stats,
     "q_gopher_quality": q_gopher_quality,
     "q_dedup_clusters": q_dedup_clusters,
     "q_lang_id_ngram": q_lang_id_ngram,
     "q_extract_text_kernel": q_extract_text_kernel,
-    # ---- below the 50-entry driver window ----
     "q_extract_link_spans": q_extract_link_spans,
     "q_extract_locale": q_extract_locale,
     "q_registry_last_wins": q_registry_last_wins,
@@ -2720,11 +1960,9 @@ QUERIES = {
     "q_lsh_candidate_pairs": q_lsh_candidate_pairs,
     "q_dedup_pipeline": q_dedup_pipeline,
     "q_ngram_jaccard": q_ngram_jaccard,
-    "q_simhash": q_simhash,
 }
 
 ORACLES = {
-    "q_sentence_stats": ORACLE_SENTENCE_STATS,
     "q_extract_text_kernel": ORACLE_EXTRACT_TEXT,
     "q_extract_link_spans": ORACLE_LINK_SPANS,
     "q_extract_locale": ORACLE_LOCALE,
@@ -2738,8 +1976,6 @@ ORACLES = {
     "q_dedup_pipeline": ORACLE_DEDUP_PIPELINE,
     "q_dedup_clusters": ORACLE_DEDUP_CLUSTERS,
     "q_ngram_jaccard": ORACLE_NGRAM_JACCARD,
-    "q_simhash": _oracle_simhash(8),
-    "q_simhash_near_dups": _oracle_simhash_near_dups(),
     "q_salted_agg": ORACLE_SALTED_AGG,
     "q_salted_join": ORACLE_SALTED_JOIN,
     "q_token_stats": ORACLE_TOKEN_STATS,
@@ -2749,21 +1985,12 @@ ORACLES = {
     "q_lang_id_ngram": _oracle_lang_id_ngram(),
     "q_warc_extract": ORACLE_WARC_EXTRACT,
     "q_url_filter": ORACLE_URL_FILTER,
-    "q_source_mix": ORACLE_SOURCE_MIX,
     "q_snapshot_diff": ORACLE_SNAPSHOT_DIFF,
-    "q_page_metadata": ORACLE_PAGE_METADATA,
     "q_robots_filter": ORACLE_ROBOTS_FILTER,
     "q_redirect_chains": ORACLE_REDIRECT_CHAINS,
-    "q_normalize_text": ORACLE_NORMALIZE_TEXT,
-    "q_dedup_keys": ORACLE_DEDUP_KEYS,
-    "q_fix_mojibake": ORACLE_FIX_MOJIBAKE,
-    "q_render_markdown": ORACLE_RENDER_MARKDOWN,
     "q_site_boilerplate": ORACLE_SITE_BOILERPLATE,
     "q_incremental_extract": ORACLE_INCREMENTAL_EXTRACT,
     "q_robots_directives": ORACLE_ROBOTS_DIRECTIVES,
-    "q_jsonld_extract": ORACLE_JSONLD_EXTRACT,
-    "q_hreflang_alternates": ORACLE_HREFLANG_ALTERNATES,
-    "q_publish_dates": ORACLE_PUBLISH_DATES,
     "q_classify_changes": ORACLE_CLASSIFY_CHANGES,
     "q_containment_dups": ORACLE_CONTAINMENT_DUPS,
     "q_pdf_roundtrip": ORACLE_PDF_ROUNDTRIP,
@@ -2782,13 +2009,6 @@ ORACLES = {
     "q_stratified_sample": _oracle_stratified_sample(),
     "q_hash_split": _oracle_hash_split(),
     "q_incremental_dedup": ORACLE_INCREMENTAL_DEDUP,
-    "q_span_dups": _oracle_span_dups(),
     "q_pack_sequences": _oracle_pack_sequences(),
     "q_corpus_profile": ORACLE_CORPUS_PROFILE,
 }
-
-# Construction-derived golden (needs the sf0.01 corpus on disk; skipped —
-# leaving a rows-only check — only if the corpus is absent).
-_COMPRESSION_ORACLE = _oracle_compression_signal()
-if _COMPRESSION_ORACLE is not None:
-    ORACLES["q_compression_signal"] = _COMPRESSION_ORACLE

@@ -12,10 +12,12 @@ daemon loop, so forked workers inherit warm imports for free. Enable with::
 
     spark.python.daemon.module=wpextract_spark.pywarm_daemon
 
-(set by ``wpextract_spark.session.default_builder``). Works in local mode (the
-daemon inherits the driver cwd) and on clusters where the package is shipped
-via ``spark-submit --py-files``; if the import fails Spark falls back to
-launching plain workers, so this is strictly an optimization.
+(set by ``wpextract_spark.session.default_builder`` for local masters only).
+In local mode the daemon inherits the driver's ``sys.path``. A separate
+executor JVM starts the daemon before the ``--py-files`` zip is on its path,
+so there the package must already be importable (installed on the nodes, or
+the zip on ``spark.executorEnv.PYTHONPATH``). If the import fails, Spark does
+not fall back to plain workers: every task fails and the job aborts.
 """
 
 # Heavy third-party imports — the point of this module.

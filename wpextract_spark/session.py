@@ -17,18 +17,23 @@ ARROW_BATCH_ROWS = 512
 
 
 def default_builder(app_name: str = "wpextract-spark", master: str | None = None):
-    builder = SparkSession.builder.appName(app_name)
-    master = master or os.environ.get("SPARK_MASTER")
-    builder = builder.master(
-        master if master else f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    master = (
+        master
+        or os.environ.get("SPARK_MASTER")
+        or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     )
-    return (
-        builder.config("spark.sql.adaptive.enabled", "true")
+    builder = SparkSession.builder.appName(app_name).master(master)
+    if master == "local" or master.startswith("local["):
         # Pre-warming daemon: forked workers inherit pandas/pyarrow/kernel
         # imports, and its zipimport mtime guard removes the ~100ms/task
         # zip-TOC rescan that pyspark's per-task invalidate_caches() costs on
-        # Python < 3.12 (see wpextract_spark/pywarm_daemon.py).
-        .config("spark.python.daemon.module", "wpextract_spark.pywarm_daemon")
+        # Python < 3.12 (see wpextract_spark/pywarm_daemon.py). Local masters
+        # only: there the daemon inherits the driver's sys.path, while a
+        # separate executor JVM (as on local-cluster) starts it before the
+        # --py-files zip is on its path, and every task fails.
+        builder = builder.config("spark.python.daemon.module", "wpextract_spark.pywarm_daemon")
+    return (
+        builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
